@@ -292,17 +292,9 @@ object Ann {
       val centRow = Seq(cent.map(ct =>
         CentVal(ct.cell, ct.v.toSeq, ct.nrm)).toSeq).toDF("cents")
       val assigned = c.crossJoin(broadcast(centRow))
-        .select(aggregate(col("cents"),
-          struct(lit(Double.NegativeInfinity).as("score"),
-            lit(-1).as("cell")),
-          (acc, ct) => {
-            val sc = cosine(col("v"), ct.getField("c_v"), col("nrm"),
-              ct.getField("c_nrm"))
-            when(sc > acc.getField("score") ||
-                (isnan(sc) && !isnan(acc.getField("score"))),
-              struct(sc.as("score"), ct.getField("cell").as("cell")))
-              .otherwise(acc)
-          }).getField("cell").as("cell"), col("v"))
+        .select(argmaxCell(col("cents"), ct => cosine(col("v"),
+          ct.getField("c_v"), col("nrm"), ct.getField("c_nrm")))
+          .as("cell"), col("v"))
       cent = fromRows(cellMeans(assigned)
         .select(col("cell").cast("int"), col("c_v")).collect())
     }
@@ -371,26 +363,37 @@ object Ann {
     s"transform(sequence(0, ${PqM - 1}), mi -> " +
       s"slice(vn, mi * $PqSub + 1, $PqSub))")
 
-  /** HOF argmin-L2 over one subspace's codebook array: score =
-    * dot(sub, c) − ||c||²/2 (minimizing ||x−c||² over fixed x is
-    * maximizing that — same kernel, same values as the r19 join
-    * form), fold keeps the FIRST strict maximum over the
-    * cell-ascending array — highest score wins, ties to the LOWEST
-    * cell, exactly `max(struct(score, −cell))`. The isnan clause
-    * replicates Spark's NaN-is-greatest aggregate ordering (a NaN
-    * score wins over any non-NaN, first NaN wins among NaNs) so the
-    * fold can never silently diverge from the old argmax. */
-  private def bestCell(sub: Column, bk: Column): Column =
-    aggregate(bk,
-      struct(lit(Double.NegativeInfinity).as("score"),
-        lit(-1).as("cell")),
-      (acc, b) => {
-        val sc = dot(sub, b.getField("c_v")) - b.getField("half")
-        when(sc > acc.getField("score") ||
-            (isnan(sc) && !isnan(acc.getField("score"))),
-          struct(sc.as("score"), b.getField("cell").as("cell")))
+  /** HOF argmax over a cell-ascending array of structs with a `cell`
+    * field: the fold keeps the FIRST strict maximum of `score` —
+    * highest score wins, ties to the LOWEST cell, exactly
+    * `max(struct(score, −cell))`. The isnan clause replicates Spark's
+    * NaN-is-greatest aggregate ordering (a NaN score wins over any
+    * non-NaN, first NaN wins among NaNs) so the fold can never
+    * silently diverge from the old argmax. The fold is seeded from
+    * the FIRST element, not a sentinel, so a row whose scores are all
+    * null or −∞ still gets a real cell (the first); a null score
+    * loses to any non-null one. */
+  private[graft] def argmaxCell(arr: Column, score: Column => Column): Column = {
+    def cand(e: Column, sc: Column) =
+      struct(sc.as("score"), e.getField("cell").as("cell"))
+    val first = get(arr, lit(0))
+    aggregate(slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
+      cand(first, score(first)),
+      (acc, e) => {
+        val sc = score(e)
+        val best = acc.getField("score")
+        when((best.isNull && sc.isNotNull) || sc > best ||
+            (isnan(sc) && !isnan(best)), cand(e, sc))
           .otherwise(acc)
       }).getField("cell")
+  }
+
+  /** Argmin-L2 over one subspace's codebook array: score =
+    * dot(sub, c) − ||c||²/2 (minimizing ||x−c||² over fixed x is
+    * maximizing that — same kernel, same values as the r19 join
+    * form), folded by [[argmaxCell]]. */
+  private def bestCell(sub: Column, bk: Column): Column =
+    argmaxCell(bk, b => dot(sub, b.getField("c_v")) - b.getField("half"))
 
   /** PQ assignment: corpus → (vec_id, m, code), zero shuffles — one
     * single-row codebook broadcast, per-row HOF argmax per subspace,

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftlake.{ManifestFile, ManifestFileIndex}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Per-column min/max/null-count for one data file, harvested from
@@ -1246,8 +1247,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     }
     val newTombs = head.posDels.filterNot(baseTombs)
     if (newTombs.nonEmpty && readSet.nonEmpty) {
-      val hit = spark.read.schema(GraftTable.TombSchema).parquet(newTombs: _*)
-        .select(col("_file")).distinct()
+      val hit = tombScan(newTombs, Seq(head)).select(col("_file")).distinct()
         .collect().map(r => decodeScanPath(r.getString(0)))
         .filter(readSet)
       if (hit.nonEmpty)
@@ -1409,7 +1409,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           }
         }
         .reduceOption(_.unionByName(_))
-        .getOrElse(readFiles(snap.schema, Nil, snap.partitionCols))
+        .getOrElse(readFiles(snap, Nil))
     else morReadPos(snap, files)
       .drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
 
@@ -1441,13 +1441,13 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       .toSeq.sortBy(_._2.headOption.getOrElse(""))
       .map { case ((preds, pre), fs) =>
         val base = applyDefaults(snap, defaulted,
-          readFilesPos(snap.schema, fs, snap.partitionCols), pre)
+          readFilesPos(snap, fs), pre)
         preds.foldLeft(base) {
           (df, p) => df.filter(not(coalesce(expr(p.pred), lit(false))))
         }
       }
       .reduceOption(_.unionByName(_))
-      .getOrElse(readFilesPos(snap.schema, Nil, snap.partitionCols))
+      .getOrElse(readFilesPos(snap, Nil))
     val withDv = if (snap.dvs.isEmpty) eq else {
       // deletion vectors: a LEFT join keyed by FILE ONLY (one row per
       // vectored file — metadata-scale, vs one row per deleted row
@@ -1475,28 +1475,30 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
     }
     if (snap.posDels.isEmpty) withDv
-    else {
-      val tomb = spark.read.schema(GraftTable.TombSchema)
-        .parquet(snap.posDels: _*)
-        .select(col("_file"), col("_pos"))
-      // broadcast only while the tombstone set is demonstrably small:
-      // a table that has absorbed heavy MoR DML can hold billions of
-      // (file, pos) rows, and forcing those through a driver-collected
-      // broadcast is an OOM. On-disk parquet size is the cheap,
-      // already-known proxy (paths dictionary-compress, so in-memory
-      // is larger — the 32 MB gate leaves that margin); beyond it the
-      // anti-join falls back to a plain shuffle join on the same keys.
-      val tombBytes = snap.posDels
-        .map(p => snap.posDelSizes.getOrElse(p,
-          fs.getFileStatus(new Path(p)).getLen)).sum
-      val tombHinted =
-        if (tombBytes <= GraftTable.PosDelBroadcastBytes) broadcast(tomb)
-        else tomb
-      withDv.join(tombHinted,
-          col(GraftTable.PosFileCol) === col("_file") &&
-            col(GraftTable.PosIdxCol) === col("_pos"),
-          "left_anti")
-    }
+    else withDv.join(tombstones(snap),
+        col(GraftTable.PosFileCol) === col("_file") &&
+          col(GraftTable.PosIdxCol) === col("_pos"),
+        "left_anti")
+  }
+
+  /** Tombstone files `fs`, named by the manifests of `snaps`, as one
+    * (`_file`, `_pos`) scan. */
+  private def tombScan(fs: Seq[String], snaps: Seq[Snapshot]): DataFrame =
+    manifestScan(GraftTable.TombSchema, fs, snaps.flatMap(_.posDelSizes).toMap)
+
+  /** `snap`'s position tombstones as one (`_file`, `_pos`) scan,
+    * broadcast only while the set is demonstrably small: a table that
+    * has absorbed heavy MoR DML can hold billions of (file, pos) rows,
+    * and forcing those through a driver-collected broadcast is an OOM.
+    * On-disk parquet size is the cheap, already-known proxy (paths
+    * dictionary-compress, so in-memory is larger — the 32 MB gate
+    * leaves that margin); beyond it the anti-join falls back to a
+    * plain shuffle join on the same keys. */
+  private def tombstones(snap: Snapshot): DataFrame = {
+    val sizes = sizesOf(snap.posDels, snap.posDelSizes)
+    val tomb = manifestScan(GraftTable.TombSchema, snap.posDels, sizes)
+    if (sizes.values.sum <= GraftTable.PosDelBroadcastBytes) broadcast(tomb)
+    else tomb
   }
 
   /** Write (file, pos) tombstones for every row of `rows` (which must
@@ -1518,25 +1520,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * position-delete anti-join. Selected at the LEAF because Spark's
     * `_metadata` resolves only directly against a file-source
     * relation, not through projections or unions. */
-  private def readFilesPos(schema: StructType, files: Seq[String],
-      partitionCols: Seq[String]): DataFrame = {
-    def pos(df: DataFrame): DataFrame = df.select(col("*"),
+  private def readFilesPos(snap: Snapshot, files: Seq[String]): DataFrame =
+    readFiles(snap, files).select(col("*"),
       col("_metadata.file_path").as(GraftTable.PosFileCol),
       col("_metadata.row_index").as(GraftTable.PosIdxCol))
-    if (files.isEmpty) {
-      val withMeta = StructType(schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(
-          GraftTable.PosFileCol, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(
-          GraftTable.PosIdxCol, org.apache.spark.sql.types.LongType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta)
-    } else if (partitionCols.isEmpty || !PartField.allIdentity(partitionCols))
-      pos(spark.read.schema(schema).parquet(files: _*))
-    else
-      files.groupBy(commitDirOf).toSeq.sortBy(_._1).map { case (base, fs) =>
-        pos(spark.read.option("basePath", base).schema(schema).parquet(fs: _*))
-      }.reduce(_.unionByName(_))
-  }
 
   /** Read `files` under `snap`, resolving renamed columns: each file
     * reads under its WRITE-TIME physical names (files group by name
@@ -1578,16 +1565,16 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     def applyDefaults(df: DataFrame, pre: Seq[String]): DataFrame =
       this.applyDefaults(snap, defaulted, df, pre)
     if (snap.renames.isEmpty && defaulted.isEmpty)
-      readFiles(snap.schema, files, snap.partitionCols)
+      readFiles(snap, files)
     else if (snap.renames.isEmpty) {
       // defaults only: group files into pre-/post-add epochs per
       // defaulted column set (same epoch-union shape as renames)
       files.groupBy(preAddOf)
         .toSeq.sortBy(_._2.headOption.getOrElse("")).map { case (pre, fs) =>
-          applyDefaults(readFiles(snap.schema, fs, snap.partitionCols), pre)
+          applyDefaults(readFiles(snap, fs), pre)
         }
         .reduceOption(_.unionByName(_))
-        .getOrElse(readFiles(snap.schema, Nil, snap.partitionCols))
+        .getOrElse(readFiles(snap, Nil))
     } else {
       // the mapped name tree covers EVERY depth (renames may touch a
       // field at any level — the name-mapping analog of Iceberg's
@@ -1652,14 +1639,14 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
               when(physCol.isNull, lit(null).cast(st)).otherwise(rebuilt)
             case _ => physCol
           }
-          readFiles(physSchema, fs, snap.partitionCols)
+          manifestScan(physSchema, fs, snap.fileSizes, snap.partitionCols)
             .select(snap.schema.fields.map { fld =>
               currentCol(fld, fld.name, col(s"`${leafOf(phys(fld.name))}`"))
                 .as(fld.name)
             }.toIndexedSeq: _*)
             .transform(applyDefaults(_, pre))
       }.reduceOption(_.unionByName(_))
-        .getOrElse(readFiles(snap.schema, Nil, snap.partitionCols))
+        .getOrElse(readFiles(snap, Nil))
     }
   }
 
@@ -1693,23 +1680,44 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     morRead(snap, kept)
   }
 
-  private def readFiles(schema: StructType, files: Seq[String],
-      partitionCols: Seq[String] = Nil): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else if (partitionCols.isEmpty ||
-        !PartField.allIdentity(partitionCols))
-      // unpartitioned, or a transform spec (whose data files keep
-      // every raw column — the derived dirs are metadata only)
-      spark.read.schema(schema).parquet(files: _*)
-    else {
-      // Partition values live in the directory names under each
-      // commit dir; `basePath` must be the commit dir for Spark to
-      // reconstitute them, so group files per commit and union.
-      files.groupBy(commitDirOf).toSeq.sortBy(_._1).map { case (base, fs) =>
-        spark.read.option("basePath", base).schema(schema).parquet(fs: _*)
-      }.reduce(_.unionByName(_))
-    }
+  /** `files` of `snap` as one scan under the snapshot's schema. */
+  private def readFiles(snap: Snapshot, files: Seq[String]): DataFrame =
+    manifestScan(snap.schema, files, snap.fileSizes, snap.partitionCols)
+
+  /** ONE parquet scan over manifest-named `files`: a single relation
+    * over a [[ManifestFileIndex]] whose sizes come from `sizes` (a live
+    * stat only for a file a pre-size manifest never recorded) and
+    * whose identity-partition values come from each file's directory
+    * names below its commit dir. Planning lists no storage and starts
+    * no listing job; pruning and split packing span every commit.
+    * Transform specs keep every raw column in the data file (their
+    * derived dirs are metadata only), so they scan unpartitioned; so
+    * does an empty file set, which keeps the declared column order. */
+  private def manifestScan(schema: StructType, files: Seq[String],
+      sizes: Map[String, Long], partitionCols: Seq[String] = Nil): DataFrame = {
+    val parts =
+      if (files.nonEmpty && PartField.allIdentity(partitionCols)) partitionCols
+      else Nil
+    val known = sizesOf(files, sizes)
+    ManifestFileIndex.scan(spark, schema, parts, files.map { f =>
+      val dirs = if (parts.isEmpty) Map.empty[String, String]
+        else layoutSegs(f).dropRight(1).map { seg =>
+          val i = seg.indexOf('=')
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(seg.take(i)) -> seg.drop(i + 1)
+        }.toMap
+      ManifestFile(f, known(f), parts.map(c => dirs.getOrElse(c,
+        throw new IllegalStateException(
+          s"data file has no partition directory for $c: $f"))))
+    })
+  }
+
+  /** The byte size of each of `files`: its manifest record in `sizes`,
+    * or a live stat for a file a pre-size manifest never recorded. */
+  private def sizesOf(files: Seq[String],
+      sizes: Map[String, Long]): Map[String, Long] =
+    files.map(f => f -> sizes.getOrElse(f,
+      fs.getFileStatus(new Path(f)).getLen)).toMap
 
   /** A `col=value` path segment exactly as Spark's hive-style writer
     * lays it out (escaped; NULL becomes the default-partition dir). */
@@ -1924,13 +1932,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val goneTFiles =
       fromOpt.map(_.posDels.filterNot(to.posDels.toSet)).getOrElse(Nil)
     def tombRows(fs: Seq[String]): DataFrame =
-      if (fs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(
-            StructField("_file", org.apache.spark.sql.types.StringType),
-            StructField("_pos", org.apache.spark.sql.types.LongType))))
-      else spark.read.schema(GraftTable.TombSchema).parquet(fs: _*)
-        .select(col("_file"), col("_pos"))
+      tombScan(fs, to +: fromOpt.toSeq)
     val (posDel, posIns): (Option[DataFrame], Option[DataFrame]) =
       if (dvMoved.isEmpty && newTFiles.isEmpty && goneTFiles.isEmpty)
         (None, None)
@@ -2274,16 +2276,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     if ((newTFiles.nonEmpty || goneTFiles.nonEmpty ||
           dvMovedFiles.nonEmpty) &&
         (toSet intersect fromSet).nonEmpty) {
-      def tombRows(fs: Seq[String]): DataFrame =
-        if (fs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            StructType(Seq(
-              org.apache.spark.sql.types.StructField("_file",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("_pos",
-                org.apache.spark.sql.types.LongType))))
-        else spark.read.schema(GraftTable.TombSchema).parquet(fs: _*)
-        .select(col("_file"), col("_pos"))
+      def tombRows(fs: Seq[String]): DataFrame = tombScan(fs, Seq(from, to))
       // deletion-vector diff → the same (file, pos) key shape as the
       // tombstone diff. A live-view DML never re-deletes a position,
       // so the two shapes cannot emit the same key — plain unions
@@ -2318,13 +2311,13 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         val rowsPos = {
           val defaulted = defaultedCols(to)
           if (defaulted.isEmpty)
-            readFilesPos(to.schema, touched, to.partitionCols)
+            readFilesPos(to, touched)
           else touched.groupBy(f => preAddOf(to, defaulted, f)).toSeq
             .sortBy(_._2.headOption.getOrElse(""))
             .map { case (pre, fs) => applyDefaults(to, defaulted,
-              readFilesPos(to.schema, fs, to.partitionCols), pre) }
+              readFilesPos(to, fs), pre) }
             .reduceOption(_.unionByName(_))
-            .getOrElse(readFilesPos(to.schema, Nil, to.partitionCols))
+            .getOrElse(readFilesPos(to, Nil))
         }
         // the cross-direction rollback law: a positionally-named row
         // is a DELETE only if it was LIVE at `from` (a rollback can
@@ -2414,12 +2407,18 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       // the range's DML-touched files, there is no sound lifecycle
       // hook to cache it inside a lazily-consumed DataFrame, and
       // correctness of the dedupe is worth two bounded scans
+      // EXCEPT ALL is positional: the tombstone side reads partition
+      // columns last, so it is realigned to the matched side by name
+      // (quoted: a top-level name may contain a dot)
+      def minus(a: DataFrame, t: Option[DataFrame]): DataFrame =
+        t.fold(a)(t => a.exceptAll(t.select(a.columns.toSeq.map(c =>
+          col(s"`${c.replace("`", "``")}`")): _*)))
       matching(from, newPreds).foreach { d =>
-        del = del.unionByName(tDel.fold(d)(d.exceptAll(_)))
+        del = del.unionByName(minus(d, tDel))
         delTrivial = false
       }
       matching(to, gonePreds).foreach { i =>
-        ins = ins.unionByName(tIns.fold(i)(i.exceptAll(_)))
+        ins = ins.unionByName(minus(i, tIns))
         insTrivial = false
       }
     }
@@ -3415,25 +3414,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val ext = StructType(snap.schema.fields ++ Seq(
       StructField(GraftTable.RowIdColName, org.apache.spark.sql.types.LongType),
       StructField(GraftTable.LastSeqColName, org.apache.spark.sql.types.LongType)))
-    def withMeta(df: DataFrame) = df
+    val base = manifestScan(ext, files, snap.fileSizes, snap.partitionCols)
       .withColumn("_g_file", col("_metadata.file_path"))
       .withColumn("_g_idx", col("_metadata.row_index"))
-    // same per-commit basePath grouping as [[readFiles]] (identity
-    // partition values live in dir names); _metadata must be bound
-    // per scan, before any union
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(ext.fields ++ Seq(
-            StructField("_g_file", org.apache.spark.sql.types.StringType),
-            StructField("_g_idx", org.apache.spark.sql.types.LongType))))
-      else if (snap.partitionCols.isEmpty ||
-          !PartField.allIdentity(snap.partitionCols))
-        withMeta(spark.read.schema(ext).parquet(files: _*))
-      else files.groupBy(commitDirOf).toSeq.sortBy(_._1).map {
-        case (bp, fs) => withMeta(spark.read.option("basePath", bp)
-          .schema(ext).parquet(fs: _*))
-      }.reduce(_.unionByName(_))
     import spark.implicits._
     // one row per file — commit metadata. Broadcast while that is
     // demonstrably driver-friendly (~150 B/row → ~15 MB at the gate);
@@ -3500,21 +3483,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // byte gate.
     val live2 =
       if (snap.posDels.isEmpty) live
-      else {
-        val tomb = spark.read.schema(GraftTable.TombSchema)
-          .parquet(snap.posDels: _*)
-          .select(col("_file"), col("_pos"))
-        val tombBytes = snap.posDels
-          .map(p => snap.posDelSizes.getOrElse(p,
-            fs.getFileStatus(new Path(p)).getLen)).sum
-        val tombHinted =
-          if (tombBytes <= GraftTable.PosDelBroadcastBytes)
-            broadcast(tomb)
-          else tomb
-        live.join(tombHinted,
-          col("_g_file") === col("_file") &&
-            col("_g_idx") === col("_pos"), "left_anti")
-      }
+      else live.join(tombstones(snap),
+        col("_g_file") === col("_file") &&
+          col("_g_idx") === col("_pos"), "left_anti")
     if (keepMeta) live2.drop("_g_first", "_g_fseq")
     else live2.drop("_g_file", "_g_idx", "_g_first", "_g_fseq")
   }
@@ -3653,7 +3624,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val snap = currentSnapshot
     // resolve the predicate against the snapshot schema NOW — a typo
     // must fail this commit, not some future read
-    readFiles(snap.schema, Nil, snap.partitionCols).filter(expr(predSql))
+    readFiles(snap, Nil).filter(expr(predSql))
     // pin the changelog's rename-replay invariant AT THE COMMIT
     // BOUNDARY: predCond rewrites only single-part attribute
     // references, so a stored predicate must never carry a qualified
@@ -3855,7 +3826,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     import spark.implicits._
     val ptrs = snap.dvs.toSeq.map { case (f, b) =>
       (metaPath(f), metaPath(b)) }.toDF("_pf", "_pb")
-    spark.read.schema(GraftTable.DvBlobSchema).parquet(blobs: _*)
+    manifestScan(GraftTable.DvBlobSchema, blobs, snap.dvSizes)
       .select(col("_file"), col("_bitmap"),
         col("_metadata.file_path").as("_bp"))
       .join(broadcast(ptrs),
@@ -4689,7 +4660,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // DELETE): a typo'd column would otherwise prune NOTHING — both
     // pruners conservatively keep unknown columns — and the "scoped"
     // maintenance would silently rewrite the whole table
-    readFiles(snap.schema, Nil, snap.partitionCols).filter(expr(predSql))
+    readFiles(snap, Nil).filter(expr(predSql))
     val cand = dmlCandidates(snap, predSql)
     if (cand.size <= 1) return snap.id
     val candSet = cand.map(normalize).toSet
@@ -5128,9 +5099,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val snap = currentSnapshot
     if (snap.posDels.isEmpty) return snap.id
     val live = snap.files.toSet
-    val tombBytes = snap.posDels
-      .map(p => snap.posDelSizes.getOrElse(p,
-        fs.getFileStatus(new Path(p)).getLen)).sum
+    val sizes = sizesOf(snap.posDels, snap.posDelSizes)
+    val tombBytes = sizes.values.sum
     val parts = math.max(1, (tombBytes / math.max(1L, targetBytes)).toInt)
     // (file, pos) rows are unique by construction (DML scans the live
     // view, so a position is never re-tombstoned) — no distinct pass.
@@ -5144,8 +5114,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val liveDf = broadcast(
       spark.createDataset(live.toSeq.map(metaPath).sorted)(
         org.apache.spark.sql.Encoders.STRING).toDF("_live_file"))
-    val kept = spark.read.schema(GraftTable.TombSchema)
-      .parquet(snap.posDels: _*)
+    val kept = manifestScan(GraftTable.TombSchema, snap.posDels, sizes)
       .select(col("_file"), col("_pos"))
       .join(liveDf, col("_file") === col("_live_file"), "left_semi")
       .repartition(parts, col("_file"))
@@ -5438,7 +5407,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // current files go through the merge-on-read filter; staged files
     // are newer than any pending delete, so they read raw
     morRead(cur, cur.files)
-      .unionByName(readFiles(cur.schema, st.files, cur.partitionCols))
+      .unionByName(readFiles(cur.copy(fileSizes = st.fileSizes), st.files))
   }
 
   /** Publish a staged append onto the CURRENT snapshot (Iceberg's
@@ -6863,6 +6832,17 @@ object GraftTable {
     !exchanged && df.rdd.getNumPartitions < target
   }
 
+  /** Operators whose size-only estimate keeps the CHILD's size while
+    * emitting more rows: Generate (explode) and Expand (rollup, cube,
+    * grouping sets, multi-distinct aggregates). */
+  private def rowExpanding(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    p match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.Generate |
+          _: org.apache.spark.sql.catalyst.plans.logical.Expand => true
+      case _ => false
+    }
+
   /** Size-adaptive write task width (guide §2.2/§6): the number of
     * write tasks that lays `df` out in ~128 MB files, from the
     * optimizer's driver-side size estimate (no execution).
@@ -6874,9 +6854,10 @@ object GraftTable {
     *    to ceil(est/128 MB), usually ONE task: no exchange, one data
     *    file, one footer harvest, one manifest entry. Size-only
     *    estimation keeps the CHILD's size through row-expanding
-    *    operators, so a plan containing a Generate (explode) can
-    *    undershoot by the fan-out factor — those keep the floor
-    *    instead of risking a serialized giant write (r19 advice);
+    *    operators, so a plan containing a Generate (explode) or an
+    *    Expand (rollup, cube) can undershoot by the fan-out factor —
+    *    those keep the floor instead of risking a serialized giant
+    *    write (r19 advice);
     *  - a LARGE commit fans out by SIZE: ceil(est/128 MB) may exceed
     *    the floor (round 20 — the r19 form capped at the floor, so a
     *    narrow TB-scale frame would have written ≤8 multi-GB files),
@@ -6897,11 +6878,7 @@ object GraftTable {
       val bySize = ((est + targetFileBytes - 1) / targetFileBytes)
         .max(BigInt(1))
       if (bySize <= fallbackPar) {
-        val expanding = df.queryExecution.optimizedPlan.exists {
-          case _: org.apache.spark.sql.catalyst.plans.logical.Generate =>
-            true
-          case _ => false
-        }
+        val expanding = df.queryExecution.optimizedPlan.exists(rowExpanding)
         if (expanding) fallbackPar else bySize.toInt
       } else {
         // the RAISE direction trusts the estimate only when it is
@@ -6913,7 +6890,7 @@ object GraftTable {
         //    scale it below the sentinel, so the check must be at the
         //    LEAVES, not on est;
         //  - size-only Join stats MULTIPLY (a 5 MB x 5 MB merge
-        //    "estimates" terabytes) and Generate keeps the child's
+        //    "estimates" terabytes) and Generate/Expand keep the child's
         //    size — both make est meaningless in this direction.
         // A big SCAN-shaped narrow frame (the verdict's case: CTAS or
         // rewrite from a few-file TB-scale input) raises for real;
@@ -6926,9 +6903,7 @@ object GraftTable {
           plan.exists {
             case _: org.apache.spark.sql.catalyst.plans.logical.Join =>
               true
-            case _: org.apache.spark.sql.catalyst.plans.logical
-                .Generate => true
-            case _ => false
+            case p => rowExpanding(p)
           }
         if (untrusted) fallbackPar
         else bySize.min(BigInt(math.max(2 * sessionPar, fallbackPar)))

@@ -217,9 +217,9 @@ object PartField {
   def parseAll(cols: Seq[String]): Seq[PartField] = cols.map(parse)
 
   /** True when every field is identity — the hive-style layout whose
-    * partition values live only in directory names (reads reconstitute
-    * them via basePath). Transform specs keep every raw column in the
-    * data files, so their reads ignore directories entirely. */
+    * partition values live only in directory names (reads parse them
+    * from the manifest paths). Transform specs keep every raw column
+    * in the data files, so their reads ignore directories entirely. */
   def allIdentity(cols: Seq[String]): Boolean =
     cols.forall(!_.contains("("))
 

@@ -186,4 +186,27 @@ class AnnSpec extends AnyFunSuite {
       .sortBy(_.getAs[Int]("rank")).map(_.getAs[Long]("neighbor_id"))
     assert(got.sameElements(want))
   }
+
+  test("argmax fold seeds from the first cell: all-null or all -inf " +
+      "scores get a real cell, ties and NaN keep their order") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    def cells(xs: String*) = xs.zipWithIndex.map { case (x, i) =>
+      s"named_struct('cell', ${i + 10}, 's', CAST($x AS DOUBLE))"
+    }.mkString("array(", ", ", ")")
+    val rows = Seq(
+      cells("NULL", "NULL", "NULL") -> 10,
+      cells("'-Infinity'", "'-Infinity'") -> 10,
+      cells("1.0", "3.0", "3.0") -> 11,
+      cells("1.0", "'NaN'", "'NaN'") -> 11,
+      cells("NULL", "'-Infinity'", "-5.0") -> 12,
+      cells("NULL", "2.0", "NULL") -> 11,
+      cells("NULL") -> 10)
+    val df = spark.sql(rows.zipWithIndex.map { case ((arr, _), i) =>
+      s"SELECT $i AS id, $arr AS arr" }.mkString(" UNION ALL "))
+    val got = df.select(col("id"),
+        graft.ann.Ann.argmaxCell(col("arr"), _.getField("s")))
+      .as[(Int, Int)].collect().toMap
+    assert(got == rows.zipWithIndex.map { case ((_, c), i) => i -> c }.toMap)
+  }
 }

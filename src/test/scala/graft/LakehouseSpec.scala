@@ -4512,12 +4512,19 @@ class LakehouseSpec extends AnyFunSuite {
     assert(st.rows == 3 && st.cols("k").ndv == 3 && st.cols("tag").ndv == 2)
     assert(st.cols("k").min.contains("1") && st.cols("k").max.contains("3"))
     assert(t.tableStats.contains(st))
+    // sameResult ignores hints, so the hint is checked on its own
+    def hinted(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ResolvedHint])
+    assert(hinted(t.readForJoin()))
     // stats go stale, never wrong: any commit hides them
     t.append(Seq((4L, "c", 4.0)).toDF("k", "tag", "v"))
     assert(t.tableStats.isEmpty)
-    // without stats, readForJoin adds no hint (plain read)
-    assert(t.readForJoin().queryExecution.logical ==
-      t.read().queryExecution.logical)
+    // without stats, readForJoin adds no hint (plain read); each read
+    // is its own resolved scan, so plans compare up to attribute ids
+    assert(!hinted(t.readForJoin()))
+    assert(t.readForJoin().queryExecution.logical.sameResult(
+      t.read().queryExecution.logical))
     // the sketched form lands within 5% on a small domain
     val approx = t.analyzeColumns(Seq("k"), exact = false)
     assert(math.abs(approx.cols("k").ndv - 4) <= 1)
@@ -5444,5 +5451,179 @@ class LakehouseSpec extends AnyFunSuite {
     assert(ae.filter(col("snapshot_id") === 3 &&
       col("status") === "EXISTING").count() ==
       t.snapshots.find(_.id == 2).get.files.size)
+  }
+
+  test("writeWidth: a rollup or cube (Expand) over a small scan keeps " +
+      "the session floor") {
+    val floor = math.min(8, spark.sparkContext.defaultParallelism)
+    val scan = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0))).read()
+    assert(GraftTable.writeWidth(scan.groupBy("k", "tag").count()) == 1)
+    assert(GraftTable.writeWidth(scan.rollup("k", "tag").count()) == floor)
+    assert(GraftTable.writeWidth(scan.cube("k", "tag").count()) == floor)
+  }
+
+  // ---- manifest-backed scans -------------------------------------------
+
+  /** The `commit-*` directory a data file was written under. */
+  private def commitDir(f: String): String = {
+    var p = new org.apache.hadoop.fs.Path(f).getParent
+    while (!p.getName.startsWith("commit-")) p = p.getParent
+    p.toString
+  }
+
+  /** Identity partitions of string, int and date type ahead of the
+    * data columns, across three commits, with NULL partitions and
+    * values that escape (`/`, `=`, `%`, space), under a root whose
+    * path contains a space. */
+  private def escapedPartTable(): GraftTable = {
+    val root = Files.createTempDirectory("graft idx").resolve("t t").toString
+    def d(s: String) = Some(java.sql.Date.valueOf(s))
+    def batch(rows: (Option[String], Option[Int], Option[java.sql.Date],
+        Long, String)*) = rows.toDF("s", "i", "d", "k", "v")
+    val t = GraftTable.create(spark, root, batch(
+      (Some("a/b"), Some(1), d("2024-01-01"), 1L, "x"),
+      (Some("x=y"), Some(2), d("2024-01-02"), 2L, "y"),
+      (None, Some(1), d("2024-01-01"), 3L, "z")), Seq("s", "i", "d"))
+    t.append(batch(
+      (Some("50%"), None, d("2024-01-01"), 4L, "p"),
+      (Some("sp ace"), Some(2), None, 5L, "q"),
+      (Some("a/b"), Some(1), d("2024-01-01"), 6L, "r")))
+    t.append(batch(
+      (Some("plain"), Some(3), d("2024-03-01"), 7L, "s"),
+      (Some("x=y"), Some(2), d("2024-01-02"), 8L, "t"),
+      (None, None, None, 9L, "u")))
+    t
+  }
+
+  private def withPositions(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("*"), col("_metadata.file_path").as("fp"),
+      col("_metadata.row_index").as("ri"), input_file_name().as("ifn"))
+
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("a snapshot reads as one scan: rows, column order and file " +
+      "metadata match per-commit basePath reads") {
+    val t = escapedPartTable()
+    val snap = t.currentSnapshot
+    assert(snap.files.map(commitDir).distinct.size == 3)
+    val ref = snap.files.groupBy(commitDir).toSeq.sortBy(_._1)
+      .map { case (base, fs) => withPositions(spark.read
+        .option("basePath", base).schema(snap.schema).parquet(fs: _*)) }
+      .reduce(_.unionByName(_))
+    val got = withPositions(t.read())
+    assert(got.columns.toSeq ==
+      Seq("k", "v", "s", "i", "d", "fp", "ri", "ifn"))
+    assert(got.schema == ref.schema)
+    assert(rowStrings(got.drop("ifn")) == rowStrings(ref.drop("ifn")))
+    assert(rowStrings(got).exists(_.startsWith("9|u|null|null|null|")))
+    // input_file_name() names the same file (a listing renders a local
+    // root as `file:///`, the manifest as `file:/`)
+    def fileOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "ifn").as[(Long, String)].collect()
+        .map { case (k, f) => k -> new java.net.URI(f).getPath }.toMap
+    assert(fileOf(got) == fileOf(ref))
+    // one relation, however many commits
+    val scans = t.read().queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }
+    assert(scans.size == 1, s"expected one scan: $scans")
+    // file paths render exactly as the manifest path's URI form, the
+    // form tombstones and COW file matching compare against
+    val want = snap.files.map(f =>
+      new org.apache.hadoop.fs.Path(f).toUri.toString).toSet
+    assert(got.select("fp").as[String].collect().toSet == want)
+    assert(got.select("ifn").as[String].collect().toSet == want)
+    // manifests record no modification time: every file reports epoch 0
+    assert(t.read().select("_metadata.file_modification_time")
+      .as[java.sql.Timestamp].collect().map(_.getTime).toSet == Set(0L))
+  }
+
+  test("a partition predicate lists only the matching manifest files") {
+    val t = escapedPartTable()
+    val files = t.currentSnapshot.files
+    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+      plan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.metrics("numFiles").value
+      }.sum
+    }
+    def dirFiles(seg: String) = files.count(_.contains(s"/$seg/")).toLong
+    val eq = t.read().where(col("s") === "x=y")
+    assert(scannedFiles(eq) == dirFiles("s=x%3Dy") && dirFiles("s=x%3Dy") == 2)
+    assert(eq.select("k").as[Long].collect().sorted.toSeq == Seq(2L, 8L))
+    val nul = t.read().where(col("i").isNull)
+    assert(scannedFiles(nul) == files.count(_.contains(
+      "/i=__HIVE_DEFAULT_PARTITION__/")).toLong)
+    assert(nul.select("k").as[Long].collect().sorted.toSeq == Seq(4L, 9L))
+    assert(scannedFiles(t.read()) == files.size.toLong)
+  }
+
+  test("planning a read of a table with more than 32 files starts no " +
+      "Spark job") {
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_many").toString,
+      spark.range(40).select(col("id").as("k"),
+        col("id").cast("int").as("p")), Seq("p"))
+    assert(t.currentSnapshot.files.size > 32)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(s"job ${e.jobId}"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // analysis, optimization, physical planning and the scan's RDD
+      // (which lists the index's files) — everything short of running
+      t.read().where(col("p") > 3).queryExecution.executedPlan.execute()
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.toArray.toSeq == Seq("marker"), s"jobs: $jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("table_changes on a partitioned merge-on-read table nets an " +
+      "equality DELETE with tombstoning UPDATE and MERGE in one range") {
+    val name = "tc_part_mor"
+    spark.sql(s"""CREATE TABLE $name (s STRING, k BIGINT, v DOUBLE)
+      USING graft PARTITIONED BY (s)
+      LOCATION '${Files.createTempDirectory("graft_tc_part")}'
+      TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',
+        'write.update.mode' = 'merge-on-read',
+        'write.merge.mode' = 'merge-on-read')""")
+    spark.sql(s"INSERT INTO $name VALUES ('a', 1, 1.0), ('a', 2, 2.0), " +
+      "('b', 3, 3.0), ('b', 4, 4.0), ('c', 5, 5.0)")
+    val t = graft.lakehouse.LakeRegistry.get(name).get
+    val from = t.currentSnapshotId
+    spark.sql(s"DELETE FROM $name WHERE k = 1")
+    spark.sql(s"UPDATE $name SET v = v + 10 WHERE k = 3")
+    spark.sql(s"""MERGE INTO $name t
+      USING (SELECT 'b' AS s, 4L AS k, 40.0D AS v
+        UNION ALL SELECT 'c', 6L, 6.0D) src ON t.k = src.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    val to = t.currentSnapshotId
+    val snap = t.currentSnapshot
+    assert(snap.dels.nonEmpty && (snap.posDels.nonEmpty || snap.dvs.nonEmpty),
+      "the range must mix an equality delete with position deletes")
+    val got = spark.sql(s"SELECT s, k, v, _change_type FROM " +
+        s"table_changes('$name', $from, $to)")
+      .as[(String, Long, Double, String)].collect().toSeq.sorted
+    assert(got == Seq(("a", 1L, 1.0, "delete"), ("b", 3L, 3.0, "delete"),
+      ("b", 3L, 13.0, "insert"), ("b", 4L, 4.0, "delete"),
+      ("b", 4L, 40.0, "insert"), ("c", 6L, 6.0, "insert")))
   }
 }
