@@ -1,17 +1,13 @@
 package graft.fgac
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, struct, when}
+import org.apache.spark.sql.DataFrame
 
 /** Library-level enforcement: produce the secured view of a DataFrame
-  * under a [[TablePolicy]]. Semantics match Lake Formation's data
-  * cells filter: the row filter is evaluated against the *raw* row
-  * (it may reference columns the principal cannot see), then masks,
-  * then the column projection.
-  *
-  * Everything here is plain Column expressions, so Catalyst pushes
-  * the filter and the pruned projection into the parquet scan — the
-  * secured view costs nothing extra at scale.
+  * under a [[TablePolicy]] — the SAME plan rewrite the analyzer path
+  * applies to a governed name ([[FgacRule.securePlan]]: filter against
+  * the raw row, then masks, then the column projection), so the two
+  * can never drift apart, and Catalyst pushes the filter and the
+  * pruned projection into the scan exactly as for SQL.
   */
 object Enforcer {
   /** `who` is the effective principal and has NO default: an omitted
@@ -31,47 +27,8 @@ object Enforcer {
         "policy references graft_principal() but no principal was " +
           s"passed to secure(): ${refs.mkString("; ")}")
     }
-    // same context-function folding as the analyzer path
-    // (FgacRule.compilePolicyExpr): graft_principal() becomes a
-    // string literal of the effective principal before analysis
-    def compile(sqlText: String) =
-      org.apache.spark.sql.GraftSqlBridge.columnOf(
-        FgacRule.compilePolicyExpr(sqlText, who))
-    val filtered = policy.rowFilter.fold(df)(p => df.filter(compile(p)))
-    if (policy.allowedColumns.isEmpty && policy.masks.isEmpty)
-      return filtered
-    // same nested semantics as the analyzer path (FgacRule.securePlan),
-    // at ANY depth: a bare path = that whole subtree, with deeper
-    // masks applied in place (withField parses dotted paths and
-    // nests, siblings untouched); a path listed only through
-    // descendants = the struct rebuilt from exactly the listed
-    // children, recursively, null-preserving and fail-closed
-    val visible = policy.allowedColumns
-      .getOrElse(filtered.columns.toIndexedSeq)
-    def maskAt(abs: String): Option[Column] =
-      policy.masks.collectFirst { case (path, m)
-          if path.equalsIgnoreCase(abs) => compile(m) }
-    def kidHeads(paths: Iterable[String], abs: String): Seq[String] =
-      paths.toSeq.filter(_.toLowerCase.startsWith(abs.toLowerCase + "."))
-        .map(_.substring(abs.length + 1).takeWhile(_ != '.'))
-        .distinct
-    def secureValue(abs: String, base: Column): Column =
-      maskAt(abs).getOrElse {
-        if (visible.exists(_.equalsIgnoreCase(abs)))
-          policy.masks.collect { case (path, m)
-              if path.toLowerCase.startsWith(abs.toLowerCase + ".") =>
-            path.substring(abs.length + 1) -> m
-          }.foldLeft(base) { case (acc, (k, m)) =>
-            acc.withField(k, compile(m)) }
-        else {
-          val rebuilt = struct(kidHeads(visible, abs).map { h =>
-            secureValue(s"$abs.$h", base.getField(h)).as(h)
-          }.toIndexedSeq: _*)
-          when(base.isNull, lit(null)).otherwise(rebuilt)
-        }
-      }
-    val topVisible = visible.map(_.takeWhile(_ != '.')).distinct
-    filtered.select(topVisible.map(c =>
-      secureValue(c, col(c)).as(c)).toIndexedSeq: _*)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession,
+      FgacRule.securePlan(policy, df.queryExecution.analyzed, who,
+        df.columns.toIndexedSeq))
   }
 }

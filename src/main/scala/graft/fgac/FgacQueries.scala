@@ -59,17 +59,14 @@ object FgacQueries {
         masks = Map("c_acctbal" -> "CAST(-1.0 AS DOUBLE)"))))
   )
 
-  /** Register governed tables + principals (idempotent per session).
-    * Raw data lives under hidden views only [[FgacRule]] references;
-    * the public names `customer`/`orders`/`rl_customer` are resolved
-    * exclusively by the rule, which injects the caller's policy. */
+  /** Register governed tables + principals (idempotent). The raw
+    * relations are held by [[SecureCatalog]], never under a session
+    * name; the public names `customer`/`orders`/`rl_customer` are
+    * resolved exclusively by [[FgacRule]], which injects the caller's
+    * policy. */
   def setup(s: SparkSession, dir: String): Unit = {
-    val customer = Tables.customer(s, dir)
-    val orders = Tables.orders(s, dir)
-    customer.createOrReplaceTempView(SecureCatalog.rawViewName("customer"))
-    orders.createOrReplaceTempView(SecureCatalog.rawViewName("orders"))
-    SecureCatalog.governTable("customer", customer.columns.toIndexedSeq)
-    SecureCatalog.governTable("orders", orders.columns.toIndexedSeq)
+    SecureCatalog.governTable("customer", Tables.customer(s, dir))
+    SecureCatalog.governTable("orders", Tables.orders(s, dir))
     SecureCatalog.tagTable("customer", Set("pii"))
     principals.foreach(SecureCatalog.register)
   }
@@ -143,8 +140,7 @@ object FgacQueries {
     // governed-side DML before the read: bump every BUILDING balance
     t.update(Map("c_acctbal" -> "c_acctbal + 50.0"),
       "c_mktsegment = 'BUILDING'")
-    t.read().createOrReplaceTempView(SecureCatalog.rawViewName("gov_customer"))
-    SecureCatalog.governTable("gov_customer", t.read().columns.toIndexedSeq)
+    SecureCatalog.governTable("gov_customer", t.read())
     SecureCatalog.register(Principal("lake_analyst", grants = Map(
       "gov_customer" -> TablePolicy("gov_customer",
         rowFilter = Some(RowFilter),
@@ -168,16 +164,10 @@ object FgacQueries {
     // (consumer_emr_on_eks_setup.sh:438-447).
     Seq("gov", "dev").foreach(c => s.conf.set(
       s"spark.sql.catalog.$c", classOf[GovernedCatalog].getName))
-    val patients = Tables.customer(s, dir)
-    val accounts = Tables.orders(s, dir)
-    patients.createOrReplaceTempView(
-      SecureCatalog.rawViewName("gov.healthcare_db.patients"))
-    accounts.createOrReplaceTempView(
-      SecureCatalog.rawViewName("gov.finance_db.accounts"))
     SecureCatalog.governTable("gov.healthcare_db.patients",
-      patients.columns.toIndexedSeq)
+      Tables.customer(s, dir))
     SecureCatalog.governTable("gov.finance_db.accounts",
-      accounts.columns.toIndexedSeq)
+      Tables.orders(s, dir))
     SecureCatalog.register(Principal("ns_consumer",
       grants = Map("gov.healthcare_db.patients" ->
         TablePolicy("gov.healthcare_db.patients",
@@ -211,8 +201,7 @@ object FgacQueries {
     val t = graft.lakehouse.GraftTable.create(s,
       java.nio.file.Files.createTempDirectory("graft_fgac_wd").toString,
       Tables.customer(s, dir))
-    t.read().createOrReplaceTempView(SecureCatalog.rawViewName("wd_customer"))
-    SecureCatalog.governTable("wd_customer", t.read().columns.toIndexedSeq)
+    SecureCatalog.governTable("wd_customer", t.read())
     SecureCatalog.register(Principal("wd_reader", grants = Map(
       "wd_customer" -> TablePolicy("wd_customer",
         rowFilter = Some(RowFilter)))))
@@ -251,8 +240,7 @@ object FgacQueries {
     val t = graft.lakehouse.GraftTable.create(s,
       java.nio.file.Files.createTempDirectory("graft_fgac_audit").toString,
       Tables.customer(s, dir))
-    t.read().createOrReplaceTempView(SecureCatalog.rawViewName("aud_customer"))
-    SecureCatalog.governTable("aud_customer", t.read().columns.toIndexedSeq)
+    SecureCatalog.governTable("aud_customer", t.read())
     SecureCatalog.register(Principal("aud_reader", grants = Map(
       "aud_customer" -> TablePolicy("aud_customer",
         rowFilter = Some(RowFilter), allowedColumns = Some(VisibleCols),
@@ -300,9 +288,7 @@ object FgacQueries {
     * at-least-once contract), oracled as its constant decision
     * matrix. */
   private val auditPersist: Q = (s, dir) => {
-    val customer = Tables.customer(s, dir)
-    customer.createOrReplaceTempView(SecureCatalog.rawViewName("ap_customer"))
-    SecureCatalog.governTable("ap_customer", customer.columns.toIndexedSeq)
+    SecureCatalog.governTable("ap_customer", Tables.customer(s, dir))
     SecureCatalog.register(Principal("ap_reader", grants = Map(
       "ap_customer" -> TablePolicy("ap_customer",
         allowedColumns = Some(Seq("c_custkey", "c_mktsegment"))))))
@@ -321,12 +307,8 @@ object FgacQueries {
       java.nio.file.Files.createTempDirectory("graft_audit_trail").toString,
       AuditLog.schema)
     require(AuditLog.flushTo(s, auditT) > 0, "flush #1 must persist rows")
-    def regovern(): Unit = {
-      auditT.read().createOrReplaceTempView(
-        SecureCatalog.rawViewName("ap_audit_trail"))
-      SecureCatalog.governTable("ap_audit_trail",
-        Seq("seq", "principal", "action", "resource", "outcome", "detail"))
-    }
+    def regovern(): Unit =
+      SecureCatalog.governTable("ap_audit_trail", auditT.read())
     regovern()
     SecureCatalog.register(Principal("ap_auditor", grants = Map(
       "ap_audit_trail" -> TablePolicy("ap_audit_trail"))))
@@ -337,7 +319,7 @@ object FgacQueries {
     require(outcomeOf(asPrincipal(s, "ap_reader")(
       s.sql("SELECT * FROM ap_audit_trail").collect())) == "DENIED",
       "a data principal must not read the audit trail uninvited")
-    // flush #2 carries the auditor's own access; re-pin the raw view
+    // flush #2 carries the auditor's own access; re-pin the raw read
     require(AuditLog.flushTo(s, auditT) > 0,
       "flush #2 must carry the auditor's trail access")
     regovern()
@@ -378,11 +360,7 @@ object FgacQueries {
     * pins the isolation before the per-tenant aggregate. */
   private val contextFilter: Q = (s, dir) => {
     import org.apache.spark.sql.functions._
-    val customer = Tables.customer(s, dir)
-    customer.createOrReplaceTempView(
-      SecureCatalog.rawViewName("ctx_customer"))
-    SecureCatalog.governTable("ctx_customer",
-      customer.columns.toIndexedSeq)
+    SecureCatalog.governTable("ctx_customer", Tables.customer(s, dir))
     val shared = TablePolicy("ctx_customer",
       rowFilter = Some("c_mktsegment = graft_principal()"))
     val tenants = Seq("AUTOMOBILE", "BUILDING")
@@ -487,7 +465,8 @@ object FgacQueries {
     *     the granted columns — the hidden column does not appear, and
     *     neither do storage details (location / partition layout);
     *  2. SHOW TBLPROPERTIES under the same grant ANSWERS (zero rows
-    *     for a raw-view-backed governed table — a valid answer);
+    *     for a governed table over a plain DataFrame — a valid
+    *     answer);
     *  3. SHOW CREATE TABLE without a grant is DENIED (and audited —
     *     spec-pinned in FgacSpec);
     *  4. SHOW TBLPROPERTIES without a grant is DENIED;
@@ -518,12 +497,12 @@ object FgacQueries {
           "governed DDL must not disclose storage details")
       },
       attempt("2_tblprops_grantee") {
-        // raw-view-backed governed table: zero properties is the
-        // ANSWER (a cold "not found" here was the r16 verdict bug)
+        // a governed table over a plain DataFrame: zero properties is
+        // the ANSWER (a cold "not found" here was the r16 verdict bug)
         val props = asPrincipal(s, "analyst_col")(
           s.sql("SHOW TBLPROPERTIES customer")).collect()
         require(props.isEmpty,
-          "a raw-view-backed governed table answers zero properties")
+          "a DataFrame-backed governed table answers zero properties")
       },
       attempt("3_show_create_no_grant") {
         asPrincipal(s, "team2")(
@@ -671,11 +650,8 @@ object FgacQueries {
     import s.implicits._
     Seq("gov", "dev").foreach(c => s.conf.set(
       s"spark.sql.catalog.$c", classOf[GovernedCatalog].getName))
-    val patients = Tables.customer(s, dir)
-    patients.createOrReplaceTempView(
-      SecureCatalog.rawViewName("gov.healthcare_db.patients"))
     SecureCatalog.governTable("gov.healthcare_db.patients",
-      patients.columns.toIndexedSeq)
+      Tables.customer(s, dir))
     Seq("nsg_consumer", "nsg_team", "nsg_analyst")
       .foreach(n => SecureCatalog.register(Principal(n)))
     def attempt(scenario: String)(body: => Unit): (String, String) =
@@ -837,7 +813,8 @@ object FgacQueries {
     import org.apache.spark.sql.functions.{col, concat, lit, struct}
     import org.apache.spark.sql.types.StructType
     val customer = Tables.customer(s, dir)
-    customer.select(col("c_custkey"),
+    SecureCatalog.governTable("nst_customer", customer.select(
+      col("c_custkey"),
       struct(col("c_name").as("name"), col("c_acctbal").as("bal"),
         col("c_mktsegment").as("segment"),
         struct(
@@ -845,10 +822,7 @@ object FgacQueries {
             .as("phone"),
           concat(lit("A-"), col("c_nationkey").cast("string"))
             .as("addr")).as("contact")).as("info"),
-      col("c_nationkey"))
-      .createOrReplaceTempView(SecureCatalog.rawViewName("nst_customer"))
-    SecureCatalog.governTable("nst_customer",
-      Seq("c_custkey", "info", "c_nationkey"))
+      col("c_nationkey")))
     SecureCatalog.register(Principal("nst_analyst", grants = Map(
       "nst_customer" -> TablePolicy("nst_customer",
         rowFilter = Some("info.segment IN ('BUILDING','MACHINERY')"),

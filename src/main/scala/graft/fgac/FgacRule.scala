@@ -27,7 +27,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * pruning and column pruning still apply, and FGAC adds zero
   * shuffles at 100 TB.
   *
-  * The raw data is registered under a hidden view name (local-mode
+  * The raw relation is held as a plan inside [[SecureCatalog]], never
+  * under a session name, so no principal can name it (local-mode
   * stand-in for the producer's storage credentials, which in the
   * reference only the Lake Formation data-access role can use —
   * producer_iceberg_datalake_setup.sh:96-101).
@@ -51,11 +52,9 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // relation; no grant denies. The scan path below stays denied
       // for DESCRIBE-only principals (SecureCatalog.authorize).
       case d: org.apache.spark.sql.catalyst.plans.logical.DescribeRelation
-          if describeTarget(d.relation).map(stripCat).exists(p =>
-            SecureCatalog.isVisibleName(p) ||
-              graft.lakehouse.ViewRegistry.isView(p)) =>
-        val parts =
-          stripCat(describeTarget(d.relation).get).map(_.toLowerCase)
+          if describeTarget(d.relation).exists(FgacRule.claims(spark, _)) =>
+        val parts = FgacRule.stripCat(spark,
+          describeTarget(d.relation).get).map(_.toLowerCase)
         val name = parts.mkString(".")
         val target = SecureCatalog.resolveLink(name)
         // an UNGOVERNED view is queryable by anyone, so its schema is
@@ -67,7 +66,7 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
             vd.outputColumns.map(_._1)
           case _ => SecureCatalog.describeColumns(who, name)
         }
-        // views have no raw storage view — types come from the
+        // views have no stored raw relation — types come from the
         // schema captured at CREATE VIEW
         val typeOf: String => String =
           graft.lakehouse.ViewRegistry.get(target) match {
@@ -75,8 +74,7 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
               vd.outputColumns.find(_._1.equalsIgnoreCase(c))
                 .map(_._2).getOrElse("unknown")
             case None =>
-              val rawSchema =
-                spark.table(SecureCatalog.rawViewName(target)).schema
+              val rawSchema = SecureCatalog.relationOf(target).schema
               // nested policy entries (`outer.inner`) resolve one
               // struct level — the SAME resolver the governed SHOW
               // CREATE TABLE uses, so the two never disagree
@@ -92,52 +90,18 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
           d.output, rows)
-      // Graft views expand INLINE (before the governed-table case: a
-      // governed view is also a visible name, and the table rewrite
-      // would point it at a raw view that does not exist). The
-      // expansion checks the view-level grant and resolves underlying
-      // governed names as the effective principal — the querying one
-      // for invoker views, the captured creator for definer views.
-      case u: UnresolvedRelation
-          if graft.lakehouse.ViewRegistry.isView(u.multipartIdentifier) =>
-        graft.lakehouse.ViewExpansion.expand(
-          spark, u.multipartIdentifier, who)
-      // Both bare (`patients`) and namespace-qualified
+      // Governed names, resource links and graft views — bare
+      // (`patients`), namespace-qualified
       // (`dev.healthcare_db.rl_patients`, the reference's only form —
-      // consumer_emr_on_eks_setup.sh:407-412) governed names resolve
-      // here; a qualified name that bypassed governance would be a
-      // policy hole, so interception keys on the full dotted name.
+      // consumer_emr_on_eks_setup.sh:407-412) or catalog-qualified
+      // (`graft.db.t`) — resolve here; a qualified name that bypassed
+      // governance would be a policy hole, so interception keys on
+      // the full dotted name.
       case u: UnresolvedRelation
-          if SecureCatalog.isVisibleName(u.multipartIdentifier) =>
-        FgacRule.resolveGoverned(u, who)
-      // Alias coherence with the lake's three-part addressing: a
-      // `graft.db.t` read whose STRIPPED key is governed resolves
-      // through the SAME policy as `db.t` — the lake rule refuses to
-      // claim it (ungovernedKey checks both forms), and without this
-      // case the catalog-qualified alias of a governed table would
-      // error "not found" while the bare form answers.
-      case u: UnresolvedRelation
-          if u.multipartIdentifier.size == 3 &&
-            u.multipartIdentifier.head.equalsIgnoreCase(
-              graft.lakehouse.LakeRegistry.catalogOf(spark)) &&
-            SecureCatalog.isVisibleName(u.multipartIdentifier.tail) =>
-        FgacRule.resolveGoverned(
-          u.copy(multipartIdentifier = u.multipartIdentifier.tail), who)
+          if FgacRule.claims(spark, u.multipartIdentifier) =>
+        FgacRule.resolveName(spark, u.multipartIdentifier, who)
     }
   }
-
-  /** A leading configured-catalog segment strips when the STRIPPED
-    * name is the governed/view one (alias coherence with the lake's
-    * three-part addressing); a full 3-part governed name keeps its
-    * own registration. */
-  private def stripCat(parts: Seq[String]): Seq[String] =
-    if (parts.size == 3 && !SecureCatalog.isVisibleName(parts) &&
-        parts.head.equalsIgnoreCase(
-          graft.lakehouse.LakeRegistry.catalogOf(spark)) &&
-        (SecureCatalog.isVisibleName(parts.tail) ||
-          graft.lakehouse.ViewRegistry.isView(parts.tail)))
-      parts.tail
-    else parts
 
   /** The multipart name under a DESCRIBE target, whatever unresolved
     * shape the parser produced for it. */
@@ -153,22 +117,51 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object FgacRule {
 
-  /** A governed relation NAME resolved for principal `who`: raw scan
-    * for admin/ungranted-ungoverned, secured scan under the policy
-    * otherwise (throws when governed-but-ungranted). Shared between
-    * the session rule above and [[graft.lakehouse.ViewExpansion]],
-    * which resolves a view's underlying names as the view's effective
-    * principal rather than the session's. */
-  def resolveGoverned(u: UnresolvedRelation, who: String): LogicalPlan = {
-    val parts = u.multipartIdentifier.map(_.toLowerCase)
-    val name = parts.mkString(".")
+  /** A leading configured-catalog segment strips when the STRIPPED
+    * name is the governed/view one (alias coherence with the lake's
+    * three-part addressing: a `graft.db.t` read resolves through the
+    * SAME policy as `db.t`, which the lake rule refuses to claim); a
+    * full 3-part governed name keeps its own registration. */
+  private def stripCat(spark: SparkSession,
+      parts: Seq[String]): Seq[String] =
+    if (parts.size == 3 && !SecureCatalog.isVisibleName(parts) &&
+        parts.head.equalsIgnoreCase(
+          graft.lakehouse.LakeRegistry.catalogOf(spark)) &&
+        (SecureCatalog.isVisibleName(parts.tail) ||
+          graft.lakehouse.ViewRegistry.isView(parts.tail)))
+      parts.tail
+    else parts
+
+  /** Whether relation name `parts` is FGAC's to resolve: a graft view,
+    * a governed name or a resource link. */
+  def claims(spark: SparkSession, parts: Seq[String]): Boolean = {
+    val p = stripCat(spark, parts)
+    SecureCatalog.isVisibleName(p) || graft.lakehouse.ViewRegistry.isView(p)
+  }
+
+  /** THE name dispatch for a [[claims]]ed name, resolved for effective
+    * principal `who`: a resource link resolves to its target, a graft
+    * view expands inline ([[graft.lakehouse.ViewExpansion]], which
+    * checks the view-level grant), and any other governed name
+    * splices its stored raw relation — as is for the admin session
+    * and ungoverned targets, secured under `who`'s policy otherwise
+    * (throws when governed-but-ungranted). Shared by the session rule
+    * above and view expansion, which resolves a view's underlying
+    * names as the view's effective principal rather than the
+    * session's. */
+  def resolveName(spark: SparkSession, parts: Seq[String], who: String,
+      depth: Int = 0): LogicalPlan = {
+    val lower = stripCat(spark, parts).map(_.toLowerCase)
+    val name = lower.mkString(".")
     val target = SecureCatalog.resolveLink(name)
-    val raw = u.copy(multipartIdentifier =
-      Seq(SecureCatalog.rawViewName(target)))
-    if (who.isEmpty) SubqueryAlias(parts, raw) // admin / ungoverned session
-    else SecureCatalog.authorize(who, name) match {
-      case None         => SubqueryAlias(parts, raw)
-      case Some(policy) => SubqueryAlias(parts, securePlan(policy, raw, who))
+    if (graft.lakehouse.ViewRegistry.get(target).isDefined)
+      graft.lakehouse.ViewExpansion.expand(spark, lower, who, depth)
+    else {
+      val policy =
+        if (who.isEmpty) None else SecureCatalog.authorize(who, name)
+      val raw = SecureCatalog.relationOf(target)
+      SubqueryAlias(lower, policy.fold(raw)(
+        securePlan(_, raw, who, SecureCatalog.columnsOf(target))))
     }
   }
 
@@ -211,11 +204,13 @@ object FgacRule {
     *   - row filters may reference nested paths (they evaluate
     *     against the raw row and push down like any nested
     *     predicate).
-    * All of it is still plain Column expressions, so Catalyst's
-    * nested-schema pruning keeps the scan reading only the accessed
-    * leaves. */
-  def securePlan(policy: TablePolicy, raw: LogicalPlan,
-      who: String): LogicalPlan = {
+    * All of it is still plain Catalyst expressions, so nested-schema
+    * pruning keeps the scan reading only the accessed leaves.
+    *
+    * `columns` is the relation's full column list — the visible set
+    * when the policy lists none (a mask-only policy). */
+  def securePlan(policy: TablePolicy, raw: LogicalPlan, who: String,
+      columns: Seq[String]): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{CaseWhen,
       CreateNamedStruct, IsNull, Literal, UpdateFields}
     import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
@@ -226,8 +221,7 @@ object FgacRule {
     policy.allowedColumns match {
       case None if policy.masks.isEmpty => filtered
       case _ =>
-        val visible = policy.allowedColumns
-          .getOrElse(SecureCatalog.columnsOf(policy.table))
+        val visible = policy.allowedColumns.getOrElse(columns)
         def maskAt(abs: String): Option[Expression] =
           policy.masks.collectFirst { case (path, m)
               if path.equalsIgnoreCase(abs) => compilePolicyExpr(m, who) }

@@ -185,16 +185,13 @@ object SecureCatalog {
     * (consumer_emr_on_eks_setup.sh:434 `--execution-role-arn`). */
   val PrincipalConf = "spark.graft.principal"
 
-  /** Hidden raw-data view for a governed table; only [[FgacRule]]
-    * references it (the local-mode analog of the producer's
-    * storage-credentials boundary). Namespace-qualified names
-    * (`catalog.db.table`) flatten their dots, since temp-view names
-    * are single-part. */
-  def rawViewName(table: String): String =
-    s"__graft_raw_${table.toLowerCase.replace('.', '_')}"
-
   private val governed =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]() // name -> columns
+  // name -> raw analyzed plan: held here, never under a session name,
+  // so only [[FgacRule]] can reach it (the local-mode analog of the
+  // producer's storage-credentials boundary) — from any session
+  private val relations = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val links =
     new java.util.concurrent.ConcurrentHashMap[String, String]() // link -> table
   private val principals =
@@ -202,18 +199,38 @@ object SecureCatalog {
   private val tableTags =
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]() // table -> tags
 
+  /** Govern `name` with column universe `columns` and no raw relation
+    * of its own: graft views (which expand their query) and
+    * policy-only registrations. */
   def governTable(name: String, columns: Seq[String]): Unit =
     governed.put(name.toLowerCase, columns)
+  /** Govern `name` over the raw relation `raw`: its columns and its
+    * analyzed plan, which [[FgacRule]] splices under the reader's
+    * policy. The plan pins what `raw` read — a snapshot-pinned lake
+    * read stays at that snapshot until governed again. */
+  def governTable(name: String,
+      raw: org.apache.spark.sql.DataFrame): Unit = {
+    relations.put(name.toLowerCase, raw.queryExecution.analyzed)
+    governTable(name, raw.columns.toIndexedSeq)
+  }
+  /** The raw relation governing `name` (a resolved link target);
+    * engine-internal, like the storage credentials it stands for. */
+  private[graft] def relationOf(
+      name: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    Option(relations.get(name.toLowerCase)).getOrElse(
+      throw new IllegalStateException(s"governed table '$name' has no " +
+        "raw relation: govern it with SecureCatalog.governTable(name, df)"))
   /** Remove a name from governance (dropped views/tables take their
     * governance entry with them — a dangling entry would make the
-    * name un-recreatable and misroute reads). Tags, every
-    * principal's grants on the name, and links pointing at it go
-    * too: a stale grant would silently resurrect — write and
+    * name un-recreatable and misroute reads). Its raw relation,
+    * tags, every principal's grants on the name, and links pointing
+    * at it go too: a stale grant would silently resurrect — write and
     * GRANT OPTION included — if a future same-named resource is
     * governed. */
   def ungovern(name: String): Unit = {
     val key = name.toLowerCase
     governed.remove(key)
+    relations.remove(key)
     tableTags.remove(key)
     principals.replaceAll((_, p) =>
       if (p.grants.contains(key)) p.copy(grants = p.grants - key) else p)

@@ -633,7 +633,7 @@ case class GraftGovernedShowCreateCommand(name: String)
     // audited + deny-by-default: the same gate as fgac_describe
     val visible = graft.fgac.SecureCatalog.describeColumns(who, name)
     val target = graft.fgac.SecureCatalog.resolveLink(name)
-    val typeOf = GovernedMeta.typeOf(spark, target)
+    val typeOf = GovernedMeta.typeOf(target)
     val cols = visible.map(c => s"  $c ${typeOf(c)}").mkString(",\n")
     Seq(Row(s"CREATE TABLE $name (\n$cols)\nUSING graft"))
   }
@@ -642,9 +642,9 @@ case class GraftGovernedShowCreateCommand(name: String)
 /** `SHOW TBLPROPERTIES t [('key')]` on a GOVERNED name: gated by the
   * same audited any-grant check as the policy-filtered DESCRIBE, then
   * answers the lake table's property map when one backs the governed
-  * name (resource links resolve first) — a raw-view-only governed
-  * table legitimately has none (zero rows, a valid answer, not a
-  * cold miss). */
+  * name (resource links resolve first) — a governed table over a
+  * plain DataFrame legitimately has none (zero rows, a valid answer,
+  * not a cold miss). */
 case class GraftGovernedShowPropsCommand(name: String, key: Option[String])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
@@ -707,10 +707,9 @@ private[graft] object GovernedMeta {
   }
 
   /** Column → rendered type for a governed relation, answered from
-    * the raw relation's schema. */
-  def typeOf(spark: SparkSession, target: String): String => String = {
-    val schema =
-      spark.table(graft.fgac.SecureCatalog.rawViewName(target)).schema
+    * its stored raw relation's schema. */
+  def typeOf(target: String): String => String = {
+    val schema = graft.fgac.SecureCatalog.relationOf(target).schema
     c => resolveType(schema, c).map(_.sql).getOrElse("unknown")
   }
 }

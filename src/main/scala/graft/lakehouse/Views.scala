@@ -81,7 +81,8 @@ object ViewRegistry {
 
 /** Inline view expansion. `who` is the QUERYING principal; nested
   * views re-expand under the outer view's effective principal, each
-  * checking its own view-level grant — the SQL-standard chain. */
+  * checking its own view-level grant — the SQL-standard chain. A
+  * resource link to a view expands the view under the link's name. */
 object ViewExpansion {
   private val MaxDepth = 16
 
@@ -89,11 +90,12 @@ object ViewExpansion {
       depth: Int = 0): LogicalPlan = {
     val lowerParts = parts.map(_.toLowerCase)
     val name = lowerParts.mkString(".")
+    val target = SecureCatalog.resolveLink(name)
     if (depth >= MaxDepth)
       throw new IllegalStateException(
         s"view expansion exceeded depth $MaxDepth at '$name' — " +
           "cyclic view definitions?")
-    val vd = ViewRegistry.get(name).getOrElse(
+    val vd = ViewRegistry.get(target).getOrElse(
       throw new IllegalArgumentException(s"'$name' is not a view"))
     // view-level policy: a governed view authorizes like a governed
     // table (throws when governed-but-ungranted). An UNGOVERNED view
@@ -102,7 +104,7 @@ object ViewExpansion {
     // must read ungoverned views exactly as it reads ungoverned
     // tables, not trip over the principal lookup.
     val policy =
-      if (who.isEmpty || !SecureCatalog.isGoverned(name)) None
+      if (who.isEmpty || !SecureCatalog.isGoverned(target)) None
       else SecureCatalog.authorize(who, name)
     // Definer views REPUBLISH their creator's visibility, so a foreign
     // principal may only read one through an explicit grant: the view
@@ -113,7 +115,7 @@ object ViewExpansion {
     // narrowing law. The definer reads their own view freely; the
     // ungoverned (admin) session bypasses like everywhere else.
     if (vd.definerSecurity && vd.definer.nonEmpty && who.nonEmpty &&
-        who != vd.definer && !SecureCatalog.isGoverned(name))
+        who != vd.definer && !SecureCatalog.isGoverned(target))
       throw new graft.fgac.AccessDeniedException(
         s"definer view '$name' republishes the visibility of its " +
           s"creator '${vd.definer}'; reads by other principals " +
@@ -127,15 +129,9 @@ object ViewExpansion {
       else who
     val parsed = spark.sessionState.sqlParser.parsePlan(vd.sql)
     val resolved = parsed.transformUp {
-      // nested views FIRST: a governed view is also a visible name,
-      // and the governed-table rewrite would point it at a raw view
-      // that does not exist
       case u: UnresolvedRelation
-          if ViewRegistry.isView(u.multipartIdentifier) =>
-        expand(spark, u.multipartIdentifier, inner, depth + 1)
-      case u: UnresolvedRelation
-          if SecureCatalog.isVisibleName(u.multipartIdentifier) =>
-        FgacRule.resolveGoverned(u, inner)
+          if FgacRule.claims(spark, u.multipartIdentifier) =>
+        FgacRule.resolveName(spark, u.multipartIdentifier, inner, depth + 1)
     }
     val aliased =
       if (vd.columnAliases.isEmpty) resolved
@@ -144,7 +140,8 @@ object ViewExpansion {
           Alias(UnresolvedAttribute.quoted(q), a)()
         }, resolved)
     val withPolicy =
-      policy.fold(aliased)(p => FgacRule.securePlan(p, aliased, who))
+      policy.fold(aliased)(p => FgacRule.securePlan(p, aliased, who,
+        SecureCatalog.columnsOf(target)))
     SubqueryAlias(lowerParts, withPolicy)
   }
 }
@@ -250,7 +247,7 @@ case class GraftDropViewCommand(name: String)
           // a governed view's governance entry (and every stale
           // grant on the name) dies with it — leaving it would make
           // the name un-recreatable and route later reads into the
-          // governed-TABLE branch (raw-view-not-found)
+          // governed-TABLE branch (a name with no raw relation)
           SecureCatalog.ungovern(name)
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, max}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fgac._
@@ -10,8 +10,49 @@ object SparkTestSession {
   val sf = "/root/testdata/sf0.001"
 }
 
+/** Every value a probe UDF saw, across tasks (local mode: one JVM). */
+object FgacUdfProbe {
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 class FgacSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
+
+  /** The rows of `df` as a sorted multiset, for order-free equality. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def assertSameRows(got: DataFrame, expect: DataFrame): Unit = {
+    assert(got.columns.toSeq == expect.columns.toSeq)
+    assert(rowsOf(got) == rowsOf(expect))
+  }
+
+  private val Visible = "c_mktsegment IN ('BUILDING','AUTOMOBILE')"
+
+  /** `customer` as the row-filtered `consumer` grant shows it. */
+  private def visibleCustomers: DataFrame =
+    Tables.customer(spark, sf).filter(Visible)
+
+  /** A predicate that divides by zero on exactly the rows the
+    * `consumer` policy hides (ANSI mode raises on them). */
+  private def failsOnHidden(c: String): String =
+    s"1 / CASE WHEN $c IN ('BUILDING','AUTOMOBILE') THEN 1 ELSE 0 END > 0"
+
+  private def assertDividesByZero(body: => Unit): Unit = {
+    val e = intercept[Exception](body)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists {
+        case t: org.apache.spark.SparkThrowable =>
+          t.getCondition == "DIVIDE_BY_ZERO"
+        case _ => false
+      }, e)
+  }
+
+  private def withAnsi[A](body: => A): A = {
+    val old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try body finally spark.conf.set("spark.sql.ansi.enabled", old)
+  }
 
   test("row filter keeps only granted segments") {
     val df = SparkEntry.queries("fgac_row_filter")(spark, sf)
@@ -732,7 +773,7 @@ class FgacSpec extends AnyFunSuite {
     // it (dropping would strip the admin-applied policy for every
     // reader); DROP then removes the governance entry with it, so
     // the name is re-creatable and reads say "not found", not a
-    // raw-view resolution error
+    // missing-raw-relation error
     SecureCatalog.governTable("vm_v", Seq("c_custkey"))
     intercept[AccessDeniedException](
       FgacQueries.asPrincipal(spark, "vm_owner")(
@@ -839,9 +880,10 @@ class FgacSpec extends AnyFunSuite {
     // the Enforcer (library API) path folds the context function too
     val pol = TablePolicy("ctx_customer",
       rowFilter = Some("c_mktsegment = graft_principal()"))
-    val viaEnforcer = Enforcer.secure(
-      Tables.customer(spark, sf), pol, "AUTOMOBILE")
-    assert(viaEnforcer.count() == out.head.getAs[Long]("n_rows"))
+    assertSameRows(
+      Enforcer.secure(Tables.customer(spark, sf), pol, "AUTOMOBILE"),
+      FgacQueries.asPrincipal(spark, "AUTOMOBILE")(
+        spark.sql("SELECT * FROM ctx_customer")))
     // outside a policy expression the function stays unresolved
     intercept[Exception](
       spark.sql("SELECT graft_principal()").collect())
@@ -943,8 +985,7 @@ class FgacSpec extends AnyFunSuite {
   test("governed SHOW CREATE TABLE / SHOW TBLPROPERTIES: policy-shaped " +
       "answer or loud audited denial, never a cold miss") {
     val raw = spark.range(3).selectExpr("id", "'x' AS secret", "'y' AS ok")
-    raw.createOrReplaceTempView(SecureCatalog.rawViewName("sddl_t"))
-    SecureCatalog.governTable("sddl_t", Seq("id", "secret", "ok"))
+    SecureCatalog.governTable("sddl_t", raw)
     SecureCatalog.register(Principal("sddl_reader", grants = Map(
       "sddl_t" -> TablePolicy("sddl_t",
         allowedColumns = Some(Seq("id", "ok"))))))
@@ -957,7 +998,8 @@ class FgacSpec extends AnyFunSuite {
         s"the DDL must be column-filtered per grant: $ddl")
       assert(ddl.contains("BIGINT"),
         "types come from the raw relation's schema")
-      // TBLPROPERTIES answers (zero rows — raw-view-backed) under a grant
+      // TBLPROPERTIES answers (zero rows — no lake table behind the
+      // DataFrame) under a grant
       assert(spark.sql("SHOW TBLPROPERTIES sddl_t").collect().isEmpty)
       // no grant → AccessDenied, and the denial lands in the trail
       spark.conf.set(SecureCatalog.PrincipalConf, "sddl_none")
@@ -973,6 +1015,151 @@ class FgacSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset(SecureCatalog.PrincipalConf)
       SecureCatalog.ungovern("sddl_t")
+    }
+  }
+
+  test("no session name reaches a governed table's raw relation") {
+    FgacQueries.setup(spark, sf)
+    // the per-table temp-view name governance once registered
+    val hidden = "__graft" + "_raw_customer"
+    FgacQueries.asPrincipal(spark, "team2") {
+      Seq[() => Unit](
+        () => spark.sql(s"SELECT count(*) FROM $hidden").collect(),
+        () => spark.table(hidden).collect()).foreach { read =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](read())
+        assert(e.getCondition == "TABLE_OR_VIEW_NOT_FOUND", e.getMessage)
+      }
+      assert(!spark.catalog.listTables().collect()
+        .exists(_.name.startsWith("__graft")))
+    }
+  }
+
+  test("a principal session from newSession() reads a governed table " +
+      "registered from another session") {
+    FgacQueries.setup(spark, sf)
+    val session = spark.newSession()
+    session.conf.set(SecureCatalog.PrincipalConf, "team1")
+    val got = session.sql("SELECT * FROM customer")
+    assertSameRows(got, FgacQueries.asPrincipal(spark, "team1")(
+      spark.sql("SELECT * FROM customer")))
+    assert(!got.columns.contains("c_acctbal"))
+    assert(rowsOf(got).size == visibleCustomers.count())
+  }
+
+  test("ungovern drops the raw relation; a governed name without one " +
+      "fails naming it") {
+    SecureCatalog.governTable("stale_t", spark.range(3).toDF("id"))
+    try {
+      assert(spark.sql("SELECT * FROM stale_t").count() == 3)
+      SecureCatalog.ungovern("stale_t")
+      SecureCatalog.governTable("stale_t", Seq("id")) // policy only
+      Seq("SELECT * FROM stale_t", "DESCRIBE TABLE stale_t").foreach { q =>
+        val e = intercept[IllegalStateException](spark.sql(q).collect())
+        assert(e.getMessage.contains("'stale_t'") &&
+          !e.getMessage.contains("__graft"), e.getMessage)
+      }
+    } finally SecureCatalog.ungovern("stale_t")
+  }
+
+  test("a resource link to a governed view reads under the view's " +
+      "policy; without a grant it is denied and audited") {
+    Tables.customer(spark, sf).createOrReplaceTempView("lv_src")
+    spark.sql("CREATE OR REPLACE VIEW lv_v AS SELECT * FROM lv_src")
+    SecureCatalog.governTable("lv_v",
+      Tables.customer(spark, sf).columns.toIndexedSeq)
+    SecureCatalog.register(Principal("lv_reader",
+      grants = Map("lv_v" -> TablePolicy("lv_v", rowFilter = Some(Visible),
+        allowedColumns = Some(Seq("c_custkey", "c_mktsegment")))),
+      links = Map("rl_lv" -> "lv_v")))
+    SecureCatalog.register(Principal("lv_nogrant"))
+    try {
+      assertSameRows(
+        FgacQueries.asPrincipal(spark, "lv_reader")(
+          spark.sql("SELECT * FROM rl_lv")),
+        visibleCustomers.select("c_custkey", "c_mktsegment"))
+      val before = AuditLog.entries.size
+      intercept[AccessDeniedException](
+        FgacQueries.asPrincipal(spark, "lv_nogrant")(
+          spark.sql("SELECT * FROM rl_lv").collect()))
+      assert(AuditLog.entries.drop(before).exists(e =>
+        e.principal == "lv_nogrant" && e.resource == "lv_v" &&
+          e.outcome == "DENIED"))
+    } finally {
+      spark.sql("DROP VIEW lv_v")
+      spark.catalog.dropTempView("lv_src")
+    }
+  }
+
+  test("row-filtered grant: an ANSI divide-by-zero predicate sees only " +
+      "policy-visible rows") {
+    FgacQueries.setup(spark, sf)
+    val q = "SELECT c_custkey FROM customer WHERE " +
+      failsOnHidden("c_mktsegment")
+    withAnsi {
+      // the predicate does raise on the hidden rows
+      assertDividesByZero(spark.sql(q).collect())
+      assertSameRows(FgacQueries.asPrincipal(spark, "consumer")(spark.sql(q)),
+        visibleCustomers.select("c_custkey"))
+    }
+  }
+
+  test("row-filtered grant: a join-condition predicate sees only " +
+      "policy-visible rows") {
+    FgacQueries.setup(spark, sf)
+    val q = "SELECT c.c_custkey FROM customer c JOIN range(1, 100000) r " +
+      s"ON r.id = c.c_custkey AND ${failsOnHidden("c.c_mktsegment")}"
+    withAnsi {
+      assertDividesByZero(spark.sql(q).collect())
+      assertSameRows(FgacQueries.asPrincipal(spark, "consumer")(spark.sql(q)),
+        visibleCustomers.select("c_custkey"))
+    }
+  }
+
+  test("row-filtered grant: a Scala UDF recording its inputs sees only " +
+      "policy-visible rows") {
+    FgacQueries.setup(spark, sf)
+    spark.udf.register("fgac_probe_rec",
+      (s: String) => { FgacUdfProbe.seen.add(s); true })
+    FgacUdfProbe.seen.clear()
+    val got = FgacQueries.asPrincipal(spark, "consumer")(spark.sql(
+      "SELECT c_custkey FROM customer WHERE fgac_probe_rec(c_mktsegment)"))
+    assertSameRows(got, visibleCustomers.select("c_custkey"))
+    import scala.jdk.CollectionConverters._
+    val seen = FgacUdfProbe.seen.asScala.toSet
+    assert(seen.nonEmpty && seen.subsetOf(Set("BUILDING", "AUTOMOBILE")),
+      seen)
+  }
+
+  test("row-filtered grant: a self-join of one governed name gets " +
+      "deduplicated attribute ids and only policy-visible rows") {
+    FgacQueries.setup(spark, sf)
+    val got = FgacQueries.asPrincipal(spark, "consumer")(spark.sql(
+      "SELECT a.c_custkey, b.c_custkey AS k2 FROM customer a " +
+        "JOIN customer b ON a.c_custkey = b.c_custkey"))
+    val join = got.queryExecution.analyzed.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.get
+    assert(join.left.outputSet.intersect(join.right.outputSet).isEmpty)
+    assertSameRows(got, visibleCustomers.select(col("c_custkey"),
+      col("c_custkey").as("k2")))
+  }
+
+  test("Enforcer.secure equals the SQL read: cell filter with a mask, " +
+      "and nested policies") {
+    FgacQueries.setup(spark, sf)
+    val team1 = SecureCatalog.principal("team1").get.grants("customer")
+    assertSameRows(
+      Enforcer.secure(Tables.customer(spark, sf), team1, "team1"),
+      FgacQueries.asPrincipal(spark, "team1")(
+        spark.sql("SELECT * FROM customer")))
+    SparkEntry.queries("fgac_nested")(spark, sf)
+    val raw = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      SecureCatalog.relationOf("nst_customer"))
+    Seq("nst_analyst", "nst_partner").foreach { who =>
+      val pol = SecureCatalog.principal(who).get.grants("nst_customer")
+      assertSameRows(Enforcer.secure(raw, pol, who),
+        FgacQueries.asPrincipal(spark, who)(
+          spark.sql("SELECT * FROM nst_customer")))
     }
   }
 }

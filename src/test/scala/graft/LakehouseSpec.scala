@@ -3593,9 +3593,7 @@ class LakehouseSpec extends AnyFunSuite {
     // through an ungoverned clone; an unfiltered grantee may clone
     import graft.fgac.{AccessDeniedException, FgacQueries, Principal,
       SecureCatalog, TablePolicy}
-    t.read().createOrReplaceTempView(
-      SecureCatalog.rawViewName("sc_src"))
-    SecureCatalog.governTable("sc_src", Seq("k", "tag"))
+    SecureCatalog.governTable("sc_src", t.read())
     SecureCatalog.register(Principal("sc_filtered", grants = Map(
       "sc_src" -> TablePolicy("sc_src", rowFilter = Some("k <= 10")))))
     // unfiltered but WITHOUT grant option: the ungoverned clone
@@ -4799,8 +4797,7 @@ class LakehouseSpec extends AnyFunSuite {
     // (LakeSqlRule skips visible names, so FgacRule owns the read)
     import graft.fgac.{Principal, SecureCatalog, TablePolicy}
     val raw = Seq((1L, "TX"), (2L, "CA")).toDF("id", "state")
-    raw.createOrReplaceTempView(SecureCatalog.rawViewName("nsg.pat"))
-    SecureCatalog.governTable("nsg.pat", Seq("id", "state"))
+    SecureCatalog.governTable("nsg.pat", raw)
     SecureCatalog.register(Principal("ns_t1", grants = Map(
       "nsg.pat" -> TablePolicy("nsg.pat",
         rowFilter = Some("state = 'TX'")))))
@@ -4849,8 +4846,7 @@ class LakehouseSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("already exists"))
     // a governed TARGET refuses (renaming onto a policy would shadow it)
     val rawGov = Seq((1L, "TX")).toDF("id", "state")
-    rawGov.createOrReplaceTempView(SecureCatalog.rawViewName("rn_gov"))
-    SecureCatalog.governTable("rn_gov", Seq("id", "state"))
+    SecureCatalog.governTable("rn_gov", rawGov)
     val e2 = intercept[IllegalArgumentException](
       spark.sql("ALTER TABLE rndb.rn_c RENAME TO rn_gov"))
     assert(e2.getMessage.contains("governed"))
