@@ -226,26 +226,6 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"stat":"min",$envJson,"queries":$hq,"errors":$errJson,"sf":"$sfDir"}"""
     println(detailLine)
     println(metricLine)
-    // Round 20 (additions only — the stdout lines above and the timed
-    // region are byte-identical): the metric JSON has never been
-    // machine-parsed from stdout (sbt wraps every line in an "[info] "
-    // prefix), so ALSO (a) emit both lines bare on stderr, which sbt
-    // passes through unwrapped, and (b) write them to a file —
-    // $SPARK_GRAFT_METRICS_OUT, default ./bench_metrics.json — so the
-    // per-query comparison has a clean machine-readable artifact.
-    System.err.println(detailLine)
-    System.err.println(metricLine)
-    val metricsOut = sys.env.getOrElse(
-      "SPARK_GRAFT_METRICS_OUT", "bench_metrics.json")
-    try {
-      val w = new java.io.PrintWriter(
-        new java.io.File(metricsOut), "UTF-8")
-      try { w.println(detailLine); w.println(metricLine) }
-      finally w.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] metrics file write failed: $e")
-    }
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.lakehouse
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftlake.{ManifestFile, ManifestFileIndex}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -823,24 +823,35 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val refSeq = ref.map(_.fileSeq).getOrElse(Map.empty)
     val refRows = ref.map(_.fileRows).getOrElse(Map.empty)
     val refSizes = ref.map(_.fileSizes).getOrElse(Map.empty)
+    val dels = delsOverride.getOrElse(ref.map(_.dels).getOrElse(Nil))
+    val posDels =
+      posDelsOverride.getOrElse(ref.map(_.posDels).getOrElse(Nil))
+    val refPdSizes = ref.map(_.posDelSizes).getOrElse(Map.empty)
+    val refPdRows = ref.map(_.posDelRows).getOrElse(Map.empty)
     // footer reads for NEW files run on a bounded pool — a wide
     // append's commit latency is ceil(n/8) footer round-trips, not n
     // sequential ones (Iceberg parallelizes its manifest stats the
-    // same way). One footer read yields both the column bounds and
-    // the record count; known files carry both by reference (data
-    // files are immutable).
+    // same way). One footer read yields the column bounds, the record
+    // count and the byte size; known files carry all three by
+    // reference (data files are immutable). Tombstone files new in
+    // this commit share the pool: their footers give the row count
+    // and size `delete_files` metadata and the broadcast gate read.
     val newFiles = files.filterNot(refStats.contains)
+    val newTombs = posDels.filterNot(p =>
+      refPdRows.contains(p) && refPdSizes.contains(p))
+    val toHarvest = newFiles.map(_ -> schema) ++
+      newTombs.map(_ -> StructType(Nil))
     type Harvest = (Option[Long], Map[String, ColStat], Option[Long])
     val harvested: Map[String, Harvest] =
-      if (newFiles.sizeIs <= 1)
-        newFiles.map(f => f -> harvestFooter(f, schema)).toMap
+      if (toHarvest.sizeIs <= 1)
+        toHarvest.map { case (f, sch) => f -> harvestFooter(f, sch) }.toMap
       else {
         val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(8, newFiles.size))
+          .newFixedThreadPool(math.min(8, toHarvest.size))
         try {
           import scala.jdk.CollectionConverters._
-          pool.invokeAll(newFiles.map { f =>
-            (() => f -> harvestFooter(f, schema)): java.util.concurrent
+          pool.invokeAll(toHarvest.map { case (f, sch) =>
+            (() => f -> harvestFooter(f, sch)): java.util.concurrent
               .Callable[(String, Harvest)]
           }.asJava).asScala.map(_.get).toMap
         } finally pool.shutdown()
@@ -856,19 +867,15 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       refSizes.get(f).orElse(sizesExtra.get(f))
         .orElse(harvested.get(f).flatMap(_._3)).map(f -> _)
     }.toMap
-    val dels = delsOverride.getOrElse(ref.map(_.dels).getOrElse(Nil))
-    val posDels =
-      posDelsOverride.getOrElse(ref.map(_.posDels).getOrElse(Nil))
-    // tombstone sizes: carried for known files, stat'ed ONCE at commit
-    // for files new in this commit (the committer just wrote them) —
-    // reads then gate their broadcast from the manifest alone
-    val refPdSizes = ref.map(_.posDelSizes).getOrElse(Map.empty)
+    // tombstone sizes and row counts: carried for known files,
+    // footer-harvested ONCE above for files new in this commit —
+    // reads then gate their broadcast, and `delete_files` metadata
+    // answers, from the manifest alone
     val pdSizes: Map[String, Long] = posDels.flatMap { p =>
-      refPdSizes.get(p)
-        .orElse(
-          try Some(fs.getFileStatus(new Path(p)).getLen)
-          catch { case scala.util.control.NonFatal(_) => None })
-        .map(p -> _)
+      refPdSizes.get(p).orElse(harvested.get(p).flatMap(_._3)).map(p -> _)
+    }.toMap
+    val pdRows: Map[String, Long] = posDels.flatMap { p =>
+      refPdRows.get(p).orElse(harvested.get(p).flatMap(_._1)).map(p -> _)
     }.toMap
     // deletion vectors: carried like posDels, except keyed by data
     // file — a DV whose data file left the file list dies with it
@@ -889,15 +896,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val dvCards: Map[String, Long] =
       dvCardsOverride.getOrElse(ref.map(_.dvCards).getOrElse(Map.empty))
         .filter { case (df, _) => dvs.contains(df) }
-    // tombstone row counts: carried for known files, footer-harvested
-    // ONCE for files new in this commit — `delete_files` metadata
-    // then answers with zero tombstone reads
-    val refPdRows = ref.map(_.posDelRows).getOrElse(Map.empty)
-    val pdRows: Map[String, Long] = posDels.flatMap { p =>
-      refPdRows.get(p)
-        .orElse(harvestFooter(p, schema)._1)
-        .map(p -> _)
-    }.toMap
     val renames =
       renamesOverride.getOrElse(ref.map(_.renames).getOrElse(Nil))
     val specHist =
@@ -1146,7 +1144,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     *
     * - `readSet`: normalized data-file paths whose CONTENT this DML
     *   read to compute its writes (CoW: the rewritten files; MoR: the
-    *   candidate files its tombstones name). Every one must still be
+    *   candidate files its tombstones name — for MERGE, the files
+    *   holding a live key match). Every one must still be
     *   live at the new head — a concurrent rewrite/removal of any is
     *   a real conflict (our rewrite would resurrect its rows, or our
     *   tombstones would miss rows it moved).
@@ -1503,13 +1502,15 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
 
   /** Write (file, pos) tombstones for every row of `rows` (which must
     * carry the [[readFilesPos]] metadata columns) and return the
-    * tombstone file paths. */
+    * tombstone file paths. Sized like data writes
+    * ([[GraftTable.writeWidth]]): a KB-scale set is one file, not one
+    * per upstream partition. */
   private def writeTombstones(rows: DataFrame, commitId: Long): Seq[String] = {
     val dir = new Path(root, f"data/commit-$commitId%05d-pdel-" +
       java.util.UUID.randomUUID.toString.take(8))
-    rows.select(col(GraftTable.PosFileCol).as("_file"),
-        col(GraftTable.PosIdxCol).as("_pos"))
-      .write.parquet(dir.toString)
+    val tombs = rows.select(col(GraftTable.PosFileCol).as("_file"),
+      col(GraftTable.PosIdxCol).as("_pos"))
+    tombs.coalesce(GraftTable.writeWidth(tombs)).write.parquet(dir.toString)
     fs.listStatus(dir).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
       .map(_.toString).toSeq.sorted
@@ -1692,7 +1693,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * no listing job; pruning and split packing span every commit.
     * Transform specs keep every raw column in the data file (their
     * derived dirs are metadata only), so they scan unpartitioned; so
-    * does an empty file set, which keeps the declared column order. */
+    * does an empty file set. Columns come back in `schema`'s declared
+    * order either way. */
   private def manifestScan(schema: StructType, files: Seq[String],
       sizes: Map[String, Long], partitionCols: Seq[String] = Nil): DataFrame = {
     val parts =
@@ -3882,38 +3884,43 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // has a first-row-id range there are no ids to preserve — scan
     // plain, and this very commit's manifest assigns ranges
     val lineageOn = cowLineageServable(snap, cand)
-    val matching =
+    // the matched rows are computed once: the old images' delete
+    // files and the new images both come from them, so the candidate
+    // files are scanned once
+    val (matching, release) = GraftSqlBridge.materialize(
       if (!lineageOn) morReadPos(snap, cand).filter(p)
       else lineageSource(snap, cand, keepMeta = true)
         .withColumn(GraftTable.PosFileCol, col("_g_file"))
         .withColumn(GraftTable.PosIdxCol, col("_g_idx"))
         .drop("_g_file", "_g_idx")
-        .filter(p)
-    val id = snap.id + 1
-    // old images take the table's delete-file shape
-    // (`write.delete.style`): tombstone parquet, or merged
-    // deletion-vector bitmaps under `vector` — Iceberg v3 DVs serve
-    // every row-level operation, not just DELETE
-    val (tombs, dvs) =
-      if (vector)
-        (Nil, writeDvs(matching, snap, id))
-      else (writeTombstones(matching, id),
-        Map.empty[String, (String, Long)])
-    val lineageCols =
-      if (!lineageOn) Nil
-      else Seq(col(GraftTable.RowIdColName),
-        lit(-1L).as(GraftTable.LastSeqColName))
-    val images = matching.select(snap.schema.fieldNames.toSeq.map { c =>
-      assignments.get(c) match {
-        case Some(e) =>
-          checkedCast(expr(e), resolvedType(matching, expr(e)),
-            snap.schema(c).dataType, s"UPDATE SET $c").as(c)
-        case None => col(c)
-      }
-    } ++ lineageCols: _*)
-    commitDml("update-mor", snap, cand.map(normalize).toSet, Set.empty,
-      writeData(images, id, snap.partitionCols),
-      newTombs = tombs, predSql = Some(predSql), newDvs = dvs)
+        .filter(p))
+    try {
+      val id = snap.id + 1
+      // old images take the table's delete-file shape
+      // (`write.delete.style`): tombstone parquet, or merged
+      // deletion-vector bitmaps under `vector` — Iceberg v3 DVs serve
+      // every row-level operation, not just DELETE
+      val (tombs, dvs) =
+        if (vector)
+          (Nil, writeDvs(matching, snap, id))
+        else (writeTombstones(matching, id),
+          Map.empty[String, (String, Long)])
+      val lineageCols =
+        if (!lineageOn) Nil
+        else Seq(col(GraftTable.RowIdColName),
+          lit(-1L).as(GraftTable.LastSeqColName))
+      val images = matching.select(snap.schema.fieldNames.toSeq.map { c =>
+        assignments.get(c) match {
+          case Some(e) =>
+            checkedCast(expr(e), resolvedType(matching, expr(e)),
+              snap.schema(c).dataType, s"UPDATE SET $c").as(c)
+          case None => col(c)
+        }
+      } ++ lineageCols: _*)
+      commitDml("update-mor", snap, cand.map(normalize).toSet, Set.empty,
+        writeData(images, id, snap.partitionCols),
+        newTombs = tombs, predSql = Some(predSql), newDvs = dvs)
+    } finally release()
   }
 
   /** Copy-on-write row DML computes affected files with a plain scan;
@@ -4309,14 +4316,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         }.as(c)
       } ++ extras: _*)
 
-    val inserted: Option[DataFrame] =
+    // the insert clauses' rows, from `antiFlat`: the unmatched source
+    // rows under their _src_ names
+    def insertedFrom(antiFlat: => DataFrame): Option[DataFrame] =
       if (insertClauses.isEmpty) None
       else {
-        val anti = source.join(
-          morRead(snap, snap.files)
-            .select(keys.map(col): _*), keys, "left_anti")
-        val antiFlat = anti.select(anti.columns.toIndexedSeq.map(c =>
-          col(c).as(GraftTable.SrcPrefix + c)): _*)
         val winner = insertClauses.zipWithIndex.foldRight(lit(-1): Column) {
           case ((cl, i), els) =>
             val c = cl.condition.map(expr).getOrElse(lit(true))
@@ -4374,61 +4378,83 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     if (morMode) {
       // ---- merge-on-read: tombstone matched rows, append images ----
       // What fine-grained MERGE at scale emits (Iceberg v2): matched
-      // rows — scanned from the LIVE view with positions, candidate
-      // files only — tombstone their old images; their post-clause
-      // new images and the unmatched inserts land as appended files.
-      // An upsert touching 0.1% of a 100 TB table costs tombstones +
-      // images for that 0.1%, where copy-on-write rewrites every FILE
-      // containing a match (write amplification ∝ file size, not
-      // match count). Read-side cost until compaction: the broadcast
+      // rows — scanned from the LIVE view with positions — tombstone
+      // their old images; their post-clause new images and the
+      // unmatched inserts land as appended files. An upsert touching
+      // 0.1% of a 100 TB table costs tombstones + images for that
+      // 0.1%, where copy-on-write rewrites every FILE containing a
+      // match. Read-side cost until compaction: the broadcast
       // tombstone anti-join.
-      val cand =
-        if (matchedClauses.isEmpty) Seq.empty[String]
-        else {
-          val affected = affectedFiles(snap, snap.files,
-            _.join(srcKeys, keys, "left_semi"))
-          snap.files.filter(f => affected(normalize(f)))
-        }
-      // same first-post-enable fallback as cowSource (see
-      // cowLineageServable): scan plain when no ids exist yet
-      val morLineage = lineageOn && cowLineageServable(snap, cand)
-      val morSrc =
-        if (!morLineage) (fs: Seq[String]) => morReadPos(snap, fs)
-        else (fs: Seq[String]) => lineageSource(snap, fs, keepMeta = true)
-          .withColumn(GraftTable.PosFileCol, col("_g_file"))
-          .withColumn(GraftTable.PosIdxCol, col("_g_idx"))
-          .drop("_g_file", "_g_idx")
-      val touched =
-        if (cand.isEmpty) None
-        else Some(morSrc(cand).join(srcFlat, joinCond, "inner")
-          .withColumn(GraftTable.WinnerCol, winnerOver(lit(true)))
-          .filter(col(GraftTable.WinnerCol) =!= -1))
-      // matched old images take the table's delete-file shape, like
-      // UPDATE: tombstones, or deletion vectors under `vector`
-      val vector = vectorStyle
-      val tombs =
-        if (vector) Nil
-        else touched.map(writeTombstones(_, id)).getOrElse(Nil)
-      val mergeDvs =
-        if (vector) touched.map(writeDvs(_, snap, id))
-          .getOrElse(Map.empty[String, (String, Long)])
-        else Map.empty[String, (String, Long)]
-      val images = touched.map { t =>
-        val kept =
-          if (deleteIdx.isEmpty) t
-          else t.filter(
-            !col(GraftTable.WinnerCol).isin(deleteIdx.map(Integer.valueOf): _*))
-        if (!morLineage) postClause(kept)
-        // every surviving matched row was rewritten by a clause:
-        // keep its id, stamp the -1 sentinel
-        else postClause2(kept, Seq(col(GraftTable.RowIdColName),
-          lit(-1L).as(GraftTable.LastSeqColName)))
-      }.filter(_ => matchedClauses.exists {
-        case _: MergeClause.Delete => false
-        case _                     => true
-      })
-      return committed(images, inserted, cand.map(normalize).toSet,
-        Set.empty, tombs, mergeDvs)
+      //
+      // One pass over the target: the source is computed once (with
+      // its per-key multiplicity for the cardinality guard), joined
+      // once with the live view, and that matched set is computed
+      // once; tombstones, images, inserts (source ▷ matched keys) and
+      // the read set all come from it.
+      val (src, releaseSrc) = GraftSqlBridge.materialize(srcFlat)
+      try {
+        // same first-post-enable fallback as cowSource (see
+        // cowLineageServable): scan plain when no ids exist yet
+        val morLineage = lineageOn && cowLineageServable(snap, snap.files)
+        val live =
+          if (!morLineage) morReadPos(snap, snap.files)
+          else lineageSource(snap, snap.files, keepMeta = true)
+            .withColumn(GraftTable.PosFileCol, col("_g_file"))
+            .withColumn(GraftTable.PosIdxCol, col("_g_idx"))
+            .drop("_g_file", "_g_idx")
+        val joined = live.join(src, joinCond, "inner")
+        // insert-only: the matched set is only its keys and files
+        val (matched, releaseMatched) = GraftSqlBridge.materialize(
+          if (matchedClauses.isEmpty)
+            joined.select(col(GraftTable.PosFileCol) +:
+              keys.map(k => col(GraftTable.SrcPrefix + k)): _*)
+              .withColumn(GraftTable.WinnerCol, lit(-1))
+          else joined.withColumn(GraftTable.WinnerCol, winnerOver(lit(true))))
+        try {
+          // (file, has a row a clause rewrites), deduplicated within
+          // each partition: one job, no shuffle, O(files) rows collected
+          import spark.implicits._
+          val perFile = matched.select(col(GraftTable.PosFileCol),
+              col(GraftTable.WinnerCol) =!= -1)
+            .as[(String, Boolean)].mapPartitions(_.toSet.iterator).collect()
+          val readSet = perFile.map(r => decodeScanPath(r._1)).toSet
+          val touched =
+            if (!perFile.exists(_._2)) None
+            else Some(matched.filter(col(GraftTable.WinnerCol) =!= -1))
+          // matched old images take the table's delete-file shape, like
+          // UPDATE: tombstones, or deletion vectors under `vector`
+          val tombs =
+            if (vectorStyle) Nil
+            else touched.map(writeTombstones(_, id)).getOrElse(Nil)
+          val mergeDvs =
+            if (vectorStyle) touched.map(writeDvs(_, snap, id))
+              .getOrElse(Map.empty[String, (String, Long)])
+            else Map.empty[String, (String, Long)]
+          val images = touched.map { t =>
+            val kept =
+              if (deleteIdx.isEmpty) t
+              else t.filter(
+                !col(GraftTable.WinnerCol).isin(deleteIdx.map(Integer.valueOf): _*))
+            if (!morLineage) postClause(kept)
+            // every surviving matched row was rewritten by a clause:
+            // keep its id, stamp the -1 sentinel
+            else postClause2(kept, Seq(col(GraftTable.RowIdColName),
+              lit(-1L).as(GraftTable.LastSeqColName)))
+          }.filter(_ => matchedClauses.exists {
+            case _: MergeClause.Delete => false
+            case _                     => true
+          })
+          val matchedKeys = matched.select(keys.indices.map(i =>
+            col(GraftTable.SrcPrefix + keys(i)).as(s"_graft_mk$i")): _*)
+          val inserted = insertedFrom(src.join(matchedKeys,
+              keys.indices.map(i => col(GraftTable.SrcPrefix + keys(i)) ===
+                col(s"_graft_mk$i")).reduce(_ && _), "left_anti")
+            .select(source.columns.toIndexedSeq.map(c =>
+              col(GraftTable.SrcPrefix + c)): _*))
+          return committed(images, inserted, readSet, Set.empty, tombs,
+            mergeDvs)
+        } finally releaseMatched()
+      } finally releaseSrc()
     }
 
     // ---- copy-on-write: rewrite every file containing a match ------
@@ -4494,14 +4520,24 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
             .as(GraftTable.LastSeqColName))))
       }
 
+    val inserted = insertedFrom {
+      val anti = source.join(
+        morRead(snap, snap.files).select(keys.map(col): _*), keys, "left_anti")
+      anti.select(anti.columns.toIndexedSeq.map(c =>
+        col(c).as(GraftTable.SrcPrefix + c)): _*)
+    }
     committed(rewritten, inserted, rewrite.map(normalize).toSet,
       rewrite.map(normalize).toSet, Nil)
   }
 
-  /** Small-file compaction: rewrite the whole file set into
+  /** Small-file compaction: rewrite the whole file set into at most
     * `numFiles` files; data is unchanged, snapshot history preserved.
-    * (A production pass would bin-pack per partition instead of a
-    * global repartition.)
+    * A partitioned table clusters by partition value: rows distribute
+    * on the partition columns plus a row-hash salt of
+    * `max(1, numFiles / #values)` buckets (#values from the manifest's
+    * partition directories), so the rewrite writes at most
+    * `max(numFiles, #values)` files — a round-robin spread would hand
+    * every task every value and write `numFiles × #values`.
     *
     * With `sortBy`, the rewrite range-partitions on the sort columns
     * and sorts within each output file (Iceberg's sort-order rewrite
@@ -4554,10 +4590,23 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           .sortWithinPartitions(GraftTable.ZCol)
           .drop(GraftTable.ZCol)
       }
-      else if (sortBy.isEmpty) base.repartition(numFiles)
-      else base
+      else if (sortBy.nonEmpty) base
         .repartitionByRange(numFiles, sortBy.map(col): _*)
         .sortWithinPartitions(sortBy.map(col): _*)
+      else if (snap.partitionCols.isEmpty || snap.files.isEmpty)
+        base.repartition(numFiles)
+      else {
+        val values = snap.files.map(partKeyOf).distinct.size
+        val dirs = PartField.parseAll(snap.partitionCols)
+          .map(f => f.toColumn(snap.schema(f.col).dataType))
+        val hashed = base.schema.fields.toSeq
+          .filter(f => GraftTable.hashable(f.dataType))
+          .map(f => col(s"`${f.name.replace("`", "``")}`"))
+        val salt =
+          if (numFiles / values <= 1 || hashed.isEmpty) lit(0L)
+          else pmod(xxhash64(hashed: _*), lit((numFiles / values).toLong))
+        base.repartition(math.max(numFiles, values), dirs :+ salt: _*)
+      }
     // the rewrite lands every row in fresh files under CURRENT column
     // names, so the rename log clears too (retired names are reusable
     // again — no live file carries their bytes)
@@ -4568,6 +4617,17 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       delsOverride = Some(Nil), renamesOverride = Some(Nil),
       specHistOverride = Some(Nil), posDelsOverride = Some(Nil),
       dvsOverride = Some(Map.empty))
+  }
+
+  /** The file count a full rewrite targets: the manifest's data
+    * bytes at [[GraftTable.TargetFileBytes]] per file, at least one —
+    * what plain `OPTIMIZE t` passes to [[compact]]. No storage is
+    * listed; a file a pre-size manifest never sized counts as empty. */
+  def sizedFileCount: Int = {
+    val snap = currentSnapshot
+    val bytes = snap.files.map(snap.fileSizes.getOrElse(_, 0L)).sum
+    math.max(1L, (bytes + GraftTable.TargetFileBytes - 1) /
+      GraftTable.TargetFileBytes).toInt
   }
 
   /** Binpack small-file compaction (Iceberg `rewrite_data_files`
@@ -6832,6 +6892,17 @@ object GraftTable {
     !exchanged && df.rdd.getNumPartitions < target
   }
 
+  /** The data file size writes and compaction aim for. */
+  val TargetFileBytes: Long = 128L << 20
+
+  /** Whether `xxhash64` accepts values of `dt` (it refuses maps). */
+  private[lakehouse] def hashable(dt: DataType): Boolean = dt match {
+    case _: org.apache.spark.sql.types.MapType => false
+    case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
+    case st: StructType => st.fields.forall(f => hashable(f.dataType))
+    case _ => true
+  }
+
   /** Operators whose size-only estimate keeps the CHILD's size while
     * emitting more rows: Generate (explode) and Expand (rollup, cube,
     * grouping sets, multi-distinct aggregates). */
@@ -6869,13 +6940,12 @@ object GraftTable {
   private[graft] def writeWidth(df: DataFrame): Int = {
     val sessionPar = df.sparkSession.sparkContext.defaultParallelism
     val fallbackPar = math.min(8, sessionPar)
-    val targetFileBytes = 128L << 20
     val est =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
     if (est <= 0) fallbackPar
     else {
-      val bySize = ((est + targetFileBytes - 1) / targetFileBytes)
+      val bySize = ((est + TargetFileBytes - 1) / TargetFileBytes)
         .max(BigInt(1))
       if (bySize <= fallbackPar) {
         val expanding = df.queryExecution.optimizedPlan.exists(rowExpanding)

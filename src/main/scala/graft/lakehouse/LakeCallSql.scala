@@ -211,7 +211,7 @@ object LakeCallSql {
                       "'zorder(col, …)'")
                   val cols = so.substring(i + 1, j)
                     .split(',').map(_.trim).toSeq
-                  GraftOptimizeCommand(n, 8, "ZORDER", cols)
+                  GraftOptimizeCommand(n, None, "ZORDER", cols)
                 case Some(so) =>
                   // Iceberg sort orders carry ASC/DESC NULLS …
                   // qualifiers; the engine's sort compaction is
@@ -228,8 +228,8 @@ object LakeCallSql {
                         s"qualifier in '$c' (ascending only)")
                     base
                   }.toSeq
-                  GraftOptimizeCommand(n, 8, "SORT", cols)
-                case None => GraftOptimizeCommand(n, 8, "", Nil)
+                  GraftOptimizeCommand(n, None, "SORT", cols)
+                case None => GraftOptimizeCommand(n, None, "", Nil)
               }
             }
           case "rewrite_manifests" =>

@@ -1613,7 +1613,7 @@ object LakeMaintenance {
           Option(files).map(_.toInt).getOrElse(1), pred))
       case Optimize(name, files, mode, cols)
           if LakeDdl.claimDrop(spark, norm(spark, name)) =>
-        val n = Option(files).map(_.toInt).getOrElse(8)
+        val n = Option(files).map(_.toInt)
         val colSeq = Option(cols).toSeq.flatMap(
           _.split(",").map(_.trim).filter(_.nonEmpty))
         require(colSeq.nonEmpty == (mode != null),
@@ -1695,17 +1695,20 @@ case class GraftShallowCloneCommand(target: String, source: String,
   }
 }
 
-case class GraftOptimizeCommand(name: String, files: Int, mode: String,
-    cols: Seq[String]) extends LeafRunnableCommand {
+/** `OPTIMIZE t [FILES n] [SORT|ZORDER BY (…)]`. Without `FILES`, a
+  * plain OPTIMIZE writes right-sized files ([[GraftTable.sizedFileCount]])
+  * and the clustering modes keep their 8 range slices. */
+case class GraftOptimizeCommand(name: String, files: Option[Int],
+    mode: String, cols: Seq[String]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     graft.fgac.SecureCatalog.authorizeWrite(
       spark.conf.get(graft.fgac.SecureCatalog.PrincipalConf, ""), name,
       "OPTIMIZE")
     val t = LakeRegistry.get(name).get
     mode match {
-      case "SORT"   => t.compact(files, sortBy = cols)
-      case "ZORDER" => t.compact(files, zorderBy = cols)
-      case _        => t.compact(files)
+      case "SORT"   => t.compact(files.getOrElse(8), sortBy = cols)
+      case "ZORDER" => t.compact(files.getOrElse(8), zorderBy = cols)
+      case _        => t.compact(files.getOrElse(t.sizedFileCount))
     }
     Seq.empty
   }

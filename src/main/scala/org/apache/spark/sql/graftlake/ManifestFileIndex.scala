@@ -84,10 +84,15 @@ final class ManifestFileIndex(files: Seq[ManifestFile],
 
 object ManifestFileIndex {
 
-  /** One parquet scan over `files` as a DataFrame: `schema`'s data
-    * columns followed by `partitionCols` (Spark's file-source column
-    * order), with `_metadata` and `input_file_name()` resolving
-    * against every file. */
+  /** One parquet scan over `files` as a DataFrame in `schema`'s
+    * declared column order, with `_metadata` and `input_file_name()`
+    * resolving against every file. The relation's data schema is the
+    * whole of `schema`: Spark's file source then places each
+    * partition column where the data schema declares it, takes its
+    * type from the partition schema and never reads it from the file
+    * (a partition column overlapping the data schema, SPARK-22356).
+    * With partition columns last instead, a positional
+    * `INSERT … SELECT *` from the table would shift its columns. */
   def scan(spark: SparkSession, schema: StructType,
       partitionCols: Seq[String], files: Seq[ManifestFile]): DataFrame = {
     val session = spark.asInstanceOf[ClassicSession]
@@ -96,11 +101,10 @@ object ManifestFileIndex {
       schema.find(f => conf.resolver(f.name, c)).getOrElse(
         throw new IllegalArgumentException(
           s"partition column $c is not in the schema"))))
-    val dataSchema = StructType(schema.filterNot(partitionSchema.contains))
     val index = new ManifestFileIndex(files, partitionSchema,
       conf.sessionLocalTimeZone)
     val relation = HadoopFsRelation(index, partitionSchema,
-      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(session)
+      schema.asNullable, None, new ParquetFileFormat, Map.empty)(session)
     ClassicDataset.ofRows(session, LogicalRelation(relation))
   }
 }

@@ -1,0 +1,212 @@
+package graft
+
+import java.nio.file.Files
+
+import org.scalacheck.{Gen, Prop, Shrink, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.lakehouse.{GraftTable, LakeRegistry}
+
+/** Model-based checks of merge-on-read DML and compaction: random
+  * sequences of INSERT, MERGE, UPDATE, DELETE and OPTIMIZE run as SQL
+  * against a merge-on-read table (one per delete style) and a
+  * copy-on-write twin, and every state is compared with an in-memory
+  * multiset model. Seeds are fixed, so a run is reproducible; a failing
+  * sequence shrinks to a short counterexample. */
+class LakeModelSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+  import spark.implicits._
+  import LakeModelSpec._
+
+  /** A table named `name` holding `rows`, partitioned by `p`. */
+  private def create(name: String, rows: Seq[Row], props: Map[String, String]): GraftTable = {
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_model").toString,
+      rows.toDF("k", "p", "v"), Seq("p"))
+    if (props.nonEmpty) t.setProperties(props)
+    LakeRegistry.register(name, t)
+    t
+  }
+
+  private def rowsOf(name: String): Seq[Row] =
+    spark.sql(s"SELECT k, p, v FROM $name").as[Row].collect().toSeq.sorted
+
+  private def sql(op: Op, name: String, src: String): String = op match {
+    case Insert(_) => s"INSERT INTO $name SELECT k, p, v FROM $src"
+    case m: Merge =>
+      val matched =
+        if (m.insertOnly) ""
+        else (if (m.deleteLow) "WHEN MATCHED AND s.v < 10 THEN DELETE " else "") +
+          s"WHEN MATCHED${if (m.updateHigh) " AND s.v > 50" else ""} THEN UPDATE SET * "
+      s"MERGE INTO $name t USING $src s ON t.k = s.k $matched" +
+        s"WHEN NOT MATCHED${if (m.insertEven) " AND s.v % 2 = 0" else ""} THEN INSERT *"
+    case Update(lo, hi, d) =>
+      s"UPDATE $name SET v = v + $d WHERE k >= $lo AND k < $hi"
+    case Delete(lo, hi) => s"DELETE FROM $name WHERE k >= $lo AND k < $hi"
+    case Optimize(files) =>
+      s"OPTIMIZE $name${files.fold("")(n => s" FILES $n")}"
+  }
+
+  /** Run `sc` under `style`; throws on the first divergence. */
+  private def run(style: String, sc: Scenario, n: Int): Unit = {
+    val mor = s"model_${style}_$n"
+    val cow = s"model_${style}_${n}_cow"
+    val morT = create(mor, sc.initial, Map(
+      "write.delete.mode" -> "merge-on-read",
+      "write.update.mode" -> "merge-on-read",
+      "write.merge.mode" -> "merge-on-read",
+      "write.delete.style" -> style))
+    val cowT = create(cow, sc.initial, Map.empty)
+    var model = sc.initial.sorted
+    try sc.ops.zipWithIndex.foreach { case (op, i) =>
+      val src = s"model_src_${style}_${n}_$i"
+      val rows = op match {
+        case Insert(r) => r
+        case m: Merge => m.source
+        case _ => Nil
+      }
+      rows.toDF("k", "p", "v").createOrReplaceTempView(src)
+      val where = s"step $i ($op) under $style"
+      expected(model, op) match {
+        case None =>
+          for ((name, t) <- Seq(mor -> morT, cow -> cowT)) {
+            val before = t.currentSnapshotId
+            val e = intercept[IllegalArgumentException](spark.sql(sql(op, name, src)))
+            assert(e.getMessage.contains("duplicate"), s"$where: ${e.getMessage}")
+            assert(t.currentSnapshotId == before, s"$where: a refused MERGE committed")
+          }
+        case Some(next) =>
+          spark.sql(sql(op, mor, src))
+          spark.sql(sql(op, cow, src))
+          model = next
+          assert(rowsOf(mor) == model, s"$where: merge-on-read table != model")
+          assert(rowsOf(cow) == model, s"$where: copy-on-write twin != model")
+          op match {
+            case Optimize(files) =>
+              val n = files.getOrElse(1)
+              val values = model.map(_._2).distinct.size
+              for (t <- Seq(morT, cowT))
+                assert(t.currentSnapshot.files.size <= math.max(n, values),
+                  s"$where: ${t.currentSnapshot.files.size} files > max($n, $values)")
+            case _ => ()
+          }
+      }
+      spark.catalog.dropTempView(src)
+    } finally {
+      LakeRegistry.unregister(mor)
+      LakeRegistry.unregister(cow)
+    }
+  }
+
+  for ((style, seed) <- Seq("equality" -> 11L, "position" -> 23L, "vector" -> 37L))
+    test(s"random DML and OPTIMIZE sequences agree with the model and a " +
+        s"copy-on-write twin ($style deletes)") {
+      var n = 0
+      val prop = Prop.forAll(scenarioGen) { sc =>
+        n += 1
+        run(style, sc, n)
+        true
+      }
+      val res = Test.check(Test.Parameters.default
+        .withInitialSeed(Seed(seed))
+        .withMinSuccessfulTests(5)
+        .withWorkers(1), prop)
+      assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+    }
+}
+
+object LakeModelSpec {
+  type Row = (Option[Long], Option[String], Int)
+
+  sealed trait Op
+  final case class Insert(rows: Seq[Row]) extends Op
+  /** `WHEN MATCHED [AND s.v < 10 THEN DELETE] WHEN MATCHED [AND s.v > 50]
+    * THEN UPDATE SET * WHEN NOT MATCHED [AND s.v % 2 = 0] THEN INSERT *`,
+    * or the insert clause alone. */
+  final case class Merge(source: Seq[Row], insertOnly: Boolean,
+      deleteLow: Boolean, updateHigh: Boolean, insertEven: Boolean) extends Op
+  final case class Update(lo: Long, hi: Long, delta: Int) extends Op
+  final case class Delete(lo: Long, hi: Long) extends Op
+  final case class Optimize(files: Option[Int]) extends Op
+
+  final case class Scenario(initial: Seq[Row], ops: Seq[Op])
+
+  /** The table after `op`, or None when the MERGE must refuse (two
+    * source rows match one live target row). */
+  def expected(rows: Seq[Row], op: Op): Option[Seq[Row]] = op match {
+    case Insert(r) => Some((rows ++ r).sorted)
+    case Update(lo, hi, d) => Some(rows.map {
+      case (Some(k), p, v) if k >= lo && k < hi => (Some(k), p, v + d)
+      case r => r
+    }.sorted)
+    case Delete(lo, hi) =>
+      Some(rows.filterNot { case (k, _, _) => k.exists(x => x >= lo && x < hi) }.sorted)
+    case Optimize(_) => Some(rows)
+    case m: Merge =>
+      def matches(k: Option[Long]) = m.source.filter(s => k.isDefined && s._1 == k)
+      val dup = !m.insertOnly && rows.exists(r => matches(r._1).size > 1)
+      if (dup) None
+      else {
+        val kept = rows.flatMap { r =>
+          matches(r._1).headOption match {
+            case Some(s) if !m.insertOnly =>
+              if (m.deleteLow && s._3 < 10) Nil
+              else if (!m.updateHigh || s._3 > 50) Seq(s)
+              else Seq(r)
+            case _ => Seq(r)
+          }
+        }
+        val targetKeys = rows.flatMap(_._1).toSet
+        val inserted = m.source.filter(s =>
+          !s._1.exists(targetKeys) && (!m.insertEven || s._3 % 2 == 0))
+        Some((kept ++ inserted).sorted)
+      }
+  }
+
+  private val rowGen: Gen[Row] = for {
+    k <- Gen.frequency(1 -> Gen.const(None), 9 -> Gen.choose(0L, 11L).map(Some(_)))
+    p <- Gen.frequency(1 -> Gen.const(None),
+      6 -> Gen.oneOf("a", "b", "c").map(Some(_)))
+    v <- Gen.choose(0, 99)
+  } yield (k, p, v)
+
+  private def rowsGen(max: Int): Gen[Seq[Row]] =
+    Gen.choose(1, max).flatMap(n => Gen.listOfN(n, rowGen))
+
+  private val rangeGen: Gen[(Long, Long)] = for {
+    lo <- Gen.choose(0L, 10L)
+    w <- Gen.choose(1L, 5L)
+  } yield (lo, lo + w)
+
+  /** Merge sources mostly carry distinct keys; some repeat one. */
+  private val sourceGen: Gen[Seq[Row]] = Gen.frequency(
+    4 -> rowsGen(5).map(_.groupBy(_._1).values.map(_.head).toSeq
+      .sortBy(_._1)),
+    1 -> rowsGen(5))
+
+  private val opGen: Gen[Op] = Gen.frequency(
+    2 -> rowsGen(4).map(Insert(_)),
+    4 -> (for {
+      src <- sourceGen
+      insertOnly <- Gen.frequency(1 -> true, 3 -> false)
+      deleteLow <- Gen.oneOf(true, false)
+      updateHigh <- Gen.oneOf(true, false)
+      insertEven <- Gen.oneOf(true, false)
+    } yield Merge(src, insertOnly, deleteLow, updateHigh, insertEven)),
+    2 -> (for ((lo, hi) <- rangeGen; d <- Gen.choose(1, 9)) yield Update(lo, hi, d)),
+    2 -> rangeGen.map { case (lo, hi) => Delete(lo, hi) },
+    1 -> Gen.oneOf(None, Some(1), Some(2), Some(5)).map(Optimize(_)))
+
+  /** A failing scenario shrinks by dropping operations. */
+  implicit val shrinkScenario: Shrink[Scenario] = Shrink.withLazyList { sc =>
+    Shrink.shrink(sc.ops.toList).map(ops => sc.copy(ops = ops)).to(LazyList)
+  }
+
+  val scenarioGen: Gen[Scenario] = for {
+    initial <- rowsGen(8)
+    n <- Gen.choose(3, 6)
+    ops <- Gen.listOfN(n, opGen)
+  } yield Scenario(initial, ops)
+}

@@ -5507,12 +5507,14 @@ class LakehouseSpec extends AnyFunSuite {
       .map { case (base, fs) => withPositions(spark.read
         .option("basePath", base).schema(snap.schema).parquet(fs: _*)) }
       .reduce(_.unionByName(_))
+      .select("s", "i", "d", "k", "v", "fp", "ri", "ifn")
     val got = withPositions(t.read())
+    // the snapshot schema's declared order: partition columns first here
     assert(got.columns.toSeq ==
-      Seq("k", "v", "s", "i", "d", "fp", "ri", "ifn"))
+      Seq("s", "i", "d", "k", "v", "fp", "ri", "ifn"))
     assert(got.schema == ref.schema)
     assert(rowStrings(got.drop("ifn")) == rowStrings(ref.drop("ifn")))
-    assert(rowStrings(got).exists(_.startsWith("9|u|null|null|null|")))
+    assert(rowStrings(got).exists(_.startsWith("null|null|null|9|u|")))
     // input_file_name() names the same file (a listing renders a local
     // root as `file:///`, the manifest as `file:/`)
     def fileOf(df: org.apache.spark.sql.DataFrame) =
@@ -5621,5 +5623,164 @@ class LakehouseSpec extends AnyFunSuite {
     assert(got == Seq(("a", 1L, 1.0, "delete"), ("b", 3L, 3.0, "delete"),
       ("b", 3L, 13.0, "insert"), ("b", 4L, 4.0, "delete"),
       ("b", 4L, 40.0, "insert"), ("c", 6L, 6.0, "insert")))
+  }
+
+  // ---- merge-on-read write amplification ---------------------------------
+
+  test("identity-partitioned tables read in declared column order, so a " +
+      "positional INSERT … SELECT * keeps every value in its column") {
+    val name = "swp"
+    spark.sql(s"""CREATE TABLE $name (k BIGINT, p STRING, s STRING)
+      USING graft PARTITIONED BY (p)
+      LOCATION '${Files.createTempDirectory("graft_swp")}'""")
+    try {
+      spark.sql(s"INSERT INTO $name VALUES (1, 'P1', 'S1')")
+      val t = graft.lakehouse.LakeRegistry.get(name).get
+      val first = t.currentSnapshotId
+      spark.sql(s"INSERT INTO $name SELECT * FROM $name")
+      assert(spark.sql(s"SELECT k, p, s FROM $name")
+        .as[(Long, String, String)].collect().toSeq ==
+        Seq((1L, "P1", "S1"), (1L, "P1", "S1")))
+      val declared = Seq("k", "p", "s")
+      assert(t.read().columns.toSeq == declared)
+      assert(t.readAt(first).columns.toSeq == declared)
+      assert(spark.sql(s"SELECT * FROM $name").columns.toSeq == declared)
+      assert(spark.sql(s"SELECT * FROM $name VERSION AS OF $first")
+        .columns.toSeq == declared)
+    } finally graft.lakehouse.LakeRegistry.unregister(name)
+    // a transform spec takes the SPJ path; its reads keep the order too
+    val bt = GraftTable.create(spark,
+      Files.createTempDirectory("graft_swp_b").toString,
+      Seq((1L, 10L, "x"), (2L, 20L, "y")).toDF("k", "b", "s"),
+      Seq("bucket[4](b)"))
+    assert(graft.lakehouse.Spj.read(spark, "swp_b", bt).columns.toSeq ==
+      Seq("k", "b", "s"))
+    assert(bt.read().columns.toSeq == Seq("k", "b", "s"))
+  }
+
+  test("plain OPTIMIZE of a 3-value partitioned table writes one file per " +
+      "value; FILES n writes at most max(n, #values) files") {
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_opt3").toString,
+      spark.range(0, 40).select(col("id").as("k"),
+        (col("id") % 3).cast("string").as("p"), col("id").cast("double").as("v")),
+      Seq("p"))
+    (1 to 3).foreach(i => t.append(spark.range(40 * i, 40 * i + 40)
+      .select(col("id").as("k"), (col("id") % 3).cast("string").as("p"),
+        col("id").cast("double").as("v"))))
+    val name = "opt3_t"
+    graft.lakehouse.LakeRegistry.register(name, t)
+    try {
+      def rows = t.read().select("k", "p", "v").as[(Long, String, Double)]
+        .collect().toSeq.sorted
+      val before = rows
+      assert(t.currentSnapshot.files.size == 12)
+      spark.sql(s"OPTIMIZE $name")
+      assert(t.currentSnapshot.files.size <= 3,
+        s"plain OPTIMIZE wrote ${t.currentSnapshot.files.size} files")
+      assert(rows == before)
+      spark.sql(s"OPTIMIZE $name FILES 7")
+      assert(t.currentSnapshot.files.size <= 7)
+      assert(rows == before)
+      spark.sql(s"OPTIMIZE $name FILES 2")
+      assert(t.currentSnapshot.files.size <= 3)
+      assert(rows == before)
+    } finally graft.lakehouse.LakeRegistry.unregister(name)
+  }
+
+  /** A merge-on-read table of `n` rows in 4 files, every file holding
+    * keys from the whole range. */
+  private def morTable(n: Long, style: String): GraftTable = {
+    def part(j: Long) = spark.range(0, n / 4)
+      .select((col("id") * 4 + j).as("k"), (col("id") % 7).as("v"))
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_mor").toString, part(0))
+    (1L to 3L).foreach(j => t.append(part(j)))
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read",
+      "write.update.mode" -> "merge-on-read",
+      "write.merge.mode" -> "merge-on-read",
+      "write.delete.style" -> style))
+    t
+  }
+
+  test("a merge-on-read UPDATE of 400 rows commits exactly one " +
+      "tombstone file") {
+    val t = morTable(1000, "position")
+    val before = t.currentSnapshot.posDels.toSet
+    t.updateMoRPos(Map("v" -> "v + 100"), "k < 400")
+    val snap = t.currentSnapshot
+    val added = snap.posDels.filterNot(before)
+    assert(added.size == 1, s"tombstone files: $added")
+    assert(snap.posDelRows(added.head) == 400L)
+    assert(t.read().where("v >= 100").count() == 400)
+  }
+
+  /** Every file-source scan of `files` in the plans `body` executes. */
+  private def dataScansDuring(files: Seq[String])(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val want = files.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val marker = "graft_scan_marker"
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe)
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def seen = plans.toArray.exists(q => q.asInstanceOf[QueryExecution]
+        .analyzed.output.exists(_.name == marker))
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen, "the marker query never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray.toSeq.map(_.asInstanceOf[QueryExecution]).map { qe =>
+      nodes(qe.executedPlan).count {
+        case f: FileSourceScanExec => f.relation.location.inputFiles
+          .exists(x => want(new org.apache.hadoop.fs.Path(x).toUri.getPath))
+        case _ => false
+      }
+    }.sum
+  }
+
+  test("a merge-on-read MERGE scans the target's data files once and " +
+      "releases what it materialized") {
+    for (style <- Seq("position", "vector")) {
+      val t = morTable(400, style)
+      val snap = t.currentSnapshot
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      // 10 matched keys (one of them deleted by a clause), 5 new keys
+      val src = (spark.range(0, 40, 4).select(col("id").as("k"),
+          lit(50L).as("v")) union
+        spark.range(1000, 1005).select(col("id").as("k"), lit(60L).as("v")))
+      val scans = dataScansDuring(snap.files) {
+        t.merge(src, Seq("k"), Seq(
+          graft.lakehouse.MergeClause.Delete(Some("k = 36")),
+          graft.lakehouse.MergeClause.Update(None, Map.empty),
+          graft.lakehouse.MergeClause.Insert(None, Map.empty)))
+      }
+      assert(scans == 1, s"$style: the MERGE planned $scans target scans")
+      assert(spark.sparkContext.getPersistentRDDs.size == cached,
+        s"$style: the MERGE left materialized frames behind")
+      val got = t.read()
+      assert(got.count() == 400 - 1 + 5)
+      assert(got.where("v = 50").count() == 9 && got.where("v = 60").count() == 5)
+      if (style == "position")
+        assert(t.currentSnapshot.posDels.size == snap.posDels.size + 1)
+      // the cardinality guard still fires, and still frees both frames
+      val dup = spark.range(0, 2).select(lit(4L).as("k"), lit(1L).as("v"))
+      val e = intercept[IllegalArgumentException](t.merge(dup, "k"))
+      assert(e.getMessage.contains("duplicate"))
+      assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    }
   }
 }
