@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: one JSON line with per-query seconds.
   *
@@ -35,23 +34,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.sql.adaptive.enabled", "true")
-      // guide §9/§3.1: let the planner pick shuffled-hash join when
-      // its size conditions are met (sort-merge stays available and
-      // is still chosen when the build side is too big) — a
-      // scale-neutral planner freedom, not a local[32] tune
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.fgac.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
 
     def esc(s: String): String = s.flatMap {
       case '"'  => "\\\""

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.ui.enabled", "false")
-      // keep join-planner freedom identical to Bench (§9): results
-      // are strategy-independent, but verifying under the same plans
-      // the bench times keeps the two surfaces honest
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.extensions", "graft.fgac.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     new java.io.File(outDir).mkdirs()
     // Output-boundary lint (SURVEY §5): the driver's hash compare is
     // type-representation-sensitive, and Spark vs DuckDB widen decimal

@@ -128,19 +128,29 @@ object FgacQueries {
       |FROM orders c JOIN customer p ON c.o_custkey = p.c_custkey
       |ORDER BY p.c_mktsegment, c.o_orderdate, c.o_orderkey""".stripMargin
 
+  /** Register lake table `t` as `name` and govern it by name: every
+    * read of the name resolves the table's current snapshot under the
+    * reader's policy ([[SecureCatalog.relationOf]]), and SQL DML on it
+    * needs a write grant ([[graft.lakehouse.LakeSqlRule]]). */
+  private def governLake(s: SparkSession, name: String,
+      t: graft.lakehouse.GraftTable): Unit = {
+    graft.lakehouse.LakeRegistry.register(name, t)
+    SecureCatalog.governTable(name, s.table(name))
+  }
+
   /** FGAC over a lakehouse table — the reference's actual
     * composition (Lake Formation policies on Iceberg tables): a
-    * [[graft.lakehouse.GraftTable]] is registered as the governed
-    * relation, DML runs against the table, and the principal's read
-    * sees the policy-filtered view of the *current snapshot*. */
+    * [[graft.lakehouse.GraftTable]] is governed by name, DML runs
+    * against the table, and the principal's read sees the
+    * policy-filtered view of the *current snapshot*. */
   private val lakehouseGoverned: Q = (s, dir) => {
-    val t = graft.lakehouse.GraftTable.create(s,
+    governLake(s, "gov_customer", graft.lakehouse.GraftTable.create(s,
       java.nio.file.Files.createTempDirectory("graft_fgac_lake").toString,
-      Tables.customer(s, dir))
-    // governed-side DML before the read: bump every BUILDING balance
-    t.update(Map("c_acctbal" -> "c_acctbal + 50.0"),
-      "c_mktsegment = 'BUILDING'")
-    SecureCatalog.governTable("gov_customer", t.read())
+      Tables.customer(s, dir)))
+    // DML through the governed name after governing: bump every
+    // BUILDING balance; the read below sees the new snapshot
+    s.sql("""UPDATE gov_customer SET c_acctbal = c_acctbal + 50.0
+            |WHERE c_mktsegment = 'BUILDING'""".stripMargin)
     SecureCatalog.register(Principal("lake_analyst", grants = Map(
       "gov_customer" -> TablePolicy("gov_customer",
         rowFilter = Some(RowFilter),
@@ -194,30 +204,27 @@ object FgacQueries {
     * permissions separately; a filtered-SELECT principal must not be
     * able to mutate the table, while a write-granted principal can —
     * and both decisions surface as constant-contract rows (like
-    * [[deny]]), so the oracle is exact. Covers the API path (wrapped
-    * update) and the SQL DML path (DELETE via LakeSqlRule). */
+    * [[deny]]), so the oracle is exact. Every write is SQL DML on the
+    * governed name (UPDATE, DELETE via LakeSqlRule). */
   private val writeDeny: Q = (s, dir) => {
     import s.implicits._
-    val t = graft.lakehouse.GraftTable.create(s,
+    governLake(s, "wd_customer", graft.lakehouse.GraftTable.create(s,
       java.nio.file.Files.createTempDirectory("graft_fgac_wd").toString,
-      Tables.customer(s, dir))
-    SecureCatalog.governTable("wd_customer", t.read())
+      Tables.customer(s, dir)))
     SecureCatalog.register(Principal("wd_reader", grants = Map(
       "wd_customer" -> TablePolicy("wd_customer",
         rowFilter = Some(RowFilter)))))
     SecureCatalog.register(Principal("wd_writer", grants = Map(
       "wd_customer" -> TablePolicy("wd_customer", write = true))))
-    val gov = new GovernedGraftTable(t, "wd_customer", s)
-    graft.lakehouse.LakeRegistry.register("wd_customer", t)
     def attempt(who: String, op: String)(body: => Unit): (String, String, String) =
       (who, op, outcomeOf(body))
     val rows = Seq(
-      attempt("wd_reader", "update")(asPrincipal(s, "wd_reader")(
-        gov.update(Map("c_acctbal" -> "0.0"), "c_custkey = 1"))),
+      attempt("wd_reader", "update")(asPrincipal(s, "wd_reader")(s.sql(
+        "UPDATE wd_customer SET c_acctbal = 0.0 WHERE c_custkey = 1"))),
       attempt("wd_reader", "sql_delete")(asPrincipal(s, "wd_reader")(
         s.sql("DELETE FROM wd_customer WHERE c_custkey = 1"))),
-      attempt("wd_writer", "update")(asPrincipal(s, "wd_writer")(
-        gov.update(Map("c_acctbal" -> "c_acctbal"), "c_custkey = 1"))))
+      attempt("wd_writer", "update")(asPrincipal(s, "wd_writer")(s.sql(
+        "UPDATE wd_customer SET c_acctbal = c_acctbal WHERE c_custkey = 1"))))
     rows.toDF("principal", "op", "decision").orderBy("principal", "op")
   }
 
@@ -237,10 +244,9 @@ object FgacQueries {
     * counts), never data. */
   private val auditLog: Q = (s, dir) => {
     import s.implicits._
-    val t = graft.lakehouse.GraftTable.create(s,
+    governLake(s, "aud_customer", graft.lakehouse.GraftTable.create(s,
       java.nio.file.Files.createTempDirectory("graft_fgac_audit").toString,
-      Tables.customer(s, dir))
-    SecureCatalog.governTable("aud_customer", t.read())
+      Tables.customer(s, dir)))
     SecureCatalog.register(Principal("aud_reader", grants = Map(
       "aud_customer" -> TablePolicy("aud_customer",
         rowFilter = Some(RowFilter), allowedColumns = Some(VisibleCols),
@@ -248,8 +254,6 @@ object FgacQueries {
     SecureCatalog.register(Principal("aud_writer", grants = Map(
       "aud_customer" -> TablePolicy("aud_customer", write = true))))
     SecureCatalog.register(Principal("aud_nogrants"))
-    val gov = new GovernedGraftTable(t, "aud_customer", s)
-    graft.lakehouse.LakeRegistry.register("aud_customer", t)
     def ignoreDenied(body: => Unit): Unit = require(
       outcomeOf(body) != "ALLOWED", "probe expected a denial")
     // one decision of each kind
@@ -257,10 +261,10 @@ object FgacQueries {
       s.sql("SELECT * FROM aud_customer").collect())
     ignoreDenied(asPrincipal(s, "aud_nogrants")(
       s.sql("SELECT * FROM aud_customer").collect()))
-    ignoreDenied(asPrincipal(s, "aud_reader")(
-      gov.update(Map("c_acctbal" -> "0.0"), "c_custkey = 1")))
-    asPrincipal(s, "aud_writer")(
-      gov.update(Map("c_acctbal" -> "c_acctbal"), "c_custkey = 1"))
+    ignoreDenied(asPrincipal(s, "aud_reader")(s.sql(
+      "UPDATE aud_customer SET c_acctbal = 0.0 WHERE c_custkey = 1")))
+    asPrincipal(s, "aud_writer")(s.sql(
+      "UPDATE aud_customer SET c_acctbal = c_acctbal WHERE c_custkey = 1"))
     ignoreDenied(asPrincipal(s, "aud_ghost")(
       s.sql("SELECT * FROM aud_customer").collect()))
     // the auditor's query: this scenario's principals only
@@ -307,9 +311,7 @@ object FgacQueries {
       java.nio.file.Files.createTempDirectory("graft_audit_trail").toString,
       AuditLog.schema)
     require(AuditLog.flushTo(s, auditT) > 0, "flush #1 must persist rows")
-    def regovern(): Unit =
-      SecureCatalog.governTable("ap_audit_trail", auditT.read())
-    regovern()
+    governLake(s, "ap_audit_trail", auditT)
     SecureCatalog.register(Principal("ap_auditor", grants = Map(
       "ap_audit_trail" -> TablePolicy("ap_audit_trail"))))
     // the auditor reads the trail — audited itself, and the reader
@@ -319,10 +321,10 @@ object FgacQueries {
     require(outcomeOf(asPrincipal(s, "ap_reader")(
       s.sql("SELECT * FROM ap_audit_trail").collect())) == "DENIED",
       "a data principal must not read the audit trail uninvited")
-    // flush #2 carries the auditor's own access; re-pin the raw read
+    // flush #2 carries the auditor's own access, readable through
+    // the governed name at once
     require(AuditLog.flushTo(s, auditT) > 0,
       "flush #2 must carry the auditor's trail access")
-    regovern()
     require(asPrincipal(s, "ap_auditor")(s.sql(
         """SELECT count(*) FROM ap_audit_trail
           |WHERE principal = 'ap_auditor'

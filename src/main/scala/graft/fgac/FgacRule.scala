@@ -1,7 +1,7 @@
 package graft.fgac
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
@@ -27,8 +27,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * pruning and column pruning still apply, and FGAC adds zero
   * shuffles at 100 TB.
   *
-  * The raw relation is held as a plan inside [[SecureCatalog]], never
-  * under a session name, so no principal can name it (local-mode
+  * The raw relation is resolved inside [[SecureCatalog]] at each
+  * analysis — a governed lake table's live snapshot, or the plan a
+  * DataFrame-backed name was governed over — never under a session
+  * name, so no principal can name it (local-mode
   * stand-in for the producer's storage credentials, which in the
   * reference only the Lake Formation data-access role can use —
   * producer_iceberg_datalake_setup.sh:96-101).
@@ -74,7 +76,7 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
               vd.outputColumns.find(_._1.equalsIgnoreCase(c))
                 .map(_._2).getOrElse("unknown")
             case None =>
-              val rawSchema = SecureCatalog.relationOf(target).schema
+              val rawSchema = SecureCatalog.relationOf(spark, target).schema
               // nested policy entries (`outer.inner`) resolve one
               // struct level — the SAME resolver the governed SHOW
               // CREATE TABLE uses, so the two never disagree
@@ -100,6 +102,12 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case u: UnresolvedRelation
           if FgacRule.claims(spark, u.multipartIdentifier) =>
         FgacRule.resolveName(spark, u.multipartIdentifier, who)
+      // `VERSION AS OF` / `TIMESTAMP AS OF` on a claimed name: the
+      // same dispatch, authorized and audited like a plain read
+      case RelationTimeTravel(u: UnresolvedRelation, ts, version)
+          if FgacRule.claims(spark, u.multipartIdentifier) =>
+        FgacRule.resolveName(spark, u.multipartIdentifier, who,
+          version = version, timestamp = ts)
     }
   }
 
@@ -143,25 +151,31 @@ object FgacRule {
     * principal `who`: a resource link resolves to its target, a graft
     * view expands inline ([[graft.lakehouse.ViewExpansion]], which
     * checks the view-level grant), and any other governed name
-    * splices its stored raw relation — as is for the admin session
+    * splices its raw relation ([[SecureCatalog.relationOf]]: a lake
+    * table's snapshot — current, or the one `version` / `timestamp`
+    * names — else the governed plan) — as is for the admin session
     * and ungoverned targets, secured under `who`'s policy otherwise
     * (throws when governed-but-ungranted). Shared by the session rule
     * above and view expansion, which resolves a view's underlying
     * names as the view's effective principal rather than the
     * session's. */
   def resolveName(spark: SparkSession, parts: Seq[String], who: String,
-      depth: Int = 0): LogicalPlan = {
+      depth: Int = 0, version: Option[String] = None,
+      timestamp: Option[Expression] = None): LogicalPlan = {
     val lower = stripCat(spark, parts).map(_.toLowerCase)
     val name = lower.mkString(".")
     val target = SecureCatalog.resolveLink(name)
-    if (graft.lakehouse.ViewRegistry.get(target).isDefined)
+    if (graft.lakehouse.ViewRegistry.get(target).isDefined) {
+      if (version.isDefined || timestamp.isDefined)
+        throw new UnsupportedOperationException(
+          s"time travel on view '$name': a view has no snapshots")
       graft.lakehouse.ViewExpansion.expand(spark, lower, who, depth)
-    else {
+    } else {
       val policy =
         if (who.isEmpty) None else SecureCatalog.authorize(who, name)
-      val raw = SecureCatalog.relationOf(target)
+      val raw = SecureCatalog.relationOf(spark, target, version, timestamp)
       SubqueryAlias(lower, policy.fold(raw)(
-        securePlan(_, raw, who, SecureCatalog.columnsOf(target))))
+        securePlan(_, raw, who, raw.output.map(_.name))))
     }
   }
 

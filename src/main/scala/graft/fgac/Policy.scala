@@ -187,9 +187,10 @@ object SecureCatalog {
 
   private val governed =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]() // name -> columns
-  // name -> raw analyzed plan: held here, never under a session name,
-  // so only [[FgacRule]] can reach it (the local-mode analog of the
-  // producer's storage-credentials boundary) — from any session
+  // name -> raw analyzed plan of a DataFrame-backed governed name:
+  // held here, never under a session name, so only [[FgacRule]] can
+  // reach it (the local-mode analog of the producer's
+  // storage-credentials boundary) — from any session
   private val relations = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val links =
@@ -200,26 +201,47 @@ object SecureCatalog {
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]() // table -> tags
 
   /** Govern `name` with column universe `columns` and no raw relation
-    * of its own: graft views (which expand their query) and
-    * policy-only registrations. */
+    * of its own: graft views (which expand their query),
+    * policy-only registrations, and lake tables (see [[relationOf]]). */
   def governTable(name: String, columns: Seq[String]): Unit =
     governed.put(name.toLowerCase, columns)
   /** Govern `name` over the raw relation `raw`: its columns and its
     * analyzed plan, which [[FgacRule]] splices under the reader's
-    * policy. The plan pins what `raw` read — a snapshot-pinned lake
-    * read stays at that snapshot until governed again. */
+    * policy — unless `name` is a registered lake table, which is
+    * governed by name whatever `raw` read (see [[relationOf]]), so
+    * `governTable(t, spark.table(t))` follows `t`'s commits. */
   def governTable(name: String,
       raw: org.apache.spark.sql.DataFrame): Unit = {
     relations.put(name.toLowerCase, raw.queryExecution.analyzed)
     governTable(name, raw.columns.toIndexedSeq)
   }
-  /** The raw relation governing `name` (a resolved link target);
-    * engine-internal, like the storage credentials it stands for. */
-  private[graft] def relationOf(
-      name: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    Option(relations.get(name.toLowerCase)).getOrElse(
-      throw new IllegalStateException(s"governed table '$name' has no " +
-        "raw relation: govern it with SecureCatalog.governTable(name, df)"))
+  /** The raw relation of governed `name` (a resolved link target) at
+    * this analysis; engine-internal, like the storage credentials it
+    * stands for. A name registered in [[graft.lakehouse.LakeRegistry]]
+    * is governed BY NAME: it resolves through
+    * [[graft.lakehouse.LakeRegistry.relation]] — the builder
+    * ungoverned lake reads use — so it serves the current snapshot
+    * (or the `graft.wap.branch` head) and takes `VERSION AS OF` /
+    * `TIMESTAMP AS OF`. Any other name splices the plan it was
+    * governed over, which has no snapshots to travel to. */
+  private[graft] def relationOf(spark: org.apache.spark.sql.SparkSession,
+      name: String, version: Option[String] = None,
+      timestamp: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val key = name.toLowerCase
+    if (graft.lakehouse.LakeRegistry.get(key).isDefined)
+      graft.lakehouse.LakeRegistry.relation(spark, key, version, timestamp)
+    else {
+      val raw = Option(relations.get(key)).getOrElse(
+        throw new IllegalStateException(s"governed table '$name' has no " +
+          "raw relation: govern it with SecureCatalog.governTable(name, df)"))
+      if (version.isEmpty && timestamp.isEmpty) raw
+      else throw new UnsupportedOperationException(
+        s"time travel on governed table '$name': it is governed over a " +
+          "DataFrame plan, which has no snapshots; govern a registered " +
+          "lake table to read its history")
+    }
+  }
   /** Remove a name from governance (dropped views/tables take their
     * governance entry with them — a dangling entry would make the
     * name un-recreatable and misroute reads). Its raw relation,
@@ -237,8 +259,13 @@ object SecureCatalog {
     links.entrySet.removeIf(e => e.getValue == key)
   }
   def isGoverned(name: String): Boolean = governed.containsKey(name.toLowerCase)
+  /** The column universe of governed `name`: a lake table's live
+    * schema (schema evolution shows through the name, like its rows),
+    * else the columns it was governed with. */
   def columnsOf(name: String): Seq[String] =
-    Option(governed.get(name.toLowerCase)).getOrElse(Seq.empty)
+    Option(governed.get(name.toLowerCase)).fold(Seq.empty[String])(cols =>
+      graft.lakehouse.LakeRegistry.get(name)
+        .fold(cols)(_.currentSnapshot.schema.fieldNames.toSeq))
   def tagTable(name: String, tags: Set[String]): Unit =
     tableTags.put(name.toLowerCase, tags)
   def tagsOf(name: String): Set[String] =

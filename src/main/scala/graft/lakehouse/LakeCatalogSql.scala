@@ -633,7 +633,7 @@ case class GraftGovernedShowCreateCommand(name: String)
     // audited + deny-by-default: the same gate as fgac_describe
     val visible = graft.fgac.SecureCatalog.describeColumns(who, name)
     val target = graft.fgac.SecureCatalog.resolveLink(name)
-    val typeOf = GovernedMeta.typeOf(target)
+    val typeOf = GovernedMeta.typeOf(spark, target)
     val cols = visible.map(c => s"  $c ${typeOf(c)}").mkString(",\n")
     Seq(Row(s"CREATE TABLE $name (\n$cols)\nUSING graft"))
   }
@@ -707,9 +707,9 @@ private[graft] object GovernedMeta {
   }
 
   /** Column → rendered type for a governed relation, answered from
-    * its stored raw relation's schema. */
-  def typeOf(target: String): String => String = {
-    val schema = graft.fgac.SecureCatalog.relationOf(target).schema
+    * its raw relation's schema. */
+  def typeOf(spark: SparkSession, target: String): String => String = {
+    val schema = graft.fgac.SecureCatalog.relationOf(spark, target).schema
     c => resolveType(schema, c).map(_.sql).getOrElse("unknown")
   }
 }

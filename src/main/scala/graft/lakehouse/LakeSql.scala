@@ -84,6 +84,52 @@ object LakeRegistry {
     else None
   }
 
+  /** THE lake-read builder — [[LakeSqlRule]] resolves ungoverned
+    * names through it and [[graft.fgac.SecureCatalog.relationOf]]
+    * governed ones, so a governed lake name follows its commits
+    * exactly like an ungoverned one: the analyzed plan of registered
+    * table `name`, captured at each analysis (the same snapshot
+    * isolation as [[GraftTable.read]]). With no `version` or
+    * `timestamp` it reads the current snapshot — the
+    * `graft.wap.branch` head when that branch exists (Iceberg's
+    * `spark.wap.branch` read semantics), main otherwise. `VERSION AS
+    * OF` takes a snapshot id or a branch/tag name; `TIMESTAMP AS OF`
+    * a timestamp or string literal. */
+  def relation(spark: SparkSession, name: String, version: Option[String],
+      timestamp: Option[Expression]): LogicalPlan = {
+    val t = get(name).getOrElse(throw new IllegalStateException(
+      s"'$name' is not a registered lake table"))
+    val df = (version, timestamp) match {
+      case (Some(v), _) => t.readAt(v.toLongOption.getOrElse(t.headOf(v)))
+      case (None, Some(ts)) => t.readAsOfTimestamp(tsMillis(spark, ts))
+      case _ =>
+        val b = spark.conf.get(GraftTable.WapBranchConf, "")
+        (if (b.nonEmpty && t.hasBranch(b)) t.onBranch(b) else t).read()
+    }
+    df.queryExecution.analyzed
+  }
+
+  /** Epoch millis of a `TIMESTAMP AS OF` literal: TIMESTAMP literals
+    * carry UTC micros; bare strings are interpreted in the SESSION
+    * time zone (matching how Spark would cast them). Anything
+    * non-literal fails loudly. */
+  private def tsMillis(spark: SparkSession, e: Expression): Long = e match {
+    case l: Literal
+        if l.dataType == org.apache.spark.sql.types.TimestampType =>
+      Math.floorDiv(l.value.asInstanceOf[Long], 1000L)
+    case l: Literal
+        if l.dataType == org.apache.spark.sql.types.StringType =>
+      val zone = java.time.ZoneId.of(
+        spark.sessionState.conf.sessionLocalTimeZone)
+      val s = l.value.toString.replace(' ', 'T')
+      val ldt = // date-only form means midnight (Iceberg convention)
+        if (s.contains('T')) java.time.LocalDateTime.parse(s)
+        else java.time.LocalDate.parse(s).atStartOfDay()
+      ldt.atZone(zone).toInstant.toEpochMilli
+    case other => throw new UnsupportedOperationException(
+      s"TIMESTAMP AS OF requires a timestamp or string literal, got $other")
+  }
+
   /** Bind the configured catalog name to the deferring
     * [[GraftLakeCatalog]] plugin unless the user bound it elsewhere —
     * without a registered catalog the analyzer errors three-part
@@ -208,14 +254,6 @@ case class LakeSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (plan.resolved) plan
     else lowerCommand(plan).getOrElse(resolveReads(plan))
 
-  /** SQL reads over registered lakehouse names: an [[UnresolvedRelation]]
-    * that Spark's own catalog rules left unresolved (so no temp view or
-    * catalog table shadows it — built-in resolution runs earlier in the
-    * same batch iteration) resolves to the table's CURRENT snapshot.
-    * Governed names are skipped: [[graft.fgac.FgacRule]] owns those, so
-    * registering a governed table here cannot bypass its read policy.
-    * Resolution-time snapshot capture gives SQL reads the same snapshot
-    * isolation as [[GraftTable.read]]. */
   /** The registry key of an identifier READS may claim: governed
     * names belong to FgacRule, and governance must be checked on
     * BOTH the full (possibly catalog-qualified) form AND the
@@ -227,64 +265,30 @@ case class LakeSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     else LakeRegistry.keyOf(spark, parts)
       .filterNot(graft.fgac.SecureCatalog.isVisibleName)
 
-  private def resolveReads(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp {
-      // SELECT … FROM t VERSION AS OF <id|'ref'> / TIMESTAMP AS OF
-      // <literal> — Iceberg-style SQL time travel.
-      case org.apache.spark.sql.catalyst.analysis.RelationTimeTravel(
-          u: UnresolvedRelation, ts, version)
-          if ungovernedKey(u.multipartIdentifier).exists(
-            LakeRegistry.get(_).isDefined) =>
-        val name = ungovernedKey(u.multipartIdentifier).get
-        val t = LakeRegistry.get(name).get
-        val df = (version, ts) match {
-          case (Some(v), _) =>
-            // numeric → snapshot id; anything else → branch/tag name
-            // (Iceberg's `VERSION AS OF 'ref'`)
-            t.readAt(v.toLongOption.getOrElse(t.headOf(v)))
-          case (None, Some(tsExpr)) =>
-            t.readAsOfTimestamp(tsMillis(tsExpr))
-          case _ => throw new UnsupportedOperationException(
-            s"time travel on $name needs VERSION AS OF or TIMESTAMP AS OF")
+  /** SQL reads over registered, ungoverned lakehouse names: an
+    * [[UnresolvedRelation]] that Spark's own catalog rules left
+    * unresolved (so no temp view or catalog table shadows it —
+    * built-in resolution runs earlier in the same batch iteration),
+    * plain or under `VERSION AS OF` / `TIMESTAMP AS OF`
+    * (Iceberg-style SQL time travel), resolves through
+    * [[LakeRegistry.relation]]. Governed names are skipped:
+    * [[graft.fgac.FgacRule]] owns those and resolves them through the
+    * same builder under the reader's policy. */
+  private def resolveReads(plan: LogicalPlan): LogicalPlan = {
+    def claim(u: UnresolvedRelation, version: Option[String],
+        ts: Option[Expression]): Option[LogicalPlan] =
+      ungovernedKey(u.multipartIdentifier)
+        .filter(LakeRegistry.get(_).isDefined).map { name =>
+          // multi-part alias: `t.c` AND `db.t.c` qualifiers both resolve
+          SubqueryAlias(u.multipartIdentifier.map(_.toLowerCase),
+            LakeRegistry.relation(spark, name, version, ts))
         }
-        // multi-part alias: `t.c` AND `db.t.c` qualifiers both resolve
-        SubqueryAlias(u.multipartIdentifier.map(_.toLowerCase),
-          df.queryExecution.analyzed)
-
-      case u: UnresolvedRelation
-          if ungovernedKey(u.multipartIdentifier).exists(
-            LakeRegistry.get(_).isDefined) =>
-        val name = ungovernedKey(u.multipartIdentifier).get
-        val t0 = LakeRegistry.get(name).get
-        // under graft.wap.branch, same-session reads see the branch
-        // head (Iceberg's spark.wap.branch read semantics) — with the
-        // read fallback to main when the branch does not exist
-        val b = wapBranch
-        val t = if (b.nonEmpty && t0.hasBranch(b)) t0.onBranch(b) else t0
-        SubqueryAlias(u.multipartIdentifier.map(_.toLowerCase),
-          t.read().queryExecution.analyzed)
-
+    plan.transformUp {
+      case tt @ org.apache.spark.sql.catalyst.analysis.RelationTimeTravel(
+          u: UnresolvedRelation, ts, version) =>
+        claim(u, version, ts).getOrElse(tt)
+      case u: UnresolvedRelation => claim(u, None, None).getOrElse(u)
     }
-
-  /** Epoch millis of a `TIMESTAMP AS OF` literal: TIMESTAMP literals
-    * carry UTC micros; bare strings are interpreted in the SESSION
-    * time zone (matching how Spark would cast them). Anything
-    * non-literal fails loudly. */
-  private def tsMillis(e: Expression): Long = e match {
-    case l: Literal
-        if l.dataType == org.apache.spark.sql.types.TimestampType =>
-      Math.floorDiv(l.value.asInstanceOf[Long], 1000L)
-    case l: Literal
-        if l.dataType == org.apache.spark.sql.types.StringType =>
-      val zone = java.time.ZoneId.of(
-        spark.sessionState.conf.sessionLocalTimeZone)
-      val s = l.value.toString.replace(' ', 'T')
-      val ldt = // date-only form means midnight (Iceberg convention)
-        if (s.contains('T')) java.time.LocalDateTime.parse(s)
-        else java.time.LocalDate.parse(s).atStartOfDay()
-      ldt.atZone(zone).toInstant.toEpochMilli
-    case other => throw new UnsupportedOperationException(
-      s"TIMESTAMP AS OF requires a timestamp or string literal, got $other")
   }
 
   /** `col [NOT] IN (subquery)` or `[NOT] EXISTS (correlated

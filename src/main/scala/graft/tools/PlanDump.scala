@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the `.explain("formatted")` physical plan of one
   * or more declared queries (the frame each query RETURNS — the plan
   * the bench's final action executes). Used to produce the committed
@@ -19,22 +17,8 @@ object PlanDump {
     require(names.nonEmpty, "usage: PlanDump <query>[,<query>…]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench's join-planner config (round 20, advice): the
-      // dumped evidence plans must show the same join strategies the
-      // bench actually executes
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.fgac.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     names.foreach { n =>
       println(s"###PLAN### $n")
       // adhoc:changes_append — the plan of a pure-append changes()

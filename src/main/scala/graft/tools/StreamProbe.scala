@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main (not part of the query surface): replays the
@@ -12,21 +11,8 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench's join-planner config so probe timings reflect
-      // the benchmarked plans (round 20, advice)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.fgac.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Tables.session(s"local[$cpus]")
+    s.conf.set("spark.sql.shuffle.partitions", cpus)
     import org.apache.spark.sql.streaming.Trigger
     // warm once at sf0.001 then measure at the target SF
     for (d <- Seq("/root/testdata/sf0.001", dir)) {

@@ -161,10 +161,10 @@ class FgacSpec extends AnyFunSuite {
     }
     assert(filtered.nonEmpty && filtered.forall(Set("BUILDING", "AUTOMOBILE")))
     // merge-on-read delete is still a DELETE for authorization
-    val gt = new graft.fgac.GovernedGraftTable(
-      graft.lakehouse.LakeRegistry.get("wd_customer").get, "wd_customer", spark)
+    spark.sql("ALTER TABLE wd_customer SET TBLPROPERTIES " +
+      "('write.delete.mode'='merge-on-read')")
     val e = intercept[Exception](FgacQueries.asPrincipal(spark, "wd_reader") {
-      gt.deleteMoR("c_custkey = 1")
+      spark.sql("DELETE FROM wd_customer WHERE c_custkey = 1")
     })
     assert(e.getMessage.contains("no write grant"))
   }
@@ -186,21 +186,176 @@ class FgacSpec extends AnyFunSuite {
 
   test("maintenance and ALTER SQL go through write-path FGAC") {
     SparkEntry.queries("fgac_write_deny")(spark, sf).collect() // wd_customer
-    for (stmt <- Seq(
-        "OPTIMIZE wd_customer FILES 2",
-        "VACUUM wd_customer RETAIN 1 SNAPSHOTS",
-        "ALTER TABLE wd_customer ADD COLUMNS (note STRING)")) {
+    spark.sql("ALTER TABLE wd_customer SET TBLPROPERTIES " +
+      "('write.delete.mode'='merge-on-read')")
+    val t = graft.lakehouse.LakeRegistry.get("wd_customer").get
+    // one denied statement per write op on the governed lake table:
+    // refused, audited under the op's name, and nothing committed
+    for ((op, stmt) <- Seq(
+        "INSERT" -> ("INSERT INTO wd_customer " +
+          "SELECT * FROM wd_customer WHERE c_custkey = 1"),
+        "UPDATE" -> "UPDATE wd_customer SET c_acctbal = 0.0 WHERE c_custkey = 1",
+        "DELETE" -> "DELETE FROM wd_customer WHERE c_custkey = 1",
+        "MERGE" -> ("MERGE INTO wd_customer t USING (SELECT 1L AS k) s " +
+          "ON t.c_custkey = s.k WHEN MATCHED THEN DELETE"),
+        "OPTIMIZE" -> "OPTIMIZE wd_customer FILES 2",
+        "VACUUM" -> "VACUUM wd_customer RETAIN 1 SNAPSHOTS",
+        "ALTER" -> "ALTER TABLE wd_customer ADD COLUMNS (note STRING)")) {
+      val (snap, seen) = (t.currentSnapshotId, AuditLog.entries.size)
       val e = intercept[Exception](FgacQueries.asPrincipal(spark, "wd_reader") {
         spark.sql(stmt)
       })
       assert(e.getMessage.contains("no write grant"),
         s"read-only principal must be denied: $stmt → $e")
+      assert(AuditLog.entries.drop(seen).exists(a =>
+        a.principal == "wd_reader" && a.action.startsWith(op) &&
+          a.resource == "wd_customer" && a.outcome == "DENIED"),
+        s"the denied $op must be audited")
+      assert(t.currentSnapshotId == snap, s"a denied $op must not commit")
     }
     FgacQueries.asPrincipal(spark, "wd_writer") {
       spark.sql("OPTIMIZE wd_customer FILES 2")
     }
     assert(graft.lakehouse.LakeRegistry.get("wd_customer").get
       .currentSnapshot.op == "compact")
+  }
+
+  test("a governed lake name follows its commits: INSERT, MERGE, " +
+      "merge-on-read DELETE and OPTIMIZE show through the name and a " +
+      "resource link") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_pin").toString
+    spark.sql(s"""CREATE TABLE pin_t (k BIGINT, v STRING) USING graft
+                 |LOCATION '$loc'
+                 |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    spark.sql("INSERT INTO pin_t VALUES (1, 'a')")
+    SecureCatalog.governTable("pin_t", spark.table("pin_t"))
+    SecureCatalog.register(Principal("pin_reader",
+      grants = Map("pin_t" -> TablePolicy("pin_t")),
+      links = Map("rl_pin_t" -> "pin_t")))
+    SecureCatalog.register(Principal("pin_writer",
+      grants = Map("pin_t" -> TablePolicy("pin_t", write = true))))
+    def count(who: String, name: String): Long =
+      FgacQueries.asPrincipal(spark, who)(
+        spark.sql(s"SELECT count(*) FROM $name").head.getLong(0))
+    // admin, a read grant on the name, and the same grant via a link
+    def counts: Seq[Long] = Seq(count("", "pin_t"),
+      count("pin_reader", "pin_t"), count("pin_reader", "rl_pin_t"))
+    def write(stmt: String): Unit =
+      FgacQueries.asPrincipal(spark, "pin_writer")(spark.sql(stmt))
+    try {
+      write("INSERT INTO pin_t VALUES (2, 'b')")
+      assert(counts == Seq(2L, 2L, 2L), "after INSERT")
+      write("""MERGE INTO pin_t t USING (SELECT 3L AS k, 'c' AS v) s
+              |ON t.k = s.k WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      assert(counts == Seq(3L, 3L, 3L), "after MERGE")
+      write("DELETE FROM pin_t WHERE k = 1")
+      assert(counts == Seq(2L, 2L, 2L), "after merge-on-read DELETE")
+      write("OPTIMIZE pin_t")
+      assert(counts == Seq(2L, 2L, 2L), "after OPTIMIZE")
+      // the reads scan the compacted snapshot's files, not older ones
+      val live = graft.lakehouse.LakeRegistry.get("pin_t").get
+        .currentSnapshot.files.size
+      Seq("" -> "pin_t", "pin_reader" -> "pin_t", "pin_reader" -> "rl_pin_t")
+        .foreach { case (who, name) =>
+          assert(FgacQueries.asPrincipal(spark, who)(
+            spark.sql(s"SELECT * FROM $name").inputFiles.length) == live,
+            s"$who reading $name after OPTIMIZE")
+        }
+    } finally {
+      SecureCatalog.ungovern("pin_t")
+      spark.sql("DROP TABLE pin_t")
+    }
+  }
+
+  test("time travel on a governed lake name and its link resolves " +
+      "under the reader's policy, audited; a DataFrame-backed governed " +
+      "name refuses naming it") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_gtt").toString
+    spark.sql(s"CREATE TABLE gtt_t (k BIGINT, secret STRING) USING graft " +
+      s"LOCATION '$loc'")
+    spark.sql("INSERT INTO gtt_t VALUES (1, 'x')")
+    val t = graft.lakehouse.LakeRegistry.get("gtt_t").get
+    val first = t.currentSnapshotId
+    t.createTag("first")
+    Thread.sleep(5)
+    spark.sql("INSERT INTO gtt_t VALUES (2, 'y'), (-3, 'z')")
+    val cutoff = java.time.Instant.ofEpochMilli(t.snapshot(t.currentSnapshotId).ts - 1)
+      .atZone(java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+      .toLocalDateTime.toString.replace('T', ' ')
+    SecureCatalog.governTable("gtt_t", spark.table("gtt_t"))
+    SecureCatalog.register(Principal("gtt_reader",
+      grants = Map("gtt_t" -> TablePolicy("gtt_t", rowFilter = Some("k > 0"),
+        allowedColumns = Some(Seq("k")))),
+      links = Map("rl_gtt_t" -> "gtt_t")))
+    SecureCatalog.register(Principal("gtt_none"))
+    SecureCatalog.governTable("gtt_df", spark.range(3).toDF("id"))
+    try {
+      def read(who: String, sql: String): Seq[String] =
+        FgacQueries.asPrincipal(spark, who)(rowsOf(spark.sql(sql)))
+      for (name <- Seq("gtt_t", "rl_gtt_t")) {
+        for (travel <- Seq(s"VERSION AS OF $first", "VERSION AS OF 'first'",
+            s"TIMESTAMP AS OF '$cutoff'")) {
+          val seen = AuditLog.entries.size
+          assert(read("gtt_reader", s"SELECT * FROM $name $travel") ==
+            Seq("[1]"), s"$name $travel")
+          assert(AuditLog.entries.drop(seen).exists(a =>
+            a.principal == "gtt_reader" && a.action == "SELECT" &&
+              a.resource == "gtt_t" && a.outcome == "ALLOWED"),
+            s"$name $travel must be audited")
+        }
+        // the policy still applies at the current snapshot
+        assert(read("gtt_reader", s"SELECT * FROM $name") == Seq("[1]", "[2]"))
+        val seen = AuditLog.entries.size
+        intercept[AccessDeniedException](
+          read("gtt_none", s"SELECT * FROM $name VERSION AS OF $first"))
+        assert(AuditLog.entries.drop(seen).exists(a =>
+          a.principal == "gtt_none" && a.outcome == "DENIED"))
+      }
+      // the admin session travels without a policy
+      assert(read("", s"SELECT * FROM gtt_t VERSION AS OF $first") ==
+        Seq("[1,x]"))
+      val e = intercept[UnsupportedOperationException](
+        spark.sql("SELECT * FROM gtt_df VERSION AS OF 1").collect())
+      assert(e.getMessage.contains("'gtt_df'"), e.getMessage)
+    } finally {
+      Seq("gtt_t", "gtt_df").foreach(SecureCatalog.ungovern)
+      spark.sql("DROP TABLE gtt_t")
+    }
+  }
+
+  test("ALTER TABLE ADD COLUMNS through a governed lake name: all-column " +
+      "and mask-only grants see the new column, a column-listed grant " +
+      "does not") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_gsch").toString
+    spark.sql(s"CREATE TABLE gsch_t (k BIGINT, v STRING) USING graft " +
+      s"LOCATION '$loc'")
+    spark.sql("INSERT INTO gsch_t VALUES (1, 'a')")
+    SecureCatalog.governTable("gsch_t", spark.table("gsch_t"))
+    SecureCatalog.register(Principal("gsch_all",
+      grants = Map("gsch_t" -> TablePolicy("gsch_t", write = true))))
+    SecureCatalog.register(Principal("gsch_mask",
+      grants = Map("gsch_t" -> TablePolicy("gsch_t",
+        masks = Map("v" -> "'***'")))))
+    SecureCatalog.register(Principal("gsch_cols",
+      grants = Map("gsch_t" -> TablePolicy("gsch_t",
+        allowedColumns = Some(Seq("k", "v"))))))
+    def as[A](who: String)(body: => A): A =
+      FgacQueries.asPrincipal(spark, who)(body)
+    try {
+      as("gsch_all")(spark.sql("ALTER TABLE gsch_t ADD COLUMNS (note STRING)"))
+      for ((who, cols) <- Seq("gsch_all" -> Seq("k", "v", "note"),
+          "gsch_mask" -> Seq("k", "v", "note"), "gsch_cols" -> Seq("k", "v"))) {
+        assert(as(who)(spark.sql("DESCRIBE TABLE gsch_t").collect()
+          .map(_.getString(0)).toSeq) == cols, s"DESCRIBE as $who")
+        assert(as(who)(spark.sql("SELECT * FROM gsch_t").columns.toSeq) ==
+          cols, s"SELECT * as $who")
+      }
+      assert(as("gsch_all")(spark.sql("DESCRIBE TABLE gsch_t").collect())
+        .exists(r => r.getString(0) == "note" && r.getString(1) == "string"))
+    } finally {
+      SecureCatalog.ungovern("gsch_t")
+      spark.sql("DROP TABLE gsch_t")
+    }
   }
 
   test("grant-option delegation: narrow-only regrant, chain composes " +
@@ -1154,7 +1309,7 @@ class FgacSpec extends AnyFunSuite {
         spark.sql("SELECT * FROM customer")))
     SparkEntry.queries("fgac_nested")(spark, sf)
     val raw = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-      SecureCatalog.relationOf("nst_customer"))
+      SecureCatalog.relationOf(spark, "nst_customer"))
     Seq("nst_analyst", "nst_partner").foreach { who =>
       val pol = SecureCatalog.principal(who).get.grants("nst_customer")
       assertSameRows(Enforcer.secure(raw, pol, who),
