@@ -32,17 +32,23 @@ final case class DeletePred(seq: Long, pred: String)
 private[lakehouse] final case class SnapHeader(parent: Long, ts: Long,
     op: String, txn: Option[(String, Long)] = None)
 
+/** [[GraftTable.positionalDiff]]'s result: (`_file`, `_pos`) frames of
+  * the positions a changelog range deletes (`newPos`) and un-deletes
+  * (`gonePos`) on carried data files, the carried files they name
+  * (`touched`, raw manifest paths), and whether each side can hold
+  * rows at all (`deletes`: a tombstone file was added or a vector
+  * moved; `restores`: a tombstone file was dropped or a vector
+  * moved). */
+private[lakehouse] final case class PositionalDiff(newPos: DataFrame,
+    gonePos: DataFrame, touched: Seq[String], deletes: Boolean,
+    restores: Boolean)
+
 /** A column rename at commit `seq`: data files with a LOWER
   * add-sequence store the column under `from` and read through an
   * alias (the name-mapping analog of Iceberg's field-id-based column
   * resolution — old files never rewrite for a rename). */
 final case class Rename(seq: Long, from: String, to: String)
 
-/** An immutable-snapshot view of a [[GraftTable]]. `fileRows` carries
-  * the per-file record count harvested from the parquet footer at
-  * commit time (absent when the footer was unreadable) — the manifest
-  * datum that lets metadata queries answer COUNT-shaped questions
-  * with zero data-file reads. */
 /** Per-column ANALYZE result. `min`/`max` are the values' string
   * renderings (None for an all-null column) — planner inputs, not a
   * typed query surface. */
@@ -67,6 +73,11 @@ final case class TableStats(snapshotId: Long, rows: Long,
 final case class ManifestShard(path: String, lo: String, hi: String,
     files: Seq[String])
 
+/** An immutable-snapshot view of a [[GraftTable]]. `fileRows` carries
+  * the per-file record count harvested from the parquet footer at
+  * commit time (absent when the footer was unreadable) — the manifest
+  * datum that lets metadata queries answer COUNT-shaped questions
+  * with zero data-file reads. */
 final case class Snapshot(
     id: Long,
     parent: Long,
@@ -1384,36 +1395,18 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     }
   }
 
-  /** Read `files` under `snap`, applying merge-on-read deletes. Files
-    * group by the set of delete predicates that scope to them (a
-    * delete applies only to files with a LOWER add-sequence); each
-    * group reads once with its combined anti-filter, groups union.
-    * Deletes are null-rejecting like SQL DELETE: a row whose
-    * predicate evaluates NULL survives. POSITION deletes then apply
-    * as one broadcast anti-join on (file, row position) over the
-    * union — tombstones name exact rows of exact files, so rows of
-    * un-tombstoned files pass through the join untouched and files
-    * appended after the delete need no scoping at all. With no
-    * pending deletes this is exactly the plain scan. */
+  /** Read `files` under `snap`, applying merge-on-read deletes:
+    * equality predicates per scope group ([[withoutPredDeleted]]), then
+    * deletion vectors and position tombstones ([[dropDeleted]]). With
+    * no pending deletes this is exactly the plain scan. */
   private def morRead(snap: Snapshot, files: Seq[String]): DataFrame =
-    if (snap.dels.isEmpty && snap.posDels.isEmpty && snap.dvs.isEmpty)
-      readFilesMapped(snap, files)
-    else if (snap.posDels.isEmpty && snap.dvs.isEmpty)
-      files
-        .groupBy(f => snap.dels.filter(_.seq > snap.fileSeq.getOrElse(f, 0L)))
-        .toSeq.sortBy(_._2.headOption.getOrElse(""))
-        .map { case (preds, fs) =>
-          preds.foldLeft(readFilesMapped(snap, fs)) {
-            (df, p) => df.filter(not(coalesce(expr(p.pred), lit(false))))
-          }
-        }
-        .reduceOption(_.unionByName(_))
-        .getOrElse(readFiles(snap, Nil))
+    if (snap.posDels.isEmpty && snap.dvs.isEmpty)
+      withoutPredDeleted(snap, files, readFilesMapped(snap, _))
     else morReadPos(snap, files)
       .drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
 
   /** The LIVE view of `files` (equality deletes filtered, position
-    * tombstones anti-joined) with each surviving row still carrying
+    * deletes dropped) with each surviving row still carrying
     * its (file, row index) — what merge-on-read DML scans: matched
     * rows must come from the view a reader would see (a row already
     * tombstoned must not be matched again, let alone re-emitted as a
@@ -1426,33 +1419,54 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // contract copy-on-write DML already has
     require(snap.renames.isEmpty,
       "position deletes under renamed columns: compact() first")
-    // initial-DEFAULT columns apply here exactly as on the plain read
-    // path (readFilesMapped): pre-add rows must surface the DEFAULT,
-    // not NULL — MoR DML builds new row images from this view, so a
-    // miss here would MATERIALIZE the wrong NULLs into data files.
-    // Defaults apply BEFORE the equality-delete predicates evaluate,
-    // matching what the live view showed when the delete committed.
-    val defaulted = defaultedCols(snap)
-    val eq = files
-      .groupBy(f => (
-        snap.dels.filter(_.seq > snap.fileSeq.getOrElse(f, 0L)),
-        preAddOf(snap, defaulted, f)))
+    dropDeleted(snap,
+      withoutPredDeleted(snap, files, withDefaults(snap, _, readFilesPos(snap, _))),
+      GraftTable.PosFileCol, GraftTable.PosIdxCol)
+  }
+
+  /** `files` grouped by the equality-delete predicates among `preds`
+    * that scope to them — those committed after the file's
+    * add-sequence (Iceberg's sequence rule) — groups ordered by their
+    * first file. */
+  private def scopeGroups(snap: Snapshot, files: Seq[String],
+      preds: Seq[DeletePred]): Seq[(Seq[DeletePred], Seq[String])] =
+    files.groupBy(f => preds.filter(_.seq > snap.fileSeq.getOrElse(f, 0L)))
       .toSeq.sortBy(_._2.headOption.getOrElse(""))
-      .map { case ((preds, pre), fs) =>
-        val base = applyDefaults(snap, defaulted,
-          readFilesPos(snap, fs), pre)
-        preds.foldLeft(base) {
+
+  /** `files` read by `read` one scope group at a time, each group
+    * anti-filtered by its pending equality predicates, groups unioned.
+    * Deletes are null-rejecting like SQL DELETE: a row whose predicate
+    * evaluates NULL survives. */
+  private def withoutPredDeleted(snap: Snapshot, files: Seq[String],
+      read: Seq[String] => DataFrame): DataFrame =
+    scopeGroups(snap, files, snap.dels)
+      .map { case (preds, fs) =>
+        preds.foldLeft(read(fs)) {
           (df, p) => df.filter(not(coalesce(expr(p.pred), lit(false))))
         }
       }
       .reduceOption(_.unionByName(_))
-      .getOrElse(readFilesPos(snap, Nil))
-    val withDv = if (snap.dvs.isEmpty) eq else {
-      // deletion vectors: a LEFT join keyed by FILE ONLY (one row per
-      // vectored file — metadata-scale, vs one row per deleted row
-      // for tombstones) plus an O(1) codegen'd bit probe per row; a
-      // row from an un-vectored file sees a NULL bitmap and survives
-      // through the coalesce
+      .getOrElse(read(Nil))
+
+  /** Drop the rows of `df` that `snap`'s positional deletes name. `df`
+    * carries each row's data file (`_metadata.file_path` form) in
+    * `fileCol` and its row index in `idxCol`. Deletion vectors apply
+    * first: a LEFT join keyed by FILE ONLY (one row per vectored file —
+    * metadata-scale, vs one row per deleted row for tombstones) plus an
+    * O(1) codegen'd bit probe per row; a row from an un-vectored file
+    * sees a NULL bitmap and survives through the coalesce. Tombstones
+    * then apply as one anti-join on (file, row position) — they name
+    * exact rows of exact files, so files appended after the delete
+    * need no scoping. Both sides broadcast only while demonstrably
+    * small: a table that has absorbed heavy MoR DML can hold billions
+    * of (file, pos) rows, and forcing those through a driver-collected
+    * broadcast is an OOM. On-disk tombstone size is the cheap,
+    * already-known proxy (paths dictionary-compress, so in-memory is
+    * larger — the 32 MB gate leaves that margin); beyond it the join
+    * falls back to a plain shuffle join on the same keys. */
+  private def dropDeleted(snap: Snapshot, df: DataFrame, fileCol: String,
+      idxCol: String): DataFrame = {
+    val withDv = if (snap.dvs.isEmpty) df else {
       import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
       // internal names under the reserved _gdv prefix: a user column
       // named `_bitmap` must not make this join ambiguous
@@ -1463,42 +1477,29 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         if (dvHeapBytes(snap).exists(_ <= GraftTable.PosDelBroadcastBytes))
           broadcast(dv)
         else dv
-      eq.join(hinted,
-          col(GraftTable.PosFileCol) === col(GraftTable.DvFileCol),
-          "left")
+      df.join(hinted, col(fileCol) === col(GraftTable.DvFileCol), "left")
         .filter(not(coalesce(
           columnOf(graft.functions.NativeExprs.BitsetGet(
             expressionOf(col(GraftTable.DvBitmapCol)),
-            expressionOf(col(GraftTable.PosIdxCol)))),
+            expressionOf(col(idxCol)))),
           lit(false))))
         .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
     }
     if (snap.posDels.isEmpty) withDv
-    else withDv.join(tombstones(snap),
-        col(GraftTable.PosFileCol) === col("_file") &&
-          col(GraftTable.PosIdxCol) === col("_pos"),
+    else {
+      val tomb = tombScan(snap.posDels, Seq(snap))
+      val small = sizesOf(snap.posDels, snap.posDelSizes).values.sum <=
+        GraftTable.PosDelBroadcastBytes
+      withDv.join(if (small) broadcast(tomb) else tomb,
+        col(fileCol) === col("_file") && col(idxCol) === col("_pos"),
         "left_anti")
+    }
   }
 
   /** Tombstone files `fs`, named by the manifests of `snaps`, as one
-    * (`_file`, `_pos`) scan. */
-  private def tombScan(fs: Seq[String], snaps: Seq[Snapshot]): DataFrame =
+    * (`_file`, `_pos`) scan — the one reader of tombstone files. */
+  private[lakehouse] def tombScan(fs: Seq[String], snaps: Seq[Snapshot]): DataFrame =
     manifestScan(GraftTable.TombSchema, fs, snaps.flatMap(_.posDelSizes).toMap)
-
-  /** `snap`'s position tombstones as one (`_file`, `_pos`) scan,
-    * broadcast only while the set is demonstrably small: a table that
-    * has absorbed heavy MoR DML can hold billions of (file, pos) rows,
-    * and forcing those through a driver-collected broadcast is an OOM.
-    * On-disk parquet size is the cheap, already-known proxy (paths
-    * dictionary-compress, so in-memory is larger — the 32 MB gate
-    * leaves that margin); beyond it the anti-join falls back to a
-    * plain shuffle join on the same keys. */
-  private def tombstones(snap: Snapshot): DataFrame = {
-    val sizes = sizesOf(snap.posDels, snap.posDelSizes)
-    val tomb = manifestScan(GraftTable.TombSchema, snap.posDels, sizes)
-    if (sizes.values.sum <= GraftTable.PosDelBroadcastBytes) broadcast(tomb)
-    else tomb
-  }
 
   /** Write (file, pos) tombstones for every row of `rows` (which must
     * carry the [[readFilesPos]] metadata columns) and return the
@@ -1526,15 +1527,27 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       col("_metadata.file_path").as(GraftTable.PosFileCol),
       col("_metadata.row_index").as(GraftTable.PosIdxCol))
 
-  /** Read `files` under `snap`, resolving renamed columns: each file
-    * reads under its WRITE-TIME physical names (files group by name
-    * epoch — one read per distinct mapping, not per file) and aliases
-    * to the current schema. Rename-free tables take the plain path
-    * untouched. */
+  /** `files` read by `read` one file epoch at a time, each epoch with
+    * the initial-DEFAULT columns it predates applied: pre-add rows
+    * must surface the DEFAULT, not NULL — MoR DML builds new row
+    * images from the positional view, so a miss there would
+    * MATERIALIZE the wrong NULLs into data files. Defaults apply
+    * BEFORE any equality-delete predicate evaluates, matching what the
+    * live view showed when the delete committed. */
+  private def withDefaults(snap: Snapshot, files: Seq[String],
+      read: Seq[String] => DataFrame): DataFrame = {
+    val defaulted = defaultedCols(snap)
+    if (defaulted.isEmpty) read(files)
+    else files.groupBy(f => preAddOf(snap, defaulted, f)).toSeq
+      .sortBy(_._2.headOption.getOrElse(""))
+      .map { case (pre, fs) => applyDefaults(snap, defaulted, read(fs), pre) }
+      .reduceOption(_.unionByName(_))
+      .getOrElse(read(Nil))
+  }
+
   /** Columns with an initial default: (name, default SQL, since) — a
     * file sequenced at or before `since` predates the column and
-    * reads the default for EVERY row (the column cannot exist in it).
-    * Shared by the mapped read path and [[morReadPos]]. */
+    * reads the default for EVERY row (the column cannot exist in it). */
   private def defaultedCols(snap: Snapshot): Seq[(String, String, Long)] =
     snap.schema.fields.toSeq.flatMap { f =>
       if (f.metadata.contains(GraftTable.DefaultSqlKey) &&
@@ -1559,24 +1572,15 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         d.withColumn(c, expr(sql).cast(snap.schema(c).dataType))
       }
 
-  private def readFilesMapped(snap: Snapshot, files: Seq[String]): DataFrame = {
-    val defaulted = defaultedCols(snap)
-    def preAddOf(f: String): Seq[String] =
-      this.preAddOf(snap, defaulted, f)
-    def applyDefaults(df: DataFrame, pre: Seq[String]): DataFrame =
-      this.applyDefaults(snap, defaulted, df, pre)
-    if (snap.renames.isEmpty && defaulted.isEmpty)
-      readFiles(snap, files)
-    else if (snap.renames.isEmpty) {
-      // defaults only: group files into pre-/post-add epochs per
-      // defaulted column set (same epoch-union shape as renames)
-      files.groupBy(preAddOf)
-        .toSeq.sortBy(_._2.headOption.getOrElse("")).map { case (pre, fs) =>
-          applyDefaults(readFiles(snap, fs), pre)
-        }
-        .reduceOption(_.unionByName(_))
-        .getOrElse(readFiles(snap, Nil))
-    } else {
+  /** Read `files` under `snap`, resolving renamed columns: each file
+    * reads under its WRITE-TIME physical names (files group by name
+    * epoch — one read per distinct mapping, not per file) and aliases
+    * to the current schema. Rename-free tables take the plain path
+    * untouched. */
+  private def readFilesMapped(snap: Snapshot, files: Seq[String]): DataFrame =
+    if (snap.renames.isEmpty) withDefaults(snap, files, readFiles(snap, _))
+    else {
+      val defaulted = defaultedCols(snap)
       // the mapped name tree covers EVERY depth (renames may touch a
       // field at any level — the name-mapping analog of Iceberg's
       // field ids): enumerate all dotted paths of the current schema,
@@ -1593,7 +1597,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       val names: Seq[String] = allPaths(snap.schema, "")
       files.groupBy { f =>
         val fseq = snap.fileSeq.getOrElse(f, snap.id)
-        (names.map(n => snap.physicalName(n, fseq)), preAddOf(f))
+        (names.map(n => snap.physicalName(n, fseq)), preAddOf(snap, defaulted, f))
       }.toSeq.sortBy(_._2.headOption.getOrElse("")).map {
         case ((physNames, pre), fs) =>
           val phys = names.zip(physNames).toMap
@@ -1645,11 +1649,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
               currentCol(fld, fld.name, col(s"`${leafOf(phys(fld.name))}`"))
                 .as(fld.name)
             }.toIndexedSeq: _*)
-            .transform(applyDefaults(_, pre))
+            .transform(applyDefaults(snap, defaulted, _, pre))
       }.reduceOption(_.unionByName(_))
         .getOrElse(readFiles(snap, Nil))
     }
-  }
 
   /** Partition-pruned read: keep only data files whose hive-style
     * path carries `partCol=v` for some `v` in `values`. The pruning
@@ -1774,38 +1777,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     readFilesMapped(to, to.files.filterNot(from))
   }
 
-  /** Net row-level changelog between two snapshots (the CDC surface —
-    * Iceberg's `create_changelog_view` with net changes): rows
-    * present at `toId` but not `fromId` tagged `_change_type =
-    * 'insert'`, the reverse tagged `'delete'`. An UPDATE therefore
-    * surfaces as delete+insert of the changed row, and rows that
-    * merely rode along a copy-on-write rewrite cancel out.
-    *
-    * Scale shape: computed from the FILE diff, not the table — files
-    * carried across the range never read (at 100 TB a day's changelog
-    * reads the day's rewritten files, not the table), and the
-    * exceptAll pair that nets rewrite survivors is the standard
-    * changelog compute (one hash shuffle over only the diffed files'
-    * rows). This is exact because final = carried + added and initial
-    * = carried + removed, so the carried multiset cancels:
-    * final∖initial = added∖removed.
-    *
-    * Position deletes COMPOSE (they are what MoR UPDATE/MERGE emit,
-    * so a changelog that refused them would go dark exactly when the
-    * table is busiest): tombstone files are immutable and carried by
-    * reference, so the tombstone-file set diff names exactly the
-    * range's new (deletes) and undone (rollback re-inserts)
-    * positions; only the data files those positions name are read —
-    * carried files untouched by DML still cost nothing. Equality
-    * deletes remain excluded (their predicate scoping has no
-    * row-position identity to diff): materialize first.
-    *
-    * Restrictions (same contract as Iceberg's changelog): unevolved
-    * schema across the range (changelog identity is the full row).
-    *
-    * `fromId = 0` means "before the first snapshot": the whole live
-    * view surfaces as inserts (the streaming change feed's initial
-    * batch). */
   /** ROW-ID-KEYED changelog between two snapshots — what Iceberg v3
     * row lineage exists FOR: the plain changelog ([[changes]]) can
     * only emit an UPDATE as a content-matched delete+insert pair,
@@ -1822,13 +1793,13 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * `insert`. Cost is O(changed files) rows through one join on an
     * 8-byte key — the text/content never drives the netting.
     * ALL THREE MoR delete shapes compose: DV pointer moves and
-    * position-tombstone set diffs on carried files expand into keyed
-    * deletes (old image from the from-side live view) and rollback
-    * un-deletes, reading only the moved blobs and the named rows;
-    * EQUALITY predicates shared by both endpoints cancel through the
-    * live-view reads, and predicates that differ in-range expand
-    * over stats-pruned carried candidates into keyed deletes and
-    * restores. */
+    * position-tombstone set diffs on carried files ([[positionalDiff]])
+    * expand into keyed deletes (old image from the from-side live
+    * view) and rollback un-deletes, reading only the moved blobs and
+    * the named rows; EQUALITY predicates shared by both endpoints
+    * cancel through the live-view reads, and predicates that differ
+    * in-range expand over stats-pruned carried candidates
+    * ([[predMatched]]) into keyed deletes and restores. */
   def lineageChanges(fromId: Long, toId: Long): DataFrame =
     lineageChanges(fromId, toId, id => snapshot(id))
 
@@ -1841,19 +1812,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       snapOf: Long => Snapshot): DataFrame = {
     val to = snapOf(toId)
     val fromOpt = if (fromId == 0L) None else Some(snapOf(fromId))
-    // ALL THREE MoR delete shapes compose — the legs below read each
-    // endpoint's live view; DV pointer moves expand through a bitmap
-    // diff and position-tombstone set diffs expand through the
-    // immutable tombstone files, each on CARRIED files only (a feed
-    // that refused any shape would wedge permanently on the tables
-    // that accept it: the endpoint snapshot is immutable, so no later
-    // compaction could ever unwedge it). EQUALITY predicates — which
-    // can only predate enablement or a lineage-off window — apply
-    // inside every live-view read (lineageSource), so predicates
-    // SHARED by both endpoints cancel without any extra work, and
-    // predicates that DIFFER expand below into keyed deletes/restores
-    // over stats-pruned carried candidates, the r17 plain-feed
-    // expansion carried onto the rid-keyed join.
+    // a feed that refused any delete shape would wedge permanently on
+    // the tables that accept it: the endpoint snapshot is immutable,
+    // so no later compaction could ever unwedge it. EQUALITY
+    // predicates — which can only predate enablement or a lineage-off
+    // window — apply inside every live-view read (lineageSource).
     require(!to.schema.fieldNames.exists(n =>
         n.equalsIgnoreCase("_row_id") || n.equalsIgnoreCase("_change_type")),
       "lineage changelog over a table with its own '_row_id' or " +
@@ -1903,169 +1866,84 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           "null-backfilled ADD COLUMN): split the range")
     }
     val from = fromOpt.getOrElse(to)
-    def tagged(df: DataFrame, tag: String) = {
+    def filled(df: DataFrame) = {
       val have = df.columns.toSet
-      val filled = to.schema.fields.filterNot(f => have(f.name))
+      to.schema.fields.filterNot(f => have(f.name))
         .foldLeft(df)((d, f) =>
           d.withColumn(f.name, lit(null).cast(f.dataType)))
-      filled.select(
+    }
+    def tagged(df: DataFrame, tag: String) =
+      filled(df).select(
         (cols.map(c => col(c).as(s"$tag$c")) ++ Seq(
           col(GraftTable.RowIdColName).as(s"${tag}_rid"),
           col(GraftTable.LastSeqColName).as(s"${tag}_seq"))): _*)
-    }
     def side(snap: Snapshot, files: Seq[String], tag: String) =
       tagged(lineageSource(snap, files), tag)
-    // DV pointer moves and position-tombstone set diffs on carried
-    // files: positions deleted in-range are keyed deletes (old image
-    // read from the FROM view, where those rows are still live);
-    // positions un-deleted (rollback) are keyed inserts (new image
-    // from the TO view). DV diffs read only the moved files' blobs;
-    // tombstone diffs read only the tombstone files NEW on one side
-    // (they are immutable and carried by reference, so shared files
-    // cancel without a read). A live-view DML never re-deletes a
-    // position, so the two shapes cannot emit the same key — plain
-    // unions compose them, and ONE probe per side scans only the
-    // named data files.
-    val dvMoved = to.files.filter(f => fromSet(f) &&
-      fromOpt.exists(_.dvs.get(f) != to.dvs.get(f))).sorted
-    val fromTSet = fromOpt.map(_.posDels.toSet).getOrElse(Set.empty)
-    val newTFiles =
-      if (fromOpt.isEmpty) Nil else to.posDels.filterNot(fromTSet)
-    val goneTFiles =
-      fromOpt.map(_.posDels.filterNot(to.posDels.toSet)).getOrElse(Nil)
-    def tombRows(fs: Seq[String]): DataFrame =
-      tombScan(fs, to +: fromOpt.toSeq)
-    val (posDel, posIns): (Option[DataFrame], Option[DataFrame]) =
-      if (dvMoved.isEmpty && newTFiles.isEmpty && goneTFiles.isEmpty)
-        (None, None)
-      else {
-        val from0 = fromOpt.get
-        val (newBits, goneBits) = dvPositionDiff(from0, to, dvMoved)
-        // a (file, pos) re-tombstoned through a different tombstone
-        // file (rollback then re-delete) cancels bidirectionally
-        val newPos = tombRows(newTFiles)
-          .join(tombRows(goneTFiles), Seq("_file", "_pos"), "left_anti")
-          .unionByName(newBits)
-        val gonePos = tombRows(goneTFiles)
-          .join(tombRows(newTFiles), Seq("_file", "_pos"), "left_anti")
-          .unionByName(goneBits)
-        // planning prune, same as the plain feed: the diffed
-        // positions name exact files — collect that (bounded: one
-        // path per file the range's MoR DML touched) set and scan
-        // ONLY those, restricted to files CARRIED across the range
-        // (added/removed files already surface through the file-diff
-        // legs; counting a tombstoned row of a removed file here too
-        // would double-emit its delete). Without the prune a
-        // DV-consolidation rewrite (every pointer moved, identical
-        // bits, empty diff) would cost the feed a scan of every
-        // vectored data file to net zero rows.
-        val rawByEnc = to.files.filter(fromSet)
-          .map(p => metaPath(p) -> p).toMap
-        // ONE driver action computes both sides' touched-file sets
-        // (the plain changelog's shape) — per-side collects would
-        // re-execute the tombstone/bitmap diff plans twice
-        val touched = newPos.select("_file")
-          .unionByName(gonePos.select("_file"))
-          .distinct().collect().map(_.getString(0)).toSeq
-          .flatMap(rawByEnc.get).sorted
-        def at(snap: Snapshot, pos: DataFrame): Option[DataFrame] =
-          if (touched.isEmpty) None
-          else {
-            val rows = lineageSource(snap, touched, keepMeta = true)
-            Some(rows.join(pos, rows("_g_file") === pos("_file") &&
-                rows("_g_idx") === pos("_pos"), "left_semi")
-              .drop("_g_file", "_g_idx"))
-          }
-        (at(from0, newPos), at(to, gonePos))
-      }
+    // positions deleted in-range are keyed deletes (old image read
+    // from the FROM view, where those rows are still live); positions
+    // un-deleted (rollback) are keyed inserts (new image from the TO
+    // view) — ONE probe per side scans only the named data files
+    val pd = positionalDiff(from, to)
+    def at(snap: Snapshot, touched: Seq[String], pos: DataFrame) = {
+      val rows = lineageSource(snap, touched, keepMeta = true)
+      rows.join(pos, rows("_g_file") === pos("_file") &&
+          rows("_g_idx") === pos("_pos"), "left_semi")
+        .drop("_g_file", "_g_idx")
+    }
+    val posDel = pd.map(p => at(from, p.touched, p.newPos))
+    val posIns = pd.map(p => at(to, p.touched, p.gonePos))
     var d = posDel.map(x => side(from, removed, "_d_")
         .unionByName(tagged(x, "_d_")))
       .getOrElse(side(from, removed, "_d_"))
     var i = posIns.map(x => side(to, added, "_i_")
         .unionByName(tagged(x, "_i_")))
       .getOrElse(side(to, added, "_i_"))
-    // structural-emptiness tracking (round 19): a side that never
-    // receives a potentially-nonempty leg lets the tail skip the
-    // full-outer rid join — see below. posIns can only hold rows when
-    // a tombstone set was DROPPED or a DV pointer moved (rollback
-    // territory); a pure tombstone-ADD range keeps the insert side
-    // trivial.
-    var dTrivial = removed.isEmpty &&
-      (newTFiles.isEmpty && dvMoved.isEmpty)
-    var iTrivial = added.isEmpty &&
-      (goneTFiles.isEmpty && dvMoved.isEmpty)
-    // EQUALITY-PREDICATE diff on CARRIED files, keyed (the r17
-    // plain-feed expansion with `_row_id` carried through): a
-    // predicate NEW in-range — reachable via a lineage-off window or
-    // a rollback re-applying one — kills exactly the carried rows it
-    // scopes and matches, emitted as keyed deletes with the from-side
-    // image; a predicate REMOVED in-range (rollback) restores its
-    // rows as keyed inserts from the to side. Candidates are
-    // add-sequence-scoped and STATS-PRUNED (the eq-read economics);
-    // each leg reads the OWNER's live view (lineageSource applies the
-    // owner's own predicates/tombstones/DVs), so the cross-direction
-    // liveness law falls out: a row dead at the owner never emits.
-    // Rows the range ALSO tombstone/DV-killed dedupe by rid against
-    // the positional legs — a rid must appear at most once per side
-    // or the keyed join would fan out.
+    // structural-emptiness tracking: a side that never receives a
+    // potentially-nonempty leg lets the tail skip the full-outer rid
+    // join — see below. A pure tombstone-ADD range keeps the insert
+    // side trivial.
+    var dTrivial = removed.isEmpty && !pd.exists(_.deletes)
+    var iTrivial = added.isEmpty && !pd.exists(_.restores)
+    // EQUALITY-PREDICATE diff on CARRIED files, keyed: a predicate NEW
+    // in-range — reachable via a lineage-off window or a rollback
+    // re-applying one — kills exactly the carried rows it scopes and
+    // matches, emitted as keyed deletes with the from-side image; a
+    // predicate REMOVED in-range (rollback) restores its rows as keyed
+    // inserts from the to side. Each leg reads the OWNER's live view
+    // (lineageSource applies the owner's own predicates/tombstones/
+    // DVs), so a row dead at the owner never emits. The in-range ADD
+    // COLUMN null-backfill comes first: the predicate may reference a
+    // column the owner's schema lacks. No rename replay is needed:
+    // lineageSource refuses pending renames and the schema gate above
+    // admits none. Rows the range ALSO
+    // tombstone/DV-killed dedupe by rid against the positional legs —
+    // a rid must appear at most once per side or the keyed join would
+    // fan out.
     val newPreds = to.dels.filterNot(from.dels.toSet)
     val gonePreds = from.dels.filterNot(to.dels.toSet)
-    if ((newPreds.nonEmpty || gonePreds.nonEmpty) &&
-        (toSet intersect fromSet).nonEmpty) {
-      val carried = (toSet intersect fromSet).toSeq.sorted
-      def predMatched(owner: Snapshot,
-          preds: Seq[DeletePred]): Option[DataFrame] =
-        carried
-          .map(f => f -> preds.filter(_.seq >
-            owner.fileSeq.getOrElse(f, 0L)))
-          .filter(_._2.nonEmpty)
-          .groupBy(_._2).toSeq
-          .sortBy(_._2.head._1)
-          .flatMap { case (ps, scopedPairs) =>
-            val scoped = owner.copy(files = scopedPairs.map(_._1))
-            val cand = ps.flatMap(p => pruneByStats(scoped, p.pred))
-              .distinct.sorted
-            if (cand.isEmpty) None
-            else {
-              val rows = lineageSource(owner, cand)
-              // in-range ADD COLUMN: the predicate may reference a
-              // column the owner's schema lacks — null-backfill first
-              // (a pre-add row reads NULL there, exactly what a
-              // to-reader surfaces). No rename replay needed: the
-              // pending-rename refusal in lineageSource and the
-              // schema-compat gate above leave no reachable rename.
-              val have = rows.columns.toSet
-              val filled = to.schema.fields.filterNot(f => have(f.name))
-                .foldLeft(rows)((df, f) =>
-                  df.withColumn(f.name, lit(null).cast(f.dataType)))
-              Some(filled.filter(ps.map(p =>
-                coalesce(expr(p.pred), lit(false))).reduce(_ || _)))
-            }
-          }
-          .reduceOption(_.unionByName(_))
-      predMatched(from, newPreds).foreach { m =>
-        val deduped = posDel.fold(m)(t => m.join(
-          t.select(col(GraftTable.RowIdColName)),
-          Seq(GraftTable.RowIdColName), "left_anti"))
-        d = d.unionByName(tagged(deduped, "_d_"))
-        dTrivial = false
-      }
-      predMatched(to, gonePreds).foreach { m =>
-        val deduped = posIns.fold(m)(t => m.join(
-          t.select(col(GraftTable.RowIdColName)),
-          Seq(GraftTable.RowIdColName), "left_anti"))
-        i = i.unionByName(tagged(deduped, "_i_"))
-        iTrivial = false
-      }
+    lazy val carried = (toSet intersect fromSet).toSeq.sorted
+    def matched(owner: Snapshot, preds: Seq[DeletePred]) =
+      predMatched(owner, carried, preds, c => filled(lineageSource(owner, c)),
+        p => coalesce(expr(p.pred), lit(false)))
+    def keyed(m: DataFrame, pos: Option[DataFrame]) = pos.fold(m)(t =>
+      m.join(t.select(col(GraftTable.RowIdColName)),
+        Seq(GraftTable.RowIdColName), "left_anti"))
+    matched(from, newPreds).foreach { m =>
+      d = d.unionByName(tagged(keyed(m, posDel), "_d_"))
+      dTrivial = false
     }
-    // FAST PATH (round 19, guide §2.4): the full-outer rid join below
-    // exists to pair a logical row's old and new images when BOTH
-    // sides can hold rows. On an append-only range (incl. the initial
-    // load, fromId = 0) the delete side is structurally empty — every
-    // to-side row would join to nothing and tag `insert` — and on a
-    // delete-only range symmetrically `delete`; emitting the live side
-    // directly is row-identical and drops the join's full-row shuffle
-    // from every such micro-batch.
+    matched(to, gonePreds).foreach { m =>
+      i = i.unionByName(tagged(keyed(m, posIns), "_i_"))
+      iTrivial = false
+    }
+    // FAST PATH: the full-outer rid join below exists to pair a
+    // logical row's old and new images when BOTH sides can hold rows.
+    // On an append-only range (incl. the initial load, fromId = 0) the
+    // delete side is structurally empty — every to-side row would join
+    // to nothing and tag `insert` — and on a delete-only range
+    // symmetrically `delete`; emitting the live side directly is
+    // row-identical and drops the join's full-row shuffle from every
+    // such micro-batch.
     if (dTrivial)
       return i.select(cols.map(c => col(s"_i_$c").as(c)) :+
         col("_i__rid").as("_row_id") :+
@@ -2093,54 +1971,146 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         col("_change_type"): _*)
   }
 
-  /** Bitmap diff of DV pointer moves on `moved` carried files, the
-    * shared kernel of BOTH changelogs: per moved file, AND-NOT the
-    * endpoint bitmaps both ways and explode the surviving bits into
-    * (_file, _pos) frames — (newly set = in-range deletes, cleared =
-    * rollback un-deletes). Only the moved files' blobs are read (the
-    * pointer map names them exactly); reading every referenced blob
-    * and filtering after would touch the whole vector set to diff
-    * one moved pointer. */
-  private def dvPositionDiff(from: Snapshot, to: Snapshot,
-      moved: Seq[String]): (DataFrame, DataFrame) = {
+  /** The positional-delete diff of the data files CARRIED from `from`
+    * to `to` — the one kernel both changelogs expand their tombstone
+    * and deletion-vector legs through. Tombstone files are immutable
+    * and carried by reference, so the tombstone-file set diff names
+    * exactly the range's new (deletes) and dropped (rollback
+    * un-deletes) positions, and shared files cancel without a read; a
+    * (file, pos) re-tombstoned through a different file (rollback then
+    * re-delete) cancels in the bidirectional anti-join. Moved DV
+    * pointers AND-NOT their endpoint bitmaps both ways, reading only
+    * the moved files' blobs (the pointer map names them exactly). A
+    * live-view DML never re-deletes a position, so the two shapes
+    * cannot emit the same key — plain unions compose them.
+    *
+    * `touched` is the carried files the diffed positions name, from
+    * ONE driver action (bounded: one path per file the range's DML
+    * touched), so only those files are scanned — without it a
+    * DV-consolidation rewrite (every pointer moved, identical bits,
+    * empty diff) would cost a scan of every vectored data file to net
+    * zero rows. Added and removed files surface through the callers'
+    * file diff instead; counting a tombstoned row of a removed file
+    * here too would double-emit its delete. None when the diff names
+    * no carried file. */
+  private def positionalDiff(from: Snapshot,
+      to: Snapshot): Option[PositionalDiff] = {
     import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
+    import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
     import graft.functions.NativeExprs
-    def emptyPos = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("_file",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_pos",
-          org.apache.spark.sql.types.LongType))))
-    if (moved.isEmpty) return (emptyPos, emptyPos)
+    val toSet = to.files.toSet
+    val carried = from.files.filter(toSet)
+    val moved = carried.filter(f => from.dvs.get(f) != to.dvs.get(f)).sorted
+    val newT = to.posDels.filterNot(from.posDels.toSet)
+    val goneT = from.posDels.filterNot(to.posDels.toSet)
+    if (carried.isEmpty || newT.isEmpty && goneT.isEmpty && moved.isEmpty)
+      return None
+    def empty(fields: (String, DataType)*): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
     def bits(s: Snapshot): DataFrame = {
       val onlyMoved = s.dvs.view.filterKeys(moved.toSet).toMap
-      if (onlyMoved.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(
-            org.apache.spark.sql.types.StructField("_file",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("_bitmap",
-              org.apache.spark.sql.types.BinaryType))))
+      if (onlyMoved.isEmpty) empty("_file" -> StringType, "_bitmap" -> BinaryType)
       else currentDvRelation(s.copy(dvs = onlyMoved))
         .select(col("_file"), col("_bitmap"))
     }
-    val joined = bits(from).withColumnRenamed("_bitmap", "_bm_from")
-      .join(bits(to).withColumnRenamed("_bitmap", "_bm_to"),
-        Seq("_file"), "full_outer")
-      .select(col("_file"),
-        coalesce(col("_bm_from"),
-          lit(Array.emptyByteArray)).as("_bm_from"),
-        coalesce(col("_bm_to"),
-          lit(Array.emptyByteArray)).as("_bm_to"))
-    def diff(a: String, b: String): DataFrame = joined.select(
-      col("_file"),
-      explode(columnOf(NativeExprs.BitsetPositions(
-        expressionOf(columnOf(NativeExprs.BitsetAndNot(
-          expressionOf(col(a)),
-          expressionOf(col(b)))))))).as("_pos"))
-    (diff("_bm_to", "_bm_from"), diff("_bm_from", "_bm_to"))
+    // (bits set at `to` only = in-range deletes, cleared = un-deletes)
+    val (newBits, goneBits) =
+      if (moved.isEmpty)
+        (empty("_file" -> StringType, "_pos" -> LongType),
+          empty("_file" -> StringType, "_pos" -> LongType))
+      else {
+        val joined = bits(from).withColumnRenamed("_bitmap", "_bm_from")
+          .join(bits(to).withColumnRenamed("_bitmap", "_bm_to"),
+            Seq("_file"), "full_outer")
+          .select(col("_file"),
+            coalesce(col("_bm_from"),
+              lit(Array.emptyByteArray)).as("_bm_from"),
+            coalesce(col("_bm_to"),
+              lit(Array.emptyByteArray)).as("_bm_to"))
+        def diff(a: String, b: String): DataFrame = joined.select(
+          col("_file"),
+          explode(columnOf(NativeExprs.BitsetPositions(
+            expressionOf(columnOf(NativeExprs.BitsetAndNot(
+              expressionOf(col(a)),
+              expressionOf(col(b)))))))).as("_pos"))
+        (diff("_bm_to", "_bm_from"), diff("_bm_from", "_bm_to"))
+      }
+    def tombRows(fs: Seq[String]): DataFrame = tombScan(fs, Seq(from, to))
+    val newPos = tombRows(newT)
+      .join(tombRows(goneT), Seq("_file", "_pos"), "left_anti")
+      .unionByName(newBits)
+    val gonePos = tombRows(goneT)
+      .join(tombRows(newT), Seq("_file", "_pos"), "left_anti")
+      .unionByName(goneBits)
+    // delete-artifact `_file` values are in `_metadata.file_path` form
+    // (URL-encoded) while the manifest holds raw paths — and hadoop
+    // Path never percent-decodes — so membership tests in ENCODED
+    // space and maps back to the RAW path for the scan; comparing (or
+    // reading) the mismatched forms silently drops MoR deletes from
+    // the changelog on any path with an encodable character
+    val rawByEnc = carried.map(p => metaPath(p) -> p).toMap
+    val touched = newPos.select("_file").union(gonePos.select("_file"))
+      .distinct().collect().map(_.getString(0)).toSeq
+      .flatMap(rawByEnc.get).sorted
+    if (touched.isEmpty) None
+    else Some(PositionalDiff(newPos, gonePos, touched,
+      deletes = newT.nonEmpty || moved.nonEmpty,
+      restores = goneT.nonEmpty || moved.nonEmpty))
   }
 
+  /** The rows of `owner`'s `files` that equality predicates `preds`
+    * scope (add-sequence rule) and match — the predicate leg of both
+    * changelogs. Per scope group only the STATS-PRUNED candidate files
+    * are read, through `read` (the caller's live view of `owner`), and
+    * kept where `cond` holds for any of the group's predicates: the
+    * scan is bounded by the candidates, never the carried set — the
+    * same economics as the equality-delete read path. None when no
+    * candidate survives. */
+  private def predMatched(owner: Snapshot, files: => Seq[String],
+      preds: Seq[DeletePred], read: Seq[String] => DataFrame,
+      cond: DeletePred => Column): Option[DataFrame] =
+    if (preds.isEmpty) None
+    else scopeGroups(owner, files, preds).filter(_._1.nonEmpty)
+      .flatMap { case (ps, fs) =>
+        val scoped = owner.copy(files = fs)
+        val cand = ps.flatMap(p => pruneByStats(scoped, p.pred)).distinct.sorted
+        if (cand.isEmpty) None
+        else Some(read(cand).filter(ps.map(cond).reduce(_ || _)))
+      }
+      .reduceOption(_.unionByName(_))
+
+  /** Net row-level changelog between two snapshots (the CDC surface —
+    * Iceberg's `create_changelog_view` with net changes): rows
+    * present at `toId` but not `fromId` tagged `_change_type =
+    * 'insert'`, the reverse tagged `'delete'`. An UPDATE therefore
+    * surfaces as delete+insert of the changed row, and rows that
+    * merely rode along a copy-on-write rewrite cancel out.
+    *
+    * Scale shape: computed from the FILE diff, not the table — files
+    * carried across the range never read (at 100 TB a day's changelog
+    * reads the day's rewritten files, not the table), and the net pass
+    * over the diffed files' rows is the standard changelog compute
+    * (one hash shuffle). This is exact because final = carried + added
+    * and initial = carried + removed, so the carried multiset cancels:
+    * final∖initial = added∖removed.
+    *
+    * All three merge-on-read delete shapes compose (they are what MoR
+    * DELETE/UPDATE/MERGE emit, so a changelog that refused one would
+    * go dark exactly when the table is busiest): files added or
+    * removed in-range read through their endpoint's live view;
+    * on carried files, tombstone and deletion-vector changes expand
+    * through [[positionalDiff]], reading only the data files the
+    * diffed positions name, and equality predicates added or removed
+    * in-range expand over stats-pruned candidates ([[predMatched]]).
+    *
+    * Restrictions (same contract as Iceberg's changelog): across the
+    * range only null-backfilled ADD COLUMN, top-level RENAME COLUMN and
+    * safe type promotion (changelog identity is the full row).
+    *
+    * `fromId = 0` means "before the first snapshot": the whole live
+    * view surfaces as inserts (the streaming change feed's initial
+    * batch). */
   def changes(fromId: Long, toId: Long): DataFrame =
     changes(fromId, toId, _ => None)
 
@@ -2186,15 +2156,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       "changelog across a schema evolution other than null-backfilled " +
         "ADD COLUMN / RENAME COLUMN / safe type promotion is undefined " +
         "(row identity is the full row); read the sides separately")
-    // equality deletes at the endpoints EXPAND (r16 verdict item 4):
-    // a predicate added in-range deletes exactly the carried rows it
-    // scopes and matches, a predicate removed (rollback) restores
-    // its — both emitted as keyed row images like the tombstone diff
-    // below, with candidates add-sequence-scoped and STATS-PRUNED, so
-    // a table under write.delete.style=equality can turn on CDC
-    // without wedging at an immutable endpoint pair. Files added or
-    // removed in-range read through the owning endpoint's LIVE view
-    // (morRead), which already applies its scoped predicates.
     // the carried-file tombstone/DV diff below reads positionally at
     // the TO schema — sound only when no rename OR promotion touches
     // the shared columns (nullable adds per-file-epoch-default fine)
@@ -2207,39 +2168,20 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         "columns: compact() first")
     val fromSet = from.files.toSet
     val toSet = to.files.toSet
-    // deletion vectors on files carried across the range: a moved
-    // pointer encodes in-range row deletes (bits set at `to` but not
-    // `from`) or un-deletes (rollback: bits cleared) — expanded below
-    // by a bitmap diff, alongside the tombstone diff
-    val dvMovedFiles = fromSet.intersect(toSet).toSeq
-      .filter(f => from.dvs.get(f) != to.dvs.get(f)).sorted
     // live view of the files added (resp. removed) in-range, under
     // the owning endpoint's tombstones AND scoped equality predicates
-    // (morRead) — a file appended then partially deleted inside the
-    // range inserts only its surviving rows
-    def live(s: Snapshot, fs: Seq[String]): DataFrame = morRead(s, fs)
-    var ins = live(to, to.files.filterNot(fromSet))
+    // — a file appended then partially deleted inside the range
+    // inserts only its surviving rows
+    var ins = morRead(to, to.files.filterNot(fromSet))
     // the from side reads at the FROM schema and aligns forward
     // (the alignableSchemas gate above guarantees this succeeds)
     var del = GraftTable.alignEvolved(
-      live(from, from.files.filterNot(toSet)), from.id, to, to.schema).get
-    // structural-emptiness tracking (round 19): a leg that never
-    // receives a potentially-nonempty contribution lets the tail skip
-    // the net-tag/group/expand pass entirely — see below
+      morRead(from, from.files.filterNot(toSet)), from.id, to, to.schema).get
+    // structural-emptiness tracking: a leg that never receives a
+    // potentially-nonempty contribution lets the tail skip the
+    // net-tag/group/expand pass entirely — see below
     var insTrivial = to.files.forall(fromSet)
     var delTrivial = from.files.forall(toSet)
-    // carried files change their live set through the TOMBSTONE/DV
-    // diff and the EQUALITY-PREDICATE diff. The tombstone diff runs
-    // first so the predicate diff can multiset-dedupe against it: a
-    // predicate commits without a scan, so it may match rows a
-    // tombstone (or DV) in the same range already killed — per row
-    // VALUE the true delete count is max(predicate-killed,
-    // tombstone-killed), which `eq EXCEPT ALL tombstone` + union
-    // computes exactly (and symmetrically for rollback restores).
-    // Tombstone files shared by both endpoints cancel without a
-    // read, and a (file, pos) re-tombstoned through a different file
-    // (rollback then re-delete) cancels in the bidirectional
-    // anti-join.
     // equality predicates rendered ERA-CORRECT: a predicate's column
     // references bind the names current at its own commit. Renames
     // committed after it are possible only for a predicate REMOVED by
@@ -2264,165 +2206,90 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         }
       coalesce(columnOf(e), lit(false))
     }
-    val fromT = from.posDels.toSet
-    val toT = to.posDels.toSet
-    val newTFiles = to.posDels.filterNot(fromT)
-    val goneTFiles = from.posDels.filterNot(toT)
+    // carried files change their live set through the positional diff
+    // and the equality-predicate diff. The positional diff runs first
+    // so the predicate diff can multiset-dedupe against it.
     var tDel: Option[DataFrame] = None
     var tIns: Option[DataFrame] = None
-    // tombstone diffs only matter for files CARRIED across the range
-    // (added/removed files already read under their own endpoint's
-    // tombstones in live()); with no carried files — the initial-load
-    // fromId = 0 case — the whole block would scan every tombstone
-    // file to discard everything
-    if ((newTFiles.nonEmpty || goneTFiles.nonEmpty ||
-          dvMovedFiles.nonEmpty) &&
-        (toSet intersect fromSet).nonEmpty) {
-      def tombRows(fs: Seq[String]): DataFrame = tombScan(fs, Seq(from, to))
-      // deletion-vector diff → the same (file, pos) key shape as the
-      // tombstone diff. A live-view DML never re-deletes a position,
-      // so the two shapes cannot emit the same key — plain unions
-      // compose them.
-      val (dvNewT, dvGoneT) = dvPositionDiff(from, to, dvMovedFiles)
-      val newT = tombRows(newTFiles)
-        .join(tombRows(goneTFiles), Seq("_file", "_pos"), "left_anti")
-        .unionByName(dvNewT)
-      val goneT = tombRows(goneTFiles)
-        .join(tombRows(newTFiles), Seq("_file", "_pos"), "left_anti")
-        .unionByName(dvGoneT)
-      // planning step: the diffed positions name exact data files —
-      // collect the (bounded: one path per file the range's DML
-      // touched) name set so only those files are scanned. Tombstone
-      // `_file` values are in `_metadata.file_path` form (URL-encoded)
-      // while the manifest holds raw paths — and hadoop Path never
-      // percent-decodes — so membership tests in ENCODED space and
-      // maps back to the RAW path for the scan; comparing (or
-      // reading) the mismatched forms silently drops MoR deletes from
-      // the changelog on any path with an encodable character.
-      val rawByEnc = (toSet intersect fromSet).toSeq
-        .map(p => metaPath(p) -> p).toMap
-      val touched = newT.select("_file").union(goneT.select("_file"))
-        .distinct().collect().map(_.getString(0)).toSeq
-        .flatMap(rawByEnc.get).sorted
-      if (touched.nonEmpty) {
-        // initial-DEFAULT columns surface per file epoch, exactly as
-        // on the plain read path (readFilesMapped) — the touched
-        // files predate any in-range add, so a bare positional read
-        // would emit NULL images where every live read shows the
-        // DEFAULT
-        val rowsPos = {
-          val defaulted = defaultedCols(to)
-          if (defaulted.isEmpty)
-            readFilesPos(to, touched)
-          else touched.groupBy(f => preAddOf(to, defaulted, f)).toSeq
-            .sortBy(_._2.headOption.getOrElse(""))
-            .map { case (pre, fs) => applyDefaults(to, defaulted,
-              readFilesPos(to, fs), pre) }
-            .reduceOption(_.unionByName(_))
-            .getOrElse(readFilesPos(to, Nil))
-        }
-        // the cross-direction rollback law: a positionally-named row
-        // is a DELETE only if it was LIVE at `from` (a rollback can
-        // flip a row's death from predicate to tombstone inside one
-        // range — the row was never alive to delete), and a restored
-        // row an INSERT only if it is LIVE at `to` (not re-killed by
-        // a predicate the range added). The filter applies the
-        // endpoint's SCOPED predicates per file group on the
-        // position-carrying frame.
-        def at(t: DataFrame, liveAt: Snapshot): DataFrame = {
-          val named = rowsPos.join(t,
-              rowsPos(GraftTable.PosFileCol) === t("_file") &&
-                rowsPos(GraftTable.PosIdxCol) === t("_pos"), "left_semi")
-          val alive =
-            if (liveAt.dels.isEmpty) named
-            else {
-              val cond = touched
-                .groupBy(f => liveAt.dels.filter(_.seq >
-                  liveAt.fileSeq.getOrElse(f, 0L)))
-                .toSeq.sortBy(_._2.headOption.getOrElse(""))
-                .map { case (ps, fs) =>
-                  val member = col(GraftTable.PosFileCol)
-                    .isin(fs.map(metaPath): _*)
-                  if (ps.isEmpty) member
-                  else member && ps.map(p => not(predCond(p))).reduce(_ && _)
-                }
-                .reduce(_ || _)
-              named.filter(cond)
+    positionalDiff(from, to).foreach { pd =>
+      // initial-DEFAULT columns surface per file epoch, exactly as on
+      // the plain read path — the touched files predate any in-range
+      // add, so a bare positional read would emit NULL images where
+      // every live read shows the DEFAULT
+      val rowsPos = withDefaults(to, pd.touched, readFilesPos(to, _))
+      // the cross-direction rollback law: a positionally-named row
+      // is a DELETE only if it was LIVE at `from` (a rollback can
+      // flip a row's death from predicate to tombstone inside one
+      // range — the row was never alive to delete), and a restored
+      // row an INSERT only if it is LIVE at `to` (not re-killed by
+      // a predicate the range added). The filter applies the
+      // endpoint's SCOPED predicates per file group on the
+      // position-carrying frame.
+      def at(t: DataFrame, liveAt: Snapshot): DataFrame = {
+        val named = rowsPos.join(t,
+            rowsPos(GraftTable.PosFileCol) === t("_file") &&
+              rowsPos(GraftTable.PosIdxCol) === t("_pos"), "left_semi")
+        val alive =
+          if (liveAt.dels.isEmpty) named
+          else named.filter(scopeGroups(liveAt, pd.touched, liveAt.dels)
+            .map { case (ps, fs) =>
+              val member = col(GraftTable.PosFileCol)
+                .isin(fs.map(metaPath): _*)
+              if (ps.isEmpty) member
+              else member && ps.map(p => not(predCond(p))).reduce(_ && _)
             }
-          alive.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
-        }
-        tDel = Some(at(newT, from))
-        tIns = Some(at(goneT, to))
-        del = del.unionByName(tDel.get)
-        ins = ins.unionByName(tIns.get)
-        // per-side structural emptiness: a pure tombstone-ADD range
-        // (the common MoR DELETE commit) can only contribute deletes —
-        // goneT is the anti-join of an EMPTY tombstone set (plus an
-        // empty DV diff), so the insert side stays trivial and the
-        // delete-only fast path below still applies (symmetrically
-        // for a pure tombstone-DROP/rollback range)
-        if (newTFiles.nonEmpty || dvMovedFiles.nonEmpty) delTrivial = false
-        if (goneTFiles.nonEmpty || dvMovedFiles.nonEmpty) insTrivial = false
+            .reduce(_ || _))
+        alive.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
       }
+      tDel = Some(at(pd.newPos, from))
+      tIns = Some(at(pd.gonePos, to))
+      del = del.unionByName(tDel.get)
+      ins = ins.unionByName(tIns.get)
+      // per-side structural emptiness: a pure tombstone-ADD range (the
+      // common MoR DELETE commit) can only contribute deletes, so the
+      // insert side stays trivial and the delete-only fast path below
+      // still applies (symmetrically for a pure rollback range)
+      if (pd.deletes) delTrivial = false
+      if (pd.restores) insTrivial = false
     }
     // equality-predicate diff on CARRIED files: rows live at `from`
     // that a predicate added in-range scopes and matches are the
     // range's deletes; rows live at `to` that a removed predicate
-    // used to kill are its restores. Scan cost is bounded by the
-    // stats-pruned candidate files per predicate, never the carried
-    // set — the same economics as the equality-delete read path.
+    // used to kill are its restores. Predicates evaluate over the
+    // owner's live view ALIGNED to the `to` schema (an in-range ADD
+    // COLUMN backfills before the predicate sees the row — exactly
+    // what a to-reader surfaces, so `note IS NULL` kills pre-add rows
+    // here as it does there).
     val newPreds = to.dels.filterNot(from.dels.toSet)
     val gonePreds = from.dels.filterNot(to.dels.toSet)
-    if ((newPreds.nonEmpty || gonePreds.nonEmpty) &&
-        (toSet intersect fromSet).nonEmpty) {
-      val carried = (toSet intersect fromSet).toSeq.sorted
-      // predicates evaluate over the owner's live view ALIGNED to the
-      // `to` schema (an in-range ADD COLUMN backfills before the
-      // predicate sees the row — exactly what a to-reader surfaces,
-      // so `note IS NULL` kills pre-add rows here as it does there)
-      def matching(owner: Snapshot,
-          preds: Seq[DeletePred]): Option[DataFrame] =
-        carried
-          .map(f => f -> preds.filter(_.seq >
-            owner.fileSeq.getOrElse(f, 0L)))
-          .filter(_._2.nonEmpty)
-          .groupBy(_._2).toSeq
-          .sortBy(_._2.head._1)
-          .flatMap { case (ps, scopedPairs) =>
-            val scoped = owner.copy(files = scopedPairs.map(_._1))
-            val cand = ps.flatMap(p => pruneByStats(scoped, p.pred))
-              .distinct.sorted
-            if (cand.isEmpty) None
-            else Some(GraftTable.alignEvolved(
-              morRead(owner, cand), owner.id, to, to.schema).get
-              .filter(ps.map(predCond).reduce(_ || _)))
-          }
-          .reduceOption(_.unionByName(_))
-      // per row VALUE, the predicate kills every copy it matches —
-      // tombstoned-in-range copies included — so the true delete
-      // multiplicity is max(predicate-matched, tombstoned), i.e. the
-      // tombstone contribution plus the predicate EXCESS over it
-      // (multiset EXCEPT ALL); same law on the restore side.
-      // tDel/tIns appear twice in the final plan (the union above and
-      // this EXCEPT ALL's right side) — a CONSCIOUS cost, paid only
-      // on genuinely-mixed ranges: the frame is a positional read of
-      // the range's DML-touched files, there is no sound lifecycle
-      // hook to cache it inside a lazily-consumed DataFrame, and
-      // correctness of the dedupe is worth two bounded scans
-      // EXCEPT ALL is positional: the tombstone side reads partition
-      // columns last, so it is realigned to the matched side by name
-      // (quoted: a top-level name may contain a dot)
-      def minus(a: DataFrame, t: Option[DataFrame]): DataFrame =
-        t.fold(a)(t => a.exceptAll(t.select(a.columns.toSeq.map(c =>
-          col(s"`${c.replace("`", "``")}`")): _*)))
-      matching(from, newPreds).foreach { d =>
-        del = del.unionByName(minus(d, tDel))
-        delTrivial = false
-      }
-      matching(to, gonePreds).foreach { i =>
-        ins = ins.unionByName(minus(i, tIns))
-        insTrivial = false
-      }
+    lazy val carried = (toSet intersect fromSet).toSeq.sorted
+    def matched(owner: Snapshot, preds: Seq[DeletePred]) =
+      predMatched(owner, carried, preds, c => GraftTable.alignEvolved(
+        morRead(owner, c), owner.id, to, to.schema).get, predCond)
+    // per row VALUE, the predicate kills every copy it matches —
+    // positionally-deleted-in-range copies included — so the true
+    // delete multiplicity is max(predicate-matched, positional), i.e.
+    // the positional contribution plus the predicate EXCESS over it
+    // (multiset EXCEPT ALL); same law on the restore side. tDel/tIns
+    // appear twice in the final plan (the union above and this EXCEPT
+    // ALL's right side) — a CONSCIOUS cost, paid only on
+    // genuinely-mixed ranges: the frame is a positional read of the
+    // range's DML-touched files, there is no sound lifecycle hook to
+    // cache it inside a lazily-consumed DataFrame, and correctness of
+    // the dedupe is worth two bounded scans. EXCEPT ALL is positional:
+    // the positional side reads partition columns last, so it is
+    // realigned to the matched side by name (quoted: a top-level name
+    // may contain a dot)
+    def minus(a: DataFrame, t: Option[DataFrame]): DataFrame =
+      t.fold(a)(t => a.exceptAll(t.select(a.columns.toSeq.map(c =>
+        col(s"`${c.replace("`", "``")}`")): _*)))
+    matched(from, newPreds).foreach { d =>
+      del = del.unionByName(minus(d, tDel))
+      delTrivial = false
+    }
+    matched(to, gonePreds).foreach { i =>
+      ins = ins.unionByName(minus(i, tIns))
+      insTrivial = false
     }
     // FAST PATH (round 19, guide §2.4): the net-tag/group/expand tail
     // below exists to cancel row values appearing on BOTH legs (an
@@ -3451,52 +3318,17 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val derived = snap.dels.foldLeft(derived0)((df, p) =>
       df.filter(not(coalesce(expr(p.pred), lit(false)) &&
         col("_g_fseq") < lit(p.seq))))
-    // DELETION VECTORS compose with lineage (Iceberg v3 ships them
-    // together, and the math says why: a DV delete touches no data
-    // file, so every surviving row's (file, idx) — and therefore its
-    // id and last-update — is untouched). Same file-keyed probe as
-    // morReadPos, riding the (file, idx) this read already carries.
-    val live =
-      if (snap.dvs.isEmpty) derived
-      else {
-        import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
-        val dv = currentDvRelation(snap)
-          .select(col("_file").as(GraftTable.DvFileCol),
-            col("_bitmap").as(GraftTable.DvBitmapCol))
-        val hinted =
-          if (dvHeapBytes(snap).exists(_ <= GraftTable.PosDelBroadcastBytes))
-            broadcast(dv)
-          else dv
-        derived.join(hinted,
-            col("_g_file") === col(GraftTable.DvFileCol), "left")
-          .filter(not(coalesce(
-            columnOf(graft.functions.NativeExprs.BitsetGet(
-              expressionOf(col(GraftTable.DvBitmapCol)),
-              expressionOf(col("_g_idx")))),
-            lit(false))))
-          .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
-      }
-    // POSITION TOMBSTONES compose with lineage by the same argument
-    // as DVs (Iceberg v3 pairs lineage with BOTH delete shapes): a
-    // tombstone touches no data file, so every survivor's (file, idx)
-    // — and therefore its id and last-update — is untouched. Same
-    // (file, pos) anti-join as morReadPos, riding the (_g_file,
-    // _g_idx) this read already carries, under the same broadcast
-    // byte gate.
-    val live2 =
-      if (snap.posDels.isEmpty) live
-      else live.join(tombstones(snap),
-        col("_g_file") === col("_file") &&
-          col("_g_idx") === col("_pos"), "left_anti")
-    if (keepMeta) live2.drop("_g_first", "_g_fseq")
-    else live2.drop("_g_file", "_g_idx", "_g_first", "_g_fseq")
+    // DELETION VECTORS and POSITION TOMBSTONES compose with lineage
+    // (Iceberg v3 pairs lineage with both delete shapes): neither
+    // touches a data file, so every surviving row's (file, idx) — and
+    // therefore its id and last-update — is untouched. The same probe
+    // and anti-join as morReadPos, riding the (file, idx) this read
+    // already carries.
+    val live = dropDeleted(snap, derived, "_g_file", "_g_idx")
+    if (keepMeta) live.drop("_g_first", "_g_fseq")
+    else live.drop("_g_file", "_g_idx", "_g_first", "_g_fseq")
   }
 
-  /** The copy-on-write rewrite source: the plain mapped read, or —
-    * on a row-lineage table — the read WITH concrete lineage columns
-    * so the rewritten files materialize every carried row's id and
-    * last-update (Iceberg v3: "writers must preserve row ids when
-    * rewriting"). */
   /** Whether a COW rewrite of `files` can (and must) carry lineage:
     * lineage is on AND every file already has a first-row-id range.
     * The first post-enable commit fails the second clause — no file
@@ -3514,6 +3346,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       files: Seq[String]): Boolean =
     lineageEnabled && files.forall(snap.firstRowIds.contains)
 
+  /** The copy-on-write rewrite source: the plain mapped read, or —
+    * on a row-lineage table — the read WITH concrete lineage columns
+    * so the rewritten files materialize every carried row's id and
+    * last-update (Iceberg v3: "writers must preserve row ids when
+    * rewriting"). */
   private def cowSource(snap: Snapshot, files: Seq[String]): DataFrame =
     if (cowLineageServable(snap, files)) lineageSource(snap, files)
     else readFilesMapped(snap, files)
@@ -3601,19 +3438,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   private def partitionFiles(snap: Snapshot, affected: Set[String]) =
     snap.files.partition(f => !affected(normalize(f)))
 
-  /** DELETE FROM t WHERE pred — rewrites only files containing hits. */
-  /** Merge-on-read DELETE (Iceberg's equality-delete path): commits a
-    * delete predicate scoped to the current files' sequences — O(1),
-    * no data scan, no rewrite. Reads anti-filter scoped files until
-    * [[compact]] materializes. At 100 TB this is the difference
-    * between a metadata commit and rewriting terabytes for a
-    * predicate touching most files. Rows appended AFTER the delete
-    * are out of scope even when they match (sequence rule). */
-  /** Row-lineage tables take copy-on-write DML plus the VECTOR
-    * merge-on-read shape (DV DELETE/UPDATE/MERGE preserve ids); the
-    * TOMBSTONE shapes would need id-preserving composition on every
-    * read path — refuse at WRITE time so no lineage read ever faces
-    * pending tombstones. */
+  /** Row-lineage tables take copy-on-write DML plus the position- and
+    * vector-style merge-on-read shapes (tombstones and deletion vectors
+    * touch no data file, so survivors keep their ids); an EQUALITY
+    * predicate has no row identity to preserve — refuse it at WRITE
+    * time so no lineage read ever faces one committed under lineage. */
   private def requireNoLineage(what: String): Unit =
     if (lineageEnabled) throw new UnsupportedOperationException(
       s"$what on a row-lineage table is not supported: " +
@@ -3621,6 +3450,13 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         "vector-style merge-on-read (equality predicates have no row " +
         "identity to preserve)")
 
+  /** Merge-on-read DELETE (Iceberg's equality-delete path): commits a
+    * delete predicate scoped to the current files' sequences — O(1),
+    * no data scan, no rewrite. Reads anti-filter scoped files until
+    * [[compact]] materializes. At 100 TB this is the difference
+    * between a metadata commit and rewriting terabytes for a
+    * predicate touching most files. Rows appended AFTER the delete
+    * are out of scope even when they match (sequence rule). */
   def deleteMoR(predSql: String): Long = {
     requireNoLineage("merge-on-read DELETE")
     val snap = currentSnapshot
@@ -3823,7 +3659,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * directly joinable against [[readFilesPos]]'s metadata column.
     * One row per vectored file, each ≤ rows/8 bytes: broadcast-scale
     * under the same gate as the tombstone anti-join. */
-  private def currentDvRelation(snap: Snapshot): DataFrame = {
+  private[lakehouse] def currentDvRelation(snap: Snapshot): DataFrame = {
     val blobs = snap.dvs.values.toSeq.distinct.sorted
     import spark.implicits._
     val ptrs = snap.dvs.toSeq.map { case (f, b) =>
@@ -3932,6 +3768,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       s"$what: table has pending merge-on-read deletes; run compact() " +
         "to materialize them before copy-on-write row DML")
 
+  /** DELETE FROM t WHERE pred — rewrites only files containing hits. */
   def delete(predSql: String): Long = deleteAt(currentSnapshot, predSql)
 
   /** [[delete]] computed against an explicit base snapshot — the
@@ -5174,7 +5011,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val liveDf = broadcast(
       spark.createDataset(live.toSeq.map(metaPath).sorted)(
         org.apache.spark.sql.Encoders.STRING).toDF("_live_file"))
-    val kept = manifestScan(GraftTable.TombSchema, snap.posDels, sizes)
+    val kept = tombScan(snap.posDels, Seq(snap))
       .select(col("_file"), col("_pos"))
       .join(liveDf, col("_file") === col("_live_file"), "left_semi")
       .repartition(parts, col("_file"))
@@ -6416,7 +6253,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   /** Iceberg's `table.position_deletes` metadata table: the CONTENT
     * of the current snapshot's pending position-delete artifacts —
     * one row per tombstoned (data file, row position) with the
-    * artifact that carries it. Tombstone parquet reads directly;
+    * artifact that carries it. Tombstones read in one [[tombScan]];
     * deletion-vector bitmaps expand through the same native
     * bitset-positions expression the read path probes. Reads ONLY
     * delete artifacts — never a data file — so the operator's "what
@@ -6435,17 +6272,21 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         StructField("pos", org.apache.spark.sql.types.LongType, true),
         StructField("delete_file", org.apache.spark.sql.types.StringType,
           true))))
+    import spark.implicits._
     val tomb =
       if (snap.posDels.isEmpty) None
-      else Some(snap.posDels.sorted.map { p =>
-        spark.read.schema(GraftTable.TombSchema).parquet(p)
-          .select(col("_file").as("file_path"),
-          col("_pos").as("pos"), lit(p).as("delete_file"))
-      }.reduce(_.unionByName(_)))
+      else {
+        val rawOf = snap.posDels.map(p => (metaPath(p), p))
+          .toDF("_tomb", "delete_file")
+        Some(tombScan(snap.posDels, Seq(snap))
+          .select(col("_file").as("file_path"), col("_pos").as("pos"),
+            col("_metadata.file_path").as("_tomb"))
+          .join(broadcast(rawOf), "_tomb")
+          .select(col("file_path"), col("pos"), col("delete_file")))
+      }
     val dv =
       if (snap.dvs.isEmpty) None
       else {
-        import spark.implicits._
         val blobOf = snap.dvs.toSeq
           .map { case (f, b) => (metaPath(f), b) }
           .toDF("file_path", "delete_file")

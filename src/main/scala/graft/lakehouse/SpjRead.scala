@@ -1006,32 +1006,27 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
     * Driver-side and bounded: eligibility admits tombstone sets only
     * up to [[GraftTable.PosDelBroadcastBytes]] on disk — the same
     * gate the normal read path's broadcast anti-join uses — so the
-    * grouped skip lists are broadcast-scale by construction. Tombstone
-    * `_file` values are recorded in `_metadata.file_path` (URI) form;
-    * manifest paths are raw, so the lookup keys by the URI rendering
-    * of each raw path. */
+    * grouped skip lists are broadcast-scale by construction. Delete
+    * artifacts read through the table's own readers
+    * ([[GraftTable.tombScan]], and [[GraftTable.currentDvRelation]],
+    * which keeps only each file's CURRENT bitmap). Their `_file`
+    * values are in `_metadata.file_path` (URI) form; manifest paths
+    * are raw, so the lookup keys by the URI rendering of each raw
+    * path. */
   private lazy val tombsByFile: Map[String, Array[Long]] = {
     import org.apache.spark.sql.functions.col
     val tomb: Map[String, Array[Long]] =
       if (snap.posDels.isEmpty) Map.empty
-      else spark.read.parquet(snap.posDels: _*)
+      else t.tombScan(snap.posDels, Seq(snap))
         .select(col("_file"), col("_pos")).collect()
         .groupBy(_.getString(0))
         .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
     if (snap.dvs.isEmpty) tomb
     else {
       // deletion vectors expand into the same ascending skip lists
-      // (eligibility bounds the expansion); pointer-currency keeps
-      // only each file's CURRENT bitmap — an old blob legitimately
-      // holds stale rows for files whose pointer moved
-      val ptr = snap.dvs.map { case (f, b) =>
-        (GraftTable.metaPath(f), GraftTable.metaPath(b)) }.toSet
-      val dv = spark.read
-        .parquet(snap.dvs.values.toSeq.distinct.sorted: _*)
-        .select(col("_file"), col("_bitmap"),
-          col("_metadata.file_path"))
-        .collect()
-        .filter(r => ptr((r.getString(0), r.getString(2))))
+      // (eligibility bounds the expansion)
+      val dv = t.currentDvRelation(snap)
+        .select(col("_file"), col("_bitmap")).collect()
         .map(r => r.getString(0) ->
           graft.functions.NativeKernels.bitsetPositions(
             r.getAs[Array[Byte]](1)))

@@ -10,28 +10,74 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lakehouse.{GraftTable, LakeRegistry}
 
 /** Model-based checks of merge-on-read DML and compaction: random
-  * sequences of INSERT, MERGE, UPDATE, DELETE and OPTIMIZE run as SQL
-  * against a merge-on-read table (one per delete style) and a
-  * copy-on-write twin, and every state is compared with an in-memory
-  * multiset model. Seeds are fixed, so a run is reproducible; a failing
-  * sequence shrinks to a short counterexample. */
+  * sequences of INSERT, MERGE, UPDATE, DELETE, OPTIMIZE and OPTIMIZE
+  * REWRITE DELETES run as SQL against a merge-on-read table (one per
+  * delete style) and a copy-on-write twin, and every state is compared
+  * with an in-memory multiset model: the live read, the `table_changes`
+  * feed of each step and of the whole run, and `VERSION AS OF` every
+  * snapshot the run committed. With row lineage on, the lineage read
+  * and `table_changes_lineage` are checked too. Seeds are fixed, so a
+  * run is reproducible; a failing sequence shrinks to a short
+  * counterexample. */
 class LakeModelSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
   import LakeModelSpec._
 
-  /** A table named `name` holding `rows`, partitioned by `p`. */
+  /** A table named `name` holding `rows`, partitioned by `p`, with
+    * `props` set before the rows commit (so a lineage table assigns
+    * row ids to them). */
   private def create(name: String, rows: Seq[Row], props: Map[String, String]): GraftTable = {
-    val t = GraftTable.create(spark,
-      Files.createTempDirectory("graft_model").toString,
-      rows.toDF("k", "p", "v"), Seq("p"))
+    val df = rows.toDF("k", "p", "v")
+    val t = GraftTable.createEmpty(spark,
+      Files.createTempDirectory("graft_model").toString, df.schema, Seq("p"))
     if (props.nonEmpty) t.setProperties(props)
+    t.append(df)
     LakeRegistry.register(name, t)
     t
   }
 
-  private def rowsOf(name: String): Seq[Row] =
-    spark.sql(s"SELECT k, p, v FROM $name").as[Row].collect().toSeq.sorted
+  private def rowsOf(name: String, asOf: String = ""): Seq[Row] =
+    spark.sql(s"SELECT k, p, v FROM $name$asOf").as[Row].collect().toSeq.sorted
+
+  /** `rows` of a change feed split into (inserted, deleted, updated)
+    * images, each sorted. */
+  private def feed(tvf: String, name: String, from: Long,
+      to: Long): Map[String, Seq[Row]] =
+    spark.sql(s"SELECT k, p, v, _change_type FROM $tvf('$name', $from, $to)")
+      .as[(Option[Long], Option[String], Int, String)].collect().toSeq
+      .groupBy(_._4).map { case (c, rs) => c -> rs.map(r => (r._1, r._2, r._3)).sorted }
+      .withDefaultValue(Nil)
+
+  /** `table_changes(from, to)` nets to the multiset difference of the
+    * model states at the two snapshots. */
+  private def checkFeed(name: String, from: Long, to: Long,
+      before: Seq[Row], after: Seq[Row], where: String): Unit = {
+    val f = feed("table_changes", name, from, to)
+    assert(f("insert") == after.diff(before).sorted,
+      s"$where: $name table_changes($from, $to) inserts")
+    assert(f("delete") == before.diff(after).sorted,
+      s"$where: $name table_changes($from, $to) deletes")
+    assert(f.keySet.subsetOf(Set("insert", "delete")), s"$where: ${f.keySet}")
+  }
+
+  /** The lineage read equals the model with unique `_row_id`s, and the
+    * step's `table_changes_lineage` nets to the model's size delta with
+    * every post-image in the next model. */
+  private def checkLineage(name: String, t: GraftTable, from: Long,
+      before: Seq[Row], after: Seq[Row], where: String): Unit = {
+    val lin = t.readLineage().select("k", "p", "v", "_row_id")
+      .as[(Option[Long], Option[String], Int, Long)].collect().toSeq
+    assert(lin.map(r => (r._1, r._2, r._3)).sorted == after,
+      s"$where: $name readLineage() != model")
+    assert(lin.map(_._4).distinct.size == lin.size,
+      s"$where: $name readLineage() repeats a _row_id")
+    val f = feed("table_changes_lineage", name, from, t.currentSnapshotId)
+    assert(f("insert").size - f("delete").size == after.size - before.size,
+      s"$where: $name table_changes_lineage sizes $f")
+    assert((f("insert") ++ f("update")).diff(after).isEmpty,
+      s"$where: $name table_changes_lineage post-images not in the model: $f")
+  }
 
   private def sql(op: Op, name: String, src: String): String = op match {
     case Insert(_) => s"INSERT INTO $name SELECT k, p, v FROM $src"
@@ -47,19 +93,31 @@ class LakeModelSpec extends AnyFunSuite {
     case Delete(lo, hi) => s"DELETE FROM $name WHERE k >= $lo AND k < $hi"
     case Optimize(files) =>
       s"OPTIMIZE $name${files.fold("")(n => s" FILES $n")}"
+    case RewriteDeletes => s"OPTIMIZE $name REWRITE DELETES"
   }
 
-  /** Run `sc` under `style`; throws on the first divergence. */
-  private def run(style: String, sc: Scenario, n: Int): Unit = {
-    val mor = s"model_${style}_$n"
-    val cow = s"model_${style}_${n}_cow"
+  /** Run `sc` under `style`, with row lineage on the merge-on-read
+    * table when `lineage`; throws on the first divergence. */
+  private def run(style: String, sc: Scenario, n: Int,
+      lineage: Boolean = false): Unit = {
+    val tag = if (lineage) s"${style}_lineage" else style
+    val mor = s"model_${tag}_$n"
+    val cow = s"model_${tag}_${n}_cow"
     val morT = create(mor, sc.initial, Map(
       "write.delete.mode" -> "merge-on-read",
       "write.update.mode" -> "merge-on-read",
       "write.merge.mode" -> "merge-on-read",
-      "write.delete.style" -> style))
+      "write.delete.style" -> style) ++
+      (if (lineage) Map(GraftTable.RowLineageProp -> "true") else Map.empty))
     val cowT = create(cow, sc.initial, Map.empty)
+    val tables = Seq(mor -> morT, cow -> cowT)
+    val first = tables.map(_._2.currentSnapshotId)
     var model = sc.initial.sorted
+    // the model at every snapshot the run committed, per table
+    val states = scala.collection.mutable.Map[(String, Long), Seq[Row]]()
+    def record(): Unit =
+      for ((name, t) <- tables) states((name, t.currentSnapshotId)) = model
+    record()
     try sc.ops.zipWithIndex.foreach { case (op, i) =>
       val src = s"model_src_${style}_${n}_$i"
       val rows = op match {
@@ -71,49 +129,75 @@ class LakeModelSpec extends AnyFunSuite {
       val where = s"step $i ($op) under $style"
       expected(model, op) match {
         case None =>
-          for ((name, t) <- Seq(mor -> morT, cow -> cowT)) {
+          for ((name, t) <- tables) {
             val before = t.currentSnapshotId
             val e = intercept[IllegalArgumentException](spark.sql(sql(op, name, src)))
             assert(e.getMessage.contains("duplicate"), s"$where: ${e.getMessage}")
             assert(t.currentSnapshotId == before, s"$where: a refused MERGE committed")
           }
         case Some(next) =>
+          val prev = tables.map(_._2.currentSnapshot)
           spark.sql(sql(op, mor, src))
           spark.sql(sql(op, cow, src))
-          model = next
-          assert(rowsOf(mor) == model, s"$where: merge-on-read table != model")
-          assert(rowsOf(cow) == model, s"$where: copy-on-write twin != model")
+          assert(rowsOf(mor) == next, s"$where: merge-on-read table != model")
+          assert(rowsOf(cow) == next, s"$where: copy-on-write twin != model")
+          // OPTIMIZE leaves the model unchanged, so its feed must be empty
+          for (((name, t), p) <- tables.zip(prev))
+            checkFeed(name, p.id, t.currentSnapshotId, model, next, where)
+          if (lineage) checkLineage(mor, morT, prev.head.id, model, next, where)
           op match {
             case Optimize(files) =>
               val n = files.getOrElse(1)
-              val values = model.map(_._2).distinct.size
-              for (t <- Seq(morT, cowT))
+              val values = next.map(_._2).distinct.size
+              for ((_, t) <- tables)
                 assert(t.currentSnapshot.files.size <= math.max(n, values),
                   s"$where: ${t.currentSnapshot.files.size} files > max($n, $values)")
+            case RewriteDeletes =>
+              for (((name, t), p) <- tables.zip(prev))
+                assert(t.currentSnapshot.files == p.files,
+                  s"$where: $name REWRITE DELETES changed the data files")
             case _ => ()
           }
+          model = next
+          record()
       }
       spark.catalog.dropTempView(src)
+      for (((name, t), f) <- tables.zip(first))
+        checkFeed(name, f, t.currentSnapshotId, sc.initial.sorted, model,
+          s"whole run under $tag")
+      for (((name, id), rows) <- states)
+        assert(rowsOf(name, s" VERSION AS OF $id") == rows,
+          s"$name VERSION AS OF $id != model under $tag")
     } finally {
       LakeRegistry.unregister(mor)
       LakeRegistry.unregister(cow)
     }
   }
 
+  private def check(style: String, seed: Long, lineage: Boolean): Unit = {
+    var n = 0
+    val prop = Prop.forAll(scenarioGen) { sc =>
+      n += 1
+      run(style, sc, n, lineage)
+      true
+    }
+    val res = Test.check(Test.Parameters.default
+      .withInitialSeed(Seed(seed))
+      .withMinSuccessfulTests(5)
+      .withWorkers(1), prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+  }
+
   for ((style, seed) <- Seq("equality" -> 11L, "position" -> 23L, "vector" -> 37L))
     test(s"random DML and OPTIMIZE sequences agree with the model and a " +
         s"copy-on-write twin ($style deletes)") {
-      var n = 0
-      val prop = Prop.forAll(scenarioGen) { sc =>
-        n += 1
-        run(style, sc, n)
-        true
-      }
-      val res = Test.check(Test.Parameters.default
-        .withInitialSeed(Seed(seed))
-        .withMinSuccessfulTests(5)
-        .withWorkers(1), prop)
-      assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+      check(style, seed, lineage = false)
+    }
+
+  for ((style, seed) <- Seq("position" -> 41L, "vector" -> 43L))
+    test(s"row lineage under random DML and OPTIMIZE: unique row ids and a " +
+        s"lineage feed that agrees with the model ($style deletes)") {
+      check(style, seed, lineage = true)
     }
 }
 
@@ -130,6 +214,7 @@ object LakeModelSpec {
   final case class Update(lo: Long, hi: Long, delta: Int) extends Op
   final case class Delete(lo: Long, hi: Long) extends Op
   final case class Optimize(files: Option[Int]) extends Op
+  case object RewriteDeletes extends Op
 
   final case class Scenario(initial: Seq[Row], ops: Seq[Op])
 
@@ -143,7 +228,7 @@ object LakeModelSpec {
     }.sorted)
     case Delete(lo, hi) =>
       Some(rows.filterNot { case (k, _, _) => k.exists(x => x >= lo && x < hi) }.sorted)
-    case Optimize(_) => Some(rows)
+    case Optimize(_) | RewriteDeletes => Some(rows)
     case m: Merge =>
       def matches(k: Option[Long]) = m.source.filter(s => k.isDefined && s._1 == k)
       val dup = !m.insertOnly && rows.exists(r => matches(r._1).size > 1)
@@ -197,7 +282,8 @@ object LakeModelSpec {
     } yield Merge(src, insertOnly, deleteLow, updateHigh, insertEven)),
     2 -> (for ((lo, hi) <- rangeGen; d <- Gen.choose(1, 9)) yield Update(lo, hi, d)),
     2 -> rangeGen.map { case (lo, hi) => Delete(lo, hi) },
-    1 -> Gen.oneOf(None, Some(1), Some(2), Some(5)).map(Optimize(_)))
+    1 -> Gen.oneOf(None, Some(1), Some(2), Some(5)).map(Optimize(_)),
+    1 -> Gen.const(RewriteDeletes))
 
   /** A failing scenario shrinks by dropping operations. */
   implicit val shrinkScenario: Shrink[Scenario] = Shrink.withLazyList { sc =>
