@@ -271,7 +271,6 @@ object Ann {
     * zero-shuffle literal projection ([[assignCellCol]]) — built
     * once, scanning the full corpus with no join. */
   private def trainKmeans(c: DataFrame, k: Int, iters: Int): Seq[Centroid] = {
-    import c.sparkSession.implicits._
     def fromRows(rows: Array[org.apache.spark.sql.Row]): Seq[Centroid] =
       rows.map(r => mkCentroid(r.getInt(0), r.getSeq[Double](1).toArray))
         .toSeq.sortBy(_.cell)
@@ -289,8 +288,9 @@ object Ann {
     // over the cell-ascending array with Spark's NaN-greatest
     // ordering — exactly max(struct(a_cos, −cell)).
     for (_ <- 1 to iters) {
-      val centRow = Seq(cent.map(ct =>
-        CentVal(ct.cell, ct.v.toSeq, ct.nrm)).toSeq).toDF("cents")
+      val centRow = c.sparkSession.range(1).select(array(cent.map(ct =>
+        struct(lit(ct.cell).as("cell"), lit(ct.v).as("c_v"),
+          lit(ct.nrm).as("c_nrm"))): _*).as("cents"))
       val assigned = c.crossJoin(broadcast(centRow))
         .select(argmaxCell(col("cents"), ct => cosine(col("v"),
           ct.getField("c_v"), col("nrm"), ct.getField("c_nrm")))
@@ -300,10 +300,6 @@ object Ann {
     }
     cent
   }
-
-  /** One trained centroid as a VALUE for the single-row broadcast
-    * relation in [[trainKmeans]]. */
-  private case class CentVal(cell: Int, c_v: Seq[Double], c_nrm: Double)
 
   /** IVF with a trained coarse quantizer - the honest version of
     * [[ivf]]. Search: assignment and probe-selection are projections

@@ -55,6 +55,25 @@ object GrantSql {
   private val KnownPerms =
     Set("SELECT", "DESCRIBE", "INSERT", "DELETE", "UPDATE", "ALL")
 
+  /** A grant's SHOW GRANTS cells after the resource columns:
+    * permissions, columns, row filter, grantable, grantor. The
+    * permissions are the honest capability set: SELECT and/or WRITE
+    * as held; DESCRIBE only for a grant carrying neither (every grant
+    * exposes schema, but inventing "DESCRIBE" next to WRITE would make
+    * a write-only grant indistinguishable from an explicit
+    * DESCRIBE+INSERT one). */
+  private[fgac] def grantCells(pol: TablePolicy): Seq[Any] = Seq(
+    Seq(
+      if (pol.selectable) Some("SELECT") else None,
+      if (pol.write) Some("WRITE") else None).flatten match {
+      case Nil => "DESCRIBE"
+      case ps  => ps.mkString(", ")
+    },
+    pol.allowedColumns.map(_.mkString(", ")).getOrElse("*"),
+    pol.rowFilter.getOrElse(""),
+    pol.grantable,
+    pol.grantor.getOrElse(""))
+
   def parse(sqlText: String): Option[LogicalPlan] = sqlText match {
     // NAMESPACE forms first — the table patterns would otherwise have
     // to prove they cannot also match (they cannot, but order makes
@@ -204,19 +223,8 @@ case class GraftShowGrantsForCommand(principal: String)
     val p = SecureCatalog.principal(principal).getOrElse(
       throw new IllegalArgumentException(
         s"unknown principal '$principal'"))
-    def permsOf(pol: TablePolicy): String =
-      Seq(
-        if (pol.selectable) Some("SELECT") else None,
-        if (pol.write) Some("WRITE") else None).flatten match {
-        case Nil => "DESCRIBE"
-        case ps  => ps.mkString(", ")
-      }
     def row(res: String, kind: String, pol: TablePolicy): Row =
-      Row(res, kind, permsOf(pol),
-        pol.allowedColumns.map(_.mkString(", ")).getOrElse("*"),
-        pol.rowFilter.getOrElse(""),
-        pol.grantable,
-        pol.grantor.getOrElse(""))
+      Row.fromSeq(res +: kind +: GrantSql.grantCells(pol))
     (p.grants.toSeq.sortBy(_._1).map { case (t, pol) =>
       row(t, "table", pol) } ++
       p.tagGrants.toSeq.sortBy(_._1).map { case (t, pol) =>
@@ -256,23 +264,6 @@ case class GraftShowGrantsCommand(table: String,
       .filter { case (p, pol) =>
         who.isEmpty || p == who || pol.grantor.contains(who) }
       .sortBy(_._1)
-      .map { case (p, pol) =>
-        // the honest capability set: SELECT and/or WRITE as held;
-        // DESCRIBE only for a grant carrying neither (every grant
-        // exposes schema, but inventing "DESCRIBE" next to WRITE
-        // would make a write-only grant indistinguishable from an
-        // explicit DESCRIBE+INSERT one)
-        val perms = Seq(
-          if (pol.selectable) Some("SELECT") else None,
-          if (pol.write) Some("WRITE") else None).flatten match {
-          case Nil => "DESCRIBE"
-          case ps  => ps.mkString(", ")
-        }
-        Row(p, perms,
-          pol.allowedColumns.map(_.mkString(", ")).getOrElse("*"),
-          pol.rowFilter.getOrElse(""),
-          pol.grantable,
-          pol.grantor.getOrElse(""))
-      }
+      .map { case (p, pol) => Row.fromSeq(p +: GrantSql.grantCells(pol)) }
   }
 }

@@ -136,16 +136,6 @@ object AuditLog {
   private val flushedTo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Write-behind persistence: append every decision since the last
-    * flush INTO a governed lake table — the production form the
-    * in-memory queue stands in for. The trail then has the lake's own
-    * guarantees (snapshots, time travel, CDC, streaming reads via the
-    * graft-lake source), and GOVERNING the audit table closes the
-    * loop: the auditor's read of the trail is itself audited and
-    * lands in the next flush. Each flush is one append commit of the
-    * delta above the per-table high-water mark (idempotent to re-run,
-    * O(new decisions)); production would run it on a timer or commit
-    * hook and partition by day. */
   /** The audit-event row shape — ONE authority shared by
     * [[flushTo]] and the trail table's DDL (a field added to
     * [[Event]] must land here once, not be hand-synced across an
@@ -161,6 +151,16 @@ object AuditLog {
       StructField("detail", StringType, nullable = false)))
   }
 
+  /** Write-behind persistence: append every decision since the last
+    * flush INTO a governed lake table — the production form the
+    * in-memory queue stands in for. The trail then has the lake's own
+    * guarantees (snapshots, time travel, CDC, streaming reads via the
+    * graft-lake source), and GOVERNING the audit table closes the
+    * loop: the auditor's read of the trail is itself audited and
+    * lands in the next flush. Each flush is one append commit of the
+    * delta above the per-table high-water mark (idempotent to re-run,
+    * O(new decisions)); production would run it on a timer or commit
+    * hook and partition by day. */
   def flushTo(spark: org.apache.spark.sql.SparkSession,
       table: graft.lakehouse.GraftTable): Long = {
     val from: Long =
@@ -292,21 +292,21 @@ object SecureCatalog {
   def resolveLink(name: String): String =
     Option(links.get(name.toLowerCase)).getOrElse(name.toLowerCase)
 
-  /** Write-path authorization: DML on a governed table requires a
-    * grant with `write = true`. Ungoverned tables and ungoverned
-    * (admin) sessions pass; everything else is deny-by-default —
-    * without this, any principal that could *name* a table could
-    * mutate it regardless of its read grant. */
   /** The policy `p` holds for the queried `relName` / its resolved
     * `target`, most-specific first: direct table grant > tag grant >
     * namespace grant (the LF precedence). The policy's table field is
     * rebound to the concrete target. */
   private def effectivePolicy(p: Principal, relName: String,
       target: String): Option[TablePolicy] =
+    tablePolicy(p, target)
+      .orElse(nsPolicyFor(p, relName, target).map(_.copy(table = target)))
+
+  /** The direct table grant `p` holds on `target`, else its first tag
+    * grant (tags sorted), rebound to `target`. */
+  private def tablePolicy(p: Principal, target: String): Option[TablePolicy] =
     p.grants.get(target)
       .orElse(tagsOf(target).toSeq.sorted.flatMap(p.tagGrants.get)
         .headOption.map(_.copy(table = target)))
-      .orElse(nsPolicyFor(p, relName, target).map(_.copy(table = target)))
 
   /** The longest-prefix namespace grant covering either the QUERIED
     * name (a resource link lives in the consumer's database — a grant
@@ -376,6 +376,11 @@ object SecureCatalog {
     }
   }
 
+  /** Write-path authorization: DML on a governed table requires a
+    * grant with `write = true`. Ungoverned tables and ungoverned
+    * (admin) sessions pass; everything else is deny-by-default —
+    * without this, any principal that could *name* a table could
+    * mutate it regardless of its read grant. */
   def authorizeWrite(principalName: String, relName: String, op: String): Unit = {
     if (principalName.isEmpty) return // admin / ungoverned session
     val target = resolveLink(relName)
@@ -695,13 +700,11 @@ object SecureCatalog {
     val target = resolveLink(relName)
     require(isGoverned(target), s"'$target' is not a governed table")
     // the delegating grant may come from a TAG grant (the LF-Tags
-    // model this file documents) — the same fallback authorize uses
-    val parent = g.grants.get(target)
-      .orElse(tagsOf(target).toSeq.sorted.flatMap(g.tagGrants.get)
-        .headOption.map(_.copy(table = target)))
-      .getOrElse(
-        throw new AccessDeniedException(
-          s"principal '$grantor' has no grant on '$target' to delegate"))
+    // model this file documents) — the same fallback authorize uses;
+    // a namespace grant is not delegable here
+    val parent = tablePolicy(g, target).getOrElse(
+      throw new AccessDeniedException(
+        s"principal '$grantor' has no grant on '$target' to delegate"))
     // canonicalize names to the governed column case ONCE: the policy
     // is applied by exact-case Map lookups at scan time, so a
     // case-variant column or mask key in the request would pass the

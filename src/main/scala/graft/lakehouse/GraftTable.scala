@@ -32,16 +32,22 @@ final case class DeletePred(seq: Long, pred: String)
 private[lakehouse] final case class SnapHeader(parent: Long, ts: Long,
     op: String, txn: Option[(String, Long)] = None)
 
-/** [[GraftTable.positionalDiff]]'s result: (`_file`, `_pos`) frames of
-  * the positions a changelog range deletes (`newPos`) and un-deletes
-  * (`gonePos`) on carried data files, the carried files they name
-  * (`touched`, raw manifest paths), and whether each side can hold
-  * rows at all (`deletes`: a tombstone file was added or a vector
-  * moved; `restores`: a tombstone file was dropped or a vector
-  * moved). */
-private[lakehouse] final case class PositionalDiff(newPos: DataFrame,
-    gonePos: DataFrame, touched: Seq[String], deletes: Boolean,
-    restores: Boolean)
+/** [[GraftTable.positionalDiff]]'s result: the carried data files a
+  * changelog range's positional deletes name (`touched`, raw manifest
+  * paths), and whether the range can delete or un-delete rows of them
+  * at all (`deletes`: a tombstone file was added or a vector moved;
+  * `restores`: a tombstone file was dropped or a vector moved). */
+private[lakehouse] final case class PositionalDiff(touched: Seq[String],
+    deletes: Boolean, restores: Boolean)
+
+/** [[GraftTable.carriedDiff]]'s result: the rows of carried data files
+  * that are live at exactly one endpoint of a changelog range, with
+  * [[GraftTable.LiveToCol]] true on the new images (live at the end
+  * only) and false on the old images (live at the start only), and
+  * whether the range can hold old (`deletes`) or new (`inserts`)
+  * images at all. */
+private[lakehouse] final case class CarriedDiff(rows: DataFrame,
+    deletes: Boolean, inserts: Boolean)
 
 /** A column rename at commit `seq`: data files with a LOWER
   * add-sequence store the column under `from` and read through an
@@ -1421,7 +1427,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       "position deletes under renamed columns: compact() first")
     dropDeleted(snap,
       withoutPredDeleted(snap, files, withDefaults(snap, _, readFilesPos(snap, _))),
-      GraftTable.PosFileCol, GraftTable.PosIdxCol)
+      GraftTable.PosFileCol, GraftTable.PosIdxCol, live = None)
   }
 
   /** `files` grouped by the equality-delete predicates among `preds`
@@ -1448,14 +1454,20 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       .reduceOption(_.unionByName(_))
       .getOrElse(read(Nil))
 
-  /** Drop the rows of `df` that `snap`'s positional deletes name. `df`
-    * carries each row's data file (`_metadata.file_path` form) in
-    * `fileCol` and its row index in `idxCol`. Deletion vectors apply
+  /** Apply `snap`'s positional deletes to `df` — the one statement of
+    * what a deletion vector or tombstone kills. `df` carries each row's
+    * data file (`_metadata.file_path` form) in `fileCol` and its row
+    * index in `idxCol`. Readers pass `live = None` and the killed rows
+    * are dropped; [[carriedDiff]] names a boolean column, keeps every
+    * row and clears the column on the killed ones, which marks one
+    * read at both endpoints of a range. Deletion vectors apply
     * first: a LEFT join keyed by FILE ONLY (one row per vectored file —
     * metadata-scale, vs one row per deleted row for tombstones) plus an
     * O(1) codegen'd bit probe per row; a row from an un-vectored file
     * sees a NULL bitmap and survives through the coalesce. Tombstones
-    * then apply as one anti-join on (file, row position) — they name
+    * then apply as one anti-join on (file, row position), or a left
+    * join when marking (a snapshot's tombstones name a position at
+    * most once: DML tombstones only live rows) — they name
     * exact rows of exact files, so files appended after the delete
     * need no scoping. Both sides broadcast only while demonstrably
     * small: a table that has absorbed heavy MoR DML can hold billions
@@ -1465,7 +1477,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * larger — the 32 MB gate leaves that margin); beyond it the join
     * falls back to a plain shuffle join on the same keys. */
   private def dropDeleted(snap: Snapshot, df: DataFrame, fileCol: String,
-      idxCol: String): DataFrame = {
+      idxCol: String, live: Option[String]): DataFrame = {
+    def kill(d: DataFrame, dead: Column): DataFrame = live.fold(
+      d.filter(not(dead)))(c => d.withColumn(c, col(c) && not(dead)))
     val withDv = if (snap.dvs.isEmpty) df else {
       import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
       // internal names under the reserved _gdv prefix: a user column
@@ -1477,12 +1491,12 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         if (dvHeapBytes(snap).exists(_ <= GraftTable.PosDelBroadcastBytes))
           broadcast(dv)
         else dv
-      df.join(hinted, col(fileCol) === col(GraftTable.DvFileCol), "left")
-        .filter(not(coalesce(
+      kill(df.join(hinted, col(fileCol) === col(GraftTable.DvFileCol), "left"),
+        coalesce(
           columnOf(graft.functions.NativeExprs.BitsetGet(
             expressionOf(col(GraftTable.DvBitmapCol)),
             expressionOf(col(idxCol)))),
-          lit(false))))
+          lit(false)))
         .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
     }
     if (snap.posDels.isEmpty) withDv
@@ -1490,9 +1504,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       val tomb = tombScan(snap.posDels, Seq(snap))
       val small = sizesOf(snap.posDels, snap.posDelSizes).values.sum <=
         GraftTable.PosDelBroadcastBytes
-      withDv.join(if (small) broadcast(tomb) else tomb,
-        col(fileCol) === col("_file") && col(idxCol) === col("_pos"),
-        "left_anti")
+      val hinted = if (small) broadcast(tomb) else tomb
+      val on = col(fileCol) === col("_file") && col(idxCol) === col("_pos")
+      if (live.isEmpty) withDv.join(hinted, on, "left_anti")
+      else kill(withDv.join(hinted, on, "left"), col("_pos").isNotNull)
+        .drop("_file", "_pos")
     }
   }
 
@@ -1783,23 +1799,21 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * which breaks the moment the same logical row is rewritten twice
     * in the range (the pair no longer content-matches) or two rows
     * swap values. Here both endpoints' diff files read WITH lineage,
-    * a full-outer join on `_row_id` pairs each logical row's old and
+    * one group per `_row_id` pairs each logical row's old and
     * new image across ANY number of intermediate rewrites, and the
     * LINEAGE ITSELF decides the verdict: same id on both sides with
     * an unchanged last-updated sequence is a rewrite ride-along
     * (dropped — carried by compaction/relocation, not changed), a
     * bumped sequence is one `update` row (post-image), id only on
     * the from side is a `delete` (old image), only on the to side an
-    * `insert`. Cost is O(changed files) rows through one join on an
+    * `insert`. Cost is O(changed files) rows through one shuffle on an
     * 8-byte key — the text/content never drives the netting.
-    * ALL THREE MoR delete shapes compose: DV pointer moves and
-    * position-tombstone set diffs on carried files ([[positionalDiff]])
-    * expand into keyed deletes (old image from the from-side live
-    * view) and rollback un-deletes, reading only the moved blobs and
-    * the named rows; EQUALITY predicates shared by both endpoints
-    * cancel through the live-view reads, and predicates that differ
-    * in-range expand over stats-pruned carried candidates
-    * ([[predMatched]]) into keyed deletes and restores. */
+    * ALL THREE MoR delete shapes compose: files added or removed
+    * in-range read through their endpoint's live view, and the
+    * carried files whose live set the range changed (DV pointer
+    * moves, tombstone set diffs, equality predicates that differ
+    * in-range) read once through [[carriedDiff]], which yields their
+    * keyed deletes (old images) and rollback restores (new images). */
   def lineageChanges(fromId: Long, toId: Long): DataFrame =
     lineageChanges(fromId, toId, id => snapshot(id))
 
@@ -1831,7 +1845,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // endpoints: a rollback to a PRE-ENABLEMENT snapshot re-assigns
     // fresh id ranges to the files it restores (the target had none
     // to carry), so a carried row would read DIFFERENT ids at the two
-    // endpoints and the keyed join would mis-pair every one of its
+    // endpoints and the keyed pairing would mis-pair every one of its
     // rows as a phantom delete+insert. Refuse loudly, fail closed —
     // rows that MATERIALIZE their id in-file would still pair, but
     // the manifest cannot see which rows those are.
@@ -1866,183 +1880,103 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           "null-backfilled ADD COLUMN): split the range")
     }
     val from = fromOpt.getOrElse(to)
-    def filled(df: DataFrame) = {
+    // every leg as the to-schema columns (null-filled), the row id,
+    // the last-updated sequence and its side (LiveToCol: new image)
+    def keyed(df: DataFrame): DataFrame = {
       val have = df.columns.toSet
       to.schema.fields.filterNot(f => have(f.name))
-        .foldLeft(df)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
+        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+        .select((cols ++ Seq(GraftTable.RowIdColName, GraftTable.LastSeqColName,
+          GraftTable.LiveToCol)).map(col): _*)
     }
-    def tagged(df: DataFrame, tag: String) =
-      filled(df).select(
-        (cols.map(c => col(c).as(s"$tag$c")) ++ Seq(
-          col(GraftTable.RowIdColName).as(s"${tag}_rid"),
-          col(GraftTable.LastSeqColName).as(s"${tag}_seq"))): _*)
-    def side(snap: Snapshot, files: Seq[String], tag: String) =
-      tagged(lineageSource(snap, files), tag)
-    // positions deleted in-range are keyed deletes (old image read
-    // from the FROM view, where those rows are still live); positions
-    // un-deleted (rollback) are keyed inserts (new image from the TO
-    // view) — ONE probe per side scans only the named data files
-    val pd = positionalDiff(from, to)
-    def at(snap: Snapshot, touched: Seq[String], pos: DataFrame) = {
-      val rows = lineageSource(snap, touched, keepMeta = true)
-      rows.join(pos, rows("_g_file") === pos("_file") &&
-          rows("_g_idx") === pos("_pos"), "left_semi")
-        .drop("_g_file", "_g_idx")
-    }
-    val posDel = pd.map(p => at(from, p.touched, p.newPos))
-    val posIns = pd.map(p => at(to, p.touched, p.gonePos))
-    var d = posDel.map(x => side(from, removed, "_d_")
-        .unionByName(tagged(x, "_d_")))
-      .getOrElse(side(from, removed, "_d_"))
-    var i = posIns.map(x => side(to, added, "_i_")
-        .unionByName(tagged(x, "_i_")))
-      .getOrElse(side(to, added, "_i_"))
-    // structural-emptiness tracking: a side that never receives a
-    // potentially-nonempty leg lets the tail skip the full-outer rid
-    // join — see below. A pure tombstone-ADD range keeps the insert
-    // side trivial.
-    var dTrivial = removed.isEmpty && !pd.exists(_.deletes)
-    var iTrivial = added.isEmpty && !pd.exists(_.restores)
-    // EQUALITY-PREDICATE diff on CARRIED files, keyed: a predicate NEW
-    // in-range — reachable via a lineage-off window or a rollback
-    // re-applying one — kills exactly the carried rows it scopes and
-    // matches, emitted as keyed deletes with the from-side image; a
-    // predicate REMOVED in-range (rollback) restores its rows as keyed
-    // inserts from the to side. Each leg reads the OWNER's live view
-    // (lineageSource applies the owner's own predicates/tombstones/
-    // DVs), so a row dead at the owner never emits. The in-range ADD
-    // COLUMN null-backfill comes first: the predicate may reference a
-    // column the owner's schema lacks. No rename replay is needed:
-    // lineageSource refuses pending renames and the schema gate above
-    // admits none. Rows the range ALSO
-    // tombstone/DV-killed dedupe by rid against the positional legs —
-    // a rid must appear at most once per side or the keyed join would
-    // fan out.
-    val newPreds = to.dels.filterNot(from.dels.toSet)
-    val gonePreds = from.dels.filterNot(to.dels.toSet)
-    lazy val carried = (toSet intersect fromSet).toSeq.sorted
-    def matched(owner: Snapshot, preds: Seq[DeletePred]) =
-      predMatched(owner, carried, preds, c => filled(lineageSource(owner, c)),
-        p => coalesce(expr(p.pred), lit(false)))
-    def keyed(m: DataFrame, pos: Option[DataFrame]) = pos.fold(m)(t =>
-      m.join(t.select(col(GraftTable.RowIdColName)),
-        Seq(GraftTable.RowIdColName), "left_anti"))
-    matched(from, newPreds).foreach { m =>
-      d = d.unionByName(tagged(keyed(m, posDel), "_d_"))
-      dTrivial = false
-    }
-    matched(to, gonePreds).foreach { m =>
-      i = i.unionByName(tagged(keyed(m, posIns), "_i_"))
-      iTrivial = false
-    }
-    // FAST PATH: the full-outer rid join below exists to pair a
-    // logical row's old and new images when BOTH sides can hold rows.
-    // On an append-only range (incl. the initial load, fromId = 0) the
-    // delete side is structurally empty — every to-side row would join
-    // to nothing and tag `insert` — and on a delete-only range
-    // symmetrically `delete`; emitting the live side directly is
-    // row-identical and drops the join's full-row shuffle from every
-    // such micro-batch.
-    if (dTrivial)
-      return i.select(cols.map(c => col(s"_i_$c").as(c)) :+
-        col("_i__rid").as("_row_id") :+
-        lit("insert").as("_change_type"): _*)
-    if (iTrivial)
-      return d.select(cols.map(c => col(s"_d_$c").as(c)) :+
-        col("_d__rid").as("_row_id") :+
-        lit("delete").as("_change_type"): _*)
-    val joined = d.join(i, col("_d__rid") === col("_i__rid"), "full_outer")
-    joined
+    val old = keyed(lineageSource(from, removed)
+      .withColumn(GraftTable.LiveToCol, lit(false)))
+    val neu = keyed(lineageSource(to, added)
+      .withColumn(GraftTable.LiveToCol, lit(true)))
+    // carried files read with lineage at `to` (their first row ids
+    // agree at both endpoints, checked above). EQUALITY predicates
+    // bind the current names: lineageSource refuses pending renames
+    // and the schema gate above admits none.
+    val carried = fromOpt.flatMap(f => carriedDiff(f, to, lineageRows(to, _),
+      p => coalesce(expr(p.pred), lit(false))))
+    val carriedRows = carried.map(c => keyed(c.rows)).toSeq
+    def feed(legs: Seq[DataFrame], kind: String): DataFrame =
+      legs.reduce(_.unionByName(_)).select(cols.map(col) :+
+        col(GraftTable.RowIdColName).as("_row_id") :+
+        lit(kind).as("_change_type"): _*)
+    // FAST PATH: the grouping below exists to pair a logical row's old
+    // and new images when BOTH sides can hold rows. On an append-only
+    // range (incl. the initial load, fromId = 0) the delete side is
+    // structurally empty — every to-side row would group alone and
+    // tag `insert` — and on a delete-only range symmetrically
+    // `delete`; emitting the live side directly is row-identical and
+    // drops the full-row shuffle from every such micro-batch.
+    if (removed.isEmpty && !carried.exists(_.deletes))
+      return feed(neu +: carriedRows, "insert")
+    if (added.isEmpty && !carried.exists(_.inserts))
+      return feed(old +: carriedRows, "delete")
+    // a row id appears at most once per side, so its group holds at
+    // most one old and one new image
+    val image = struct((cols :+ GraftTable.LastSeqColName).map(col): _*)
+    (Seq(old, neu) ++ carriedRows).reduce(_.unionByName(_))
+      .groupBy(col(GraftTable.RowIdColName))
+      .agg(
+        first(when(!col(GraftTable.LiveToCol), image), ignoreNulls = true).as("_d"),
+        first(when(col(GraftTable.LiveToCol), image), ignoreNulls = true).as("_i"))
       .withColumn("_change_type",
-        when(col("_d__rid").isNull, lit("insert"))
-          .when(col("_i__rid").isNull, lit("delete"))
-          .when(col("_d__seq") === col("_i__seq"), lit(null))
+        when(col("_d").isNull, lit("insert"))
+          .when(col("_i").isNull, lit("delete"))
+          .when(col("_d").getField(GraftTable.LastSeqColName) ===
+            col("_i").getField(GraftTable.LastSeqColName), lit(null))
           .otherwise(lit("update")))
       .filter(col("_change_type").isNotNull)
       // side selection by CHANGE TYPE, not coalesce: an update that
       // legitimately set a column to NULL must not resurrect the old
       // value through the null
       .select(cols.map(c =>
-        when(col("_change_type") === "delete", col(s"_d_$c"))
-          .otherwise(col(s"_i_$c")).as(c)) :+
-        when(col("_change_type") === "delete", col("_d__rid"))
-          .otherwise(col("_i__rid")).as("_row_id") :+
+        when(col("_change_type") === "delete", col("_d").getField(c))
+          .otherwise(col("_i").getField(c)).as(c)) :+
+        col(GraftTable.RowIdColName).as("_row_id") :+
         col("_change_type"): _*)
   }
 
-  /** The positional-delete diff of the data files CARRIED from `from`
-    * to `to` — the one kernel both changelogs expand their tombstone
-    * and deletion-vector legs through. Tombstone files are immutable
-    * and carried by reference, so the tombstone-file set diff names
-    * exactly the range's new (deletes) and dropped (rollback
-    * un-deletes) positions, and shared files cancel without a read; a
-    * (file, pos) re-tombstoned through a different file (rollback then
-    * re-delete) cancels in the bidirectional anti-join. Moved DV
-    * pointers AND-NOT their endpoint bitmaps both ways, reading only
-    * the moved files' blobs (the pointer map names them exactly). A
-    * live-view DML never re-deletes a position, so the two shapes
-    * cannot emit the same key — plain unions compose them.
-    *
-    * `touched` is the carried files the diffed positions name, from
+  /** The carried data files whose positional deletes a range changed
+    * — the positional half of [[carriedDiff]]'s file set. Tombstone
+    * files are immutable and carried by reference, so only the range's
+    * new and dropped tombstone files are read, and shared files cancel
+    * without a read. A moved DV pointer names its file only when the
+    * endpoint bitmaps differ, reading only the moved files' blobs (the
+    * pointer map names them exactly): a DV-consolidation rewrite
+    * (every pointer moved, identical bits) names no file instead of
+    * costing a scan of every vectored data file. The names come from
     * ONE driver action (bounded: one path per file the range's DML
-    * touched), so only those files are scanned — without it a
-    * DV-consolidation rewrite (every pointer moved, identical bits,
-    * empty diff) would cost a scan of every vectored data file to net
-    * zero rows. Added and removed files surface through the callers'
+    * touched). Added and removed files surface through the callers'
     * file diff instead; counting a tombstoned row of a removed file
     * here too would double-emit its delete. None when the diff names
     * no carried file. */
   private def positionalDiff(from: Snapshot,
       to: Snapshot): Option[PositionalDiff] = {
-    import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
-    import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
-    import graft.functions.NativeExprs
+    import org.apache.spark.sql.types.{BinaryType, StringType}
     val toSet = to.files.toSet
     val carried = from.files.filter(toSet)
-    val moved = carried.filter(f => from.dvs.get(f) != to.dvs.get(f)).sorted
+    val moved = carried.filter(f => from.dvs.get(f) != to.dvs.get(f)).toSet
     val newT = to.posDels.filterNot(from.posDels.toSet)
     val goneT = from.posDels.filterNot(to.posDels.toSet)
     if (carried.isEmpty || newT.isEmpty && goneT.isEmpty && moved.isEmpty)
       return None
-    def empty(fields: (String, DataType)*): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(fields.map { case (n, t) => StructField(n, t) }))
-    def bits(s: Snapshot): DataFrame = {
-      val onlyMoved = s.dvs.view.filterKeys(moved.toSet).toMap
-      if (onlyMoved.isEmpty) empty("_file" -> StringType, "_bitmap" -> BinaryType)
+    def bits(s: Snapshot, as: String): DataFrame = {
+      val onlyMoved = s.dvs.view.filterKeys(moved).toMap
+      if (onlyMoved.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+          StructField("_file", StringType), StructField(as, BinaryType))))
       else currentDvRelation(s.copy(dvs = onlyMoved))
-        .select(col("_file"), col("_bitmap"))
+        .select(col("_file"), col("_bitmap").as(as))
     }
-    // (bits set at `to` only = in-range deletes, cleared = un-deletes)
-    val (newBits, goneBits) =
-      if (moved.isEmpty)
-        (empty("_file" -> StringType, "_pos" -> LongType),
-          empty("_file" -> StringType, "_pos" -> LongType))
-      else {
-        val joined = bits(from).withColumnRenamed("_bitmap", "_bm_from")
-          .join(bits(to).withColumnRenamed("_bitmap", "_bm_to"),
-            Seq("_file"), "full_outer")
-          .select(col("_file"),
-            coalesce(col("_bm_from"),
-              lit(Array.emptyByteArray)).as("_bm_from"),
-            coalesce(col("_bm_to"),
-              lit(Array.emptyByteArray)).as("_bm_to"))
-        def diff(a: String, b: String): DataFrame = joined.select(
-          col("_file"),
-          explode(columnOf(NativeExprs.BitsetPositions(
-            expressionOf(columnOf(NativeExprs.BitsetAndNot(
-              expressionOf(col(a)),
-              expressionOf(col(b)))))))).as("_pos"))
-        (diff("_bm_to", "_bm_from"), diff("_bm_from", "_bm_to"))
-      }
-    def tombRows(fs: Seq[String]): DataFrame = tombScan(fs, Seq(from, to))
-    val newPos = tombRows(newT)
-      .join(tombRows(goneT), Seq("_file", "_pos"), "left_anti")
-      .unionByName(newBits)
-    val gonePos = tombRows(goneT)
-      .join(tombRows(newT), Seq("_file", "_pos"), "left_anti")
-      .unionByName(goneBits)
+    val vectored = if (moved.isEmpty) Nil else Seq(
+      bits(from, "_bm_from").join(bits(to, "_bm_to"), Seq("_file"), "full_outer")
+        .filter(not(col("_bm_from") <=> col("_bm_to"))).select("_file"))
+    val tombed = if (newT.isEmpty && goneT.isEmpty) Nil
+      else Seq(tombScan(newT ++ goneT, Seq(from, to)).select("_file"))
     // delete-artifact `_file` values are in `_metadata.file_path` form
     // (URL-encoded) while the manifest holds raw paths — and hadoop
     // Path never percent-decodes — so membership tests in ENCODED
@@ -2050,35 +1984,77 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // reading) the mismatched forms silently drops MoR deletes from
     // the changelog on any path with an encodable character
     val rawByEnc = carried.map(p => metaPath(p) -> p).toMap
-    val touched = newPos.select("_file").union(gonePos.select("_file"))
+    val touched = (tombed ++ vectored).reduce(_.union(_))
       .distinct().collect().map(_.getString(0)).toSeq
       .flatMap(rawByEnc.get).sorted
     if (touched.isEmpty) None
-    else Some(PositionalDiff(newPos, gonePos, touched,
+    else Some(PositionalDiff(touched,
       deletes = newT.nonEmpty || moved.nonEmpty,
       restores = goneT.nonEmpty || moved.nonEmpty))
   }
 
-  /** The rows of `owner`'s `files` that equality predicates `preds`
-    * scope (add-sequence rule) and match — the predicate leg of both
-    * changelogs. Per scope group only the STATS-PRUNED candidate files
-    * are read, through `read` (the caller's live view of `owner`), and
-    * kept where `cond` holds for any of the group's predicates: the
-    * scan is bounded by the candidates, never the carried set — the
-    * same economics as the equality-delete read path. None when no
-    * candidate survives. */
-  private def predMatched(owner: Snapshot, files: => Seq[String],
-      preds: Seq[DeletePred], read: Seq[String] => DataFrame,
-      cond: DeletePred => Column): Option[DataFrame] =
-    if (preds.isEmpty) None
-    else scopeGroups(owner, files, preds).filter(_._1.nonEmpty)
-      .flatMap { case (ps, fs) =>
-        val scoped = owner.copy(files = fs)
-        val cand = ps.flatMap(p => pruneByStats(scoped, p.pred)).distinct.sorted
-        if (cand.isEmpty) None
-        else Some(read(cand).filter(ps.map(cond).reduce(_ || _)))
+  /** The files among `files` that equality predicates `preds` scope
+    * under `owner` (add-sequence rule, [[scopeGroups]]) and whose
+    * column stats admit a match ([[pruneByStats]]) — the only files an
+    * in-range predicate change can kill or restore rows of. Bounded
+    * by the candidates, never the carried set: the same economics as
+    * the equality-delete read path. */
+  private def predCandidates(owner: Snapshot, files: Seq[String],
+      preds: Seq[DeletePred]): Seq[String] =
+    if (preds.isEmpty) Nil
+    else scopeGroups(owner, files, preds).flatMap { case (ps, fs) =>
+      val scoped = owner.copy(files = fs)
+      ps.flatMap(p => pruneByStats(scoped, p.pred))
+    }.distinct
+
+  /** The rows of the data files CARRIED from `from` to `to` that are
+    * live at exactly one endpoint — the one carried-file kernel both
+    * changelogs call. A carried file changes its live set only through
+    * the range's positional deletes ([[positionalDiff]]) or an
+    * equality predicate added or removed in-range (its stats-pruned
+    * candidates, [[predCandidates]]), so only those files are read,
+    * each once: `read` reads a file set at `to`'s schema, each row
+    * carrying its data file and row index whenever either endpoint
+    * holds positional deletes. Each row is marked live at each
+    * endpoint by that endpoint's own deletes, the rule every reader
+    * applies: its scoped equality predicates (`cond` per
+    * [[scopeGroups]] group) and its deletion vectors and tombstones
+    * ([[dropDeleted]] in marking form). Old images are live at `from`
+    * only, new images live at `to` only. Because the marks define
+    * liveness, a row that is dead at both endpoints emits nothing,
+    * whichever delete shape killed it at each (a rollback can turn a
+    * predicate death into a tombstone death inside one range). None
+    * when no carried file can change. */
+  private def carriedDiff(from: Snapshot, to: Snapshot,
+      read: Seq[String] => DataFrame,
+      cond: DeletePred => Column): Option[CarriedDiff] = {
+    val carried = from.files.filter(to.files.toSet)
+    val pd = positionalDiff(from, to)
+    val newCand = predCandidates(from, carried, to.dels.filterNot(from.dels.toSet))
+    val goneCand = predCandidates(to, carried, from.dels.filterNot(to.dels.toSet))
+    val files = (pd.toSeq.flatMap(_.touched) ++ newCand ++ goneCand).distinct.sorted
+    if (files.isEmpty) return None
+    val liveFrom = "_glive_from"
+    def unmatched(ps: Seq[DeletePred]): Column =
+      ps.map(cond).reduceOption(_ || _).fold(lit(true))(not)
+    val marked = scopeGroups(from, files, from.dels).flatMap { case (fromPs, fs) =>
+      scopeGroups(to, fs, to.dels).map { case (toPs, group) =>
+        read(group).withColumn(liveFrom, unmatched(fromPs))
+          .withColumn(GraftTable.LiveToCol, unmatched(toPs))
       }
-      .reduceOption(_.unionByName(_))
+    }.reduce(_.unionByName(_))
+    // a deletion vector names one data file: only the read files' apply
+    val fileSet = files.toSet
+    def at(s: Snapshot, df: DataFrame, mark: String): DataFrame =
+      dropDeleted(s.copy(dvs = s.dvs.view.filterKeys(fileSet).toMap), df,
+        GraftTable.PosFileCol, GraftTable.PosIdxCol, Some(mark))
+    val live = at(to, at(from, marked, liveFrom), GraftTable.LiveToCol)
+    Some(CarriedDiff(
+      live.filter(col(liveFrom) =!= col(GraftTable.LiveToCol))
+        .drop(liveFrom, GraftTable.PosFileCol, GraftTable.PosIdxCol),
+      deletes = pd.exists(_.deletes) || newCand.nonEmpty,
+      inserts = pd.exists(_.restores) || goneCand.nonEmpty))
+  }
 
   /** Net row-level changelog between two snapshots (the CDC surface —
     * Iceberg's `create_changelog_view` with net changes): rows
@@ -2098,11 +2074,12 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * All three merge-on-read delete shapes compose (they are what MoR
     * DELETE/UPDATE/MERGE emit, so a changelog that refused one would
     * go dark exactly when the table is busiest): files added or
-    * removed in-range read through their endpoint's live view;
-    * on carried files, tombstone and deletion-vector changes expand
-    * through [[positionalDiff]], reading only the data files the
-    * diffed positions name, and equality predicates added or removed
-    * in-range expand over stats-pruned candidates ([[predMatched]]).
+    * removed in-range read through their endpoint's live view, and
+    * the carried files whose live set the range changed (tombstone
+    * and deletion-vector changes, equality predicates added or removed
+    * in-range) read once through [[carriedDiff]], which marks each row
+    * live or dead at both endpoints and yields the rows whose marks
+    * differ.
     *
     * Restrictions (same contract as Iceberg's changelog): across the
     * range only null-backfilled ADD COLUMN, top-level RENAME COLUMN and
@@ -2172,16 +2149,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // the owning endpoint's tombstones AND scoped equality predicates
     // — a file appended then partially deleted inside the range
     // inserts only its surviving rows
-    var ins = morRead(to, to.files.filterNot(fromSet))
+    val ins = morRead(to, to.files.filterNot(fromSet))
     // the from side reads at the FROM schema and aligns forward
     // (the alignableSchemas gate above guarantees this succeeds)
-    var del = GraftTable.alignEvolved(
+    val del = GraftTable.alignEvolved(
       morRead(from, from.files.filterNot(toSet)), from.id, to, to.schema).get
-    // structural-emptiness tracking: a leg that never receives a
-    // potentially-nonempty contribution lets the tail skip the
-    // net-tag/group/expand pass entirely — see below
-    var insTrivial = to.files.forall(fromSet)
-    var delTrivial = from.files.forall(toSet)
     // equality predicates rendered ERA-CORRECT: a predicate's column
     // references bind the names current at its own commit. Renames
     // committed after it are possible only for a predicate REMOVED by
@@ -2206,91 +2178,21 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         }
       coalesce(columnOf(e), lit(false))
     }
-    // carried files change their live set through the positional diff
-    // and the equality-predicate diff. The positional diff runs first
-    // so the predicate diff can multiset-dedupe against it.
-    var tDel: Option[DataFrame] = None
-    var tIns: Option[DataFrame] = None
-    positionalDiff(from, to).foreach { pd =>
-      // initial-DEFAULT columns surface per file epoch, exactly as on
-      // the plain read path — the touched files predate any in-range
-      // add, so a bare positional read would emit NULL images where
-      // every live read shows the DEFAULT
-      val rowsPos = withDefaults(to, pd.touched, readFilesPos(to, _))
-      // the cross-direction rollback law: a positionally-named row
-      // is a DELETE only if it was LIVE at `from` (a rollback can
-      // flip a row's death from predicate to tombstone inside one
-      // range — the row was never alive to delete), and a restored
-      // row an INSERT only if it is LIVE at `to` (not re-killed by
-      // a predicate the range added). The filter applies the
-      // endpoint's SCOPED predicates per file group on the
-      // position-carrying frame.
-      def at(t: DataFrame, liveAt: Snapshot): DataFrame = {
-        val named = rowsPos.join(t,
-            rowsPos(GraftTable.PosFileCol) === t("_file") &&
-              rowsPos(GraftTable.PosIdxCol) === t("_pos"), "left_semi")
-        val alive =
-          if (liveAt.dels.isEmpty) named
-          else named.filter(scopeGroups(liveAt, pd.touched, liveAt.dels)
-            .map { case (ps, fs) =>
-              val member = col(GraftTable.PosFileCol)
-                .isin(fs.map(metaPath): _*)
-              if (ps.isEmpty) member
-              else member && ps.map(p => not(predCond(p))).reduce(_ && _)
-            }
-            .reduce(_ || _))
-        alive.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
-      }
-      tDel = Some(at(pd.newPos, from))
-      tIns = Some(at(pd.gonePos, to))
-      del = del.unionByName(tDel.get)
-      ins = ins.unionByName(tIns.get)
-      // per-side structural emptiness: a pure tombstone-ADD range (the
-      // common MoR DELETE commit) can only contribute deletes, so the
-      // insert side stays trivial and the delete-only fast path below
-      // still applies (symmetrically for a pure rollback range)
-      if (pd.deletes) delTrivial = false
-      if (pd.restores) insTrivial = false
-    }
-    // equality-predicate diff on CARRIED files: rows live at `from`
-    // that a predicate added in-range scopes and matches are the
-    // range's deletes; rows live at `to` that a removed predicate
-    // used to kill are its restores. Predicates evaluate over the
-    // owner's live view ALIGNED to the `to` schema (an in-range ADD
-    // COLUMN backfills before the predicate sees the row — exactly
-    // what a to-reader surfaces, so `note IS NULL` kills pre-add rows
-    // here as it does there).
-    val newPreds = to.dels.filterNot(from.dels.toSet)
-    val gonePreds = from.dels.filterNot(to.dels.toSet)
-    lazy val carried = (toSet intersect fromSet).toSeq.sorted
-    def matched(owner: Snapshot, preds: Seq[DeletePred]) =
-      predMatched(owner, carried, preds, c => GraftTable.alignEvolved(
-        morRead(owner, c), owner.id, to, to.schema).get, predCond)
-    // per row VALUE, the predicate kills every copy it matches —
-    // positionally-deleted-in-range copies included — so the true
-    // delete multiplicity is max(predicate-matched, positional), i.e.
-    // the positional contribution plus the predicate EXCESS over it
-    // (multiset EXCEPT ALL); same law on the restore side. tDel/tIns
-    // appear twice in the final plan (the union above and this EXCEPT
-    // ALL's right side) — a CONSCIOUS cost, paid only on
-    // genuinely-mixed ranges: the frame is a positional read of the
-    // range's DML-touched files, there is no sound lifecycle hook to
-    // cache it inside a lazily-consumed DataFrame, and correctness of
-    // the dedupe is worth two bounded scans. EXCEPT ALL is positional:
-    // the positional side reads partition columns last, so it is
-    // realigned to the matched side by name (quoted: a top-level name
-    // may contain a dot)
-    def minus(a: DataFrame, t: Option[DataFrame]): DataFrame =
-      t.fold(a)(t => a.exceptAll(t.select(a.columns.toSeq.map(c =>
-        col(s"`${c.replace("`", "``")}`")): _*)))
-    matched(from, newPreds).foreach { d =>
-      del = del.unionByName(minus(d, tDel))
-      delTrivial = false
-    }
-    matched(to, gonePreds).foreach { i =>
-      ins = ins.unionByName(minus(i, tIns))
-      insTrivial = false
-    }
+    // carried files read once at the `to` schema the way a `to`
+    // reader reads them (positionally when either endpoint holds
+    // positional deletes; initial-DEFAULT columns per file epoch), and
+    // every predicate evaluates there through predCond: an in-range
+    // ADD COLUMN backfills before a predicate sees the row, so `note
+    // IS NULL` kills pre-add rows here as it does for a `to` reader
+    val positional = Seq(from, to).exists(s => s.posDels.nonEmpty || s.dvs.nonEmpty)
+    val carried = carriedDiff(from, to, fs =>
+      if (positional) withDefaults(to, fs, readFilesPos(to, _))
+      else readFilesMapped(to, fs), predCond)
+    val carriedRows = carried.map(_.rows).toSeq
+    val dataCols = ins.columns.toSeq
+    def tagged(legs: Seq[DataFrame], kind: String): DataFrame =
+      legs.map(_.select(dataCols.map(col): _*)).reduce(_.unionByName(_))
+        .withColumn("_change_type", lit(kind))
     // FAST PATH (round 19, guide §2.4): the net-tag/group/expand tail
     // below exists to cancel row values appearing on BOTH legs (an
     // in-range rewrite). When either leg is STRUCTURALLY empty — every
@@ -2298,37 +2200,31 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // majority of streaming micro-batches — grouping is an identity
     // (for each value: net = ±count, re-expanded to the same
     // multiset), so the other leg ships tagged directly: one full-row
-    // shuffle and the whole aggregate subtree gone from the plan.
-    val dataColsFast = ins.columns.toSeq
-    if (delTrivial)
-      return ins.withColumn("_change_type", lit("insert"))
-        .select(dataColsFast.map(col) :+ col("_change_type"): _*)
-    if (insTrivial)
-      return del.withColumn("_change_type", lit("delete"))
-        .select(dataColsFast.map(col) :+ col("_change_type"): _*)
-    // ONE pass over both legs (round 19, guide §2.4 — duplicated
-    // subtrees): the previous `ins EXCEPT ALL del` unioned with
-    // `del EXCEPT ALL ins` planned each leg TWICE (Spark rewrites
-    // each EXCEPT ALL as tag/group/replicate over BOTH inputs), so
-    // every changelog — the batch TVF and every streaming CDC
-    // micro-batch — paid two full scans of every union leg plus two
-    // full-row shuffles. The symmetric multiset difference is ONE
-    // such pass: tag insert legs +1 / delete legs −1, group on the
-    // full row, re-expand |net| copies. Result multiset identical
-    // (for each row value: max(ins−del, 0) inserts and
-    // max(del−ins, 0) deletes — exactly the EXCEPT ALL pair).
-    val dataCols = ins.columns.toSeq
+    // shuffle and the whole aggregate subtree gone from the plan. A
+    // pure tombstone-ADD range (the common MoR DELETE commit) can
+    // only hold old images, so it takes the delete-only path.
+    if (from.files.forall(toSet) && !carried.exists(_.deletes))
+      return tagged(ins +: carriedRows, "insert")
+    if (to.files.forall(fromSet) && !carried.exists(_.inserts))
+      return tagged(del +: carriedRows, "delete")
+    // ONE pass over every leg: tag new images +1 and old images −1,
+    // group on the full row, re-expand |net| copies. For each row
+    // value that is max(ins−del, 0) inserts and max(del−ins, 0)
+    // deletes, and rows that merely rode along a rewrite cancel.
     // reserved-name guard (round 20, advice): a user column named
     // _cnt/_net/_rep would be silently replaced by the tag columns
-    // below and excluded from the grouping key, mis-grouping where
-    // the old EXCEPT ALL pair would not — refuse loudly instead
+    // below and excluded from the grouping key — refuse loudly instead
     // (change-feed tables already refuse _change_type upstream)
     require(!dataCols.exists(c =>
         c == "_cnt" || c == "_net" || c == "_rep"),
       "table_changes over a table with its own _cnt/_net/_rep " +
         "column is not supported")
-    val net = ins.withColumn("_cnt", lit(1L))
-      .unionByName(del.withColumn("_cnt", lit(-1L)))
+    val net = (ins.withColumn("_cnt", lit(1L)) +:
+        del.withColumn("_cnt", lit(-1L)) +:
+        carriedRows.map(_.withColumn("_cnt",
+          when(col(GraftTable.LiveToCol), lit(1L)).otherwise(lit(-1L)))))
+      .map(_.select(dataCols.map(col) :+ col("_cnt"): _*))
+      .reduce(_.unionByName(_))
       .groupBy(dataCols.map(col): _*)
       .agg(sum(col("_cnt")).as("_net"))
       .filter(col("_net") =!= 0L)
@@ -3265,14 +3161,49 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         .as("_last_updated_sequence_number")): _*)
   }
 
-  /** `files` under `snap` with the two lineage columns resolved to
-    * CONCRETE values — materialized-or-inherited row id, and the
-    * last-updated sequence with the -1 "this commit" sentinel
-    * translated through the file's own add-sequence (rewrites cannot
-    * know their publish id up front; their files' fseq IS it). The
-    * COW-rewrite source and the [[readLineage]] body. */
+  /** The live view of `files` under `snap` with its lineage columns
+    * ([[lineageRows]]) — the COW-rewrite source and the
+    * [[readLineage]] body. `keepMeta` keeps each row's data file and
+    * row index ([[GraftTable.PosFileCol]], [[GraftTable.PosIdxCol]])
+    * for merge-on-read DML. */
   private def lineageSource(snap: Snapshot, files: Seq[String],
       keepMeta: Boolean = false): DataFrame = {
+    // EQUALITY-DELETE predicates compose with lineage by the same
+    // argument as DVs and tombstones below (a predicate touches no
+    // data file, so every survivor's (file, idx) — and therefore its
+    // id and last-update — is untouched; the killed rows simply stop
+    // surfacing): each pending predicate kills rows of files with a
+    // LOWER add-sequence that match it (the sequence rule), evaluated
+    // as one codegen'd null-rejecting filter riding the _g_fseq this
+    // read already carries — no per-group unions. Predicates can only
+    // PREDATE enablement or a lineage-off window (the MoR guard
+    // refuses committing them while lineage is on, Iceberg v3's
+    // contract), and the pending-rename refusal in lineageRows means
+    // their text binds the current column names.
+    val derived = snap.dels.foldLeft(lineageRows(snap, files))((df, p) =>
+      df.filter(not(coalesce(expr(p.pred), lit(false)) &&
+        col("_g_fseq") < lit(p.seq))))
+    // DELETION VECTORS and POSITION TOMBSTONES compose with lineage
+    // (Iceberg v3 pairs lineage with both delete shapes): neither
+    // touches a data file, so every surviving row's (file, idx) — and
+    // therefore its id and last-update — is untouched. The same probe
+    // and anti-join as morReadPos, riding the (file, idx) this read
+    // already carries.
+    val live = dropDeleted(snap, derived, GraftTable.PosFileCol,
+      GraftTable.PosIdxCol, live = None).drop("_g_fseq")
+    if (keepMeta) live
+    else live.drop(GraftTable.PosFileCol, GraftTable.PosIdxCol)
+  }
+
+  /** `files` under `snap` before any delete applies, with the two
+    * lineage columns resolved to CONCRETE values — materialized-or-
+    * inherited row id, and the last-updated sequence with the -1 "this
+    * commit" sentinel translated through the file's own add-sequence
+    * (rewrites cannot know their publish id up front; their files'
+    * fseq IS it). Each row also carries its data file and row index
+    * ([[GraftTable.PosFileCol]], [[GraftTable.PosIdxCol]]) and its
+    * file's add-sequence `_g_fseq`. */
+  private def lineageRows(snap: Snapshot, files: Seq[String]): DataFrame = {
     require(snap.renames.isEmpty,
       "row lineage across a pending column rename is not supported: " +
         "compact() to clear the rename log first")
@@ -3284,8 +3215,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       StructField(GraftTable.RowIdColName, org.apache.spark.sql.types.LongType),
       StructField(GraftTable.LastSeqColName, org.apache.spark.sql.types.LongType)))
     val base = manifestScan(ext, files, snap.fileSizes, snap.partitionCols)
-      .withColumn("_g_file", col("_metadata.file_path"))
-      .withColumn("_g_idx", col("_metadata.row_index"))
+      .withColumn(GraftTable.PosFileCol, col("_metadata.file_path"))
+      .withColumn(GraftTable.PosIdxCol, col("_metadata.row_index"))
     import spark.implicits._
     // one row per file — commit metadata. Broadcast while that is
     // demonstrably driver-friendly (~150 B/row → ~15 MB at the gate);
@@ -3293,40 +3224,17 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // multi-GB broadcast build on every executor (10⁷-file tables)
     val meta0 = files.map(f => (metaPath(f),
         snap.firstRowIds(f), snap.fileSeq.getOrElse(f, snap.id)))
-      .toDF("_g_file", "_g_first", "_g_fseq")
+      .toDF("_g_mfile", "_g_first", "_g_fseq")
     val meta = if (files.sizeIs <= 100000) broadcast(meta0) else meta0
-    val derived0 = base.join(meta, "_g_file")
+    base.join(meta, col(GraftTable.PosFileCol) === col("_g_mfile"))
       .withColumn(GraftTable.RowIdColName,
         coalesce(col(GraftTable.RowIdColName),
-          col("_g_first") + col("_g_idx")))
+          col("_g_first") + col(GraftTable.PosIdxCol)))
       .withColumn(GraftTable.LastSeqColName,
         when(col(GraftTable.LastSeqColName).isNull ||
             col(GraftTable.LastSeqColName) === -1L, col("_g_fseq"))
           .otherwise(col(GraftTable.LastSeqColName)))
-    // EQUALITY-DELETE predicates compose with lineage by the same
-    // argument as DVs and tombstones below (a predicate touches no
-    // data file, so every survivor's (file, idx) — and therefore its
-    // id and last-update — is untouched; the killed rows simply stop
-    // surfacing): each pending predicate kills rows of files with a
-    // LOWER add-sequence that match it (the sequence rule), evaluated
-    // as one codegen'd null-rejecting filter riding the _g_fseq this
-    // read already carries — no per-group unions. Predicates can only
-    // PREDATE enablement or a lineage-off window (the MoR guard
-    // refuses committing them while lineage is on, Iceberg v3's
-    // contract), and the pending-rename refusal above means their
-    // text binds the current column names.
-    val derived = snap.dels.foldLeft(derived0)((df, p) =>
-      df.filter(not(coalesce(expr(p.pred), lit(false)) &&
-        col("_g_fseq") < lit(p.seq))))
-    // DELETION VECTORS and POSITION TOMBSTONES compose with lineage
-    // (Iceberg v3 pairs lineage with both delete shapes): neither
-    // touches a data file, so every surviving row's (file, idx) — and
-    // therefore its id and last-update — is untouched. The same probe
-    // and anti-join as morReadPos, riding the (file, idx) this read
-    // already carries.
-    val live = dropDeleted(snap, derived, "_g_file", "_g_idx")
-    if (keepMeta) live.drop("_g_first", "_g_fseq")
-    else live.drop("_g_file", "_g_idx", "_g_first", "_g_fseq")
+      .drop("_g_mfile", "_g_first")
   }
 
   /** Whether a COW rewrite of `files` can (and must) carry lineage:
@@ -3726,9 +3634,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val (matching, release) = GraftSqlBridge.materialize(
       if (!lineageOn) morReadPos(snap, cand).filter(p)
       else lineageSource(snap, cand, keepMeta = true)
-        .withColumn(GraftTable.PosFileCol, col("_g_file"))
-        .withColumn(GraftTable.PosIdxCol, col("_g_idx"))
-        .drop("_g_file", "_g_idx")
         .filter(p))
     try {
       val id = snap.id + 1
@@ -4236,9 +4141,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         val live =
           if (!morLineage) morReadPos(snap, snap.files)
           else lineageSource(snap, snap.files, keepMeta = true)
-            .withColumn(GraftTable.PosFileCol, col("_g_file"))
-            .withColumn(GraftTable.PosIdxCol, col("_g_idx"))
-            .drop("_g_file", "_g_idx")
         val joined = live.join(src, joinCond, "inner")
         // insert-only: the matched set is only its keys and files
         val (matched, releaseMatched) = GraftSqlBridge.materialize(
@@ -6439,6 +6341,10 @@ object GraftTable {
   /** Internal column names threading leaf-scan metadata (file path,
     * row index) to the position-delete anti-join. */
   private[lakehouse] val PosFileCol = "_gpd_file"
+
+  /** [[carriedDiff]]'s mark: true on a row live at the range's end,
+    * false on one live at its start. */
+  private[lakehouse] val LiveToCol = "_glive_to"
 
   /** Join key of the deletion-vector file join on the read path. */
   private[lakehouse] val DvFileCol = "_gdv_file"

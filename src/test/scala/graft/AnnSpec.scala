@@ -69,6 +69,25 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.3, f"recall too low: $recall%.2f")
   }
 
+  test("k-means training compiles: no interpreted fallback, same neighbors") {
+    import org.apache.spark.sql.SparkSession
+    def neighbors(s: SparkSession) = {
+      SparkSession.setActiveSession(s)
+      try graft.ann.Ann.ivfKmeansTopK(s, sf)
+        .select("q_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally SparkSession.setActiveSession(spark)
+    }
+    // a child session scopes the strict mode to this test: suites
+    // sharing `spark` keep their codegen fallback
+    val strict = spark.newSession()
+    strict.conf.set(
+      org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key, "CODEGEN_ONLY")
+    val compiled = neighbors(strict)
+    assert(compiled.nonEmpty)
+    assert(compiled == neighbors(spark))
+  }
+
   test("PQ recall@5 against exact top-5 (ADC + exact re-rank)") {
     val got = graft.ann.Ann.pqTopK(spark, sf)
       .select("q_id", "neighbor_id").collect()

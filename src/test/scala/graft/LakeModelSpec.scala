@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.lakehouse.{GraftTable, LakeRegistry}
 
 /** Model-based checks of merge-on-read DML and compaction: random
-  * sequences of INSERT, MERGE, UPDATE, DELETE, OPTIMIZE and OPTIMIZE
-  * REWRITE DELETES run as SQL against a merge-on-read table (one per
+  * sequences of INSERT, MERGE, UPDATE, DELETE, OPTIMIZE, OPTIMIZE
+  * REWRITE DELETES and RESTORE (a rollback to a snapshot the run
+  * committed earlier) run as SQL against a merge-on-read table (one per
   * delete style) and a copy-on-write twin, and every state is compared
   * with an in-memory multiset model: the live read, the `table_changes`
   * feed of each step and of the whole run, and `VERSION AS OF` every
@@ -79,7 +80,9 @@ class LakeModelSpec extends AnyFunSuite {
       s"$where: $name table_changes_lineage post-images not in the model: $f")
   }
 
-  private def sql(op: Op, name: String, src: String): String = op match {
+  /** The statement `op` runs on table `name`; a rollback restores
+    * snapshot `restore`. */
+  private def sql(op: Op, name: String, src: String, restore: Long): String = op match {
     case Insert(_) => s"INSERT INTO $name SELECT k, p, v FROM $src"
     case m: Merge =>
       val matched =
@@ -94,6 +97,7 @@ class LakeModelSpec extends AnyFunSuite {
     case Optimize(files) =>
       s"OPTIMIZE $name${files.fold("")(n => s" FILES $n")}"
     case RewriteDeletes => s"OPTIMIZE $name REWRITE DELETES"
+    case Rollback(_) => s"RESTORE TABLE $name TO VERSION AS OF $restore"
   }
 
   /** Run `sc` under `style`, with row lineage on the merge-on-read
@@ -113,10 +117,14 @@ class LakeModelSpec extends AnyFunSuite {
     val tables = Seq(mor -> morT, cow -> cowT)
     val first = tables.map(_._2.currentSnapshotId)
     var model = sc.initial.sorted
-    // the model at every snapshot the run committed, per table
+    // the model at every snapshot the run committed, per table, and
+    // after every step (each table's snapshot id, then the model)
     val states = scala.collection.mutable.Map[(String, Long), Seq[Row]]()
-    def record(): Unit =
+    val steps = scala.collection.mutable.ArrayBuffer[(Seq[Long], Seq[Row])]()
+    def record(): Unit = {
       for ((name, t) <- tables) states((name, t.currentSnapshotId)) = model
+      steps += (tables.map(_._2.currentSnapshotId) -> model)
+    }
     record()
     try sc.ops.zipWithIndex.foreach { case (op, i) =>
       val src = s"model_src_${style}_${n}_$i"
@@ -127,18 +135,25 @@ class LakeModelSpec extends AnyFunSuite {
       }
       rows.toDF("k", "p", "v").createOrReplaceTempView(src)
       val where = s"step $i ($op) under $style"
-      expected(model, op) match {
+      // a rollback goes `back` steps back: each table restores its
+      // snapshot of that step, and the model takes that step's state
+      val (restore, outcome) = op match {
+        case Rollback(back) =>
+          val (ids, state) = steps(math.max(0, steps.size - 1 - back))
+          (ids, Some(state))
+        case _ => (tables.map(_ => 0L), expected(model, op))
+      }
+      outcome match {
         case None =>
-          for ((name, t) <- tables) {
+          for (((name, t), r) <- tables.zip(restore)) {
             val before = t.currentSnapshotId
-            val e = intercept[IllegalArgumentException](spark.sql(sql(op, name, src)))
+            val e = intercept[IllegalArgumentException](spark.sql(sql(op, name, src, r)))
             assert(e.getMessage.contains("duplicate"), s"$where: ${e.getMessage}")
             assert(t.currentSnapshotId == before, s"$where: a refused MERGE committed")
           }
         case Some(next) =>
           val prev = tables.map(_._2.currentSnapshot)
-          spark.sql(sql(op, mor, src))
-          spark.sql(sql(op, cow, src))
+          for (((name, _), r) <- tables.zip(restore)) spark.sql(sql(op, name, src, r))
           assert(rowsOf(mor) == next, s"$where: merge-on-read table != model")
           assert(rowsOf(cow) == next, s"$where: copy-on-write twin != model")
           // OPTIMIZE leaves the model unchanged, so its feed must be empty
@@ -156,6 +171,10 @@ class LakeModelSpec extends AnyFunSuite {
               for (((name, t), p) <- tables.zip(prev))
                 assert(t.currentSnapshot.files == p.files,
                   s"$where: $name REWRITE DELETES changed the data files")
+            case Rollback(_) =>
+              for (((name, t), r) <- tables.zip(restore))
+                assert(t.currentSnapshot.files == t.snapshot(r).files,
+                  s"$where: $name RESTORE did not restore the files of $r")
             case _ => ()
           }
           model = next
@@ -215,11 +234,16 @@ object LakeModelSpec {
   final case class Delete(lo: Long, hi: Long) extends Op
   final case class Optimize(files: Option[Int]) extends Op
   case object RewriteDeletes extends Op
+  /** `RESTORE TABLE t TO VERSION AS OF <id>`, `id` the snapshot the
+    * table held `back` steps earlier (the first when the run is
+    * shorter). */
+  final case class Rollback(back: Int) extends Op
 
   final case class Scenario(initial: Seq[Row], ops: Seq[Op])
 
   /** The table after `op`, or None when the MERGE must refuse (two
-    * source rows match one live target row). */
+    * source rows match one live target row). A [[Rollback]] takes a
+    * state the run recorded, so it is not modelled here. */
   def expected(rows: Seq[Row], op: Op): Option[Seq[Row]] = op match {
     case Insert(r) => Some((rows ++ r).sorted)
     case Update(lo, hi, d) => Some(rows.map {
@@ -229,6 +253,7 @@ object LakeModelSpec {
     case Delete(lo, hi) =>
       Some(rows.filterNot { case (k, _, _) => k.exists(x => x >= lo && x < hi) }.sorted)
     case Optimize(_) | RewriteDeletes => Some(rows)
+    case Rollback(_) => throw new IllegalArgumentException("a rollback restores a recorded state")
     case m: Merge =>
       def matches(k: Option[Long]) = m.source.filter(s => k.isDefined && s._1 == k)
       val dup = !m.insertOnly && rows.exists(r => matches(r._1).size > 1)
@@ -283,7 +308,8 @@ object LakeModelSpec {
     2 -> (for ((lo, hi) <- rangeGen; d <- Gen.choose(1, 9)) yield Update(lo, hi, d)),
     2 -> rangeGen.map { case (lo, hi) => Delete(lo, hi) },
     1 -> Gen.oneOf(None, Some(1), Some(2), Some(5)).map(Optimize(_)),
-    1 -> Gen.const(RewriteDeletes))
+    1 -> Gen.const(RewriteDeletes),
+    1 -> Gen.choose(1, 3).map(Rollback(_)))
 
   /** A failing scenario shrinks by dropping operations. */
   implicit val shrinkScenario: Shrink[Scenario] = Shrink.withLazyList { sc =>
