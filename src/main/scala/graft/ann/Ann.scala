@@ -328,10 +328,6 @@ object Ann {
   private val PqRerank = 100     // ADC candidates re-ranked exactly
   private val PqSalt = 32        // stage-1 fanout of the rerank cut
 
-  /** One codebook centroid as a VALUE (for the single-row broadcast
-    * frame below): the sub-centroid vector and its ||c||²/2. */
-  private case class BookCent(cell: Int, c_v: Seq[Double], half: Double)
-
   /** The joint codebooks as ONE broadcastable ROW —
     * `books[m+1]` = subspace m's K centroids, cell-ascending.
     * Round 20 (guide §2.4): carrying the books as a nested-array
@@ -343,13 +339,23 @@ object Ann {
     * groupBy(vec_id, m) exchange to argmax them back together —
     * rows that never needed to leave their partition, since the
     * argmax is per-vector. The HOF argmax visits the same K
-    * candidates per (vector, subspace) inside one row instead. */
+    * candidates per (vector, subspace) inside one row instead. Each
+    * centroid is a (cell, c_v, half = ||c||²/2) struct, built as a
+    * `Row` under an explicit schema so the relation needs no
+    * case-class encoder (whose generated projection does not compile
+    * for a private class). */
   private def booksRowDf(s: SparkSession,
       books: Seq[Seq[Centroid]]): DataFrame = {
-    import s.implicits._
-    Seq(books.map(_.map(ct =>
-      BookCent(ct.cell, ct.v.toSeq, ct.nrm * ct.nrm / 2)).toSeq).toSeq)
-      .toDF("books")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cent = StructType(Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("c_v", ArrayType(DoubleType, containsNull = false)),
+      StructField("half", DoubleType, nullable = false)))
+    val row = Row(books.map(_.map(ct =>
+      Row(ct.cell, ct.v.toSeq, ct.nrm * ct.nrm / 2))))
+    s.createDataFrame(java.util.List.of(row), StructType(Seq(
+      StructField("books", ArrayType(ArrayType(cent))))))
   }
 
   /** The [[PqM]] sub-vector slices of `vn`, computed once per row —

@@ -54,7 +54,7 @@ case class FgacRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // relation; no grant denies. The scan path below stays denied
       // for DESCRIBE-only principals (SecureCatalog.authorize).
       case d: org.apache.spark.sql.catalyst.plans.logical.DescribeRelation
-          if describeTarget(d.relation).exists(FgacRule.claims(spark, _)) =>
+          if describeTarget(d.relation).exists(FgacRule.claimsWhole(spark, _)) =>
         val parts = FgacRule.stripCat(spark,
           describeTarget(d.relation).get).map(_.toLowerCase)
         val name = parts.mkString(".")
@@ -141,11 +141,26 @@ object FgacRule {
     else parts
 
   /** Whether relation name `parts` is FGAC's to resolve: a graft view,
-    * a governed name or a resource link. */
-  def claims(spark: SparkSession, parts: Seq[String]): Boolean = {
+    * a governed name or a resource link — or one of those with a
+    * `branch_<ref>` / `tag_<ref>` suffix ([[refAddressed]]). */
+  def claims(spark: SparkSession, parts: Seq[String]): Boolean =
+    claimsWhole(spark, parts) || refAddressed(spark, parts).isDefined
+
+  private def claimsWhole(spark: SparkSession, parts: Seq[String]): Boolean = {
     val p = stripCat(spark, parts)
     SecureCatalog.isVisibleName(p) || graft.lakehouse.ViewRegistry.isView(p)
   }
+
+  /** Iceberg's ref-addressed identifier on a claimed name
+    * (`db.t.branch_dev`, `t.tag_v1`) that is not itself claimed:
+    * (the claimed name, suffix kind, ref). */
+  private def refAddressed(spark: SparkSession,
+      parts: Seq[String]): Option[(Seq[String], String, String)] =
+    if (parts.size < 2 || claimsWhole(spark, parts) ||
+        !claimsWhole(spark, parts.init)) None
+    else graft.lakehouse.LakeChanges.refSuffix(parts.last).map {
+      case (kind, ref) => (parts.init, kind, ref)
+    }
 
   /** THE name dispatch for a [[claims]]ed name, resolved for effective
     * principal `who`: a resource link resolves to its target, a graft
@@ -155,26 +170,40 @@ object FgacRule {
     * table's snapshot — current, or the one `version` / `timestamp`
     * names — else the governed plan) — as is for the admin session
     * and ungoverned targets, secured under `who`'s policy otherwise
-    * (throws when governed-but-ungranted). Shared by the session rule
-    * above and view expansion, which resolves a view's underlying
-    * names as the view's effective principal rather than the
-    * session's. */
+    * (throws when governed-but-ungranted). A ref-suffixed name reads
+    * the ref's head as `version`, authorized and audited on the
+    * claimed name like `VERSION AS OF 'ref'`. Shared by the session
+    * rule above and view expansion, which resolves a view's
+    * underlying names as the view's effective principal rather than
+    * the session's. */
   def resolveName(spark: SparkSession, parts: Seq[String], who: String,
       depth: Int = 0, version: Option[String] = None,
       timestamp: Option[Expression] = None): LogicalPlan = {
-    val lower = stripCat(spark, parts).map(_.toLowerCase)
+    val alias = stripCat(spark, parts).map(_.toLowerCase)
+    val ref = refAddressed(spark, parts)
+    val lower = ref.fold(alias)(r => stripCat(spark, r._1).map(_.toLowerCase))
     val name = lower.mkString(".")
     val target = SecureCatalog.resolveLink(name)
+    if (ref.isDefined && (version.isDefined || timestamp.isDefined))
+      throw new UnsupportedOperationException(
+        s"time travel on ref-addressed '${alias.mkString(".")}': the " +
+          "suffix already names the snapshot")
     if (graft.lakehouse.ViewRegistry.get(target).isDefined) {
-      if (version.isDefined || timestamp.isDefined)
+      if (version.isDefined || timestamp.isDefined || ref.isDefined)
         throw new UnsupportedOperationException(
           s"time travel on view '$name': a view has no snapshots")
       graft.lakehouse.ViewExpansion.expand(spark, lower, who, depth)
     } else {
       val policy =
         if (who.isEmpty) None else SecureCatalog.authorize(who, name)
-      val raw = SecureCatalog.relationOf(spark, target, version, timestamp)
-      SubqueryAlias(lower, policy.fold(raw)(
+      // the ref resolves after authorization, so a denied principal
+      // learns nothing about the table's refs
+      val pinned = ref.fold(version) { case (_, kind, r) =>
+        Some(graft.lakehouse.LakeRegistry.get(target).fold(r)(t =>
+          graft.lakehouse.LakeChanges.suffixRef(t, lower, kind, r)._1))
+      }
+      val raw = SecureCatalog.relationOf(spark, target, pinned, timestamp)
+      SubqueryAlias(alias, policy.fold(raw)(
         securePlan(_, raw, who, raw.output.map(_.name))))
     }
   }

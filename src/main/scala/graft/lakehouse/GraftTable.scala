@@ -181,6 +181,30 @@ final case class Snapshot(
     if (specHist.isEmpty) partitionCols
     else specHist.filter(_._1 <= fseq).lastOption
       .map(_._2).getOrElse(Nil)
+
+  /** This snapshot with every live row written fresh into `files`
+    * under the current column names: pending deletes, deletion
+    * vectors, the rename log and the spec history have nothing left to
+    * apply to (overwrite, truncate, replace and full compaction). */
+  def rewrittenAs(files: Seq[String]): Snapshot =
+    copy(files = files, dels = Nil, posDels = Nil, dvs = Map.empty,
+      renames = Nil, specHist = Nil)
+}
+
+/** The deletion vectors one write produced ([[GraftTable.writeDvs]]):
+  * data file → blob, each file's deleted-row count, and each new
+  * blob's byte size from the write's own listing. */
+private[lakehouse] final case class DvWrite(ptrs: Map[String, String],
+    cards: Map[String, Long], sizes: Map[String, Long]) {
+  def isEmpty: Boolean = ptrs.isEmpty
+
+  /** `s` with these vectors replacing its own on the same files. */
+  def over(s: Snapshot): Snapshot = s.copy(dvs = s.dvs ++ ptrs,
+    dvCards = s.dvCards ++ cards, dvSizes = s.dvSizes ++ sizes)
+}
+
+private[lakehouse] object DvWrite {
+  val none: DvWrite = DvWrite(Map.empty, Map.empty, Map.empty)
 }
 
 /** Another writer published a snapshot between this operation's
@@ -304,9 +328,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * resolution differs. */
   def onBranch(branch: String): GraftTable = {
     if (branch == writeBranch) return this
-    require(hasBranch(branch),
+    require(hasBranch(branch), refs.get(branch).fold(
       s"no branch '$branch' on this table — create it first " +
-        s"(ALTER TABLE … CREATE BRANCH $branch)")
+        s"(ALTER TABLE … CREATE BRANCH $branch)")(r =>
+      s"cannot commit to ${r._1} '$branch'"))
     new GraftTable(spark, rootStr, branch)
   }
 
@@ -410,7 +435,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     }
 
   /** Create a branch at snapshot `at` (default: current main head).
-    * Writes via [[appendToBranch]] advance only this branch; `main`
+    * Writes through [[onBranch]] advance only this branch; `main`
     * readers never see them until [[fastForward]] publishes. */
   def createBranch(name: String, at: Long = -1L): Unit =
     createRef("branch", name,
@@ -767,168 +792,148 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     out.result()
   }
 
-  /** Publish snapshot `expectedParent + 1` — optimistic concurrency:
-    * the publish is a compare-and-swap (no-overwrite `rename` on
-    * HDFS; atomic `link(2)` on local FS, where rename silently
-    * replaces — see [[publishNoOverwrite]]), so of two writers
-    * publishing over the same parent exactly one wins and the
-    * other gets [[CommitConflictException]]. The tmp name is
-    * per-attempt unique so racing writers cannot clobber each other's
-    * in-flight manifest bytes. */
-  private[graft] def commit(op: String, schema: StructType,
-      files: Seq[String], partitionCols: Seq[String] = Nil,
-      expectedParent: Long, delsOverride: Option[Seq[DeletePred]] = None,
-      refSnap: Option[Snapshot] = None,
-      branch: String = writeBranch,
-      renamesOverride: Option[Seq[Rename]] = None,
-      specHistOverride: Option[Seq[(Long, Seq[String])]] = None,
-      posDelsOverride: Option[Seq[String]] = None,
-      sizesExtra: Map[String, Long] = Map.empty,
-      idFloor: Long = 0L,
-      reshardManifests: Boolean = false,
-      dvsOverride: Option[Map[String, String]] = None,
-      dvCardsOverride: Option[Map[String, Long]] = None): Long =
-    // In-process writers (multiple handles over one root) serialize
-    // here, making check-then-publish a true CAS within the JVM.
-    // Across processes publishNoOverwrite is the CAS — atomic
-    // no-overwrite rename on HDFS, atomic link(2) on local FS;
-    // object stores need a catalog/lock service, the same contract
-    // as Iceberg's HadoopTableOperations.
-    GraftTable.commitLock(root.toString).synchronized {
-      commitLocked(op, schema, files, partitionCols, expectedParent,
-        delsOverride, refSnap, branch, renamesOverride, specHistOverride,
-        posDelsOverride, sizesExtra, idFloor, reshardManifests,
-        dvsOverride, dvCardsOverride)
+  /** Commit the next snapshot of this handle's branch — THE write
+    * entry point. The caller states the next snapshot as `edit`
+    * applied to `parent`, the snapshot its work was computed from,
+    * and writes only what changes: `_.copy(schema = s)` is a schema
+    * evolution, `s => s.copy(files = s.files ++ fs)` an append, a DML
+    * edit drops and adds data files, tombstones and deletion vectors
+    * ([[commitDml]]), a rollback is `_ => old`, and a shallow clone is
+    * `_ => src` over an empty parent.
+    *
+    * The committer stamps `id`, `parent`, `op`, `ts` and `txn` itself
+    * ([[pendingTxn]]) and derives the rest from the value
+    * ([[commitLocked]]):
+    *   - a data file is new exactly when the value has no `fileSeq`
+    *     for it; only new files (and tombstone files with no recorded
+    *     row count and size) get a footer read and this commit's
+    *     sequence — carried files keep theirs by reference;
+    *   - per-file entries of files that left the value, and vector
+    *     entries of dropped files, fall away;
+    *   - the id is allocated above the value's own `id` (a clone's
+    *     value is the source snapshot, so its ids start above every
+    *     carried sequence);
+    *   - `nextRowId` is the max of the value's and the parent's
+    *     counters (a rollback resumes from the parent's);
+    *   - the value's `shards` whose files are all still live are
+    *     carried; `shards = Nil` re-shards the whole list.
+    *
+    * Optimistic concurrency, one rebase loop: the publish is a
+    * compare-and-swap on the branch head. When another writer moved
+    * the head first, the loop loads the head, calls `rebase(head)` —
+    * which throws to refuse — and applies the same `edit` to the
+    * head. The loop runs outside the JVM commit lock, because the DML
+    * check ([[validateRebase]]) runs Spark jobs. The default refuses,
+    * as every commit does that cannot prove its edit still applies. */
+  private[graft] def commit(op: String, parent: Snapshot,
+      rebase: Snapshot => Unit = refuse)(edit: Snapshot => Snapshot): Long = {
+    var base = parent
+    var attempts = 8
+    while (true) {
+      val next = edit(base)
+      try {
+        // In-process writers (multiple handles over one root)
+        // serialize here, making check-then-publish a true CAS within
+        // the JVM. Across processes publishNoOverwrite is the CAS —
+        // atomic no-overwrite rename on HDFS, atomic link(2) on local
+        // FS; object stores need a catalog/lock service, the same
+        // contract as Iceberg's HadoopTableOperations.
+        return GraftTable.commitLock(root.toString).synchronized {
+          commitLocked(op, base, next)
+        }
+      } catch {
+        case e: CommitConflictException =>
+          attempts -= 1
+          if (attempts <= 0) throw e
+          val head = snapshot(headOf(writeBranch))
+          if (head.id == base.id) throw e // not a head race — rethrow
+          rebase(head)
+          base = head
+      }
     }
+    -1L // unreachable
+  }
 
-  private def commitLocked(op: String, schema: StructType,
-      files: Seq[String], partitionCols: Seq[String],
-      expectedParent: Long, delsOverride: Option[Seq[DeletePred]],
-      refSnap: Option[Snapshot], branch: String,
-      renamesOverride: Option[Seq[Rename]],
-      specHistOverride: Option[Seq[(Long, Seq[String])]],
-      posDelsOverride: Option[Seq[String]],
-      sizesExtra: Map[String, Long] = Map.empty,
-      idFloor: Long = 0L,
-      reshardManifests: Boolean = false,
-      dvsOverride: Option[Map[String, String]] = None,
-      dvCardsOverride: Option[Map[String, Long]] = None): Long = {
-    refs.get(branch).foreach { case (kind, _) =>
-      require(kind == "branch", s"cannot commit to $kind '$branch'")
+  /** The default rebase check: the head moved, so the commit is
+    * refused for the caller to re-run against the new head. */
+  private val refuse: Snapshot => Unit = head =>
+    throw new CommitConflictException(
+      s"$writeBranch head moved to ${head.id}: another writer committed " +
+        "first")
+
+  /** Publish `next` as the snapshot after `parent`. The tmp name is
+    * per-attempt unique so racing writers cannot clobber each other's
+    * in-flight manifest bytes; of two writers publishing over the
+    * same parent exactly one wins (no-overwrite `rename` on HDFS;
+    * atomic `link(2)` on local FS, where rename silently replaces —
+    * see [[publishNoOverwrite]]) and the other gets
+    * [[CommitConflictException]]. */
+  private def commitLocked(op: String, parent: Snapshot,
+      next: Snapshot): Long = {
+    refs.get(writeBranch).foreach { case (kind, _) =>
+      require(kind == "branch", s"cannot commit to $kind '$writeBranch'")
     }
-    val head = headOf(branch)
-    if (head != expectedParent)
+    val head = headOf(writeBranch)
+    if (head != parent.id)
       throw new CommitConflictException(
-        s"commit over snapshot $expectedParent, but $branch head is " +
+        s"commit over snapshot ${parent.id}, but $writeBranch head is " +
           s"$head: another writer committed first")
-    // idFloor lifts the allocator (shallowClone: the clone's ids must
-    // start ABOVE every carried add-sequence, or a later MoR equality
-    // delete on the clone — seq = its commit id — would compare below
-    // carried fileSeq values and silently skip the cloned files)
-    val id = math.max(maxSnapshotId, idFloor) + 1
-    // Carried-forward metadata comes from `refSnap` (rollback passes
-    // the snapshot being restored) or the parent. Per-file column
-    // stats are carried by reference for files already known (they
-    // are immutable) and harvested from the parquet footer for files
-    // new in this commit — the Iceberg manifest model, so a query can
+    val id = math.max(maxSnapshotId, next.id) + 1
+    val files = next.files
+    val posDels = next.posDels
+    // Per-file column stats, record counts and sizes are carried by
+    // reference for files the value already sequences (they are
+    // immutable) and harvested from the parquet footer for files new
+    // in this commit — the Iceberg manifest model, so a query can
     // prune files without opening them. Add-sequences likewise: a
     // carried file keeps its sequence, a new file is sequenced at
     // this commit (the anchor for merge-on-read delete scoping).
-    val ref = refSnap.orElse(
-      if (expectedParent > 0) Some(snapshot(expectedParent)) else None)
-    val refStats = ref.map(_.stats).getOrElse(Map.empty)
-    val refSeq = ref.map(_.fileSeq).getOrElse(Map.empty)
-    val refRows = ref.map(_.fileRows).getOrElse(Map.empty)
-    val refSizes = ref.map(_.fileSizes).getOrElse(Map.empty)
-    val dels = delsOverride.getOrElse(ref.map(_.dels).getOrElse(Nil))
-    val posDels =
-      posDelsOverride.getOrElse(ref.map(_.posDels).getOrElse(Nil))
-    val refPdSizes = ref.map(_.posDelSizes).getOrElse(Map.empty)
-    val refPdRows = ref.map(_.posDelRows).getOrElse(Map.empty)
-    // footer reads for NEW files run on a bounded pool — a wide
-    // append's commit latency is ceil(n/8) footer round-trips, not n
-    // sequential ones (Iceberg parallelizes its manifest stats the
-    // same way). One footer read yields the column bounds, the record
-    // count and the byte size; known files carry all three by
-    // reference (data files are immutable). Tombstone files new in
-    // this commit share the pool: their footers give the row count
-    // and size `delete_files` metadata and the broadcast gate read.
-    val newFiles = files.filterNot(refStats.contains)
+    // Tombstone files new in this commit share the footer pool: their
+    // footers give the row count and size `delete_files` metadata and
+    // the broadcast gate read.
+    val newFiles = files.filterNot(next.fileSeq.contains)
     val newTombs = posDels.filterNot(p =>
-      refPdRows.contains(p) && refPdSizes.contains(p))
-    val toHarvest = newFiles.map(_ -> schema) ++
+      next.posDelRows.contains(p) && next.posDelSizes.contains(p))
+    val toHarvest = newFiles.map(_ -> next.schema) ++
       newTombs.map(_ -> StructType(Nil))
-    type Harvest = (Option[Long], Map[String, ColStat], Option[Long])
-    val harvested: Map[String, Harvest] =
-      if (toHarvest.sizeIs <= 1)
-        toHarvest.map { case (f, sch) => f -> harvestFooter(f, sch) }.toMap
-      else {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(8, toHarvest.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          pool.invokeAll(toHarvest.map { case (f, sch) =>
-            (() => f -> harvestFooter(f, sch)): java.util.concurrent
-              .Callable[(String, Harvest)]
-          }.asJava).asScala.map(_.get).toMap
-        } finally pool.shutdown()
-      }
+    type Harvest = (Long, Map[String, ColStat], Long)
+    val harvested: Map[String, Harvest] = onFooterPool(toHarvest) {
+      case (f, sch) => f -> harvestFooter(f, sch)
+    }.toMap
     val stats = files.map { f =>
-      f -> refStats.getOrElse(f, harvested.get(f).map(_._2)
+      f -> next.stats.getOrElse(f, harvested.get(f).map(_._2)
         .getOrElse(Map.empty))
     }.toMap
-    val rows: Map[String, Long] = files.flatMap { f =>
-      refRows.get(f).orElse(harvested.get(f).flatMap(_._1)).map(f -> _)
-    }.toMap
-    val sizes: Map[String, Long] = files.flatMap { f =>
-      refSizes.get(f).orElse(sizesExtra.get(f))
-        .orElse(harvested.get(f).flatMap(_._3)).map(f -> _)
-    }.toMap
-    // tombstone sizes and row counts: carried for known files,
-    // footer-harvested ONCE above for files new in this commit —
-    // reads then gate their broadcast, and `delete_files` metadata
-    // answers, from the manifest alone
-    val pdSizes: Map[String, Long] = posDels.flatMap { p =>
-      refPdSizes.get(p).orElse(harvested.get(p).flatMap(_._3)).map(p -> _)
-    }.toMap
-    val pdRows: Map[String, Long] = posDels.flatMap { p =>
-      refPdRows.get(p).orElse(harvested.get(p).flatMap(_._1)).map(p -> _)
-    }.toMap
-    // deletion vectors: carried like posDels, except keyed by data
-    // file — a DV whose data file left the file list dies with it
-    // (compaction materialized it; a rewrite replaced the file)
+    def carriedOr(m: Map[String, Long], fs: Seq[String],
+        harvest: Harvest => Long): Map[String, Long] =
+      fs.flatMap { f =>
+        m.get(f).orElse(harvested.get(f).map(harvest)).map(f -> _)
+      }.toMap
+    val rows = carriedOr(next.fileRows, files, _._1)
+    val sizes = carriedOr(next.fileSizes, files, _._3)
+    val pdSizes = carriedOr(next.posDelSizes, posDels, _._3)
+    val pdRows = carriedOr(next.posDelRows, posDels, _._1)
+    // deletion vectors: keyed by data file — a DV whose data file
+    // left the file list dies with it (compaction materialized it; a
+    // rewrite replaced the file); blob sizes and cardinalities follow
+    // the live pointers
     val normFiles = files.map(normalize).toSet
-    val dvs: Map[String, String] =
-      dvsOverride.getOrElse(ref.map(_.dvs).getOrElse(Map.empty))
-        .filter { case (df, _) => normFiles(normalize(df)) }
-    val refDvSizes = ref.map(_.dvSizes).getOrElse(Map.empty)
-    val dvSizes: Map[String, Long] = dvs.values.toSeq.distinct.flatMap { b =>
-      refDvSizes.get(b)
-        .orElse(
-          try Some(fs.getFileStatus(new Path(b)).getLen)
-          catch { case scala.util.control.NonFatal(_) => None })
-        .map(b -> _)
-    }.toMap
-    // per-file deleted-row counts: scoped to live pointers like dvs
-    val dvCards: Map[String, Long] =
-      dvCardsOverride.getOrElse(ref.map(_.dvCards).getOrElse(Map.empty))
-        .filter { case (df, _) => dvs.contains(df) }
-    val renames =
-      renamesOverride.getOrElse(ref.map(_.renames).getOrElse(Nil))
-    val specHist =
-      specHistOverride.getOrElse(ref.map(_.specHist).getOrElse(Nil))
+    val dvs = next.dvs.filter { case (df, _) => normFiles(normalize(df)) }
+    val liveBlobs = dvs.values.toSet
+    val dvSizes = next.dvSizes.filter { case (b, _) => liveBlobs(b) }
+    val dvCards = next.dvCards.filter { case (df, _) => dvs.contains(df) }
     // ---- row lineage (Iceberg v3): first_row_id assignment --------
     // Every file new to the lineage gets a first-row-id range sized
     // by its record count (already footer-harvested above); carried
     // files keep theirs by reference. Rows materialized by a rewrite
     // carry their own ids and simply never use the file's range.
-    // The counter is the PARENT head's (monotonic — a rollback's
-    // refSnap may carry an older, smaller counter, and row id ranges
-    // must never be reused).
+    // The counter never moves backwards: a rollback's value may
+    // carry an older, smaller counter, and row id ranges must never
+    // be reused.
     val lineageOn =
       properties.get(GraftTable.RowLineageProp).contains("true")
     val lineageFiles = files.toSet
-    val refFirst = ref.map(_.firstRowIds).getOrElse(Map.empty)
+    val refFirst = next.firstRowIds
     // The allocator is TABLE-wide, not branch-wide (Iceberg v3 keeps
     // next-row-id in table-level metadata): concurrent commits on
     // divergent branches each base on their own head, so taking only
@@ -936,11 +941,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // and lineageChanges would mis-pair unrelated rows as updates.
     // Max over every live ref head's counter closes that — O(#refs)
     // cached lookups per lineage commit ([[GraftTable.nextRowIdOf]]).
-    val localNextRowId = math.max(
-      ref.map(_.nextRowId).getOrElse(0L),
-      if (refSnap.isDefined && expectedParent > 0)
-        snapshot(expectedParent).nextRowId
-      else 0L)
+    val localNextRowId = math.max(next.nextRowId, parent.nextRowId)
     val baseNextRowId =
       if (!lineageOn) localNextRowId
       else refs.values.foldLeft(localNextRowId) { case (m, (_, sid)) =>
@@ -954,7 +955,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         val fresh = files.filterNot(refFirst.contains).sorted.map { f =>
           val n = rows.getOrElse(f, throw new IllegalStateException(
             s"row lineage requires a record count for $f " +
-              "(unreadable parquet footer)"))
+              "(carried without one from a pre-count manifest)"))
           val e = f -> ctr
           ctr += n
           e
@@ -972,7 +973,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       else firstRowIds.keySet -- refFirst.keySet
     def renderFileEntry(body: StringBuilder, f: String, id: Long): Unit = {
       body ++= s"file=$f\n"
-      body ++= s"fseq=${refSeq.getOrElse(f, id)}\t$f\n"
+      body ++= s"fseq=${next.fileSeq.getOrElse(f, id)}\t$f\n"
       rows.get(f).foreach(n => body ++= s"frows=$n\t$f\n")
       sizes.get(f).foreach(n => body ++= s"fsize=$n\t$f\n")
       firstRowIds.get(f).foreach(n => body ++= s"frid=$n\t$f\n")
@@ -981,24 +982,21 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     }
     // ---- manifest-list planning (Iceberg's manifest-list model) ----
     // Shards are immutable and carried ACROSS snapshots by reference
-    // exactly like data files: a parent shard survives iff every file
-    // it names is still in this commit's file set — so an append's
-    // metadata write is O(new files) and a 0.1% delete rewrites 0.1%
-    // of the manifest entries, never the whole list. Entries not
-    // covered by a carried shard stay inline in the snapshot manifest
-    // until they reach the shard threshold, then spill into new
-    // partition-sorted shards (lo/hi bounds recorded for pruned
-    // reads). `reshardManifests` (OPTIMIZE … REWRITE MANIFESTS)
-    // drops every carried shard and re-sorts the whole file list into
-    // fresh range-disjoint shards.
+    // exactly like data files: a value's shard survives iff every
+    // file it names is still in this commit's file set — so an
+    // append's metadata write is O(new files) and a 0.1% delete
+    // rewrites 0.1% of the manifest entries, never the whole list.
+    // Entries not covered by a carried shard stay inline in the
+    // snapshot manifest until they reach the shard threshold, then
+    // spill into new partition-sorted shards (lo/hi bounds recorded
+    // for pruned reads). A value with no shards (OPTIMIZE … REWRITE
+    // MANIFESTS) re-sorts the whole file list into fresh
+    // range-disjoint shards.
     val shardThreshold = properties
       .get(GraftTable.ShardFilesProp).map(_.toInt).getOrElse(512)
     val fileSet = files.toSet
-    val carriedShards: Seq[ManifestShard] =
-      if (reshardManifests) Nil
-      else ref.map(_.shards).getOrElse(Nil)
-        .filter(s => s.files.forall(fileSet) &&
-          !s.files.exists(lineageFresh))
+    val carriedShards: Seq[ManifestShard] = next.shards
+      .filter(s => s.files.forall(fileSet) && !s.files.exists(lineageFresh))
     val coveredFiles = carriedShards.flatMap(_.files).toSet
     val uncovered = files.filterNot(coveredFiles)
     val makeShards = uncovered.size >= shardThreshold
@@ -1019,20 +1017,21 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         }.toSeq
     def bodyFor(id: Long, newShards: Seq[ManifestShard]): String = {
       val body = new StringBuilder
-      body ++= s"parent=$expectedParent\n"
+      body ++= s"parent=${parent.id}\n"
       body ++= s"op=$op\n"
       body ++= s"ts=${System.currentTimeMillis()}\n"
       // txn sits BEFORE the (arbitrarily long) schema json so it is
       // always within the header prefix that [[header]] reads
       pendingTxn.foreach { case (app, b) => body ++= s"txn=$app\t$b\n" }
-      body ++= s"schema=${schema.json}\n"
-      body ++= s"partcols=${partitionCols.mkString(",")}\n"
+      body ++= s"schema=${next.schema.json}\n"
+      body ++= s"partcols=${next.partitionCols.mkString(",")}\n"
       if (lineageOn || nextRowId > 0) body ++= s"nextrowid=$nextRowId\n"
       (carriedShards ++ newShards).foreach { s =>
         body ++= s"mshard=${s.files.size}\t${s.lo}\t${s.hi}\t${s.path}\n"
       }
       if (!makeShards) uncovered.foreach(renderFileEntry(body, _, id))
-      dels.foreach(d => body ++= s"dpred=${FileStatsJson.renderDel(d)}\n")
+      next.dels.foreach(d =>
+        body ++= s"dpred=${FileStatsJson.renderDel(d)}\n")
       posDels.foreach { p =>
         body ++= s"pdel=$p\n"
         pdSizes.get(p).foreach(n => body ++= s"pdsz=$n\t$p\n")
@@ -1046,9 +1045,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       // seq -1 marks "this commit": stamped with the id actually
       // published (branches share one id allocator, so the caller
       // cannot predict it)
-      renames.foreach(r => body ++=
+      next.renames.foreach(r => body ++=
         s"rename=${if (r.seq < 0) id else r.seq}\t${r.from}\t${r.to}\n")
-      specHist.foreach { case (seq, spec) => body ++=
+      next.specHist.foreach { case (seq, spec) => body ++=
         s"spechist=${if (seq < 0) id else seq}\t${spec.mkString(",")}\n" }
       body.toString
     }
@@ -1074,16 +1073,16 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         bodyFor(attempt, newShards).getBytes(StandardCharsets.UTF_8))
       finally out.close()
       if (publishNoOverwrite(tmp, snapPath(attempt))) { // atomic publish
-        advanceRefHead(branch, attempt, expectedParent)
+        advanceRefHead(writeBranch, attempt, parent.id)
         return attempt
       }
       fs.delete(tmp, false)
       newShards.foreach(s => fs.delete(new Path(s.path), false))
-      if (headOf(branch) != expectedParent)
+      if (headOf(writeBranch) != parent.id)
         throw new CommitConflictException(
           s"commit $attempt lost the publish race: another writer's " +
             "snapshot landed first")
-      attempt = math.max(maxSnapshotId, idFloor) + 1
+      attempt = math.max(maxSnapshotId, next.id) + 1
     }
     throw new IllegalStateException(
       s"publish of snapshot $attempt failed repeatedly with no " +
@@ -1153,11 +1152,12 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * validation and REBASE (Iceberg's `validate…`+retry model):
     * instead of failing the moment the branch head moved, the lost
     * race is re-examined against what the intervening commits
-    * actually touched, and when the sets are disjoint the same file
-    * delta is re-attached onto the new head. At 100 TB with
-    * per-partition ingest plus concurrent DML this is the difference
-    * between whole-table serialization of every DELETE/UPDATE/MERGE
-    * and writers only ever waiting on true overlap.
+    * actually touched ([[validateRebase]] as [[commit]]'s rebase
+    * check), and when the sets are disjoint the same DML edit is
+    * applied to the new head. At 100 TB with per-partition ingest
+    * plus concurrent DML this is the difference between whole-table
+    * serialization of every DELETE/UPDATE/MERGE and writers only ever
+    * waiting on true overlap.
     *
     * - `readSet`: normalized data-file paths whose CONTENT this DML
     *   read to compute its writes (CoW: the rewritten files; MoR: the
@@ -1168,53 +1168,28 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     *   tombstones would miss rows it moved).
     * - `dropped`: normalized paths this DML removes from the file
     *   list (⊆ readSet; empty for MoR).
-    * - `added` / `newTombs`: data / tombstone files this DML wrote —
-    *   file names are attempt-unique ([[writeData]]), so re-attaching
-    *   them to a different parent is safe.
+    * - `added` / `newTombs` / `newDvs`: data files, tombstone files
+    *   and deletion vectors this DML wrote — file names are
+    *   attempt-unique ([[writeData]]), so re-attaching them to a
+    *   different parent is safe. Merged vectors were computed against
+    *   `base`'s; the rebase check proves the head agrees on every
+    *   file this DML read, so the head's vectors plus ours is the
+    *   correct union.
     * - `predSql`: the row filter, for the serializable-isolation
-    *   append check ([[isolationFor]], bound once at entry).
-    *
-    * Retries are bounded; exhaustion rethrows the conflict. */
+    *   append check ([[isolationFor]], bound once at entry). */
   private def commitDml(op: String, base: Snapshot,
       readSet: Set[String], dropped: Set[String], added: Seq[String],
       newTombs: Seq[String] = Nil, predSql: Option[String] = None,
-      branch: String = writeBranch,
-      newDvs: Map[String, (String, Long)] = Map.empty): Long = {
+      newDvs: DvWrite = DvWrite.none): Long = {
     // bound once at entry; a concurrent setProperties cannot flip the
     // isolation semantics of an in-flight DML between retries
     val isolation = isolationFor(op)
-    var parent = base
-    var remaining = 8
-    while (true) {
-      val files = parent.files.filterNot(f => dropped(normalize(f))) ++ added
-      try {
-        return commit(op, base.schema, files, base.partitionCols,
-          expectedParent = parent.id,
-          posDelsOverride =
-            if (newTombs.isEmpty) None
-            else Some(parent.posDels ++ newTombs),
-          branch = branch,
-          // merged vectors were computed against base.dvs;
-          // validateRebase proves head.dvs agrees on every touched
-          // file before a retry reaches here, so parent.dvs ++ ours
-          // is the correct union on every rebase
-          dvsOverride =
-            if (newDvs.isEmpty) None
-            else Some(parent.dvs ++ newDvs.view.mapValues(_._1)),
-          dvCardsOverride =
-            if (newDvs.isEmpty) None
-            else Some(parent.dvCards ++ newDvs.view.mapValues(_._2)))
-      } catch {
-        case e: CommitConflictException =>
-          remaining -= 1
-          if (remaining <= 0) throw e
-          val head = snapshot(headOf(branch))
-          if (head.id == parent.id) throw e // not a head race — rethrow
-          validateRebase(op, base, head, readSet, predSql, isolation)
-          parent = head
-      }
+    commit(op, base,
+        validateRebase(op, base, _, readSet, predSql, isolation)) { s =>
+      newDvs.over(s.copy(
+        files = s.files.filterNot(f => dropped(normalize(f))) ++ added,
+        posDels = s.posDels ++ newTombs))
     }
-    -1L // unreachable
   }
 
   /** Decide whether a DML computed against `base` may rebase onto
@@ -2605,11 +2580,12 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   def append(df: DataFrame): Long = append(df, Nil)
 
   private[lakehouse] def append(df: DataFrame, createPartitionCols: Seq[String]): Long = {
-    val snap = if (currentSnapshotId == 0) None else Some(currentSnapshot)
-    val schema = snap.map(_.schema).getOrElse(df.schema)
-    val parts = snap.map(_.partitionCols).getOrElse(createPartitionCols)
-    val files = writeData(aligned(df, schema), currentSnapshotId + 1, parts)
-    appendCommit(files, schema, parts, snap.map(_.id).getOrElse(0L))
+    val head = currentSnapshotId
+    val snap =
+      if (head == 0) GraftTable.emptySnapshot(df.schema, createPartitionCols)
+      else snapshot(head)
+    appendFiles(snap, writeData(aligned(df, snap.schema), head + 1,
+      snap.partitionCols))
   }
 
   /** Append `df` as if this writer had captured snapshot `parent` and
@@ -2620,51 +2596,28 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val base = snapshot(parent)
     val files = writeData(aligned(df, base.schema),
       currentSnapshotId + 1, base.partitionCols)
-    appendCommit(files, base.schema, base.partitionCols, parent)
+    appendFiles(base, files)
   }
 
-  /** Publish an append of `newFiles` over `parent`, rebasing onto the
-    * current snapshot when another writer committed first: appended
-    * files are valid regardless of what landed in between, so a
-    * rebase just re-lists them over the new base (Iceberg's
-    * fast-append retry — appends NEVER lose to concurrent appends).
-    * Aborts if the schema or partition spec changed underneath. */
-  @annotation.tailrec
-  private def appendCommit(newFiles: Seq[String], schema: StructType,
-      parts: Seq[String], parent: Long, attempts: Int = 8,
-      branch: String = writeBranch): Long = {
-    val base = if (parent == 0) Nil else snapshot(parent).files
-    val res =
-      try Right(commit("append", schema, base ++ newFiles, parts,
-        expectedParent = parent, branch = branch))
-      catch { case e: CommitConflictException =>
-        if (attempts <= 1) throw e
-        val cur = snapshot(headOf(branch))
-        if (cur.schema != schema || cur.partitionCols != parts)
-          throw new CommitConflictException(
-            "append cannot rebase: schema or partition spec changed " +
-              "under the commit")
-        Left(cur.id)
-      }
-    res match {
-      case Right(id)        => id
-      case Left(newParent)  =>
-        appendCommit(newFiles, schema, parts, newParent, attempts - 1,
-          branch)
-    }
-  }
+  /** Publish an append of `files` over `parent`, rebasing onto the
+    * head when another writer committed first: appended files are
+    * valid regardless of what landed in between, so a rebase just
+    * lists them over the new head (Iceberg's fast-append retry —
+    * appends NEVER lose to concurrent appends). Refuses if the schema
+    * or partition spec changed underneath. */
+  private def appendFiles(parent: Snapshot, files: Seq[String]): Long =
+    commit("append", parent, head =>
+      if (head.schema != parent.schema ||
+          head.partitionCols != parent.partitionCols)
+        throw new CommitConflictException(
+          "append cannot rebase: schema or partition spec changed " +
+            "under the commit")
+    )(s => s.copy(files = s.files ++ files))
 
-  /** Append to a named branch (Iceberg's branch writes, the WAP
-    * workflow at table granularity): data lands on the branch head,
-    * `main` readers never see it until [[fastForward]] publishes.
-    * Same fast-append rebase semantics as [[append]]. */
-  def appendToBranch(df: DataFrame, branch: String): Long = {
-    val head = snapshot(headOf(branch))
-    val files = writeData(aligned(df, head.schema),
-      maxSnapshotId + 1, head.partitionCols)
-    appendCommit(files, head.schema, head.partitionCols, head.id,
-      branch = branch)
-  }
+  /** Append to a named branch: `onBranch(branch).append(df)` (Iceberg's
+    * branch writes, the WAP workflow at table granularity). */
+  def appendToBranch(df: DataFrame, branch: String): Long =
+    onBranch(branch).append(df)
 
   /** Append rows whose schema adds columns: the table schema evolves
     * to the union (existing fields keep their position and type; new
@@ -2684,10 +2637,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           "may still exist in live data files; compact() first")
     }
     val schema = StructType(snap.schema.fields ++ added.map(_.copy(nullable = true)))
-    val id = currentSnapshotId + 1
-    val files = writeData(aligned(df, schema), id, snap.partitionCols)
-    commit("append", schema, snap.files ++ files, snap.partitionCols,
-      expectedParent = snap.id)
+    val files = writeData(aligned(df, schema), snap.id + 1, snap.partitionCols)
+    commit("append", snap)(s =>
+      s.copy(schema = schema, files = s.files ++ files))
   }
 
   // ---- schema evolution (ALTER TABLE) -------------------------------
@@ -2834,8 +2786,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           StructField(parts.last, f.dataType, nullable = true)))
       }
     }
-    commit("evolve-add", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id)
+    commit("evolve-add", snap)(_.copy(schema = newSchema))
   }
 
   /** ALTER TABLE DROP COLUMN — metadata-only: the schema loses the
@@ -2890,10 +2841,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       if (parts.length == 1) s"${GraftTable.DroppedPrefix}$resolved"
       else (parts.init :+
         s"${GraftTable.DroppedPrefix}${parts.last}").mkString(".")
-    commit("evolve-drop", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id,
-      renamesOverride = Some(snap.renames :+
-        Rename(-1L, resolved, tombstone)))
+    commit("evolve-drop", snap)(s => s.copy(schema = newSchema,
+      renames = s.renames :+ Rename(-1L, resolved, tombstone)))
   }
 
   /** ALTER TABLE RENAME COLUMN — metadata-only: a [[Rename]] record
@@ -2933,9 +2882,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       mapStructAt(snap.schema, parts.init.toSeq)(st =>
         StructType(st.fields.map(f =>
           if (f.name == parts.last) f.copy(name = to) else f)))
-    commit("evolve-rename", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id,
-      renamesOverride = Some(snap.renames :+ Rename(-1L, resolved, target)))
+    commit("evolve-rename", snap)(s => s.copy(schema = newSchema,
+      renames = s.renames :+ Rename(-1L, resolved, target)))
   }
 
   /** ALTER TABLE … ALTER COLUMN … TYPE — Iceberg's SAFE type-promotion
@@ -2977,8 +2925,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       mapStructAt(snap.schema, parts.init.toSeq)(st =>
         StructType(st.fields.map(f =>
           if (f.name == parts.last) f.copy(dataType = to) else f)))
-    commit("evolve-type", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id)
+    commit("evolve-type", snap)(_.copy(schema = newSchema))
   }
 
   /** `ALTER TABLE t ALTER COLUMN c SET NOT NULL` (Delta pairs this
@@ -3010,8 +2957,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
             .withMetadata(f.metadata)
             .putBoolean(GraftTable.NotNullKey, true).build())
       else f))
-    commit("evolve-notnull", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id)
+    commit("evolve-notnull", snap)(_.copy(schema = newSchema))
   }
 
   /** `ALTER TABLE t ALTER COLUMN c DROP NOT NULL` — reopens the gate:
@@ -3031,8 +2977,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         mb.remove(GraftTable.NotNullKey)
         f.copy(nullable = true, metadata = mb.build())
       } else f))
-    commit("evolve-notnull", newSchema,
-      snap.files, snap.partitionCols, expectedParent = snap.id)
+    commit("evolve-notnull", snap)(_.copy(schema = newSchema))
   }
 
   /** Partition spec evolution (Iceberg's headline "change the
@@ -3061,9 +3006,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val hist =
       if (snap.specHist.nonEmpty) snap.specHist
       else Seq((0L, snap.partitionCols))
-    commit("evolve-partition", snap.schema, snap.files, newSpec,
-      expectedParent = snap.id,
-      specHistOverride = Some(hist :+ ((-1L, newSpec))))
+    commit("evolve-partition", snap)(_.copy(partitionCols = newSpec,
+      specHist = hist :+ ((-1L, newSpec))))
   }
 
   /** Replace all rows; the table schema is kept and `df` must align
@@ -3072,15 +3016,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * check on every other write path). */
   def overwrite(df: DataFrame): Long = {
     val snap = currentSnapshot
-    val id = currentSnapshotId + 1
-    // a full overwrite replaces every row, so pending merge-on-read
-    // deletes and the rename log have nothing left to apply to
-    commit("overwrite", snap.schema,
-      writeData(aligned(df, snap.schema), id, snap.partitionCols),
-      snap.partitionCols, expectedParent = snap.id,
-      delsOverride = Some(Nil), renamesOverride = Some(Nil),
-      specHistOverride = Some(Nil), posDelsOverride = Some(Nil),
-      dvsOverride = Some(Map.empty))
+    val files = writeData(aligned(df, snap.schema), snap.id + 1,
+      snap.partitionCols)
+    commit("overwrite", snap)(_.rewrittenAs(files))
   }
 
   /** SQL `TRUNCATE TABLE`: drop every live row in one METADATA-ONLY
@@ -3090,12 +3028,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * [[overwrite]] (pending MoR deletes, DVs, and the rename log
     * have nothing left to apply to). */
   def truncate(): Long = {
-    val snap = currentSnapshot
-    commit("truncate", snap.schema, Nil, snap.partitionCols,
-      expectedParent = snap.id,
-      delsOverride = Some(Nil), renamesOverride = Some(Nil),
-      specHistOverride = Some(Nil), posDelsOverride = Some(Nil),
-      dvsOverride = Some(Map.empty))
+    commit("truncate", currentSnapshot)(_.rewrittenAs(Nil))
   }
 
   /** SQL `TRUNCATE TABLE … PARTITION (p='v', …)`: drop every file
@@ -3280,13 +3213,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       require(df.schema.fieldNames.contains(f.col),
         s"partition source column ${f.col} is not in the new schema"))
     val snap = currentSnapshot
-    val id = currentSnapshotId + 1
-    commit("replace", df.schema,
-      writeData(df, id, partitionBy), partitionBy,
-      expectedParent = snap.id,
-      delsOverride = Some(Nil), renamesOverride = Some(Nil),
-      specHistOverride = Some(Nil), posDelsOverride = Some(Nil),
-      dvsOverride = Some(Map.empty))
+    val files = writeData(df, snap.id + 1, partitionBy)
+    commit("replace", snap)(_.rewrittenAs(files)
+      .copy(schema = df.schema, partitionCols = partitionBy))
   }
 
   // ---- copy-on-write DML -------------------------------------------
@@ -3387,9 +3316,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // own op string ("delete-eq", vs the tombstone path's
     // "delete-mor"): operators reading `history`/`snapshots` metadata
     // can tell the two delete styles apart without a manifest parse
-    commit("delete-eq", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = snap.id,
-      delsOverride = Some(snap.dels :+ DeletePred(snap.id + 1, predSql)))
+    commit("delete-eq", snap)(s =>
+      s.copy(dels = s.dels :+ DeletePred(snap.id + 1, predSql)))
   }
 
   /** Merge-on-read DELETE with POSITION tombstones (Iceberg v2's
@@ -3468,7 +3396,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * Only the (file → blob) pointer map ships to the driver —
     * O(#touched files) commit metadata, like every manifest. */
   private def writeDvs(rows: DataFrame, snap: Snapshot,
-      commitId: Long): Map[String, (String, Long)] = {
+      commitId: Long): DvWrite = {
     import graft.functions.NativeExprs
     import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
     val newBits = rows
@@ -3497,14 +3425,15 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   }
 
   /** Write a (`_file`, `_bitmap`) relation as this commit's blob
-    * parquet and return the pointer map (manifest-form data file →
-    * manifest-form blob). The map comes from a column-pruned
+    * parquet and return the vectors written: the pointer map
+    * (manifest-form data file → manifest-form blob), each file's
+    * cardinality and each blob's size. The map comes from a column-pruned
     * read-back — only (_file, file_path) are decoded, the bitmaps
     * are never re-read — with both sides inverted to their exact
     * manifest strings through [[metaPath]] (its documented dual), so
     * every later comparison is exact, not re-derived. */
   private def writeDvBlobs(rel: DataFrame, snap: Snapshot,
-      commitId: Long): Map[String, (String, Long)] = {
+      commitId: Long): DvWrite = {
     import graft.functions.NativeExprs
     import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
     val dir = new Path(root, f"data/commit-$commitId%05d-dv-" +
@@ -3517,14 +3446,17 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         columnOf(NativeExprs.BitsetCardinality(
           expressionOf(col("_bitmap")))).as("_card"))
       .write.parquet(dir.toString)
-    val blobByMeta = fs.listStatus(dir).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet"))
-      .map(p => metaPath(p) -> p).toMap
+    // the listing also sizes every new blob for the manifest
+    val blobs = fs.listStatus(dir)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(b => b.getPath.toString -> b.getLen)
+    val blobByMeta = blobs.map { case (p, _) => metaPath(p) -> p }.toMap
     // candidates survived stats pruning but no ROW matched: nothing
     // was written, nothing to commit (the empty dir is orphan-scale)
-    if (blobByMeta.isEmpty) return Map.empty
+    if (blobByMeta.isEmpty) return DvWrite.none
     val fileByMeta = snap.files.map(f => metaPath(f) -> f).toMap
-    spark.read.schema(StructType(GraftTable.DvBlobSchema.fields :+
+    val written = spark.read
+      .schema(StructType(GraftTable.DvBlobSchema.fields :+
         org.apache.spark.sql.types.StructField("_card",
           org.apache.spark.sql.types.LongType)))
       .parquet(dir.toString)
@@ -3535,8 +3467,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           s"deletion vector names unknown data file ${r.getString(0)}"))
         val blob = blobByMeta.getOrElse(r.getString(1), sys.error(
           s"deletion vector blob outside its commit dir ${r.getString(1)}"))
-        df -> (blob, r.getLong(2))
-      }.toMap
+        (df, blob, r.getLong(2))
+      }
+    DvWrite(written.map(w => w._1 -> w._2).toMap,
+      written.map(w => w._1 -> w._3).toMap, blobs.toMap)
   }
 
   /** Consolidate deletion-vector blobs (the DV leg of `OPTIMIZE t
@@ -3553,10 +3487,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val repointed = writeDvBlobs(
       currentDvRelation(snap).select(col("_file"), col("_bitmap")),
       snap, snap.id + 1)
-    commit("rewrite-dv", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = snap.id,
-      dvsOverride = Some(repointed.view.mapValues(_._1).toMap),
-      dvCardsOverride = Some(repointed.view.mapValues(_._2).toMap))
+    commit("rewrite-dv", snap)(_.copy(dvs = repointed.ptrs,
+      dvCards = repointed.cards, dvSizes = repointed.sizes))
   }
 
   /** The CURRENT (`_file`, `_bitmap`) deletion-vector relation of
@@ -3644,8 +3576,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       val (tombs, dvs) =
         if (vector)
           (Nil, writeDvs(matching, snap, id))
-        else (writeTombstones(matching, id),
-          Map.empty[String, (String, Long)])
+        else (writeTombstones(matching, id), DvWrite.none)
       val lineageCols =
         if (!lineageOn) Nil
         else Seq(col(GraftTable.RowIdColName),
@@ -4089,7 +4020,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     def committed(matched: Option[DataFrame], ins: Option[DataFrame],
         readSet: Set[String], dropped: Set[String],
         tombs: Seq[String],
-        dvs: Map[String, (String, Long)] = Map.empty): Long = {
+        dvs: DvWrite = DvWrite.none): Long = {
       // lineage tables align to schema + the two lineage columns
       // (null on the insert side: fresh rows inherit file-range ids)
       val outSchema =
@@ -4166,9 +4097,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
             if (vectorStyle) Nil
             else touched.map(writeTombstones(_, id)).getOrElse(Nil)
           val mergeDvs =
-            if (vectorStyle) touched.map(writeDvs(_, snap, id))
-              .getOrElse(Map.empty[String, (String, Long)])
-            else Map.empty[String, (String, Long)]
+            if (vectorStyle)
+              touched.map(writeDvs(_, snap, id)).getOrElse(DvWrite.none)
+            else DvWrite.none
           val images = touched.map { t =>
             val kept =
               if (deleteIdx.isEmpty) t
@@ -4349,13 +4280,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // the rewrite lands every row in fresh files under CURRENT column
     // names, so the rename log clears too (retired names are reusable
     // again — no live file carries their bytes)
-    commit("compact", snap.schema,
-      writeData(arranged, id, snap.partitionCols, widen = false,
-        validate = false),
-      snap.partitionCols, expectedParent = snap.id,
-      delsOverride = Some(Nil), renamesOverride = Some(Nil),
-      specHistOverride = Some(Nil), posDelsOverride = Some(Nil),
-      dvsOverride = Some(Map.empty))
+    val files = writeData(arranged, id, snap.partitionCols,
+      widen = false, validate = false)
+    commit("compact", snap)(_.rewrittenAs(files))
   }
 
   /** The file count a full rewrite targets: the manifest's data
@@ -4401,10 +4328,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * are untouched — at 100 TB this moves kilobytes of metadata, not
     * bytes of data. */
   def rewriteManifests(): Long = {
-    val snap = currentSnapshot
-    commit("rewrite-manifests", snap.schema, snap.files,
-      snap.partitionCols, expectedParent = snap.id,
-      reshardManifests = true)
+    commit("rewrite-manifests", currentSnapshot)(_.copy(shards = Nil))
   }
 
   def compactSmall(smallBytes: Long): Long = {
@@ -4432,10 +4356,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       if (snap.partitionCols.isEmpty)
         cowSource(snap, small).repartition(n)
       else cowSource(snap, small)
-    commit("binpack", snap.schema,
-      big ++ writeData(packed, id, snap.partitionCols,
-        widen = snap.partitionCols.nonEmpty, validate = false),
-      snap.partitionCols, expectedParent = snap.id)
+    val files = writeData(packed, id, snap.partitionCols,
+      widen = snap.partitionCols.nonEmpty, validate = false)
+    commit("binpack", snap)(_.copy(files = big ++ files))
   }
 
   /** Partition-scoped compaction (Iceberg's `rewrite_data_files`
@@ -4471,18 +4394,18 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       if (snap.partitionCols.isEmpty)
         cowSource(snap, cand).repartition(numFiles)
       else cowSource(snap, cand)
-    commit("compact-where", snap.schema,
-      carried ++ writeData(packed, id, snap.partitionCols,
-        widen = snap.partitionCols.nonEmpty, validate = false),
-      snap.partitionCols, expectedParent = snap.id)
+    val files = writeData(packed, id, snap.partitionCols,
+      widen = snap.partitionCols.nonEmpty, validate = false)
+    commit("compact-where", snap)(_.copy(files = carried ++ files))
   }
 
   /** Zero-copy SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE`,
     * Iceberg's snapshot-ref pattern): a NEW table at `newRoot` whose
     * first snapshot references the source's current data files,
     * tombstones, and per-file metadata BY REFERENCE — no byte is
-    * copied and no footer is re-read (`refSnap` carries stats, rows,
-    * sizes, and add-sequences), so at 100 TB the clone is one
+    * copied and no footer is re-read (the commit value is the source
+    * snapshot itself: stats, rows, sizes, and add-sequences ride
+    * along), so at 100 TB the clone is one
     * manifest write. The clone then evolves independently: its DML
     * writes files under ITS root; and cleanup is ownership-scoped
     * ([[expireSnapshots]] only deletes files under the deleting
@@ -4500,11 +4423,12 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val t2 = new GraftTable(spark, newRoot)
     require(t2.currentSnapshotId == 0,
       s"clone target already holds a table at $newRoot")
-    // idFloor: the clone's id space starts above the source's, so
-    // every later clone commit sequences ABOVE the carried fileSeq
-    // values (MoR delete scoping stays correct on cloned files)
-    t2.commit("clone", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = 0L, refSnap = Some(snap), idFloor = snap.id)
+    // the value is the source snapshot itself, so the clone's id
+    // space starts above the source's: every later clone commit
+    // sequences ABOVE the carried fileSeq values (MoR delete scoping
+    // stays correct on cloned files)
+    t2.commit("clone",
+      GraftTable.emptySnapshot(snap.schema, snap.partitionCols))(_ => snap)
     t2.setProperties(properties)
     t2
   }
@@ -4523,8 +4447,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val snap = currentSnapshot
     val missing = snap.files.filterNot(snap.fileSizes.contains)
     if (missing.isEmpty) return snap.id
-    commit("backfill-sizes", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = snap.id, sizesExtra = statFileSizes(missing))
+    val stated = statFileSizes(missing)
+    commit("backfill-sizes", snap)(s =>
+      s.copy(fileSizes = stated ++ s.fileSizes))
   }
 
   /** The distributed stat pass alone — NO commit: executors issue the
@@ -4723,8 +4648,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           .mkString(", ")} — adopting it would silently null-fill " +
           "those columns for its rows")
     }
-    commit("add-files", snap.schema, snap.files ++ newFiles,
-      snap.partitionCols, expectedParent = snap.id)
+    commit("add-files", snap)(s => s.copy(files = s.files ++ newFiles))
   }
 
   // ---- table statistics (ANALYZE) ----------------------------------
@@ -4925,8 +4849,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     val merged = fs.listStatus(dir).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
       .map(_.toString).toSeq.sorted
-    commit("rewrite-pdel", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = snap.id, posDelsOverride = Some(merged))
+    commit("rewrite-pdel", snap)(_.copy(posDels = merged))
   }
 
   /** The Morton z-value of `cols` as a Column: each column scales to
@@ -5074,10 +4997,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       val segs = layoutSegs(f).toSet
       replaced.exists(_.forall(segs.contains))
     }
-    val id = currentSnapshotId + 1
-    commit("overwrite_partitions", snap.schema,
-      keep ++ writeData(aligned(df, snap.schema), id, parts),
-      parts, expectedParent = snap.id)
+    val files = writeData(aligned(df, snap.schema), snap.id + 1, parts)
+    commit("overwrite_partitions", snap)(_.copy(files = keep ++ files))
   }
 
   /** Roll the table back to snapshot `id`: a NEW commit whose file
@@ -5085,14 +5006,11 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * rollback — history is preserved, nothing is deleted, and the
     * bad commits remain inspectable via time travel). */
   def rollback(id: Long): Long = {
-    val cur = currentSnapshotId
-    val snap = snapshot(id)
-    // restore the old snapshot's delete set and file sequences along
-    // with its file list — rolling back past a delete-mor must
+    val old = snapshot(id)
+    // the old snapshot whole: its delete set and file sequences come
+    // back with its file list — rolling back past a delete-mor must
     // un-delete, and past an append must re-scope
-    commit("rollback", snap.schema, snap.files, snap.partitionCols,
-      expectedParent = cur, delsOverride = Some(snap.dels),
-      refSnap = Some(snap), posDelsOverride = Some(snap.posDels))
+    commit("rollback", currentSnapshot)(_ => old)
   }
 
   /** Cherry-pick snapshot `id`'s APPEND onto the current head
@@ -5157,14 +5075,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
           "files would duplicate or resurrect them")
       cur0 = hd.parent
     }
-    // stats/rows/sizes for the picked files live in the PICKED
-    // snapshot's manifest — pass it as sizesExtra-equivalent via
-    // refSnap? No: refSnap would also replace the delete/rename
-    // carries. The commit's footer harvest covers files missing from
-    // the parent's stats on the bounded pool — O(picked files), the
-    // same cost an append of those files paid.
-    commit("cherry-pick", cur.schema, cur.files ++ added,
-      cur.partitionCols, expectedParent = cur.id)
+    // the picked files enter unsequenced, so the commit sequences
+    // them anew and reads their footers on the bounded pool —
+    // O(picked files), the same cost an append of those files paid
+    commit("cherry-pick", cur)(s => s.copy(files = s.files ++ added))
   }
 
   // ---- write-audit-publish (staged commits) ------------------------
@@ -5223,7 +5137,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       throw new CommitConflictException(
         "cannot publish staged commit: schema or partition spec " +
           "changed since staging")
-    val id = appendCommit(st.files, cur.schema, cur.partitionCols, cur.id)
+    val id = appendFiles(cur, st.files)
     fs.delete(stagedPath(token), false)
     id
   }
@@ -5334,121 +5248,124 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
 
   // ---- column-stats data skipping ---------------------------------
 
-  /** Harvest the record count and per-column min/max/null-count for
-    * one data file from its parquet footer (merged across row
-    * groups). Driver-side, one footer read per NEW file per commit —
-    * the same cost point where Iceberg builds its manifests.
-    * Unsupported column types (and strings longer than 64 chars,
-    * which would bloat the manifest and whose truncation is not a
-    * valid bound) simply record no bound — pruning stays
-    * conservative. Any footer trouble degrades to "no stats", never
-    * a failed commit. */
-  /** Top-level field names from each file's parquet footer, on the
-    * same bounded pool as [[commit]]'s stats harvest. Unlike the
-    * stats harvest, a failed footer read here THROWS — this feeds
-    * [[addFiles]]'s per-file schema check, where "couldn't validate"
-    * must refuse the adoption, not degrade. */
-  private def footerFieldNames(files: Seq[String])
-      : Seq[(String, Seq[String])] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    def one(file: String): (String, Seq[String]) = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(file), spark.sparkContext.hadoopConfiguration))
-      try {
-        import scala.jdk.CollectionConverters._
-        file -> reader.getFooter.getFileMetaData.getSchema
-          .getFields.asScala.map(_.getName).toSeq
-      } finally reader.close()
-    }
-    if (files.sizeIs <= 1) files.map(one)
+  /** `read` over `items` on a bounded pool: footer reads are
+    * round-trips, so n files cost ceil(n/8) of them, not n (Iceberg
+    * parallelizes its manifest stats the same way). A failed read
+    * fails the whole call. */
+  private def onFooterPool[A, B](items: Seq[A])(read: A => B): Seq[B] =
+    if (items.sizeIs <= 1) items.map(read)
     else {
       val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(8, files.size))
+        .newFixedThreadPool(math.min(8, items.size))
       try {
         import scala.jdk.CollectionConverters._
-        pool.invokeAll(files.map { f =>
-          (() => one(f)): java.util.concurrent
-            .Callable[(String, Seq[String])]
-        }.asJava).asScala.map(_.get).toSeq
+        pool.invokeAll(items.map(i =>
+          (() => read(i)): java.util.concurrent.Callable[B]).asJava)
+          .asScala.map(_.get).toSeq
       } finally pool.shutdown()
     }
+
+  /** Top-level field names from each file's parquet footer, on the
+    * footer pool — this feeds [[addFiles]]'s per-file schema check,
+    * where "couldn't validate" must refuse the adoption. */
+  private def footerFieldNames(files: Seq[String])
+      : Seq[(String, Seq[String])] = onFooterPool(files) { file =>
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(file), spark.sparkContext.hadoopConfiguration))
+    try {
+      import scala.jdk.CollectionConverters._
+      file -> reader.getFooter.getFileMetaData.getSchema
+        .getFields.asScala.map(_.getName).toSeq
+    } finally reader.close()
   }
 
+  /** Harvest the record count, the byte size and per-column
+    * min/max/null-count for one data file from its parquet footer
+    * (merged across row groups). Driver-side, one footer read per NEW
+    * file per commit — the same cost point where Iceberg builds its
+    * manifests. Unsupported column types, non-finite float bounds and
+    * strings longer than 64 chars (which would bloat the manifest and
+    * whose truncation is not a valid bound) simply record no bound —
+    * pruning stays conservative. A footer that cannot be read fails
+    * the commit: an entry without counts would read as zero rows and
+    * bytes. */
   private def harvestFooter(file: String, schema: StructType)
-      : (Option[Long], Map[String, ColStat], Option[Long]) =
+      : (Long, Map[String, ColStat], Long) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.spark.sql.types._
+    val byName = schema.fields.map(f => f.name -> f.dataType).toMap
+    val inFile = HadoopInputFile.fromPath(
+      new Path(file), spark.sparkContext.hadoopConfiguration)
+    // the input file already stat'ed for its length (the footer
+    // read needs it) — capture it for the manifest at zero cost
+    val fileLen = inFile.getLength
+    val reader = ParquetFileReader.open(inFile)
     try {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import org.apache.parquet.io.api.Binary
-      import org.apache.spark.sql.types._
-      val byName = schema.fields.map(f => f.name -> f.dataType).toMap
-      val inFile = HadoopInputFile.fromPath(
-        new Path(file), spark.sparkContext.hadoopConfiguration)
-      // the input file already stat'ed for its length (the footer
-      // read needs it) — capture it for the manifest at zero cost
-      val fileLen = inFile.getLength
-      val reader = ParquetFileReader.open(inFile)
-      try {
-        val acc = scala.collection.mutable.Map.empty[String,
-          (String, Option[(String, String)], Long)] // kind, (mn,mx), nulls
-        var rowCount = 0L
-        reader.getFooter.getBlocks.forEach { block =>
-          rowCount += block.getRowCount
-          block.getColumns.forEach { cc =>
-            val name = cc.getPath.toDotString
-            byName.get(name).foreach { dt =>
-              val st = cc.getStatistics
-              if (st != null) {
-                // parquet reports "null count not recorded" as unset;
-                // -1 marks it unknown (≠ "provably zero nulls")
-                val nulls = if (st.isNumNullsSet) st.getNumNulls else -1L
-                val bound: Option[(String, String, String)] = // kind, mn, mx
-                  if (!st.hasNonNullValue) None
-                  else (dt, st.genericGetMin, st.genericGetMax) match {
-                    case (ByteType | ShortType | IntegerType | LongType |
-                          DateType | TimestampType | TimestampNTZType,
-                          mn: Number, mx: Number) =>
-                      Some(("n", mn.toString, mx.toString))
-                    case (FloatType | DoubleType, mn: Number, mx: Number) =>
-                      Some(("n", BigDecimal(mn.doubleValue).toString,
-                        BigDecimal(mx.doubleValue).toString))
-                    case (StringType, mn: Binary, mx: Binary) =>
-                      val (a, b) =
-                        (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
-                      if (a.length <= 64 && b.length <= 64) Some(("s", a, b))
-                      else None
-                    case _ => None
-                  }
-                acc.get(name) match {
-                  case None =>
-                    acc(name) = bound match {
-                      case Some((k, mn, mx)) => (k, Some((mn, mx)), nulls)
-                      case None => (kindOf(dt), None, nulls)
-                    }
-                  case Some((k, prev, pn)) =>
-                    val merged = (prev, bound) match {
-                      case (Some((pmn, pmx)), Some((_, mn, mx))) =>
-                        Some((minOf(k, pmn, mn), maxOf(k, pmx, mx)))
-                      case _ => None // any block without bounds → no bounds
-                    }
-                    // any block with an unknown null count poisons
-                    // the file's total to unknown
-                    val mergedNulls =
-                      if (pn < 0 || nulls < 0) -1L else pn + nulls
-                    acc(name) = (k, merged, mergedNulls)
+      val acc = scala.collection.mutable.Map.empty[String,
+        (String, Option[(String, String)], Long)] // kind, (mn,mx), nulls
+      var rowCount = 0L
+      reader.getFooter.getBlocks.forEach { block =>
+        rowCount += block.getRowCount
+        block.getColumns.forEach { cc =>
+          val name = cc.getPath.toDotString
+          byName.get(name).foreach { dt =>
+            val st = cc.getStatistics
+            if (st != null) {
+              // parquet reports "null count not recorded" as unset;
+              // -1 marks it unknown (≠ "provably zero nulls")
+              val nulls = if (st.isNumNullsSet) st.getNumNulls else -1L
+              val bound: Option[(String, String, String)] = // kind, mn, mx
+                if (!st.hasNonNullValue) None
+                else (dt, st.genericGetMin, st.genericGetMax) match {
+                  case (ByteType | ShortType | IntegerType | LongType |
+                        DateType | TimestampType | TimestampNTZType,
+                        mn: Number, mx: Number) =>
+                    Some(("n", mn.toString, mx.toString))
+                  // a non-finite bound has no decimal rendering:
+                  // withhold this column's bounds (no pruning)
+                  case (FloatType | DoubleType, mn: Number, mx: Number)
+                      if java.lang.Double.isFinite(mn.doubleValue) &&
+                        java.lang.Double.isFinite(mx.doubleValue) =>
+                    Some(("n", BigDecimal(mn.doubleValue).toString,
+                      BigDecimal(mx.doubleValue).toString))
+                  case (StringType, mn: Binary, mx: Binary) =>
+                    val (a, b) =
+                      (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
+                    if (a.length <= 64 && b.length <= 64) Some(("s", a, b))
+                    else None
+                  case _ => None
                 }
+              acc.get(name) match {
+                case None =>
+                  acc(name) = bound match {
+                    case Some((k, mn, mx)) => (k, Some((mn, mx)), nulls)
+                    case None => (kindOf(dt), None, nulls)
+                  }
+                case Some((k, prev, pn)) =>
+                  val merged = (prev, bound) match {
+                    case (Some((pmn, pmx)), Some((_, mn, mx))) =>
+                      Some((minOf(k, pmn, mn), maxOf(k, pmx, mx)))
+                    case _ => None // any block without bounds → no bounds
+                  }
+                  // any block with an unknown null count poisons
+                  // the file's total to unknown
+                  val mergedNulls =
+                    if (pn < 0 || nulls < 0) -1L else pn + nulls
+                  acc(name) = (k, merged, mergedNulls)
               }
             }
           }
         }
-        (Some(rowCount), acc.map { case (c, (k, b, n)) =>
-          c -> ColStat(k, b.map(_._1), b.map(_._2), n)
-        }.toMap, Some(fileLen))
-      } finally reader.close()
-    } catch {
-      case scala.util.control.NonFatal(_) => (None, Map.empty, None)
-    }
+      }
+      (rowCount, acc.map { case (c, (k, b, n)) =>
+        c -> ColStat(k, b.map(_._1), b.map(_._2), n)
+      }.toMap, fileLen)
+    } finally reader.close()
+  }
 
   private def kindOf(dt: DataType): String = dt match {
     case _: org.apache.spark.sql.types.StringType => "s"
@@ -6590,6 +6507,12 @@ object GraftTable {
   private def commitLock(root: String): Object =
     commitLocks.computeIfAbsent(root, _ => new Object)
 
+  /** The parent of a table's first commit: snapshot 0, no files. */
+  private def emptySnapshot(schema: StructType,
+      partitionCols: Seq[String]): Snapshot =
+    Snapshot(id = 0L, parent = 0L, op = "", schema = schema, files = Nil,
+      partitionCols = partitionCols)
+
   /** Per-root cache of manifest HEADERS (parent, ts, op) — the
     * ancestry walk behind timestamp travel reads these instead of
     * opening one manifest per step. Manifests are immutable once
@@ -6801,7 +6724,7 @@ object GraftTable {
     PartField.parseAll(partitionBy).foreach(f =>
       require(schema.fieldNames.contains(f.col),
         s"partition source column ${f.col} is not in the table schema"))
-    t.commit("create", schema, Nil, partitionBy, expectedParent = 0L)
+    t.commit("create", emptySnapshot(schema, partitionBy))(identity)
     t
   }
 

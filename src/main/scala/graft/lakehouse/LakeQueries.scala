@@ -2788,8 +2788,8 @@ object LakeQueries {
     val t = GraftTable.create(s, tmp("lake_br"), part(0)) // snap 1
     t.createTag("v1")
     t.createBranch("ingest")
-    t.appendToBranch(part(1), "ingest")
-    t.appendToBranch(part(2), "ingest")
+    t.onBranch("ingest").append(part(1))
+    t.onBranch("ingest").append(part(2))
     require(t.read().count() == part(0).count(),
       "branch writes must be invisible on main")
     require(t.readRef("ingest").count() ==
@@ -3370,10 +3370,9 @@ object LakeQueries {
         "ALL_COMMITTED" else "LOST_UPDATE"
     // stale DML: this commit, if published, would wipe the table —
     // the conflict check must reject it and leave the table intact
-    val snap = t2.currentSnapshot
     val staleDml =
       try {
-        t2.commit("delete", snap.schema, Nil, Nil, expectedParent = 1L)
+        t2.commit("delete", t2.snapshot(1L))(_.copy(files = Nil))
         "COMMITTED"
       } catch { case _: CommitConflictException => "CONFLICT" }
     require(t1.read().count() == counts06, "stale DML must not publish")

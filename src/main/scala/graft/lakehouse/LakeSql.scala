@@ -2079,7 +2079,8 @@ object LakeChanges {
     * view, or governed name — and neither may the TABLE PREFIX be
     * shadowed/viewed/governed. Whatever wins the prefix's READS owns
     * its suffixes too; governed prefixes always refuse by falling
-    * through to the policy layer. */
+    * through to the policy layer ([[graft.fgac.FgacRule]] resolves
+    * their ref suffixes under the reader's policy). */
   private def suffixClaimable(spark: SparkSession,
       parts: Seq[String]): Boolean =
     parts.size >= 2 &&
@@ -2099,13 +2100,36 @@ object LakeChanges {
 
   /** The `branch_<name>` / `tag_<name>` ref suffix, when `last` is
     * one (Iceberg's ref-addressed identifiers): (wanted kind, ref). */
-  private[lakehouse] def refSuffix(last: String): Option[(String, String)] = {
+  private[graft] def refSuffix(last: String): Option[(String, String)] = {
     val l = last.toLowerCase
     if (l.startsWith("branch_") && last.length > 7)
       Some(("branch", last.substring(7)))
     else if (l.startsWith("tag_") && last.length > 4)
       Some(("tag", last.substring(4)))
     else None
+  }
+
+  /** The exact name and head snapshot of the ref a `kind` suffix on
+    * `table` names in `t`. Ref names match case-insensitively like
+    * every other SQL identifier, and a ref-less table still answers
+    * `branch_main` (every table has an implicit main, like Iceberg).
+    * Wrong-kind addressing (`branch_x` naming a tag, or vice versa)
+    * refuses loudly like Iceberg — a tag read through a branch
+    * identifier would invite a later write to it. */
+  private[graft] def suffixRef(t: GraftTable, table: Seq[String],
+      kind: String, ref: String): (String, Long) = {
+    val hit = t.refs.find(_._1.equalsIgnoreCase(ref))
+      .orElse(
+        if (t.refs.isEmpty && ref.equalsIgnoreCase("main"))
+          Some("main" -> ("branch", t.headOf("main")))
+        else None)
+      .getOrElse(throw new IllegalArgumentException(
+        s"ref '$ref' does not exist on '${table.mkString(".")}' " +
+          s"(refs: ${t.refs.keys.toSeq.sorted.mkString(", ")})"))
+    require(hit._2._1 == kind,
+      s"'${hit._1}' is a ${hit._2._1}, not a $kind — address " +
+        s"it as ${hit._2._1}_${hit._1}")
+    (hit._1, hit._2._2)
   }
 
   def resolve(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
@@ -2165,24 +2189,10 @@ object LakeChanges {
         val t = LakeRegistry.get(LakeRegistry.keyOf(spark,
           u.multipartIdentifier.init).get).get
         val (wantKind, ref) = refSuffix(u.multipartIdentifier.last).get
-        // identifier case travels as typed; ref names match
-        // case-insensitively like every other SQL identifier. A
-        // ref-less table still answers `branch_main` (every table
-        // has an implicit main, like Iceberg).
-        val hit = t.refs.find(_._1.equalsIgnoreCase(ref))
-          .orElse(
-            if (t.refs.isEmpty && ref.equalsIgnoreCase("main"))
-              Some("main" -> ("branch", t.headOf("main")))
-            else None)
-          .getOrElse(throw new IllegalArgumentException(
-            s"ref '$ref' does not exist on " +
-              s"'${u.multipartIdentifier.init.mkString(".")}' " +
-              s"(refs: ${t.refs.keys.toSeq.sorted.mkString(", ")})"))
-        require(hit._2._1 == wantKind,
-          s"'${hit._1}' is a ${hit._2._1}, not a $wantKind — address " +
-            s"it as ${hit._2._1}_${hit._1}")
+        val (_, head) =
+          suffixRef(t, u.multipartIdentifier.init, wantKind, ref)
         SubqueryAlias(u.multipartIdentifier.map(_.toLowerCase),
-          t.readAt(hit._2._2).queryExecution.analyzed)
+          t.readAt(head).queryExecution.analyzed)
 
       case tvf: org.apache.spark.sql.catalyst.analysis.UnresolvedTableValuedFunction
           if Set("table_changes", "table_changes_lineage")

@@ -88,6 +88,25 @@ class AnnSpec extends AnyFunSuite {
     assert(compiled == neighbors(spark))
   }
 
+  test("PQ codebook row compiles: no interpreted fallback, same neighbors") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val strict = spark.newSession()
+    strict.conf.set(
+      org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key, "CODEGEN_ONLY")
+    for (run <- Seq[(SparkSession, String) => DataFrame](
+        graft.ann.Ann.pqTopK, graft.ann.Ann.ivfPqTopK)) {
+      def neighbors(s: SparkSession) = {
+        SparkSession.setActiveSession(s)
+        try run(s, sf).select("q_id", "neighbor_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        finally SparkSession.setActiveSession(spark)
+      }
+      val compiled = neighbors(strict)
+      assert(compiled.nonEmpty)
+      assert(compiled == neighbors(spark))
+    }
+  }
+
   test("PQ recall@5 against exact top-5 (ADC + exact re-rank)") {
     val got = graft.ann.Ann.pqTopK(spark, sf)
       .select("q_id", "neighbor_id").collect()

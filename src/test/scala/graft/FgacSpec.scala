@@ -323,6 +323,48 @@ class FgacSpec extends AnyFunSuite {
     }
   }
 
+  test("a branch_/tag_ suffix on a governed lake name resolves the ref " +
+      "under the reader's policy, audited; a wrong-kind suffix refuses") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_gbr").toString
+    spark.sql(s"CREATE TABLE gbr_t (k BIGINT, secret STRING) USING graft " +
+      s"LOCATION '$loc'")
+    spark.sql("INSERT INTO gbr_t VALUES (-1, 'x')")
+    val t = graft.lakehouse.LakeRegistry.get("gbr_t").get
+    t.createTag("first")
+    t.createBranch("dev")
+    t.onBranch("dev").append(spark.createDataFrame(Seq((2L, "y"), (3L, "z")))
+      .toDF("k", "secret"))
+    SecureCatalog.governTable("gbr_t", spark.table("gbr_t"))
+    SecureCatalog.register(Principal("gbr_reader",
+      grants = Map("gbr_t" -> TablePolicy("gbr_t", rowFilter = Some("k > 2"),
+        allowedColumns = Some(Seq("k"))))))
+    SecureCatalog.register(Principal("gbr_none"))
+    try {
+      def read(who: String, sql: String): Seq[String] =
+        FgacQueries.asPrincipal(spark, who)(rowsOf(spark.sql(sql)))
+      assert(read("", "SELECT count(*) FROM gbr_t.branch_dev") == Seq("[3]"))
+      assert(read("", "SELECT * FROM gbr_t.tag_first") == Seq("[-1,x]"))
+      assert(read("", "SELECT * FROM gbr_t") == Seq("[-1,x]"),
+        "main is unchanged by the branch write")
+      val seen = AuditLog.entries.size
+      assert(read("gbr_reader", "SELECT * FROM gbr_t.branch_dev") == Seq("[3]"))
+      assert(AuditLog.entries.drop(seen).exists(a =>
+        a.principal == "gbr_reader" && a.action == "SELECT" &&
+          a.resource == "gbr_t" && a.outcome == "ALLOWED"))
+      val seen2 = AuditLog.entries.size
+      intercept[AccessDeniedException](
+        read("gbr_none", "SELECT * FROM gbr_t.branch_dev"))
+      assert(AuditLog.entries.drop(seen2).exists(a =>
+        a.principal == "gbr_none" && a.outcome == "DENIED"))
+      val e = intercept[IllegalArgumentException](
+        read("", "SELECT * FROM gbr_t.branch_first"))
+      assert(e.getMessage.contains("is a tag"), e.getMessage)
+    } finally {
+      SecureCatalog.ungovern("gbr_t")
+      spark.sql("DROP TABLE gbr_t")
+    }
+  }
+
   test("ALTER TABLE ADD COLUMNS through a governed lake name: all-column " +
       "and mask-only grants see the new column, a column-listed grant " +
       "does not") {
@@ -763,17 +805,18 @@ class FgacSpec extends AnyFunSuite {
       val ea = intercept[Exception](spark.sql(
         "CALL graft.system.ancestors_of('customer')"))
       assert(ea.getMessage.contains("governed"), ea.getMessage)
-      // ref-suffixed identifiers never claim a governed prefix:
-      // the probe dies in resolution (name unknown), it does NOT
-      // hand a principal the branch head policy-free
-      for (sfx <- Seq("branch_main", "tag_v1")) {
-        val er = intercept[Exception](
-          FgacQueries.asPrincipal(spark, "analyst_col") {
-            spark.sql(s"SELECT * FROM customer.$sfx").collect()
-          })
-        assert(er.isInstanceOf[org.apache.spark.sql.AnalysisException],
-          s"a governed prefix must fall through unresolved: $er")
+      // a ref-suffixed identifier on a governed prefix resolves under
+      // the reader's policy: it never hands a principal the branch
+      // head policy-free
+      def asCol(sql: String) = FgacQueries.asPrincipal(spark, "analyst_col") {
+        val df = spark.sql(sql)
+        (df.columns.toSeq, rowsOf(df))
       }
+      assert(asCol("SELECT * FROM customer.branch_main") ==
+        asCol("SELECT * FROM customer"))
+      // a ref the table lacks fails loudly
+      intercept[IllegalArgumentException](
+        asCol("SELECT * FROM customer.tag_v1"))
     } finally {
       graft.lakehouse.LakeRegistry.unregister("customer")
       graft.lakehouse.LakeRegistry.unregister("pd.sink")

@@ -1063,9 +1063,8 @@ class LakehouseSpec extends AnyFunSuite {
     assert(t.read().select("k").as[Long].collect().sorted
       .sameElements(Array(0L, 1L, 2L, 3L, 4L)), "no append may be lost")
     // a DML commit built on a stale snapshot must conflict, not publish
-    val snap = t.currentSnapshot
     intercept[graft.lakehouse.CommitConflictException](
-      t.commit("delete", snap.schema, Nil, Nil, expectedParent = 2L))
+      t.commit("delete", t.snapshot(2L))(_.copy(files = Nil)))
     assert(t.currentSnapshotId == 5 && t.read().count() == 5)
   }
 
@@ -1440,23 +1439,37 @@ class LakehouseSpec extends AnyFunSuite {
     assert(t.readWhereIn("k", nullDim, "dk").count() == 0)
   }
 
-  test("MoR position-delete rebase: disjoint targets compose, " +
-      "same-file tombstones conflict") {
-    val t = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0)))
-    t.append(Seq((3L, "c", 3.0), (4L, "d", 4.0)).toDF("k", "tag", "v"))
-    val base = t.currentSnapshot
-    t.deleteMoRPos("k = 1")            // tombstones the first file
-    t.deleteMoRPosAt(base, "k = 3")    // stale, targets the second file
-    assert(t.read().select("k").as[Long].collect().sorted
-      .sameElements(Array(2L, 4L)), "both MoR deletes must apply")
-    // overlap: both tombstone rows of the SAME file — the second
-    // writer may have tombstoned the same row; a second update would
-    // diverge, so file-level overlap is a true conflict
-    val base2 = t.currentSnapshot
-    t.deleteMoRPos("k = 2")
-    val e = intercept[graft.lakehouse.CommitConflictException](
-      t.deleteMoRPosAt(base2, "k = 2 AND v >= 0"))
-    assert(e.getMessage.contains("position deletes target"))
+  // one input per positional delete shape: tombstone files and
+  // deletion vectors rebase through the same DML edit and check
+  for ((style, shape, overlap) <- Seq(
+      ("position", "tombstones", "position deletes target"),
+      ("vector", "vectors", "deletion vector landed"))) {
+    test(s"MoR $style-delete rebase: disjoint targets compose, " +
+        s"same-file $shape conflict") {
+      val t = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+      t.append(Seq((3L, "c", 3.0), (4L, "d", 4.0)).toDF("k", "tag", "v"))
+      def deleteAt(base: graft.lakehouse.Snapshot, pred: String): Long =
+        if (style == "vector") t.deleteMoRDvAt(base, pred)
+        else t.deleteMoRPosAt(base, pred)
+      val base = t.currentSnapshot
+      deleteAt(t.currentSnapshot, "k = 1") // deletes from the first file
+      deleteAt(base, "k = 3")    // stale, targets the second file
+      assert(t.read().select("k").as[Long].collect().sorted
+        .sameElements(Array(2L, 4L)), "both MoR deletes must apply")
+      if (style == "vector") {
+        val head = t.currentSnapshot
+        assert(head.dvs.size == 2 && head.dvCards.values.sum == 2,
+          s"the rebased vector must join the winner's: ${head.dvCards}")
+      }
+      // overlap: both delete rows of the SAME file — the second
+      // writer may have deleted the same row; a second update would
+      // diverge, so file-level overlap is a true conflict
+      val base2 = t.currentSnapshot
+      deleteAt(t.currentSnapshot, "k = 2")
+      val e = intercept[graft.lakehouse.CommitConflictException](
+        deleteAt(base2, "k = 2 AND v >= 0"))
+      assert(e.getMessage.contains(overlap), e.getMessage)
+    }
   }
 
   test("write-audit-publish: staged rows invisible, publish rebases, abandon cleans") {
@@ -1787,6 +1800,54 @@ class LakehouseSpec extends AnyFunSuite {
     t3.compact(1) // snap 3: materialized
     t3.rollback(2) // snap 4: delete predicate active again
     assert(t3.currentSnapshot.dels.nonEmpty && t3.read().count() == 1)
+  }
+
+  test("footer harvest: a ±Infinity double drops only that column's " +
+      "bounds, never the file's counts") {
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_spec").toString,
+      Seq((1L, "a", 1.0), (2L, "b", Double.PositiveInfinity),
+        (3L, "c", Double.NegativeInfinity)).toDF("k", "tag", "v").coalesce(1))
+    val snap = t.currentSnapshot
+    assert(snap.files.size == 1)
+    val f = snap.files.head
+    assert(snap.fileRows.get(f).contains(3L), "record count must survive")
+    assert(snap.fileSizes.get(f).exists(_ > 0), "byte size must survive")
+    assert(snap.stats(f)("k") == graft.lakehouse.ColStat("n", Some("1"),
+      Some("3"), 0L), "finite columns keep their bounds")
+    assert(snap.stats(f).get("v").forall(s => s.mn.isEmpty && s.mx.isEmpty),
+      "a non-finite bound is withheld")
+    // a withheld bound cannot prune: the infinite rows stay reachable
+    assert(t.readWhere("v > 5").count() == 1)
+    assert(t.readWhere("v < -5").count() == 1)
+    val parts = t.partitionsMeta().select("record_count", "total_bytes")
+      .collect()
+    assert(parts.length == 1 && parts.head.getLong(0) == 3L &&
+      parts.head.getLong(1) > 0L, parts.toSeq)
+  }
+
+  test("a commit reads only its new files' footers: a carried file " +
+      "without column stats is not read again") {
+    // an array-only file yields no column stats, so it has no `fstat`
+    // entry — keying "new" on the stats map would re-read it forever
+    val t = GraftTable.create(spark,
+      Files.createTempDirectory("graft_spec").toString,
+      Seq(Seq(1, 2), Seq(3)).toDF("xs"))
+    val carried = t.currentSnapshot
+    assert(carried.files.forall(carried.stats.get(_).forall(_.isEmpty)))
+    val moved = carried.files.map { f =>
+      val p = java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(f).toUri.getPath)
+      p -> Files.move(p, p.resolveSibling(p.getFileName.toString + ".aside"))
+    }
+    val id =
+      try t.append(Seq(Seq(4)).toDF("xs"))
+      finally moved.foreach { case (p, aside) => Files.move(aside, p) }
+    val snap = t.snapshot(id)
+    assert(carried.files.forall(f =>
+      snap.fileRows.get(f) == carried.fileRows.get(f) &&
+        snap.fileSizes.get(f) == carried.fileSizes.get(f)))
+    assert(t.read().count() == 3)
   }
 
   test("stats skipping: manifest min/max prunes files, results unchanged") {
