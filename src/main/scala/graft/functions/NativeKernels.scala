@@ -466,9 +466,9 @@ object NativeKernels {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       bitsetPositions(bs))
 
-  /** Ascending set-bit positions — expands a deletion vector into the
-    * skip-list shape the SPJ per-split reader walks. Driver-side only
-    * (plain JVM arrays), gated by the caller on blob bytes. */
+  /** Ascending set-bit positions of a bitmap — the deleted rows of a
+    * deletion vector, as the `graft_bitset_positions` SQL function
+    * and `position_deletes` metadata list them. */
   def bitsetPositions(bs: Array[Byte]): Array[Long] = {
     val out = Array.newBuilder[Long]
     var i = 0

@@ -102,10 +102,10 @@ final case class Snapshot(
       * ([[GraftTable.deleteMoRPos]]); cleared when [[GraftTable.compact]]
       * materializes. */
     posDels: Seq[String] = Nil,
-    /** On-disk byte size per position-delete file — feeds the
-      * broadcast-vs-shuffle gate of the tombstone anti-join without
-      * per-file stats at read time. Same carry-forward/fallback
-      * contract as [[fileSizes]]. */
+    /** On-disk byte size per position-delete file — sizes the
+      * tombstone scan and `delete_files` metadata without per-file
+      * stats at read time. Same carry-forward/fallback contract as
+      * [[fileSizes]]. */
     posDelSizes: Map[String, Long] = Map.empty,
     fileSeq: Map[String, Long] = Map.empty,
     fileRows: Map[String, Long] = Map.empty,
@@ -131,13 +131,13 @@ final case class Snapshot(
       * blob path, one blob per file, bit n set = row n deleted. The
       * production form of position deletes at high DML rates: the
       * read-side cost is an O(1) bit probe per row against a
-      * file-joined blob instead of an anti-join on a (file, pos)
-      * tombstone relation, and DELETE #k rewrites one blob per
+      * file-joined blob (readers fold tombstones into the same
+      * per-file bitmaps), and DELETE #k rewrites one blob per
       * touched file instead of appending a k-th tombstone file.
       * Cleared by compaction like every other MoR artifact. */
     dvs: Map[String, String] = Map.empty,
-    /** On-disk byte size per DV blob — the broadcast-vs-shuffle gate
-      * datum, same contract as [[posDelSizes]]. */
+    /** On-disk byte size per DV blob — sizes the blob scan, same
+      * contract as [[posDelSizes]]. */
     dvSizes: Map[String, Long] = Map.empty,
     /** Deleted-row count per vectored data file (the bitmap's
       * cardinality, computed in the write aggregate) — Iceberg
@@ -1432,59 +1432,90 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   /** Apply `snap`'s positional deletes to `df` — the one statement of
     * what a deletion vector or tombstone kills. `df` carries each row's
     * data file (`_metadata.file_path` form) in `fileCol` and its row
-    * index in `idxCol`. Readers pass `live = None` and the killed rows
-    * are dropped; [[carriedDiff]] names a boolean column, keeps every
-    * row and clears the column on the killed ones, which marks one
-    * read at both endpoints of a range. Deletion vectors apply
-    * first: a LEFT join keyed by FILE ONLY (one row per vectored file —
-    * metadata-scale, vs one row per deleted row for tombstones) plus an
-    * O(1) codegen'd bit probe per row; a row from an un-vectored file
-    * sees a NULL bitmap and survives through the coalesce. Tombstones
-    * then apply as one anti-join on (file, row position), or a left
-    * join when marking (a snapshot's tombstones name a position at
-    * most once: DML tombstones only live rows) — they name
-    * exact rows of exact files, so files appended after the delete
-    * need no scoping. Both sides broadcast only while demonstrably
-    * small: a table that has absorbed heavy MoR DML can hold billions
-    * of (file, pos) rows, and forcing those through a driver-collected
-    * broadcast is an OOM. On-disk tombstone size is the cheap,
-    * already-known proxy (paths dictionary-compress, so in-memory is
-    * larger — the 32 MB gate leaves that margin); beyond it the join
-    * falls back to a plain shuffle join on the same keys. */
+    * index in `idxCol`. Both shapes arrive as one per-file bitmap
+    * relation ([[deleteBitmaps]]): one LEFT join keyed by FILE ONLY
+    * (one row per file with a pending delete — metadata-scale), then
+    * one O(1) codegen'd bit probe per row; a row of a file with no
+    * pending delete sees a NULL bitmap and survives through the
+    * coalesce. Readers pass `live = None` and the killed rows are
+    * dropped; [[carriedDiff]] names a boolean column, keeps every row
+    * and clears the column wherever the probe hits, which marks one
+    * read at both endpoints of a range. The bitmaps broadcast only
+    * under the one positional-delete gate
+    * ([[GraftTable.deleteBitmapBytes]]):
+    * a table that has absorbed heavy MoR DML can name billions of
+    * deleted rows, and forcing those through a driver-collected
+    * broadcast is an OOM; beyond the gate the join shuffles on the
+    * same key. */
   private def dropDeleted(snap: Snapshot, df: DataFrame, fileCol: String,
-      idxCol: String, live: Option[String]): DataFrame = {
-    def kill(d: DataFrame, dead: Column): DataFrame = live.fold(
-      d.filter(not(dead)))(c => d.withColumn(c, col(c) && not(dead)))
-    val withDv = if (snap.dvs.isEmpty) df else {
+      idxCol: String, live: Option[String]): DataFrame =
+    if (snap.posDels.isEmpty && snap.dvs.isEmpty) df
+    else {
       import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
+      val small = GraftTable.deleteBitmapBytes(snap)
+        .exists(_ <= GraftTable.PosDelBroadcastBytes)
       // internal names under the reserved _gdv prefix: a user column
-      // named `_bitmap` must not make this join ambiguous
-      val dv = currentDvRelation(snap)
+      // named `_file` or `_bitmap` must not make this join ambiguous
+      val bits = deleteBitmaps(snap, small)
         .select(col("_file").as(GraftTable.DvFileCol),
           col("_bitmap").as(GraftTable.DvBitmapCol))
-      val hinted =
-        if (dvHeapBytes(snap).exists(_ <= GraftTable.PosDelBroadcastBytes))
-          broadcast(dv)
-        else dv
-      kill(df.join(hinted, col(fileCol) === col(GraftTable.DvFileCol), "left"),
-        coalesce(
-          columnOf(graft.functions.NativeExprs.BitsetGet(
-            expressionOf(col(GraftTable.DvBitmapCol)),
-            expressionOf(col(idxCol)))),
-          lit(false)))
+      val joined = df.join(if (small) broadcast(bits) else bits,
+        col(fileCol) === col(GraftTable.DvFileCol), "left")
+      val dead = coalesce(
+        columnOf(graft.functions.NativeExprs.BitsetGet(
+          expressionOf(col(GraftTable.DvBitmapCol)),
+          expressionOf(col(idxCol)))),
+        lit(false))
+      live.fold(joined.filter(not(dead)))(c =>
+          joined.withColumn(c, col(c) && not(dead)))
         .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
     }
-    if (snap.posDels.isEmpty) withDv
+
+  /** `snap`'s positional deletes as one (`_file`, `_bitmap`) relation,
+    * one row per data file with a pending delete — the one read-side
+    * form of both delete shapes (Iceberg v3 readers merge a file's
+    * position deletes into its deletion vector the same way). Each
+    * file's tombstones fold into a bitmap ([[foldBitmaps]], the
+    * aggregate [[writeDvs]] uses), ORed with the file's current
+    * vector ([[currentDvRelation]]), since one file can carry both
+    * shapes. `_file` stays in `_metadata.file_path` form; callers
+    * select `_file` and `_bitmap` by name (a vector-only relation
+    * carries [[currentDvRelation]]'s internal columns too). `small` is
+    * the caller's gate verdict: a gated relation reads its delete
+    * files as one partition, so the fold and the OR plan no exchange.
+    * Nothing on disk changes: tombstone files stay tombstone files. */
+  private[lakehouse] def deleteBitmaps(snap: Snapshot,
+      small: Boolean): DataFrame = {
+    def one(df: DataFrame) = if (small) df.coalesce(1) else df
+    if (snap.posDels.isEmpty) currentDvRelation(snap)
     else {
-      val tomb = tombScan(snap.posDels, Seq(snap))
-      val small = sizesOf(snap.posDels, snap.posDelSizes).values.sum <=
-        GraftTable.PosDelBroadcastBytes
-      val hinted = if (small) broadcast(tomb) else tomb
-      val on = col(fileCol) === col("_file") && col(idxCol) === col("_pos")
-      if (live.isEmpty) withDv.join(hinted, on, "left_anti")
-      else kill(withDv.join(hinted, on, "left"), col("_pos").isNotNull)
-        .drop("_file", "_pos")
+      val tombs = foldBitmaps(one(tombScan(snap.posDels, Seq(snap))))
+      if (snap.dvs.isEmpty) tombs
+      else orBitmaps(tombs, one(currentDvRelation(snap)), "full_outer")
     }
+  }
+
+  /** A (`_file`, `_pos`) relation folded into one bitmap per file
+    * ([[graft.functions.NativeExprs.BitsetFromPositions]] over
+    * `collect_list` — no sort, no driver round-trip of positions). */
+  private def foldBitmaps(positions: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
+    positions.groupBy("_file")
+      .agg(columnOf(graft.functions.NativeExprs.BitsetFromPositions(
+        expressionOf(collect_list(col("_pos"))))).as("_bitmap"))
+  }
+
+  /** Two (`_file`, `_bitmap`) relations joined on `_file` by `how` and
+    * ORed per file, a side without the file reading as empty — how a
+    * commit's new bits merge into the existing vectors (`left`) and
+    * how a read folds tombstones into them (`full_outer`). */
+  private def orBitmaps(a: DataFrame, b: DataFrame, how: String): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
+    def orEmpty(c: String) =
+      expressionOf(coalesce(col(c), lit(Array.emptyByteArray)))
+    a.join(b.withColumnRenamed("_bitmap", "_other"), Seq("_file"), how)
+      .select(col("_file"), columnOf(graft.functions.NativeExprs.BitsetOr(
+        orEmpty("_bitmap"), orEmpty("_other"))).as("_bitmap"))
   }
 
   /** Tombstone files `fs`, named by the manifests of `snaps`, as one
@@ -1509,8 +1540,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   }
 
   /** [[readFiles]] with each leaf scan carrying its hidden metadata
-    * (file path + row index) as real columns — the join key of the
-    * position-delete anti-join. Selected at the LEAF because Spark's
+    * (file path + row index) as real columns — the join key and probe
+    * index of [[dropDeleted]]. Selected at the LEAF because Spark's
     * `_metadata` resolves only directly against a file-source
     * relation, not through projections or unions. */
   private def readFilesPos(snap: Snapshot, files: Seq[String]): DataFrame =
@@ -3119,8 +3150,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     // DELETION VECTORS and POSITION TOMBSTONES compose with lineage
     // (Iceberg v3 pairs lineage with both delete shapes): neither
     // touches a data file, so every surviving row's (file, idx) — and
-    // therefore its id and last-update — is untouched. The same probe
-    // and anti-join as morReadPos, riding the (file, idx) this read
+    // therefore its id and last-update — is untouched. The same join
+    // and probe as morReadPos, riding the (file, idx) this read
     // already carries.
     val live = dropDeleted(snap, derived, GraftTable.PosFileCol,
       GraftTable.PosIdxCol, live = None).drop("_g_fseq")
@@ -3326,9 +3357,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * (data file, row index) pair in a tombstone parquet, commit
     * metadata-only. Compared to the equality path this PAYS a
     * candidate scan at delete time but makes every later READ
-    * predicate-free — a broadcast anti-join on an 12-byte-wide
-    * tombstone relation instead of evaluating the delete predicate
-    * per row per scan until compaction; the economic crossover is
+    * predicate-free — a broadcast bit probe per row against the
+    * tombstones folded into per-file bitmaps instead of evaluating
+    * the delete predicate per row per scan until compaction; the economic crossover is
     * deletes that are read many times before materialization, the
     * common case for a slowly-deleting 100 TB table. No sequence
     * scoping: tombstones name exact rows of exact files, so later
@@ -3388,38 +3419,27 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * row in `rows` (which must carry the [[readFilesPos]] metadata
     * columns) and return the pointer updates (MANIFEST-form data file
     * → manifest-form blob path). One aggregate pass builds each
-    * touched file's new bits ([[graft.functions.NativeExprs.BitsetFromPositions]]
-    * over `collect_list` — no sort, no driver round-trip of row
-    * positions), a file-keyed join ORs in each file's EXISTING vector
-    * (broadcast while the blob set is under the same gate as the
-    * tombstone anti-join), and the blob parquet writes distributed.
-    * Only the (file → blob) pointer map ships to the driver —
-    * O(#touched files) commit metadata, like every manifest. */
+    * touched file's new bits ([[foldBitmaps]]), a file-keyed join ORs
+    * in each file's EXISTING vector ([[orBitmaps]], broadcast under
+    * the positional-delete gate), and the blob parquet writes
+    * distributed. Only the (file → blob) pointer map ships to the
+    * driver — O(#touched files) commit metadata, like every manifest. */
   private def writeDvs(rows: DataFrame, snap: Snapshot,
       commitId: Long): DvWrite = {
-    import graft.functions.NativeExprs
-    import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
-    val newBits = rows
-      .select(col(GraftTable.PosFileCol).as("_file"),
-        col(GraftTable.PosIdxCol).as("_pos"))
-      .groupBy("_file")
-      .agg(columnOf(NativeExprs.BitsetFromPositions(
-        expressionOf(collect_list(col("_pos"))))).as("_bitmap"))
+    val newBits = foldBitmaps(rows.select(
+      col(GraftTable.PosFileCol).as("_file"),
+      col(GraftTable.PosIdxCol).as("_pos")))
     val merged =
       if (snap.dvs.isEmpty) newBits
       else {
-        val old = currentDvRelation(snap)
-          .withColumnRenamed("_bitmap", "_old")
-        val hinted =
-          if (dvHeapBytes(snap).exists(_ <= GraftTable.PosDelBroadcastBytes))
-            broadcast(old)
-          else old
-        newBits.join(hinted, Seq("_file"), "left")
-          .select(col("_file"),
-            columnOf(NativeExprs.BitsetOr(
-              expressionOf(col("_bitmap")),
-              expressionOf(coalesce(col("_old"),
-                lit(Array.emptyByteArray))))).as("_bitmap"))
+        // only the vectors merge: tombstones stay tombstone files
+        val vectors = snap.copy(posDels = Nil)
+        val old = currentDvRelation(vectors)
+        orBitmaps(newBits,
+          if (GraftTable.deleteBitmapBytes(vectors)
+              .exists(_ <= GraftTable.PosDelBroadcastBytes)) broadcast(old)
+          else old,
+          "left")
       }
     writeDvBlobs(merged, snap, commitId)
   }
@@ -3497,8 +3517,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * legitimately holds STALE bitmaps for files whose pointer moved
     * to a newer merge. `_file` stays in `_metadata.file_path` form,
     * directly joinable against [[readFilesPos]]'s metadata column.
-    * One row per vectored file, each ≤ rows/8 bytes: broadcast-scale
-    * under the same gate as the tombstone anti-join. */
+    * One row per vectored file, each ≤ rows/8 + 1 bytes. */
   private[lakehouse] def currentDvRelation(snap: Snapshot): DataFrame = {
     val blobs = snap.dvs.values.toSeq.distinct.sorted
     import spark.implicits._
@@ -3510,20 +3529,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       .join(broadcast(ptrs),
         col("_file") === col("_pf") && col("_bp") === col("_pb"),
         "left_semi")
-  }
-
-  /** Upper bound on the IN-MEMORY bytes of `snap`'s current bitmaps
-    * (a file's bitmap is ≤ rows/8 + 1 bytes, rows from the manifest's
-    * footer harvest) — the broadcast-vs-shuffle gate datum. On-disk
-    * blob size would be wrong here: parquet compresses dense 0xFF
-    * runs by orders of magnitude, so a heavily-deleted table's tiny
-    * blobs can hide a multi-GB broadcast. None when any vectored
-    * file lacks a recorded row count — the caller must not
-    * broadcast what it cannot bound. */
-  private def dvHeapBytes(snap: Snapshot): Option[Long] = {
-    val per = snap.dvs.keys.toSeq.map(f =>
-      snap.fileRows.get(f).map(_ / 8 + 1))
-    if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
   }
 
   /** Merge-on-read UPDATE via position tombstones: the matched rows
@@ -4057,7 +4062,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       // 0.1% of a 100 TB table costs tombstones + images for that
       // 0.1%, where copy-on-write rewrites every FILE containing a
       // match. Read-side cost until compaction: the broadcast
-      // tombstone anti-join.
+      // delete-bitmap probe.
       //
       // One pass over the target: the source is computed once (with
       // its per-key multiplicity for the cardinality guard), joined
@@ -4795,7 +4800,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
 
   /** Stats-driven join side: [[read]] wrapped in a broadcast hint
     * when ANALYZEd row-count truth says the table fits — the case
-    * Catalyst's size estimation cannot see (post-MoR anti-join
+    * Catalyst's size estimation cannot see (post-MoR delete
     * output, wide rows behind a selective filter, adopted files with
     * no catalog stats). Missing or stale stats fall back to a plain
     * read and Spark's own estimation — stats can upgrade a plan,
@@ -4814,7 +4819,7 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * file is no longer live — METADATA-scale work (only tombstones are
     * read and written; no data file is touched), which is the whole
     * point: a MoR-heavy table grows one tombstone directory per DML
-    * statement, and reader-side anti-join cost is per tombstone FILE
+    * statement, and the reader-side fold's cost is per tombstone FILE
     * opened, not per tombstone. Clustering by `_file` also compresses
     * the path dictionary hard. No-ops (returns the current id without
     * a commit) when there is nothing to rewrite. */
@@ -6256,18 +6261,16 @@ object GraftTable {
       org.apache.spark.sql.types.BinaryType)))
 
   /** Internal column names threading leaf-scan metadata (file path,
-    * row index) to the position-delete anti-join. */
+    * row index) to the positional-delete probe. */
   private[lakehouse] val PosFileCol = "_gpd_file"
 
   /** [[carriedDiff]]'s mark: true on a row live at the range's end,
     * false on one live at its start. */
   private[lakehouse] val LiveToCol = "_glive_to"
 
-  /** Join key of the deletion-vector file join on the read path. */
+  /** Join key and bitmap column of the positional-delete probe
+    * (reserved prefix: user data may carry `_file` or `_bitmap`). */
   private[lakehouse] val DvFileCol = "_gdv_file"
-
-  /** The joined bitmap column of the read path's deletion-vector
-    * probe (reserved-prefix: user data may carry `_bitmap`). */
   private[lakehouse] val DvBitmapCol = "_gdv_bitmap"
 
   /** Schema-metadata keys of a column's initial default (Iceberg v3):
@@ -6495,9 +6498,34 @@ object GraftTable {
   private[lakehouse] def metaPath(p: String): String =
     new Path(p).toUri.toString
 
-  /** On-disk tombstone bytes above which the position-delete
-    * anti-join stops broadcasting (overridable for tests via
-    * `graft.posdel.broadcast.bytes`). */
+  /** Upper bound on the heap bytes of `snap`'s delete bitmaps
+    * ([[GraftTable.deleteBitmaps]]) — the one positional-delete gate: `dropDeleted` broadcasts under
+    * it and the SPJ scan refuses above it. A file's bitmap is at most
+    * rows/8 + 1 bytes (rows from the manifest's footer harvest). The
+    * relation names each vectored file, plus at most Σ`posDelRows`
+    * files named by tombstones, bounded by that many of the largest
+    * live files — not every live file, so a large table holding a few
+    * tombstones still broadcasts. On-disk sizes would be wrong here:
+    * parquet compresses dense 0xFF runs and repeated paths by orders
+    * of magnitude. None when a needed count is missing — the caller
+    * must not broadcast what it cannot bound. */
+  private[lakehouse] def deleteBitmapBytes(snap: Snapshot): Option[Long] = {
+    def bytes(fs: Seq[String]) = {
+      val per = fs.map(f => snap.fileRows.get(f).map(_ / 8 + 1))
+      if (per.exists(_.isEmpty)) None else Some(per.flatten)
+    }
+    val tombRows = snap.posDels.map(snap.posDelRows.get)
+    for {
+      vectored <- bytes(snap.dvs.keys.toSeq)
+      live <- if (snap.posDels.isEmpty) Some(Nil) else bytes(snap.files)
+      if !tombRows.exists(_.isEmpty)
+    } yield vectored.sum + live.sorted(Ordering[Long].reverse)
+      .take(math.min(tombRows.flatten.sum, live.size.toLong).toInt).sum
+  }
+
+  /** Heap bytes of a snapshot's delete bitmaps ([[deleteBitmapBytes]])
+    * above which reads stop broadcasting them and the SPJ scan refuses
+    * (overridable for tests via `graft.posdel.broadcast.bytes`). */
   private[lakehouse] def PosDelBroadcastBytes: Long =
     sys.props.get("graft.posdel.broadcast.bytes").map(_.toLong)
       .getOrElse(32L * 1024 * 1024)

@@ -60,10 +60,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Eligibility is strict, checked at `loadTable`: supported transform
   * fields only, no renames, no ALTER-added initial defaults, no
-  * partition-spec evolution — while BOTH merge-on-read delete shapes
-  * are served (position tombstones as per-file skip lists,
-  * gate-bounded; equality deletes as compiled row predicates with
-  * add-sequence scoping) —
+  * partition-spec evolution — while every merge-on-read delete shape
+  * is served (position tombstones and deletion vectors as one
+  * per-file bitmap each, gate-bounded; equality deletes as compiled
+  * row predicates with add-sequence scoping) —
   * anything else must take the general `GraftTable.read()` path (loud
   * error, never a silently-different result). Ref: the reference's
   * repeated governed fact joins (consumer_emr_on_eks_setup.sh:407-412)
@@ -230,33 +230,21 @@ object Spj {
     spjFields(snap).left.toOption
       .orElse {
         if (snap.files.isEmpty) Some("table has no data files")
-        // position tombstones are SPJ-readable: the scan attaches each
-        // data file's tombstoned row positions to its split and the
-        // reader skips them (Iceberg's SPJ readers apply delete files
-        // the same way — a busy 100 TB fact table ALWAYS carries
-        // tombstones, so refusing them would turn the zero-Exchange
-        // path off exactly when the table is hottest). Bounded by the
-        // same on-disk gate as the normal path's broadcast anti-join:
-        // beyond it the skip-list would not fit driver/task memory —
-        // refuse loudly toward maintenance instead.
-        else if (snap.posDels.exists(p => !snap.posDelSizes.contains(p)))
-          Some("position tombstones without recorded sizes")
-        else if (snap.posDels.map(snap.posDelSizes).sum >
-            GraftTable.PosDelBroadcastBytes)
-          Some("position tombstones exceed the skip-list gate " +
-            "(OPTIMIZE … REWRITE DELETES, or compact() to materialize)")
-        // deletion vectors ride the same per-split skip lists; the
-        // expansion is EXACTLY 8 bytes per set bit, and set-bit
-        // counts are manifest-recorded (dvCards) — gating on blob
-        // bytes would be wrong in both directions (parquet compresses
-        // dense 0xFF runs by orders of magnitude, so a 99%-deleted
-        // file's tiny blob hides an ~8×rows expansion)
-        else if (snap.dvs.keys.exists(f => !snap.dvCards.contains(f)))
-          Some("deletion vectors without recorded cardinality")
-        else if (snap.dvCards.values.sum * 8L >
-            GraftTable.PosDelBroadcastBytes)
-          Some("deletion vectors exceed the skip-list gate " +
-            "(compact() to materialize)")
+        // positional deletes are SPJ-readable: the scan attaches each
+        // data file's delete bitmap (tombstones folded into its
+        // deletion vector, GraftTable.deleteBitmaps) to its split and
+        // the reader probes it per row (Iceberg's SPJ readers apply
+        // delete files the same way — a busy 100 TB fact table ALWAYS
+        // carries deletes, so refusing them would turn the
+        // zero-Exchange path off exactly when the table is hottest).
+        // The bitmaps are collected to the driver, so they are bounded
+        // by the one positional-delete gate — beyond it, or when it
+        // cannot bound them, refuse loudly toward maintenance instead.
+        else if (!GraftTable.deleteBitmapBytes(snap)
+            .exists(_ <= GraftTable.PosDelBroadcastBytes))
+          Some("positional deletes exceed the delete-bitmap gate or " +
+            "lack recorded row counts (OPTIMIZE … REWRITE DELETES, or " +
+            "compact() to materialize)")
         else if (snap.renames.nonEmpty) Some("column renames present")
         else if (snap.schema.fields.exists(
             _.metadata.contains(GraftTable.DefaultSinceKey)))
@@ -1002,43 +990,17 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
     }
   }
 
-  /** data file (manifest path) → ASCENDING tombstoned row positions.
-    * Driver-side and bounded: eligibility admits tombstone sets only
-    * up to [[GraftTable.PosDelBroadcastBytes]] on disk — the same
-    * gate the normal read path's broadcast anti-join uses — so the
-    * grouped skip lists are broadcast-scale by construction. Delete
-    * artifacts read through the table's own readers
-    * ([[GraftTable.tombScan]], and [[GraftTable.currentDvRelation]],
-    * which keeps only each file's CURRENT bitmap). Their `_file`
-    * values are in `_metadata.file_path` (URI) form; manifest paths
-    * are raw, so the lookup keys by the URI rendering of each raw
-    * path. */
-  private lazy val tombsByFile: Map[String, Array[Long]] = {
-    import org.apache.spark.sql.functions.col
-    val tomb: Map[String, Array[Long]] =
-      if (snap.posDels.isEmpty) Map.empty
-      else t.tombScan(snap.posDels, Seq(snap))
-        .select(col("_file"), col("_pos")).collect()
-        .groupBy(_.getString(0))
-        .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
-    if (snap.dvs.isEmpty) tomb
-    else {
-      // deletion vectors expand into the same ascending skip lists
-      // (eligibility bounds the expansion)
-      val dv = t.currentDvRelation(snap)
-        .select(col("_file"), col("_bitmap")).collect()
-        .map(r => r.getString(0) ->
-          graft.functions.NativeKernels.bitsetPositions(
-            r.getAs[Array[Byte]](1)))
-        .toMap
-      // a file can carry BOTH shapes (vector deletes stacked on
-      // older tombstones): merge ascending, distinct
-      (tomb.keySet ++ dv.keySet).map { f =>
-        f -> (tomb.getOrElse(f, Array.empty[Long]) ++
-          dv.getOrElse(f, Array.empty[Long])).distinct.sorted
-      }.toMap
-    }
-  }
+  /** data file (`_metadata.file_path` form) → its delete bitmap: the
+    * snapshot's one positional-delete relation
+    * ([[GraftTable.deleteBitmaps]], tombstones folded into deletion
+    * vectors), collected once per scan. Driver-side and bounded:
+    * eligibility admits only snapshots under the positional-delete
+    * gate ([[GraftTable.deleteBitmapBytes]]). Manifest paths are raw,
+    * so the lookup keys by the URI rendering of each raw path. */
+  private lazy val bitmapsByFile: Map[String, Array[Byte]] =
+    if (snap.posDels.isEmpty && snap.dvs.isEmpty) Map.empty
+    else t.deleteBitmaps(snap, small = true).collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
   // the one metaPath authority — see GraftTable.metaPath's contract
   private def metaPath(p: String): String = GraftTable.metaPath(p)
 
@@ -1117,8 +1079,8 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
         }
       }
       LakePartTupleSplit(key, files,
-        files.map(f => tombsByFile.getOrElse(metaPath(f._1),
-          Array.empty[Long])),
+        files.map(f => bitmapsByFile.getOrElse(metaPath(f._1),
+          Array.emptyByteArray)),
         eqIdx)
     }
   }
@@ -1127,7 +1089,7 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
     // vectorized decode when the projected schema allows it (atomic
     // types — the common analytic case); the row closure is the
     // universal fallback. Decided once at plan time, driver-side.
-    // Tombstoned snapshots (position OR equality) take the row path
+    // Snapshots with pending deletes (of any shape) take the row path
     // uniformly: row skipping/filtering cannot be expressed on a
     // ColumnarBatch without batch rewriting.
     val columnar = snap.posDels.isEmpty && snap.dels.isEmpty &&
@@ -1160,14 +1122,14 @@ final case class EqDelSpec(
     project: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
 
 /** All files of one stored partition tuple — the planner aligns
-  * splits of equal `partitionKey` across the two join sides. `tombs`
-  * is aligned with `files`: the ascending tombstoned row positions of
-  * each file (empty = none pending). `eqIdx` likewise: the indices of
-  * the scan's equality-delete predicates applicable to each file
-  * (sequenced after its add-sequence). */
+  * splits of equal `partitionKey` across the two join sides.
+  * `deletes` is aligned with `files`: each file's delete bitmap (bit n
+  * set = row n deleted; empty = none pending). `eqIdx` likewise: the
+  * indices of the scan's equality-delete predicates applicable to each
+  * file (sequenced after its add-sequence). */
 final case class LakePartTupleSplit(key: Seq[Any],
     files: Array[(String, Long)],
-    tombs: Array[Array[Long]],
+    deletes: Array[Array[Byte]],
     eqIdx: Array[Array[Int]] = Array.empty)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow.fromSeq(key)
@@ -1193,22 +1155,6 @@ final class LakeSpjReaderFactory(
       override def close(): Unit = ()
     }
 
-  /** Drop the rows at `skips` (ascending) from an in-file-order row
-    * iterator: a pointer walk, O(1) amortized per row. The row's
-    * physical position is its sequential index — the whole-file,
-    * filterless closure yields every row in order, the same index
-    * `_metadata.row_index` recorded when the tombstone was written. */
-  private def skipPositions(rows: Iterator[InternalRow],
-      skips: Array[Long]): Iterator[InternalRow] = {
-    var pos = -1L
-    var sp = 0
-    rows.filter { _ =>
-      pos += 1
-      while (sp < skips.length && skips(sp) < pos) sp += 1
-      !(sp < skips.length && skips(sp) == pos)
-    }
-  }
-
   override def supportColumnarReads(partition: InputPartition): Boolean =
     readFileColumnar.isDefined
 
@@ -1231,10 +1177,20 @@ final class LakeSpjReaderFactory(
           s"${split.eqIdx.length} equality-delete index sets")
     reader(split.files.iterator.zipWithIndex.flatMap { case ((path, len), i) =>
       val raw = readFile(ParquetReadShim.wholeFile(path, len))
-      // position skips key off the PHYSICAL row index — apply before
-      // any row-level filtering
-      val skips = split.tombs(i)
-      val posDone = if (skips.isEmpty) raw else skipPositions(raw, skips)
+      // the bitmap keys off the PHYSICAL row index — apply before any
+      // row-level filtering. The whole-file, filterless closure yields
+      // every row in order, so a row's index is its sequence number:
+      // the `_metadata.row_index` each delete recorded.
+      val bm = split.deletes(i)
+      val posDone =
+        if (bm.isEmpty) raw
+        else {
+          var pos = -1L
+          raw.filter { _ =>
+            pos += 1
+            !graft.functions.NativeKernels.bitsetGet(bm, pos)
+          }
+        }
       (predEvals, proj) match {
         case (Some(evals), Some(p)) =>
           val idx = split.eqIdx(i) // aligned: require()d above
@@ -1250,9 +1206,9 @@ final class LakeSpjReaderFactory(
   override def createColumnarReader(partition: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val split = partition.asInstanceOf[LakePartTupleSplit]
-    require(split.tombs.forall(_.isEmpty),
-      "columnar SPJ read planned over tombstoned files — the scan " +
-        "must route tombstoned snapshots through the row path")
+    require(split.deletes.forall(_.isEmpty),
+      "columnar SPJ read planned over deleted rows — the scan must " +
+        "route snapshots with positional deletes through the row path")
     reader(split.files.iterator.flatMap { case (path, len) =>
       readFileColumnar.get(ParquetReadShim.wholeFile(path, len))
     })

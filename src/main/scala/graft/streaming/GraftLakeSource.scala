@@ -88,10 +88,11 @@ final class GraftLakeSource(spark: SparkSession, tablePath: String,
   // a bad id must fail the start, not some later batch. 0 = replay
   // everything (the initial-load contract); a positive id must name
   // a live snapshot, since the first batch range (startFrom, x]
-  // parses it as an endpoint.
+  // parses it as an endpoint. Only a missing manifest means "not
+  // live": a live snapshot's unreadable manifest fails with its fault.
   require(startFrom == 0L ||
       (try { table.snapshot(startFrom); true }
-       catch { case _: Exception => false }),
+       catch { case _: java.io.FileNotFoundException => false }),
     s"startingSnapshotId $startFrom is not a live snapshot of " +
       s"$tablePath")
 

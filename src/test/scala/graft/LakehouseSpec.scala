@@ -2419,6 +2419,38 @@ class LakehouseSpec extends AnyFunSuite {
     assert(e.getMessage.contains("mutually exclusive"))
   }
 
+  test("streaming start check: a missing snapshot is not live, a " +
+      "live snapshot's unreadable manifest fails with its parse error") {
+    import org.apache.spark.sql.streaming.Trigger
+    val t = freshTable(Seq((1L, "a", 1.0)))
+    t.append(Seq((2L, "b", 2.0)).toDF("k", "tag", "v"))
+    def msgs(x: Throwable): List[String] =
+      if (x == null) Nil
+      else s"${x.getClass.getName}: ${x.getMessage}" :: msgs(x.getCause)
+    def start(id: Long): List[String] = msgs(intercept[Exception] {
+      spark.readStream.format("graft-lake")
+        .option("startingSnapshotId", id).load(t.location)
+        .writeStream.format("memory")
+        .queryName("startchk_" +
+          java.util.UUID.randomUUID.toString.replace("-", "").take(12))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    })
+    assert(start(99L).exists(_.contains("is not a live snapshot")))
+    // truncate snapshot 1's manifest inside its schema line: the
+    // snapshot is live, so the start must report the parse fault
+    val manifest = java.nio.file.Paths.get(t.location, "_graft_meta",
+      "snap-00001.meta")
+    val body = new String(Files.readAllBytes(manifest), "UTF-8")
+    val cut = body.indexOf("schema=") + 20
+    assert(cut > 20, body)
+    Files.write(manifest, body.take(cut).getBytes("UTF-8"))
+    val fault = start(1L)
+    assert(!fault.exists(_.contains("is not a live snapshot")),
+      fault.mkString(" | "))
+    assert(fault.exists(m => m.startsWith("com.fasterxml.jackson") &&
+        m.contains("Unexpected end-of-input")), fault.mkString(" | "))
+  }
+
   test("lineage eq-predicate diff: a predicate referencing a column " +
       "ADDED in-range backfills before it filters, and a row killed " +
       "by BOTH a tombstone and a predicate emits once") {
@@ -3728,13 +3760,13 @@ class LakehouseSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldBc)
     }
     // beyond the gate the zero-Exchange path refuses toward
-    // maintenance instead of collecting an unbounded skip list
+    // maintenance instead of collecting unbounded delete bitmaps
     sys.props("graft.posdel.broadcast.bytes") = "1"
     try {
       val e = intercept[Exception](Spj.read(spark, "spjmor_gate", t))
       def msgs(x: Throwable): List[String] =
         if (x == null) Nil else String.valueOf(x.getMessage) :: msgs(x.getCause)
-      assert(msgs(e).exists(_.contains("skip-list gate")),
+      assert(msgs(e).exists(_.contains("delete-bitmap gate")),
         msgs(e).mkString(" | "))
     } finally sys.props.remove("graft.posdel.broadcast.bytes")
     // compaction materializes the tombstones and re-opens columnar SPJ
@@ -4793,32 +4825,90 @@ class LakehouseSpec extends AnyFunSuite {
       (1L to 1000L).map(k => (k, k % 7, if (k % 3 == 0) "del" else "keep"))
         .toDF("k", "g", "tag"),
       partitionBy = Seq("bucket[4](g)"))
-    t.setProperties(Map("write.delete.mode" -> "merge-on-read",
-      "write.delete.style" -> "vector"))
     LakeRegistry.register("dvspj_t", t)
     val files = t.currentSnapshot.files.toSet
+    val before = t.currentSnapshot.id
+    // one data file carries both shapes: position tombstones first,
+    // then a vector delete of other rows of the same files
+    def style(st: String): Unit = t.setProperties(Map(
+      "write.delete.mode" -> "merge-on-read", "write.delete.style" -> st))
+    style("position")
+    spark.sql("DELETE FROM dvspj_t WHERE k % 5 = 0 AND tag = 'keep'")
+    style("vector")
     spark.sql("DELETE FROM dvspj_t WHERE tag = 'del'")
-    assert(t.currentSnapshot.files.toSet == files &&
-      t.currentSnapshot.dvs.nonEmpty,
-      "the vector delete must write bitmaps, not rewrite files")
+    val snap = t.currentSnapshot
+    assert(snap.files.toSet == files && snap.dvs.nonEmpty &&
+      snap.posDels.nonEmpty,
+      "the deletes must write tombstones and bitmaps, not rewrite files")
+    val expected = (1L to 1000L).filter(k => k % 3 != 0 && k % 5 != 0)
     val live = Spj.read(spark, "dvspj_r", t)
-    assert(live.count() == (1L to 1000L).count(_ % 3 != 0),
-      "the SPJ read must skip vectored positions")
+    assert(live.count() == expected.size,
+      "the SPJ read must skip tombstoned and vectored positions")
     assert(live.filter(col("tag") === "del").count() == 0)
-    // the normal read path agrees with the SPJ path row for row
-    assert(live.select("k").as[Long].collect().sorted.sameElements(
-      t.read().select("k").as[Long].collect().sorted))
-    // beyond the cardinality gate (8 B per recorded set bit) the
-    // zero-Exchange path refuses
-    // toward maintenance instead of expanding unbounded bitmaps
+    // the SPJ path, the normal read path and the expected keys agree
+    assert(live.select("k").as[Long].collect().sorted.toSeq == expected)
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq == expected)
+    // the change feed over both commits reports exactly the deleted rows
+    val changed = spark.sql(
+      s"SELECT k, _change_type FROM table_changes('dvspj_t', $before, ${snap.id})")
+      .as[(Long, String)].collect()
+    assert(changed.forall(_._2 == "delete"), changed.toSeq)
+    assert(changed.map(_._1).sorted.toSeq ==
+      (1L to 1000L).filter(k => k % 3 == 0 || k % 5 == 0))
+    // beyond the delete-bitmap gate the zero-Exchange path refuses
+    // toward maintenance instead of collecting unbounded bitmaps
     sys.props("graft.posdel.broadcast.bytes") = "1"
     try {
       val e = intercept[Exception](Spj.read(spark, "dvspj_gate", t))
       def msgs(x: Throwable): List[String] =
         if (x == null) Nil else String.valueOf(x.getMessage) :: msgs(x.getCause)
-      assert(msgs(e).exists(_.contains("skip-list gate")),
+      assert(msgs(e).exists(_.contains("delete-bitmap gate")),
         msgs(e).mkString(" | "))
     } finally sys.props.remove("graft.posdel.broadcast.bytes")
+  }
+
+  test("positional-delete reads compile: no interpreted fallback, " +
+      "same rows") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    // each session runs the scenario over its own tables: a tombstoned
+    // read, a vectored read, a merge-on-read UPDATE and the change feed
+    def run(s: SparkSession): Seq[Seq[String]] = {
+      SparkSession.setActiveSession(s)
+      try {
+        def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+        def table(style: String) = {
+          val t = GraftTable.create(s,
+            Files.createTempDirectory("graft_cgdel").toString,
+            s.createDataFrame((1L to 200L).map(k =>
+              (k, if (k % 3 == 0) "del" else "keep", k.toDouble)))
+              .toDF("k", "tag", "v"))
+          t.setProperties(Map("write.delete.mode" -> "merge-on-read",
+            "write.update.mode" -> "merge-on-read",
+            "write.delete.style" -> style))
+          t
+        }
+        val pos = table("position")
+        val start = pos.currentSnapshot.id
+        pos.deleteMoRPos("tag = 'del'")
+        val vec = table("vector")
+        vec.deleteMoRDv("tag = 'del'")
+        val tombstoned = rows(pos.read())
+        val vectored = rows(vec.read())
+        pos.updateMoRPos(Map("v" -> "v + 1"), "k < 50")
+        assert(pos.currentSnapshot.posDels.size == 2)
+        Seq(tombstoned, vectored, rows(pos.read()),
+          rows(pos.changes(start, pos.currentSnapshot.id)
+            .select("k", "tag", "v", "_change_type")))
+      } finally SparkSession.setActiveSession(spark)
+    }
+    // a child session scopes the strict mode to this test: suites
+    // sharing `spark` keep their codegen fallback
+    val strict = spark.newSession()
+    strict.conf.set(
+      org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key, "CODEGEN_ONLY")
+    val compiled = run(strict)
+    assert(compiled.forall(_.nonEmpty))
+    assert(compiled == run(spark))
   }
 
   test("namespace-qualified SQL: DDL/DML/maintenance/time-travel on " +
