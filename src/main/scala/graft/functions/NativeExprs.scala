@@ -285,11 +285,9 @@ object NativeExprs {
   }
 
   /** Deletion-vector membership: bit `pos` of a little-endian bitmap
-    * column (one ~N/8-byte blob per data file, joined to the scan by
-    * file — see [[graft.lakehouse.GraftTable]]'s DV read path). The
-    * O(1) probe replaces the position-tombstone anti-JOIN that made
-    * every MoR read pay a join until compaction — the economics
-    * Iceberg v3 / Delta deletion vectors exist for. */
+    * column (one ~N/8-byte bitmap per data file, joined to the scan by
+    * file beyond [[graft.lakehouse.GraftTable]]'s positional-delete
+    * gate) — an O(1) probe, not a per-deleted-row anti-join. */
   case class BitsetGet(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = BooleanType

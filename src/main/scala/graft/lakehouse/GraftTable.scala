@@ -3,6 +3,7 @@ package graft.lakehouse
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftlake.{ManifestFile, ManifestFileIndex}
@@ -129,12 +130,10 @@ final case class Snapshot(
     specHist: Seq[(Long, Seq[String])] = Nil,
     /** Deletion vectors (Iceberg v3 / Delta DVs): data file → bitmap
       * blob path, one blob per file, bit n set = row n deleted. The
-      * production form of position deletes at high DML rates: the
-      * read-side cost is an O(1) bit probe per row against a
-      * file-joined blob (readers fold tombstones into the same
-      * per-file bitmaps), and DELETE #k rewrites one blob per
-      * touched file instead of appending a k-th tombstone file.
-      * Cleared by compaction like every other MoR artifact. */
+      * production form of position deletes at high DML rates: DELETE
+      * #k rewrites one blob per touched file instead of appending a
+      * k-th tombstone file. Cleared by compaction like every MoR
+      * artifact. */
     dvs: Map[String, String] = Map.empty,
     /** On-disk byte size per DV blob — sizes the blob scan, same
       * contract as [[posDelSizes]]. */
@@ -1432,66 +1431,77 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   /** Apply `snap`'s positional deletes to `df` — the one statement of
     * what a deletion vector or tombstone kills. `df` carries each row's
     * data file (`_metadata.file_path` form) in `fileCol` and its row
-    * index in `idxCol`. Both shapes arrive as one per-file bitmap
-    * relation ([[deleteBitmaps]]): one LEFT join keyed by FILE ONLY
-    * (one row per file with a pending delete — metadata-scale), then
-    * one O(1) codegen'd bit probe per row; a row of a file with no
-    * pending delete sees a NULL bitmap and survives through the
-    * coalesce. Readers pass `live = None` and the killed rows are
-    * dropped; [[carriedDiff]] names a boolean column, keeps every row
-    * and clears the column wherever the probe hits, which marks one
-    * read at both endpoints of a range. The bitmaps broadcast only
-    * under the one positional-delete gate
-    * ([[GraftTable.deleteBitmapBytes]]):
-    * a table that has absorbed heavy MoR DML can name billions of
-    * deleted rows, and forcing those through a driver-collected
-    * broadcast is an OOM; beyond the gate the join shuffles on the
-    * same key. */
+    * index in `idxCol`. Under the positional-delete gate both shapes
+    * arrive broadcast ([[deleteSets]]) and [[RowDeleted]] probes each
+    * row: no join, no aggregate. Beyond it each file's tombstones fold
+    * into a bitmap ORed with its vector, joined by FILE ONLY and
+    * shuffled, and a bit test probes each row. Readers pass `live =
+    * None` and the killed rows are dropped; [[carriedDiff]] names a
+    * boolean column, keeps every row and clears it wherever the probe
+    * hits, which marks one read at both endpoints of a range. */
   private def dropDeleted(snap: Snapshot, df: DataFrame, fileCol: String,
       idxCol: String, live: Option[String]): DataFrame =
     if (snap.posDels.isEmpty && snap.dvs.isEmpty) df
     else {
       import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
-      val small = GraftTable.deleteBitmapBytes(snap)
-        .exists(_ <= GraftTable.PosDelBroadcastBytes)
-      // internal names under the reserved _gdv prefix: a user column
-      // named `_file` or `_bitmap` must not make this join ambiguous
-      val bits = deleteBitmaps(snap, small)
-        .select(col("_file").as(GraftTable.DvFileCol),
-          col("_bitmap").as(GraftTable.DvBitmapCol))
-      val joined = df.join(if (small) broadcast(bits) else bits,
-        col(fileCol) === col(GraftTable.DvFileCol), "left")
-      val dead = coalesce(
-        columnOf(graft.functions.NativeExprs.BitsetGet(
-          expressionOf(col(GraftTable.DvBitmapCol)),
-          expressionOf(col(idxCol)))),
-        lit(false))
-      live.fold(joined.filter(not(dead)))(c =>
-          joined.withColumn(c, col(c) && not(dead)))
+      val (probed, dead) = deleteSets(snap) match {
+        case Some(sets) => (df, columnOf(RowDeleted(sets,
+          expressionOf(col(fileCol)), expressionOf(col(idxCol)))))
+        case None =>
+          val bits = (Option.when(snap.posDels.nonEmpty)(
+              foldBitmaps(tombScan(snap.posDels, Seq(snap)))) ++
+            Option.when(snap.dvs.nonEmpty)(currentDvRelation(snap)))
+            .reduce(orBitmaps(_, _, "full_outer"))
+            // internal names under the reserved _gdv prefix: a user column
+            // named `_file` or `_bitmap` must not make this join ambiguous
+            .select(col("_file").as(GraftTable.DvFileCol),
+              col("_bitmap").as(GraftTable.DvBitmapCol))
+          (df.join(bits, col(fileCol) === col(GraftTable.DvFileCol), "left"),
+            coalesce(columnOf(graft.functions.NativeExprs.BitsetGet(
+              expressionOf(col(GraftTable.DvBitmapCol)),
+              expressionOf(col(idxCol)))), lit(false)))
+      }
+      live.fold(probed.filter(not(dead)))(c =>
+          probed.withColumn(c, col(c) && not(dead)))
         .drop(GraftTable.DvFileCol, GraftTable.DvBitmapCol)
     }
 
-  /** `snap`'s positional deletes as one (`_file`, `_bitmap`) relation,
-    * one row per data file with a pending delete — the one read-side
-    * form of both delete shapes (Iceberg v3 readers merge a file's
-    * position deletes into its deletion vector the same way). Each
-    * file's tombstones fold into a bitmap ([[foldBitmaps]], the
-    * aggregate [[writeDvs]] uses), ORed with the file's current
-    * vector ([[currentDvRelation]]), since one file can carry both
-    * shapes. `_file` stays in `_metadata.file_path` form; callers
-    * select `_file` and `_bitmap` by name (a vector-only relation
-    * carries [[currentDvRelation]]'s internal columns too). `small` is
-    * the caller's gate verdict: a gated relation reads its delete
-    * files as one partition, so the fold and the OR plan no exchange.
-    * Nothing on disk changes: tombstone files stay tombstone files. */
-  private[lakehouse] def deleteBitmaps(snap: Snapshot,
-      small: Boolean): DataFrame = {
-    def one(df: DataFrame) = if (small) df.coalesce(1) else df
-    if (snap.posDels.isEmpty) currentDvRelation(snap)
-    else {
-      val tombs = foldBitmaps(one(tombScan(snap.posDels, Seq(snap))))
-      if (snap.dvs.isEmpty) tombs
-      else orBitmaps(tombs, one(currentDvRelation(snap)), "full_outer")
+  /** `snap`'s positional deletes as one broadcast [[FileDeletes]] per
+    * data file (`_metadata.file_path` form), collected by ONE job over
+    * the tombstone files and current vectors; a vector naming fewer
+    * rows than its bytes/8 probes as positions. The last few stay
+    * broadcast, keyed by their immutable delete files, so every read of
+    * a snapshot probes one. None beyond [[GraftTable.deletesFit]]. */
+  private[lakehouse] def deleteSets(
+      snap: Snapshot): Option[Broadcast[Map[String, FileDeletes]]] =
+    Option.when(GraftTable.deletesFit(snap))(deleteBroadcasts.synchronized {
+      deleteBroadcasts.computeIfAbsent((snap.posDels, snap.dvs),
+        _ => spark.sparkContext.broadcast(collectDeletes(snap)))
+    })
+
+  private val deleteBroadcasts = new java.util.LinkedHashMap[(Seq[String],
+      Map[String, String]), Broadcast[Map[String, FileDeletes]]](8, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(Seq[String],
+      Map[String, String]), Broadcast[Map[String, FileDeletes]]]) = size() > 4
+  }
+
+  private def collectDeletes(snap: Snapshot): Map[String, FileDeletes] = {
+    import spark.implicits._
+    import graft.functions.NativeKernels.{bitsetCardinality, bitsetPositions}
+    // each tombstone task ships a file's positions once, not a path a row
+    val tombs = tombScan(snap.posDels, Seq(snap)).as[(String, Long)]
+      .mapPartitions(_.toSeq.groupMap(_._1)(_._2).iterator
+        .map { case (f, ps) => (f, ps.toArray, Array.emptyByteArray) })
+    val all = if (snap.dvs.isEmpty) tombs else tombs.union(currentDvRelation(snap)
+      .select(col("_file"), typedLit(Array.emptyLongArray), col("_bitmap"))
+      .as[(String, Array[Long], Array[Byte])])
+    all.collect().groupBy(_._1).map { case (f, ps) =>
+      val vector = ps.map(_._3).find(_.nonEmpty).getOrElse(Array.emptyByteArray)
+      val sparse = 8 * bitsetCardinality(vector) < vector.length
+      val positions = ps.flatMap(_._2) ++
+        (if (sparse) bitsetPositions(vector) else Array.emptyLongArray)
+      java.util.Arrays.sort(positions)
+      f -> FileDeletes(if (sparse) Array.emptyByteArray else vector, positions)
     }
   }
 
@@ -1962,7 +1972,6 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * no carried file. */
   private def positionalDiff(from: Snapshot,
       to: Snapshot): Option[PositionalDiff] = {
-    import org.apache.spark.sql.types.{BinaryType, StringType}
     val toSet = to.files.toSet
     val carried = from.files.filter(toSet)
     val moved = carried.filter(f => from.dvs.get(f) != to.dvs.get(f)).toSet
@@ -1972,9 +1981,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
       return None
     def bits(s: Snapshot, as: String): DataFrame = {
       val onlyMoved = s.dvs.view.filterKeys(moved).toMap
-      if (onlyMoved.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-          StructField("_file", StringType), StructField(as, BinaryType))))
+      import spark.implicits._
+      if (onlyMoved.isEmpty) Seq.empty[(String, Array[Byte])].toDF("_file", as)
       else currentDvRelation(s.copy(dvs = onlyMoved))
         .select(col("_file"), col("_bitmap").as(as))
     }
@@ -3357,9 +3365,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * (data file, row index) pair in a tombstone parquet, commit
     * metadata-only. Compared to the equality path this PAYS a
     * candidate scan at delete time but makes every later READ
-    * predicate-free — a broadcast bit probe per row against the
-    * tombstones folded into per-file bitmaps instead of evaluating
-    * the delete predicate per row per scan until compaction; the economic crossover is
+    * predicate-free — a broadcast probe per row of each file's sorted
+    * tombstones instead of evaluating the delete predicate per row per
+    * scan until compaction; the economic crossover is
     * deletes that are read many times before materialization, the
     * common case for a slowly-deleting 100 TB table. No sequence
     * scoping: tombstones name exact rows of exact files, so later
@@ -3387,14 +3395,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   /** DELETE under `write.delete.style=vector`: deletion vectors
     * (Iceberg v3 / Delta DVs — one bitmap blob per data file, bit n
     * set = row n deleted), the production form of position deletes at
-    * high DML rates. Versus tombstones, the read side replaces the
-    * (file, pos) anti-JOIN with an O(1) bit probe per row against a
-    * file-joined blob, and the k-th DELETE merges bits into one blob
-    * per touched file instead of appending a k-th tombstone relation
-    * that every subsequent read re-joins. A file's blob is ≤ rows/8
-    * bytes regardless of how many DELETEs hit it — the artifact
-    * stops growing with DML rate, which is what makes the shape
-    * production-viable on a busy 100 TB fact table. */
+    * high DML rates: the k-th DELETE merges bits into one blob per
+    * touched file instead of appending a k-th tombstone file, so a
+    * file's artifact stays ≤ rows/8 bytes however many DELETEs hit it.
+    * Reads probe both shapes alike ([[dropDeleted]]). */
   def deleteMoRDv(predSql: String): Long =
     deleteMoRDvAt(currentSnapshot, predSql)
 
@@ -3420,8 +3424,8 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
     * columns) and return the pointer updates (MANIFEST-form data file
     * → manifest-form blob path). One aggregate pass builds each
     * touched file's new bits ([[foldBitmaps]]), a file-keyed join ORs
-    * in each file's EXISTING vector ([[orBitmaps]], broadcast under
-    * the positional-delete gate), and the blob parquet writes
+    * in each file's EXISTING vector ([[orBitmaps]], broadcast while
+    * their bitmaps fit the byte gate), and the blob parquet writes
     * distributed. Only the (file → blob) pointer map ships to the
     * driver — O(#touched files) commit metadata, like every manifest. */
   private def writeDvs(rows: DataFrame, snap: Snapshot,
@@ -3435,11 +3439,10 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
         // only the vectors merge: tombstones stay tombstone files
         val vectors = snap.copy(posDels = Nil)
         val old = currentDvRelation(vectors)
-        orBitmaps(newBits,
-          if (GraftTable.deleteBitmapBytes(vectors)
-              .exists(_ <= GraftTable.PosDelBroadcastBytes)) broadcast(old)
-          else old,
-          "left")
+        // the old vectors join as stored: rows/8 + 1 bytes a file
+        val dense = vectors.dvs.keys.toSeq.map(vectors.fileRows.get(_).map(_ / 8 + 1))
+        orBitmaps(newBits, if (dense.forall(_.isDefined) && dense.flatten.sum <=
+          GraftTable.PosDelBroadcastBytes) broadcast(old) else old, "left")
       }
     writeDvBlobs(merged, snap, commitId)
   }
@@ -6088,15 +6091,9 @@ final class GraftTable(val spark: SparkSession, rootStr: String,
   def positionDeletesMetadata: DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge.{columnOf, expressionOf}
     val snap = currentSnapshot
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("file_path", org.apache.spark.sql.types.StringType,
-          true),
-        StructField("pos", org.apache.spark.sql.types.LongType, true),
-        StructField("delete_file", org.apache.spark.sql.types.StringType,
-          true))))
     import spark.implicits._
+    val empty = Seq.empty[(String, java.lang.Long, String)]
+      .toDF("file_path", "pos", "delete_file")
     val tomb =
       if (snap.posDels.isEmpty) None
       else {
@@ -6498,34 +6495,27 @@ object GraftTable {
   private[lakehouse] def metaPath(p: String): String =
     new Path(p).toUri.toString
 
-  /** Upper bound on the heap bytes of `snap`'s delete bitmaps
-    * ([[GraftTable.deleteBitmaps]]) — the one positional-delete gate: `dropDeleted` broadcasts under
-    * it and the SPJ scan refuses above it. A file's bitmap is at most
-    * rows/8 + 1 bytes (rows from the manifest's footer harvest). The
-    * relation names each vectored file, plus at most Σ`posDelRows`
-    * files named by tombstones, bounded by that many of the largest
-    * live files — not every live file, so a large table holding a few
-    * tombstones still broadcasts. On-disk sizes would be wrong here:
-    * parquet compresses dense 0xFF runs and repeated paths by orders
-    * of magnitude. None when a needed count is missing — the caller
-    * must not broadcast what it cannot bound. */
-  private[lakehouse] def deleteBitmapBytes(snap: Snapshot): Option[Long] = {
-    def bytes(fs: Seq[String]) = {
-      val per = fs.map(f => snap.fileRows.get(f).map(_ / 8 + 1))
-      if (per.exists(_.isEmpty)) None else Some(per.flatten)
-    }
+  /** Upper bound on the heap bytes of `snap`'s per-file deletes
+    * ([[GraftTable.deleteSets]]): per vectored file the smaller of
+    * rows/8 + 1 (its bitmap) and 8 × its recorded cardinality, plus 8
+    * bytes per tombstoned row (Σ`posDelRows`) — what the deletes name,
+    * not a bitmap per file they touch. None when a count is missing. */
+  private[lakehouse] def deleteBytes(snap: Snapshot): Option[Long] = {
+    val vectored = snap.dvs.keys.toSeq.map(f => (snap.fileRows.get(f)
+      .map(_ / 8 + 1) ++ snap.dvCards.get(f).map(8 * _)).minOption)
     val tombRows = snap.posDels.map(snap.posDelRows.get)
-    for {
-      vectored <- bytes(snap.dvs.keys.toSeq)
-      live <- if (snap.posDels.isEmpty) Some(Nil) else bytes(snap.files)
-      if !tombRows.exists(_.isEmpty)
-    } yield vectored.sum + live.sorted(Ordering[Long].reverse)
-      .take(math.min(tombRows.flatten.sum, live.size.toLong).toInt).sum
+    if (vectored.exists(_.isEmpty) || tombRows.exists(_.isEmpty)) None
+    else Some(vectored.flatten.sum + 8 * tombRows.flatten.sum)
   }
 
-  /** Heap bytes of a snapshot's delete bitmaps ([[deleteBitmapBytes]])
-    * above which reads stop broadcasting them and the SPJ scan refuses
-    * (overridable for tests via `graft.posdel.broadcast.bytes`). */
+  /** The one positional-delete gate ([[deleteBytes]] within
+    * [[PosDelBroadcastBytes]]): under it reads broadcast the deletes and
+    * the SPJ scan ships them; beyond it reads shuffle and SPJ refuses. */
+  private[lakehouse] def deletesFit(snap: Snapshot): Boolean =
+    deleteBytes(snap).exists(_ <= PosDelBroadcastBytes)
+
+  /** The gate's byte bound (overridable for tests via
+    * `graft.posdel.broadcast.bytes`). */
   private[lakehouse] def PosDelBroadcastBytes: Long =
     sys.props.get("graft.posdel.broadcast.bytes").map(_.toLong)
       .getOrElse(32L * 1024 * 1024)

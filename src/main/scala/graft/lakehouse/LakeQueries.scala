@@ -1970,7 +1970,7 @@ object LakeQueries {
     // with both delete shapes): flip the write modes and keep going —
     // the tombstone DELETE removes rows without rewriting a data
     // file, the tombstone UPDATE keeps ids and bumps exactly the
-    // matched rows, and reads serve through the tombstone anti-join
+    // matched rows, and reads probe the broadcast tombstones
     t.setProperties(Map(GraftTable.RowLineageProp -> "true",
       "write.delete.mode" -> "merge-on-read",
       "write.update.mode" -> "merge-on-read",
@@ -2249,15 +2249,12 @@ object LakeQueries {
   /** Deletion-vector merge-on-read (Iceberg v3 / Delta DVs — the
     * production form of position deletes at high DML rates): DELETEs
     * against a `write.delete.style=vector` table land as ONE bitmap
-    * blob per touched data file (bit n set = row n deleted) — the
-    * data file set is require()d unchanged — and reads drop rows
-    * through an O(1) codegen'd bit probe behind a file-keyed
-    * broadcast join: one join row per FILE, not per deleted row, so
-    * the read-side artifact stops growing with DML rate (the
-    * executed plan is require()d anti-join-free, unlike the
-    * tombstone path). A second overlapping DELETE must MERGE bits —
-    * pointers move to a fresh blob, at most one vector per file —
-    * with superseded blobs' stale bitmaps ignored by pointer
+    * blob per touched data file (bit n set = row n deleted) — the data
+    * file set is require()d unchanged — and reads drop rows through an
+    * O(1) bit probe of the broadcast per-file deletes (the plan is
+    * require()d anti-join-free). A second overlapping DELETE must MERGE
+    * bits — pointers move to a fresh blob, at most one vector per file
+    * — with superseded blobs' stale bitmaps ignored by pointer
     * currency. A post-delete append is untouched by construction;
     * compaction materializes and clears. DML driven via SQL. */
   private val dvDelete: Q = (s, dir) => {
@@ -2288,8 +2285,8 @@ object LakeQueries {
         "file's pointer")
     // appended after the deletes: untouched even where it matches
     t.append(orders.filter(col("o_orderkey") % 3 === 2))
-    // the vector read is a bit probe behind a file-keyed join — no
-    // per-deleted-row anti-join anywhere in the executed plan
+    // the vector read is a bit probe — no per-deleted-row anti-join
+    // anywhere in the executed plan
     require(!t.read().queryExecution.executedPlan.toString
         .contains("LeftAnti"),
       "deletion-vector read must not plan a position anti-join")

@@ -62,7 +62,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fields only, no renames, no ALTER-added initial defaults, no
   * partition-spec evolution — while every merge-on-read delete shape
   * is served (position tombstones and deletion vectors as one
-  * per-file bitmap each, gate-bounded; equality deletes as compiled
+  * per-file delete set each, gate-bounded; equality deletes as compiled
   * row predicates with add-sequence scoping) —
   * anything else must take the general `GraftTable.read()` path (loud
   * error, never a silently-different result). Ref: the reference's
@@ -230,18 +230,12 @@ object Spj {
     spjFields(snap).left.toOption
       .orElse {
         if (snap.files.isEmpty) Some("table has no data files")
-        // positional deletes are SPJ-readable: the scan attaches each
-        // data file's delete bitmap (tombstones folded into its
-        // deletion vector, GraftTable.deleteBitmaps) to its split and
-        // the reader probes it per row (Iceberg's SPJ readers apply
-        // delete files the same way — a busy 100 TB fact table ALWAYS
-        // carries deletes, so refusing them would turn the
-        // zero-Exchange path off exactly when the table is hottest).
-        // The bitmaps are collected to the driver, so they are bounded
-        // by the one positional-delete gate — beyond it, or when it
-        // cannot bound them, refuse loudly toward maintenance instead.
-        else if (!GraftTable.deleteBitmapBytes(snap)
-            .exists(_ <= GraftTable.PosDelBroadcastBytes))
+        // positional deletes ride each split (GraftTable.deleteSets) and
+        // the reader probes them per row, as Iceberg's SPJ readers do: a
+        // busy fact table always carries deletes. They are collected to
+        // the driver, so beyond the one positional-delete gate (or
+        // unbounded) refuse loudly toward maintenance instead.
+        else if (!GraftTable.deletesFit(snap))
           Some("positional deletes exceed the delete-bitmap gate or " +
             "lack recorded row counts (OPTIMIZE … REWRITE DELETES, or " +
             "compact() to materialize)")
@@ -990,17 +984,12 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
     }
   }
 
-  /** data file (`_metadata.file_path` form) → its delete bitmap: the
-    * snapshot's one positional-delete relation
-    * ([[GraftTable.deleteBitmaps]], tombstones folded into deletion
-    * vectors), collected once per scan. Driver-side and bounded:
-    * eligibility admits only snapshots under the positional-delete
-    * gate ([[GraftTable.deleteBitmapBytes]]). Manifest paths are raw,
-    * so the lookup keys by the URI rendering of each raw path. */
-  private lazy val bitmapsByFile: Map[String, Array[Byte]] =
-    if (snap.posDels.isEmpty && snap.dvs.isEmpty) Map.empty
-    else t.deleteBitmaps(snap, small = true).collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+  /** data file (`_metadata.file_path` form) → its positional deletes
+    * ([[GraftTable.deleteSets]]; eligibility checked the gate).
+    * Manifest paths are raw, so lookups key by their URI rendering. */
+  private lazy val deletesByFile: Map[String, FileDeletes] =
+    t.deleteSets(snap).getOrElse(throw new IllegalStateException(
+      "positional deletes exceed the delete-bitmap gate")).value
   // the one metaPath authority — see GraftTable.metaPath's contract
   private def metaPath(p: String): String = GraftTable.metaPath(p)
 
@@ -1079,8 +1068,7 @@ final class LakeSpjScan(t: GraftTable, snap: Snapshot,
         }
       }
       LakePartTupleSplit(key, files,
-        files.map(f => bitmapsByFile.getOrElse(metaPath(f._1),
-          Array.emptyByteArray)),
+        files.map(f => deletesByFile.get(metaPath(f._1))),
         eqIdx)
     }
   }
@@ -1123,13 +1111,13 @@ final case class EqDelSpec(
 
 /** All files of one stored partition tuple — the planner aligns
   * splits of equal `partitionKey` across the two join sides.
-  * `deletes` is aligned with `files`: each file's delete bitmap (bit n
-  * set = row n deleted; empty = none pending). `eqIdx` likewise: the
+  * `deletes` is aligned with `files`: each file's positional deletes
+  * (None = none pending). `eqIdx` likewise: the
   * indices of the scan's equality-delete predicates applicable to each
   * file (sequenced after its add-sequence). */
 final case class LakePartTupleSplit(key: Seq[Any],
     files: Array[(String, Long)],
-    deletes: Array[Array[Byte]],
+    deletes: Array[Option[FileDeletes]],
     eqIdx: Array[Array[Int]] = Array.empty)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow.fromSeq(key)
@@ -1177,20 +1165,14 @@ final class LakeSpjReaderFactory(
           s"${split.eqIdx.length} equality-delete index sets")
     reader(split.files.iterator.zipWithIndex.flatMap { case ((path, len), i) =>
       val raw = readFile(ParquetReadShim.wholeFile(path, len))
-      // the bitmap keys off the PHYSICAL row index — apply before any
+      // the deletes key off the PHYSICAL row index — apply before any
       // row-level filtering. The whole-file, filterless closure yields
       // every row in order, so a row's index is its sequence number:
       // the `_metadata.row_index` each delete recorded.
-      val bm = split.deletes(i)
-      val posDone =
-        if (bm.isEmpty) raw
-        else {
-          var pos = -1L
-          raw.filter { _ =>
-            pos += 1
-            !graft.functions.NativeKernels.bitsetGet(bm, pos)
-          }
-        }
+      val posDone = split.deletes(i).fold(raw) { deleted =>
+        var pos = -1L
+        raw.filter { _ => pos += 1; !deleted(pos) }
+      }
       (predEvals, proj) match {
         case (Some(evals), Some(p)) =>
           val idx = split.eqIdx(i) // aligned: require()d above

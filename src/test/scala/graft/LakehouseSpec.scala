@@ -2823,22 +2823,26 @@ class LakehouseSpec extends AnyFunSuite {
   test("tombstone anti-join broadcasts only while the tombstone set is small") {
     val t = freshTable(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
     t.deleteMoRPos("k = 1")
-    // the decision is a HINT, read from the optimized plan's Join: small
-    // tombstone sets are pinned broadcast; past the byte gate the hint is
-    // withheld and AQE/stats pick the strategy (no driver-forced collect)
+    // read from the optimized plan: a small tombstone set is broadcast
+    // to a per-row probe (no join); past the byte gate nothing is
+    // broadcast and the folded deletes join on the file instead, the
+    // strategy left to AQE/stats (no driver-forced collect)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+    def broadcastProbed(df: org.apache.spark.sql.DataFrame): Boolean =
+      plan(df).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.lakehouse.RowDeleted])))
+    def joins(df: org.apache.spark.sql.DataFrame) = plan(df).collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     def broadcastHinted(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-          j.hint.rightHint.exists(_.strategy.contains(
-            org.apache.spark.sql.catalyst.plans.logical.BROADCAST))
-      }.contains(true)
-    assert(broadcastHinted(t.read()),
-      "a KB-scale tombstone set must take the broadcast anti-join")
+      joins(df).exists(_.hint.rightHint.exists(_.strategy.contains(
+        org.apache.spark.sql.catalyst.plans.logical.BROADCAST)))
+    assert(broadcastProbed(t.read()) && joins(t.read()).isEmpty,
+      "a KB-scale tombstone set must be broadcast to the row probe")
     val saved = sys.props.get("graft.posdel.broadcast.bytes")
     try {
       sys.props("graft.posdel.broadcast.bytes") = "0"
       val df = t.read()
-      assert(!broadcastHinted(df),
+      assert(!broadcastProbed(df) && joins(df).nonEmpty && !broadcastHinted(df),
         "an oversized tombstone set must not be forced through a broadcast")
       assert(df.orderBy("k").select("k").as[Long].collect().toSeq ==
         Seq(2L, 3L), "the shuffle path must produce the same live view")
@@ -4820,51 +4824,95 @@ class LakehouseSpec extends AnyFunSuite {
 
   test("deletion vectors ride the SPJ skip lists and its byte gate") {
     import graft.lakehouse.{LakeRegistry, Spj}
+    // two inputs: vectors alone, and one data file carrying both shapes
+    // (position tombstones first, then a vector delete of other rows
+    // of the same files)
+    for (withTombstones <- Seq(false, true)) {
+      val name = if (withTombstones) "dvspj_both" else "dvspj_t"
+      val t = GraftTable.create(spark,
+        Files.createTempDirectory("graft_dvspj").toString,
+        (1L to 1000L).map(k => (k, k % 7, if (k % 3 == 0) "del" else "keep"))
+          .toDF("k", "g", "tag"),
+        partitionBy = Seq("bucket[4](g)"))
+      LakeRegistry.register(name, t)
+      val files = t.currentSnapshot.files.toSet
+      val before = t.currentSnapshot.id
+      def style(st: String): Unit = t.setProperties(Map(
+        "write.delete.mode" -> "merge-on-read", "write.delete.style" -> st))
+      if (withTombstones) {
+        style("position")
+        spark.sql(s"DELETE FROM $name WHERE k % 5 = 0 AND tag = 'keep'")
+      }
+      style("vector")
+      spark.sql(s"DELETE FROM $name WHERE tag = 'del'")
+      val snap = t.currentSnapshot
+      assert(snap.files.toSet == files && snap.dvs.nonEmpty &&
+        snap.posDels.nonEmpty == withTombstones,
+        "the deletes must write tombstones and bitmaps, not rewrite files")
+      val expected = (1L to 1000L)
+        .filter(k => k % 3 != 0 && !(withTombstones && k % 5 == 0))
+      val live = Spj.read(spark, s"${name}_r", t)
+      assert(live.count() == expected.size,
+        "the SPJ read must skip tombstoned and vectored positions")
+      assert(live.filter(col("tag") === "del").count() == 0)
+      // the SPJ path, the normal read path and the expected keys agree
+      assert(live.select("k").as[Long].collect().sorted.toSeq == expected)
+      assert(t.read().select("k").as[Long].collect().sorted.toSeq == expected)
+      // the change feed over the deletes reports exactly the deleted rows
+      def changed() = spark.sql(
+        s"SELECT k, _change_type FROM table_changes('$name', $before, ${snap.id})")
+        .as[(Long, String)].collect()
+      val deleted = (1L to 1000L).filterNot(expected.toSet)
+      assert(changed().forall(_._2 == "delete"), changed().toSeq)
+      assert(changed().map(_._1).sorted.toSeq == deleted)
+      // beyond the delete-bitmap gate the zero-Exchange path refuses
+      // toward maintenance instead of collecting unbounded deletes,
+      // while the normal read and the change feed take the shuffled
+      // fold and agree
+      sys.props("graft.posdel.broadcast.bytes") = "1"
+      try {
+        val e = intercept[Exception](Spj.read(spark, s"${name}_gate", t))
+        def msgs(x: Throwable): List[String] =
+          if (x == null) Nil else String.valueOf(x.getMessage) :: msgs(x.getCause)
+        assert(msgs(e).exists(_.contains("delete-bitmap gate")),
+          msgs(e).mkString(" | "))
+        assert(t.read().select("k").as[Long].collect().sorted.toSeq == expected)
+        assert(changed().map(_._1).sorted.toSeq == deleted)
+      } finally sys.props.remove("graft.posdel.broadcast.bytes")
+    }
+  }
+
+  test("positional-delete gate sizes what the deletes name: a scattered " +
+      "DELETE over many 1M-row files stays SPJ-eligible") {
+    import graft.lakehouse.{LakeRegistry, Spj}
     val t = GraftTable.create(spark,
-      Files.createTempDirectory("graft_dvspj").toString,
-      (1L to 1000L).map(k => (k, k % 7, if (k % 3 == 0) "del" else "keep"))
-        .toDF("k", "g", "tag"),
+      Files.createTempDirectory("graft_gate").toString,
+      (1L to 400L).map(k => (k, k % 7)).toDF("k", "g"),
       partitionBy = Seq("bucket[4](g)"))
-    LakeRegistry.register("dvspj_t", t)
-    val files = t.currentSnapshot.files.toSet
-    val before = t.currentSnapshot.id
-    // one data file carries both shapes: position tombstones first,
-    // then a vector delete of other rows of the same files
-    def style(st: String): Unit = t.setProperties(Map(
-      "write.delete.mode" -> "merge-on-read", "write.delete.style" -> st))
-    style("position")
-    spark.sql("DELETE FROM dvspj_t WHERE k % 5 = 0 AND tag = 'keep'")
-    style("vector")
-    spark.sql("DELETE FROM dvspj_t WHERE tag = 'del'")
+    LakeRegistry.register("posdel_gate_t", t)
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read",
+      "write.delete.style" -> "position"))
+    spark.sql("DELETE FROM posdel_gate_t WHERE k % 50 = 0")
+    t.setProperties(Map("write.delete.mode" -> "merge-on-read",
+      "write.delete.style" -> "vector"))
+    spark.sql("DELETE FROM posdel_gate_t WHERE k % 50 = 1")
     val snap = t.currentSnapshot
-    assert(snap.files.toSet == files && snap.dvs.nonEmpty &&
-      snap.posDels.nonEmpty,
-      "the deletes must write tombstones and bitmaps, not rewrite files")
-    val expected = (1L to 1000L).filter(k => k % 3 != 0 && k % 5 != 0)
-    val live = Spj.read(spark, "dvspj_r", t)
-    assert(live.count() == expected.size,
-      "the SPJ read must skip tombstoned and vectored positions")
-    assert(live.filter(col("tag") === "del").count() == 0)
-    // the SPJ path, the normal read path and the expected keys agree
-    assert(live.select("k").as[Long].collect().sorted.toSeq == expected)
-    assert(t.read().select("k").as[Long].collect().sorted.toSeq == expected)
-    // the change feed over both commits reports exactly the deleted rows
-    val changed = spark.sql(
-      s"SELECT k, _change_type FROM table_changes('dvspj_t', $before, ${snap.id})")
-      .as[(Long, String)].collect()
-    assert(changed.forall(_._2 == "delete"), changed.toSeq)
-    assert(changed.map(_._1).sorted.toSeq ==
-      (1L to 1000L).filter(k => k % 3 == 0 || k % 5 == 0))
-    // beyond the delete-bitmap gate the zero-Exchange path refuses
-    // toward maintenance instead of collecting unbounded bitmaps
-    sys.props("graft.posdel.broadcast.bytes") = "1"
-    try {
-      val e = intercept[Exception](Spj.read(spark, "dvspj_gate", t))
-      def msgs(x: Throwable): List[String] =
-        if (x == null) Nil else String.valueOf(x.getMessage) :: msgs(x.getCause)
-      assert(msgs(e).exists(_.contains("delete-bitmap gate")),
-        msgs(e).mkString(" | "))
-    } finally sys.props.remove("graft.posdel.broadcast.bytes")
+    assert(snap.posDels.nonEmpty && snap.dvs.nonEmpty)
+    assert(Spj.ineligibleReason(snap).isEmpty)
+    // the same deletes recorded against 300 files of 1M rows each: 269
+    // tombstoned rows and one deleted row per vectored file stay a few
+    // KB, not a rows/8 bitmap for every file named
+    val files = (0 until 300).map(i => s"file:/lake/data/part-$i.parquet")
+    def shaped(tombRows: Long) = snap.copy(
+      files = snap.files ++ files,
+      fileRows = (snap.files ++ files).map(_ -> 1000000L).toMap,
+      posDelRows = snap.posDels.map(_ -> tombRows).toMap,
+      dvs = files.map(_ -> snap.dvs.values.head).toMap,
+      dvCards = files.map(_ -> 1L).toMap)
+    assert(Spj.ineligibleReason(shaped(269L)).isEmpty)
+    // the gate still bounds: 5M tombstoned rows exceed its 32 MB
+    assert(Spj.ineligibleReason(shaped(5000000L))
+      .exists(_.contains("delete-bitmap gate")))
   }
 
   test("positional-delete reads compile: no interpreted fallback, " +
